@@ -158,31 +158,3 @@ def test_histogram_binary_codec_roundtrip():
     assert v2.tolist() == values and c2.tolist() == counts
     assert encode_histogram(v2, c2) == blob
     assert decode_histogram(encode_histogram([], []))[0].size == 0
-
-
-def test_decode_histogram_accepts_legacy_json_state():
-    """Round-11 ADVICE: a checkpoint written under the round-10 StringType
-    JSON encoding must decode, so old state upgrades in place on first
-    touch — and the `[[` prefix detection must NOT misroute a genuine
-    binary blob whose first value's low bytes spell `[[`."""
-    import json
-
-    from topk_spark.streaming.exact_quantile import (
-        decode_histogram,
-        encode_histogram,
-    )
-
-    values, counts = [100, 250, 999], [4, 1, 7]
-    legacy = json.dumps([values, counts]).encode("utf-8")
-    v, c = decode_histogram(legacy)
-    assert v.tolist() == values and c.tolist() == counts
-    # empty legacy state
-    v0, c0 = decode_histogram(b"[[], []]")
-    assert v0.size == 0 and c0.size == 0
-    # adversarial binary: first value 0x5B5B == 23387 -> blob starts b'[['
-    # but is not valid JSON; must fall through to the binary path
-    tricky_vals, tricky_cnts = [0x5B5B, 70000], [2, 3]
-    blob = encode_histogram(tricky_vals, tricky_cnts)
-    assert bytes(blob[:2]) == b"[["
-    v1, c1 = decode_histogram(blob)
-    assert v1.tolist() == tricky_vals and c1.tolist() == tricky_cnts

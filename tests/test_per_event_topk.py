@@ -9,10 +9,8 @@ reference ProcessFunctions.kt granularity. Pins, at exact-value level:
   seen again (ProcessFunctions.kt:103-116) — pinned by an item that is
   observed twice but never accumulates;
 - deterministic tiebreak (count desc, item id asc);
-- emit_k caps emitted ranks without changing state fidelity;
-- the transformWithStateInPandas twin (modern StatefulProcessor API) is
-  result-identical when its protobuf dependency exists, and fails with a
-  CLEAR ImportError (not an opaque worker crash) when it does not.
+- emit_k caps emitted ranks without changing state fidelity, and may not
+  exceed k.
 """
 
 from __future__ import annotations
@@ -34,18 +32,9 @@ def _write_file(src: str, name: str, rows: list[dict], mtime: int) -> None:
     os.utime(p, (mtime, mtime))
 
 
-def _drain_per_event(spark, tmp_path, batches, k, emit_k=None, name="pe_topk",
-                     variant="portable"):
-    from topk_spark.streaming.continuous_topk_tws import (
-        continuous_topk_per_event,
-        continuous_topk_per_event_tws,
-    )
+def _drain_per_event(spark, tmp_path, batches, k, emit_k=None, name="pe_topk"):
+    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
 
-    op = (
-        continuous_topk_per_event
-        if variant == "portable"
-        else continuous_topk_per_event_tws
-    )
     src = str(tmp_path / f"src_{name}")
     for i, rows in enumerate(batches):
         _write_file(src, f"b{i}.jsonl", rows, 1_700_000_000 + i * 60)
@@ -57,7 +46,7 @@ def _drain_per_event(spark, tmp_path, batches, k, emit_k=None, name="pe_topk",
         .option("latestFirst", "false")
         .json(src)
     )
-    out = op(stream, k=k, emit_k=emit_k)
+    out = continuous_topk_per_event(stream, k=k, emit_k=emit_k)
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -163,58 +152,13 @@ def test_per_event_emit_k_caps_output(spark, tmp_path):
 
 
 def test_per_event_emit_k_validation(spark):
-    from topk_spark.streaming.continuous_topk_tws import (
-        continuous_topk_per_event,
-        continuous_topk_per_event_tws,
-    )
+    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
 
     df = spark.createDataFrame(
         [], "restaurant_id string, menu_item_id string, event_id long, ts_us long"
     )
     with pytest.raises(ValueError, match="emit_k"):
         continuous_topk_per_event(df, k=2, emit_k=3)
-    with pytest.raises((ValueError, ImportError)):
-        continuous_topk_per_event_tws(df, k=2, emit_k=3)
-
-
-def test_tws_variant_gate_or_equivalence(spark, tmp_path):
-    """Environment-dependent split, both sides meaningful:
-    - protobuf absent (this container): the TWS constructor must raise a
-      CLEAR ImportError naming the missing dependency and the portable
-      alternative — not crash an opaque streaming Python worker later.
-    - protobuf present (a real cluster): the TWS twin must produce the
-      exact snapshot sequence of the portable operator (shared fold), under
-      the RocksDB provider transformWithState requires."""
-    from topk_spark.session import _STATE_STORE_CONF, set_state_store
-    from topk_spark.streaming.continuous_topk_tws import (
-        continuous_topk_per_event_tws,
-        has_tws_deps,
-    )
-
-    if not has_tws_deps():
-        df = spark.createDataFrame(
-            [], "restaurant_id string, menu_item_id string, event_id long, ts_us long"
-        )
-        with pytest.raises(ImportError, match="protobuf"):
-            continuous_topk_per_event_tws(df, k=2)
-        return
-
-    try:
-        prev = spark.conf.get(_STATE_STORE_CONF)
-    except Exception:
-        prev = None
-    if not set_state_store(spark, "rocksdb"):
-        pytest.skip("rocksdb provider unavailable")
-    try:
-        got = _drain_per_event(
-            spark, tmp_path, _TRUNC_BATCHES, k=2, name="pe_tws", variant="tws"
-        )
-        assert got == _TRUNC_EXPECTED
-    finally:
-        if prev is None:
-            spark.conf.unset(_STATE_STORE_CONF)
-        else:
-            spark.conf.set(_STATE_STORE_CONF, prev)
 
 
 def test_trunc_drain_regime_is_nonvacuous(spark, sf_dir):

@@ -17,10 +17,12 @@ The replacement keeps every value EXACT:
 2. Accumulate each unit column as TWO overflow-safe long sums — the high
    2^20-quotient and the low 20-bit remainder (arithmetic shiftright +
    bitwiseAND give exact floor-div/mod for every long, negatives included).
-   A naive single long sum of 10^-6-dollar units overflows int64 around
-   10^12 rows (TPC-H charge at ~100 TB sums to ~6e22 units); the split is
-   safe to ~10^14 rows even at charge's unit scale (hi <= units/2^20, so
-   sum(hi) <= N * 1e11 / 2^20 ~ N * 1e5 and sum(lo) < N * 2^20).
+   A naive single long sum of 10^-6-dollar units overflows int64 after
+   ~10^8 rows (a charge is up to ~1e11 units; TPC-H charge at ~100 TB sums
+   to ~6e22 units). The split is safe to ~8.8*10^12 rows even at charge's
+   unit scale: sum(lo) < N * 2^20 stays below 2^63 for N < 2^43, the
+   binding bound (hi <= units/2^20, so sum(hi) <= N * 1e11 / 2^20 ~ N * 1e5
+   only overflows near 10^14 rows).
 3. Recombine once per GROUP in decimal(38,6):
    (sum_hi * 2^20 + sum_lo) / 10^unit_scale — exact (the true total has at
    most `unit_scale` <= 6 fractional digits, so the scale-6 quotient does

@@ -44,6 +44,26 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+# The 9-column shape of every range read (TopKResult, Models.kt:39-49).
+_TOPK_COLUMNS = (
+    "restaurant_id", "menu_item_id", "menu_item_name", "rank",
+    "order_count", "total_quantity", "total_revenue_in_cents",
+    "window_start", "window_end",
+)
+
+
+def _default_range(start_ms: int | None, end_ms: int | None) -> tuple[int, int]:
+    """The reference's range defaults (TopKController.kt:34-38): start and
+    end fall back INDEPENDENTLY to now-1h and now — a caller-supplied end
+    alone still gets start = now-1h, not end-1h. One clock read, so
+    both-default gives exactly [now-1h, now]."""
+    now = _now_ms()
+    return (
+        start_ms if start_ms is not None else now - 3_600_000,
+        end_ms if end_ms is not None else now,
+    )
+
+
 def _range_filter(rollup: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
     """F2: closed containment on [start, end]."""
     return rollup.filter(
@@ -76,12 +96,7 @@ def topk_for_restaurant(
     (QueryService.kt:37-64). Expects rollup rows with columns
     restaurant_id, menu_item_id, menu_item_name, window_start, window_end,
     order_count, sum_quantity, sum_revenue_cents."""
-    # independent defaults (TopKController.kt:34-38): start falls back to
-    # now-1h even when end_ms is caller-supplied — not to end_ms-1h.
-    # One clock read: both-default must give exactly [now-1h, now].
-    now = _now_ms()
-    end_ms = end_ms if end_ms is not None else now
-    start_ms = start_ms if start_ms is not None else now - 3_600_000
+    start_ms, end_ms = _default_range(start_ms, end_ms)
     base = _range_filter(rollup, start_ms, end_ms).filter(
         F.col("restaurant_id") == F.lit(restaurant_id)  # F1
     )
@@ -92,11 +107,7 @@ def topk_for_restaurant(
         [F.desc("order_count"), F.asc("menu_item_id")],
         k,
     )
-    return ranked.select(
-        "restaurant_id", "menu_item_id", "menu_item_name", "rank",
-        "order_count", "total_quantity", "total_revenue_in_cents",
-        "window_start", "window_end",
-    )
+    return ranked.select(*_TOPK_COLUMNS)
 
 
 def topk_global(
@@ -107,12 +118,7 @@ def topk_global(
 ) -> DataFrame:
     """Global top-k by order_count (QueryService.kt:69-94): aggregate across
     all restaurants per item, sentinel restaurant_id='ALL'."""
-    # independent defaults (TopKController.kt:34-38): start falls back to
-    # now-1h even when end_ms is caller-supplied — not to end_ms-1h.
-    # One clock read: both-default must give exactly [now-1h, now].
-    now = _now_ms()
-    end_ms = end_ms if end_ms is not None else now
-    start_ms = start_ms if start_ms is not None else now - 3_600_000
+    start_ms, end_ms = _default_range(start_ms, end_ms)
     base = _range_filter(rollup, start_ms, end_ms)
     agg = _aggregate_range(base, ["menu_item_id"])
     ranked = global_topk(
@@ -121,11 +127,7 @@ def topk_global(
         k,
         sentinel_col=None,
     ).withColumn("restaurant_id", F.lit(GLOBAL_SENTINEL))
-    return ranked.select(
-        "restaurant_id", "menu_item_id", "menu_item_name", "rank",
-        "order_count", "total_quantity", "total_revenue_in_cents",
-        "window_start", "window_end",
-    )
+    return ranked.select(*_TOPK_COLUMNS)
 
 
 def topk_by_revenue(
@@ -137,12 +139,7 @@ def topk_by_revenue(
 ) -> DataFrame:
     """Top-k re-ranked by revenue (QueryService.kt:99-129); 'all' → global
     (F4 optional-predicate composition, TopKController.kt:108)."""
-    # independent defaults (TopKController.kt:34-38): start falls back to
-    # now-1h even when end_ms is caller-supplied — not to end_ms-1h.
-    # One clock read: both-default must give exactly [now-1h, now].
-    now = _now_ms()
-    end_ms = end_ms if end_ms is not None else now
-    start_ms = start_ms if start_ms is not None else now - 3_600_000
+    start_ms, end_ms = _default_range(start_ms, end_ms)
     base = _range_filter(rollup, start_ms, end_ms)
     is_global = restaurant_id.lower() == "all"
     if not is_global:
@@ -158,11 +155,7 @@ def topk_by_revenue(
         F.asc("menu_item_id"),
     ]
     ranked = rank_topk(agg, ["restaurant_id"], order, k)
-    return ranked.select(
-        "restaurant_id", "menu_item_id", "menu_item_name", "rank",
-        "order_count", "total_quantity", "total_revenue_in_cents",
-        "window_start", "window_end",
-    )
+    return ranked.select(*_TOPK_COLUMNS)
 
 
 def topk_decayed(
@@ -247,9 +240,7 @@ def trending(
     window's partition holds ≤ one row per key, so the row_number never
     sees a global sort; at scale the read is a window_start-pruned scan of
     the rollup tier, never raw events."""
-    now = _now_ms()
-    end_ms = end_ms if end_ms is not None else now
-    start_ms = start_ms if start_ms is not None else now - 3_600_000
+    start_ms, end_ms = _default_range(start_ms, end_ms)
     base = _range_filter(sliding_rollup, start_ms, end_ms)
     w = Window.partitionBy("window_start").orderBy(
         F.desc(metric_col), F.asc(key_col)
@@ -299,9 +290,7 @@ def percentiles(
         raise ValueError(
             f"pcts must be distinct whole percents in 1..100, got {pcts}"
         )
-    now = _now_ms()
-    end_ms = end_ms if end_ms is not None else now
-    start_ms = start_ms if start_ms is not None else now - 3_600_000
+    start_ms, end_ms = _default_range(start_ms, end_ms)
     base = _range_filter(histogram_tier, start_ms, end_ms)
     hist = base.groupBy(key_col, value_col).agg(
         F.sum(count_col).cast("long").alias("_c")

@@ -14,8 +14,8 @@ Plus two EXTENSION routes (each registered only when its tier is supplied):
   'TRENDING'). When `preranked_trending` is ALSO supplied, the route goes
   through serve/router.TrendingRouter: fresh-and-shallow requests serve
   from the materialized ranked rows (a pure range-pruned scan), the rest
-  rank on read — the measured-cheaper deployment shape (bench
-  serving_trending).
+  rank on read — the measured-cheaper deployment shape (serve/router.py
+  TrendingRouter).
 - GET /api/v1/percentiles?start_time=&end_time=&pcts=50,90,99 →
   serve/api.percentiles — exact per-key value percentiles over a windowed
   histogram tier (the serving read for streaming/exact_quantile.py; the
@@ -39,8 +39,9 @@ HTTP stack; `create_app` raises a clear error if Flask is absent.
 
 Serving-path posture: the rollup DataFrame handed to `create_app` should be
 the pre-ranked/materialized tier (serve/router.py) — each request then runs
-a partition-pruned bounded scan, which is what makes BENCH's
-serving_point_read p50 comparable to the reference's Pinot-indexed reads.
+a partition-pruned bounded scan, which is what makes the serve_topk
+benchmark's latency (perfbench/README.md) comparable to the reference's
+Pinot-indexed reads.
 """
 
 from __future__ import annotations
@@ -50,11 +51,19 @@ from pyspark.sql import DataFrame, SparkSession
 from topk_spark.serve import api as serve_api
 
 
-def _int_or(value: str | None, default: int) -> int:
+def _int_or(value: str | None, default: int | None) -> int | None:
     try:
         return int(value)
     except (TypeError, ValueError):
         return default
+
+
+def _range(args) -> tuple[int, int]:
+    """start_time/end_time under the facade's default range; a value that
+    does not parse as an integer falls back like an absent one."""
+    return serve_api._default_range(
+        _int_or(args.get("start_time"), None), _int_or(args.get("end_time"), None)
+    )
 
 
 def create_app(
@@ -101,15 +110,8 @@ def create_app(
     app = Flask("topk_spark_serve")
 
     def _window(args) -> tuple[int, int, int]:
-        # Reference defaults are INDEPENDENT (TopKController.kt:34-38):
-        # startTime = now-1h and endTime = now each fall back on their own —
-        # a request carrying only end_time=X still gets start = now-1h,
-        # NOT X-1h.
-        now = serve_api._now_ms()
-        end = _int_or(args.get("end_time"), now)
-        start = _int_or(args.get("start_time"), now - 3_600_000)
-        k = _int_or(args.get("k"), 10)
-        return start, end, k
+        start, end = _range(args)
+        return start, end, _int_or(args.get("k"), 10)
 
     def _respond(restaurant_id: str, start: int, end: int, k: int,
                  df: DataFrame):
@@ -206,10 +208,8 @@ def create_app(
 
         @app.get("/api/v1/trending")
         def trending():
-            # same independent defaults; k defaults to 3 (a tile, not a list)
-            now = serve_api._now_ms()
-            end = _int_or(request.args.get("end_time"), now)
-            start = _int_or(request.args.get("start_time"), now - 3_600_000)
+            # k defaults to 3 (a tile, not a list)
+            start, end = _range(request.args)
             k = _int_or(request.args.get("k"), 3)
             router = _trending_router()
             if router is not None:
@@ -228,9 +228,7 @@ def create_app(
 
         @app.get("/api/v1/percentiles")
         def percentiles():
-            now = serve_api._now_ms()
-            end = _int_or(request.args.get("end_time"), now)
-            start = _int_or(request.args.get("start_time"), now - 3_600_000)
+            start, end = _range(request.args)
             raw = request.args.get("pcts")
             try:
                 pcts = tuple(int(p) for p in raw.split(",")) if raw else (50, 90, 99)

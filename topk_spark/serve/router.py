@@ -219,9 +219,10 @@ class TrendingRouter:
     `stream_trending_1h_1m_drain` emit incrementally (exactly-once ranked
     rows per closed hop window, materialized); `serve.api.trending` over
     the sliding rollup tier is the flexible fallback (any k, any metric,
-    windows the pipeline has not closed yet). Measured in bench.py
-    serving_trending: the pre-ranked read is a pure range-pruned scan with
-    no exchange (P99 95.0 vs 121.1 ms rank-on-read at r10).
+    windows the pipeline has not closed yet). Measured by the retired
+    bench harness's serving_trending section: the pre-ranked read is a pure
+    range-pruned scan with no exchange (P99 95.0 vs 121.1 ms rank-on-read
+    at r10).
 
     Freshness rule (per-request, no clock guess): the newest hop the
     request can contain is the last slide-aligned window END inside

@@ -13,19 +13,11 @@ triggering event's id and a per-key monotone sequence number — so an
 output row says "after the N-th event ever seen for this key, the top-k
 was exactly this", across micro-batch and restart boundaries.
 
-Two implementations of the same fold (shared core `_fold_events`, pinned
-equal by tests/test_per_event_topk.py):
-
-- `continuous_topk_per_event` — `applyInPandasWithState` (GroupState).
-  The portable path: Arrow-batched, works on every state-store provider,
-  no extra Python dependencies. This is what the driver-gated drain runs.
-- `continuous_topk_per_event_tws` — `transformWithStateInPandas`
-  (Spark 4.x StatefulProcessor + RocksDB), the modern API with typed state
-  and timers. Its Python worker protocol needs `google.protobuf`, which
-  this container does not ship (installs disallowed), so the constructor
-  probes for the dependency and raises ImportError with a clear message
-  when absent; the equivalence test skips accordingly. On a cluster with
-  protobuf present it is a drop-in twin.
+The fold runs on `applyInPandasWithState` (GroupState): Arrow-batched,
+works on every state-store provider, no extra Python dependencies. This is
+what the driver-gated drains run. (The module name predates the removal of
+a `transformWithStateInPandas` twin, whose Python worker protocol needs
+`google.protobuf` and so never ran here.)
 
 Semantics matched to the reference:
 - state truncation to `k` items (ProcessFunctions.kt:103-116): an item
@@ -89,7 +81,7 @@ def _fold_events(
     k: int,
     emit_k: int,
 ) -> tuple[dict[str, int], int, pd.DataFrame]:
-    """The per-event fold both stateful APIs share: replay the micro-batch
+    """The per-event fold: replay the micro-batch
     in (ts_us, event_id) order, upsert + truncate-to-k after every event
     (reference semantics), emit one ranked snapshot per event. Returns the
     new state and the batch's output frame."""
@@ -121,11 +113,6 @@ def _fold_events(
     return items, seq, pd.DataFrame(out)
 
 
-def _check_emit_k(k: int, emit_k: int) -> None:
-    if emit_k > k:
-        raise ValueError(f"emit_k ({emit_k}) must be <= k ({k})")
-
-
 def continuous_topk_per_event(
     events: DataFrame, k: int = 10, emit_k: int | None = None
 ) -> DataFrame:
@@ -135,7 +122,8 @@ def continuous_topk_per_event(
     (reference truncation semantics); `emit_k` (default k) caps emitted
     ranks per snapshot. Append output mode; any state-store provider."""
     ek = emit_k if emit_k is not None else k
-    _check_emit_k(k, ek)
+    if ek > k:
+        raise ValueError(f"emit_k ({ek}) must be <= k ({k})")
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -160,66 +148,3 @@ def continuous_topk_per_event(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def has_tws_deps() -> bool:
-    """True when transformWithStateInPandas' Python worker protocol can run
-    (it speaks protobuf to the JVM state server — pyspark imports
-    google.protobuf lazily inside the streaming worker)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def continuous_topk_per_event_tws(
-    events: DataFrame, k: int = 10, emit_k: int | None = None
-) -> DataFrame:
-    """The same per-event operator on the modern StatefulProcessor API
-    (`transformWithStateInPandas`, RocksDB-backed, Spark 4.x). Requires
-    `google.protobuf` in the Python environment; raises ImportError with a
-    clear message when absent (this container: installs disallowed), so
-    the failure happens at build time, not as an opaque worker crash."""
-    ek = emit_k if emit_k is not None else k
-    _check_emit_k(k, ek)
-    if not has_tws_deps():
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf in the Python "
-            "workers (pyspark's state-server protocol); it is not installed "
-            "here — use continuous_topk_per_event (applyInPandasWithState), "
-            "the result-identical portable path"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class PerEventTopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("topk", _STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            (restaurant_id,) = key
-            if self._state.exists():
-                items_json, seq = self._state.get()
-                items: dict[str, int] = json.loads(items_json)
-            else:
-                items, seq = {}, 0
-            items, seq, out = _fold_events(
-                restaurant_id, items, seq, list(rows), k, ek
-            )
-            self._state.update((json.dumps(items), seq))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("restaurant_id").transformWithStateInPandas(
-        statefulProcessor=PerEventTopKProcessor(),
-        outputStructType=PER_EVENT_TOPK_OUTPUT,
-        outputMode="append",
-        timeMode="None",
-    )

@@ -119,7 +119,6 @@ def start_raw_sink(
     checkpoint: str,
     trigger_seconds: int = 60,
     available_now: bool = False,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stage 1 sink: deduped events → parquet partitioned by event date."""
     return (
@@ -166,27 +165,3 @@ def start_rollup_from_raw(
         .start()
     )
 
-
-def kafka_sink_options(topic: str, bootstrap_servers: str, checkpoint: str) -> dict:
-    """writeStream options for the Kafka sinks (S3/S4/S5): key/value columns
-    must be pre-projected (key = event_id bytes, value = to_json(struct(*))
-    — P2, TopKStreamingJob.kt:349-419)."""
-    return {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "topic": topic,
-        "checkpointLocation": checkpoint,
-    }
-
-
-def to_kafka_records(df: DataFrame, key_col: str) -> DataFrame:
-    """Project a typed stream into Kafka key/value records (P2 + S3 key
-    semantics: key = event identity for partition affinity). Delegates to
-    io.sinks.kafka_sink_frame so there is exactly ONE wire serializer —
-    the byte contract (key = id bytes, value = JSON with explicit nulls,
-    TopKStreamingJob.kt:349-419) is pinned once, in its tests. The
-    internal event_ts column is stripped first: it is engine plumbing,
-    not part of the reference's record."""
-    from topk_spark.io.sinks import kafka_sink_frame
-
-    cols = [c for c in df.columns if c not in ("event_ts",)]
-    return kafka_sink_frame(df.select(*cols), key_col)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # DuckDB SQL; None → driver runs rows-only check
-    headline: bool = False  # included in bench.py
+    headline: bool = False  # timed by perfbench's batch_headline workload
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 

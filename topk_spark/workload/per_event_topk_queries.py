@@ -7,10 +7,7 @@ the full-granularity parity operator
 (`streaming/continuous_topk_tws.py::continuous_topk_per_event`): one
 ranked snapshot per input event, tagged with the triggering event id and a
 per-key sequence number that must stay monotone across micro-batch
-boundaries. The drain runs the portable applyInPandasWithState path; the
-transformWithStateInPandas twin shares the same fold function and is
-equivalence-tested where its protobuf dependency exists
-(tests/test_per_event_topk.py::test_tws_variant_gate_or_equivalence).
+boundaries. The drain runs the applyInPandasWithState path.
 
 Oracle expressibility: the operator's k-truncation (the reference's lossy
 bounded-state design) is NOT relational — once an item falls off the list

@@ -110,8 +110,8 @@ def rollup_sliding_from_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle rows AND aggregation state by window/slide — measured ~5× at
     this 5m/1m ratio (tests/test_observability.py), but 60× at a
     dashboard-common 1h/1m; the two-level form keeps the event-volume
-    shuffle at 1× and amplifies only per-slice PARTIALS (bench.py's
-    sliding_ratio60 section measures the crossover). Same partial-reuse
+    shuffle at 1× and amplifies only per-slice PARTIALS (the retired bench
+    harness's sliding_ratio60 section measured the crossover). Same partial-reuse
     idea as the reference's merge-rollup ladder
     (orders_1m_rollup_table.json:72-84), applied to overlapping windows."""
     from topk_spark.ops.rollup import sliding_rollup_from_slices

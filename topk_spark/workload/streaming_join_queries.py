@@ -265,9 +265,9 @@ def stream_interval_join_salted_drain(spark: SparkSession, sf_dir: str) -> DataF
     partitions. Identical hash REQUIRED: same pairs (each left row holds one
     salt, so exactly one right replica matches), same emit batches (a
     replica arrives in its original row's micro-batch, so the later-leg
-    emission rule is untouched). bench.py's streaming_join_skew section
-    measures the per-pair cost story; THIS pins that the optimization cannot
-    change results."""
+    emission rule is untouched). The retired bench harness's
+    streaming_join_skew section measured the per-pair cost story; THIS pins
+    that the optimization cannot change results."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
     drained = drain_join(
         spark,
