@@ -1,8 +1,7 @@
 """The full-registry re-verification artifact (FULLCHECK_r{N}.json, written
 by tests/run_fullcheck.py) stays meaningful: every entry green in BOTH
-session variants, and the newest artifact still covers the registry — the
-single-round "all green NOW" claim the round-11 verdict asked for (VERDICT
-r11 'What's missing' #1), kept from silently going stale."""
+session variants, the newest artifact covers the registry, and it was swept
+on the current code — its source digest equals the tree's."""
 
 from __future__ import annotations
 
@@ -10,8 +9,11 @@ import glob
 import json
 import os
 import re
+import shutil
 
 import pytest
+
+from tests.run_fullcheck import source_digest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -75,3 +77,32 @@ def test_fullcheck_covers_current_registry():
         f"are not in the sweep; re-run tests/run_fullcheck.py. "
         f"Missing (first 10): {missing[:10]}"
     )
+
+
+def test_fullcheck_swept_current_code():
+    """The newest sweep verified the code in this tree: any change under
+    topk_spark/ or to tests/driver_compare.py makes it stale."""
+    art = _newest_artifact()
+    if art is None:
+        pytest.skip("no artifact — covered by the existence test's failure")
+    rnd, data = art
+    assert data.get("source_digest") == source_digest(), (
+        f"FULLCHECK_r{rnd}.json was swept on other code; re-run "
+        f"`python tests/run_fullcheck.py {rnd + 1}` and commit its artifact"
+    )
+
+
+def test_source_digest_sees_a_one_byte_change(tmp_path):
+    shutil.copytree(
+        os.path.join(ROOT, "topk_spark"),
+        tmp_path / "topk_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    (tmp_path / "tests").mkdir()
+    shutil.copy(os.path.join(ROOT, "tests", "driver_compare.py"), tmp_path / "tests")
+    assert source_digest(str(tmp_path)) == source_digest()
+    module = tmp_path / "topk_spark" / "session.py"
+    data = bytearray(module.read_bytes())
+    data[0] ^= 1
+    module.write_bytes(bytes(data))
+    assert source_digest(str(tmp_path)) != source_digest()

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from topk_spark.session import ensure_session_conf
 from topk_spark.workload import load_all
 
 REGISTRY = load_all()
@@ -218,6 +219,20 @@ def test_queries_apply_confs_to_foreign_sessions():
             assert vanilla.conf.get(k) == v
     finally:
         pass  # shared session: leave confs applied, do not stop
+
+
+def test_ensure_session_conf_pins_ansi_overflow(spark):
+    """A session built with ANSI off gets it back from ensure_session_conf:
+    a long SUM past 2^63 raises instead of wrapping to a negative total."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        ensure_session_conf(spark)
+        df = spark.createDataFrame([(2**62,), (2**62,)], "v long")
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            df.agg(F.sum("v")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
 
 
 def test_novelty_curve_no_cartesian_single_gram_shuffle(spark, sf_dir):

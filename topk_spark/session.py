@@ -24,6 +24,10 @@ _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     # testdata events.parquet uses TIMESTAMP(NANOS); read as long + convert.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Overflow and invalid casts raise instead of wrapping or yielding NULL.
+    # Spark 4 defaults to this already; pinned so a session built with
+    # ANSI off cannot change any query's result.
+    "spark.sql.ansi.enabled": "true",
     # Arrow for every pandas_udf / applyInPandas / toPandas path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Result-neutral but 5-6x on the stateful drains under a driver-owned

@@ -90,7 +90,12 @@ def topk_revenue_raw_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-time top-10 by revenue over the raw table, last 24h relative to
     the stream head (A4; relative predicate P9 — anchored at max(ts) because
     testdata is fixed in time). TakeOrderedAndProject gives the distributed
-    bounded heap (K6)."""
+    bounded heap (K6).
+
+    Building the DataFrame runs one Spark job: the scalar ``max(ts)`` that
+    anchors the window. Re-executing the returned DataFrame reuses that
+    frozen cutoff; rows appended later do not move it, so call this function
+    again for a fresh window."""
     es = order_stream(spark, sf_dir)
     # Round-14 (guide §6 / VERDICT #6): the stream-head anchor is collected
     # as ONE bounded scalar (tz-free unix micros — robust under any driver

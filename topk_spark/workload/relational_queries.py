@@ -89,9 +89,9 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,2): exact decimal arithmetic internally, integer surface
     externally — the repo-wide output convention (decimal128 outputs are
     the one Arrow type kind the driver's value hash normalizes differently
-    from everything else; CORRECTNESS_r05 proved it on this very query,
-    value-identical rows hash-red). Enforced for all registered oracles by
-    tests/test_registry_gate.py::test_no_decimal_outputs_in_oracles."""
+    from everything else; the round-5 driver run proved it on this very
+    query, value-identical rows hash-red). Enforced for all registered
+    oracles by tests/test_oracle_parity.py::test_no_decimal_outputs_in_oracles."""
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
