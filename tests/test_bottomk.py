@@ -88,10 +88,10 @@ def test_streaming_kmv_reset_counterfactual(spark, sf_dir):
     ~1/3 of the truth — far outside anything the shared oracle would
     hash-match. Also pins that tile-0 hashes populate the true bottom-k
     (what makes restart recovery observable)."""
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     h = _ud_hashed(spark, sf_dir)
-    tiled = _range_tile(h, "ts", 3)
+    tiled = range_tile(h, "ts", 3)
     full = {
         r["event_type"]: r["est_distinct"]
         for r in kmv_estimate(
@@ -148,12 +148,12 @@ def test_state_continuity_is_load_bearing(spark, sf_dir):
     sources — so a sampler whose state reset per batch could not match the
     drain oracle. (The divergence is structural: md5 priorities are
     independent of the doc_id tiling.)"""
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    tiled = _range_tile(docs, "doc_id", 3)
+    tiled = range_tile(docs, "doc_id", 3)
     last_tile = tiled.where(F.col("_tile") == 2).drop("_tile")
     global_rows = set(_sorted_rows(_batch_sample(spark, sf_dir)))
     reset_rows = set(
@@ -171,21 +171,20 @@ def test_priority_sample_restart_continuity(spark, sf_dir):
     drained sample must still equal the batch truth — possible only if
     tile-0 winners survived the restart inside state."""
     from topk_spark.streaming.priority_sample import streaming_priority_sample
-    from topk_spark.workload.streaming_drain_queries import _drain
+    from topk_spark.workload.drain import drain, range_tile
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        docs,
+        range_tile(docs, "doc_id", 3),
         lambda s: streaming_priority_sample(
             _with_priority(s), m=_M_PER_SOURCE
         ),
         output_mode="update",
         last_per=["source"],
-        max_files_per_trigger=3,
-        ordered_split=("doc_id", 3),
+        tiles=3,
         restart_after=1,
     )
     assert _sorted_rows(drained) == _sorted_rows(_batch_sample(spark, sf_dir))

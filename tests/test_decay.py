@@ -22,10 +22,10 @@ def test_state_reset_counterfactual(spark, sf_dir):
     """A sampler whose bucket state reset per batch would finalize from the
     last tile's buckets only — the decayed values (and generally the
     ranking) differ, so the drain oracle catches the reset."""
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     src = _bucketed(spark, sf_dir)
-    tiled = _range_tile(src, "bucket", 3)
+    tiled = range_tile(src, "bucket", 3)
     full = _rows(_finalize_decay(_bucket_sums(src)))
     reset = _rows(
         _finalize_decay(
@@ -41,7 +41,7 @@ def test_prune_is_lossless_beyond_63_shifts(spark):
     finalize defines those contributions as zero — so the drained result
     must equal the batch finalize over the UNPRUNED bucket sums."""
     from topk_spark.streaming.decayed_topk import streaming_decayed_buckets
-    from topk_spark.workload.streaming_drain_queries import _drain
+    from topk_spark.workload.drain import drain, range_tile
 
     src = (
         spark.range(100)
@@ -52,14 +52,13 @@ def test_prune_is_lossless_beyond_63_shifts(spark):
             (F.lit(1_000_000_000) + F.col("id") * 17).cast("long").alias("w"),
         )
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        src,
+        range_tile(src, "bucket", 3),
         lambda s: streaming_decayed_buckets(s),
         output_mode="update",
         last_per=["event_type", "user_id"],
-        max_files_per_trigger=3,
-        ordered_split=("bucket", 3),
+        tiles=3,
     )
     # prune actually engaged: no surviving bucket is >= 63 behind its
     # key's newest

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from topk_spark.workload.events_queries import order_stream
-from topk_spark.workload.streaming_drain_queries import _range_tile
+from topk_spark.workload.drain import range_tile
 
 
 def _order_stats(df):
@@ -39,7 +39,7 @@ def test_exact_quantile_reset_counterfactual(spark, sf_dir):
     so the counterfactual fails the oracle on values too, not just counts.
     Measured at both sf0.001 and sf0.01 before pinning: 5/5 types differ
     in p50 at both scales."""
-    ev = _range_tile(
+    ev = range_tile(
         order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents"),
         "ts",
         3,

@@ -126,9 +126,9 @@ def test_interval_join_drain_emits_cross_batch_pairs(spark, sf_dir):
     out = stream_interval_join_drain(spark, sf_dir).collect()
     assert out, "drain produced no pairs"
     from topk_spark.io.sources import load_table
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
-    e = _range_tile(
+    e = range_tile(
         load_table(spark, sf_dir, "events").filter(
             F.col("event_type").isin("view", "purchase")
         ),
@@ -162,14 +162,14 @@ def test_leftouter_drain_outer_emission_discipline(spark, sf_dir):
     }
     assert nulls, "no outer rows — watermark never expired any view state"
     from topk_spark.io.sources import load_table
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
     tiles = {
         r.event_id: r.tile
-        for r in _range_tile(e, "ts", 3)
+        for r in range_tile(e, "ts", 3)
         .withColumnRenamed("_tile", "tile")
         .select("event_id", "tile")
         .collect()
@@ -235,10 +235,10 @@ def test_streaming_mg_continuity_counterfactual(spark, sf_dir):
     from topk_spark.ops.mg_sketch import mg_add, mg_prune
 
     from topk_spark.io.sources import load_table
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     rows = (
-        _range_tile(
+        range_tile(
             load_table(spark, sf_dir, "events").select(
                 "ts", (F.col("user_id") % 97).alias("cohort")
             ),
@@ -284,9 +284,9 @@ def test_streaming_hll_reset_counterfactual(spark, sf_dir):
     for every event type, because (user, day) buckets never recur across
     terciles."""
     from topk_spark.io.sources import load_table
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
-    ev = _range_tile(
+    ev = range_tile(
         load_table(spark, sf_dir, "events").select(
             "ts",
             "event_type",
@@ -325,12 +325,12 @@ def test_stream_percentile_drain_ok_and_reset_counterfactual(spark, sf_dir):
 
     from topk_spark.io.sources import load_table
     from topk_spark.workload import load_all
-    from topk_spark.workload.streaming_drain_queries import _range_tile
+    from topk_spark.workload.drain import range_tile
 
     rows = load_all()["stream_percentile_drain"].fn(spark, sf_dir).collect()
     assert rows and all(r.med_ok and r.p95_ok for r in rows)
 
-    ev = _range_tile(
+    ev = range_tile(
         load_table(spark, sf_dir, "events").select(
             "ts", "event_type", F.unix_millis("ts").cast("double").alias("v")
         ),

@@ -575,21 +575,20 @@ def test_priority_sample_state_survives_restart(spark, tmp_path, store, sf_dir):
         _M_PER_SOURCE,
         _with_priority,
     )
-    from topk_spark.workload.streaming_drain_queries import _drain
+    from topk_spark.workload.drain import drain, range_tile
     from topk_spark.io.sources import load_table
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        docs,
+        range_tile(docs, "doc_id", 3),
         lambda s: streaming_priority_sample(_with_priority(s), m=_M_PER_SOURCE),
         output_mode="update",
         last_per=["source"],
-        max_files_per_trigger=3,
-        ordered_split=("doc_id", 3),
+        tiles=3,
         restart_after=1,
     )
     w = Window.partitionBy("source").orderBy(
@@ -610,17 +609,16 @@ def test_kmv_minima_state_survives_restart(spark, tmp_path, store, sf_dir):
     from topk_spark.ops.kmv import bottom_k_distinct, kmv_estimate
     from topk_spark.streaming.kmv_stream import streaming_kmv_sketch
     from topk_spark.workload.bottomk_queries import _K, _ud_hashed
-    from topk_spark.workload.streaming_drain_queries import _drain
+    from topk_spark.workload.drain import drain, range_tile
 
     h = _ud_hashed(spark, sf_dir)
-    drained = _drain(
+    drained = drain(
         spark,
-        h,
+        range_tile(h, "ts", 3),
         lambda s: streaming_kmv_sketch(s, k=_K),
         output_mode="update",
         last_per=["event_type"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=1,
     )
     got = sorted(
@@ -694,7 +692,7 @@ def _cdc_restart_roundtrip(spark, sf_dir, retention: bool):
         _RETENTION_MS,
         _tiled_with_stale_replays,
     )
-    from topk_spark.workload.streaming_drain_queries import _drain
+    from topk_spark.workload.drain import drain
 
     kwargs = (
         dict(retention_ms=_RETENTION_MS, watermark_delay=_RETENTION_DELAY)
@@ -702,15 +700,13 @@ def _cdc_restart_roundtrip(spark, sf_dir, retention: bool):
         else {}
     )
     src = _tiled_with_stale_replays(spark, sf_dir)
-    drained = _drain(
+    drained = drain(
         spark,
         src,
         lambda s: streaming_cdc_lastvalue(s, **kwargs),
         output_mode="update",
         last_per=["user_id"],
-        max_files_per_trigger=4,
-        ordered_split=("ts_us", 4),
-        pre_tiled=True,
+        tiles=4,
         restart_after=3,
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("ts_us"), F.desc("event_id"))
@@ -902,16 +898,21 @@ def test_union_min_watermark_survives_restart(spark, tmp_path, store, sf_dir):
     the relational rollup of both sources' union closed under the
     MIN-policy governing watermark (the lagging source's max ts − 10 s),
     computed here from the same fixtures the drain replays."""
+    from topk_spark.workload.drain import drain
     from topk_spark.workload.streaming_join_queries import (
         _build_union_rollup,
         _union_minwm_sources,
-        drain_join,
     )
 
     a, b = _union_minwm_sources(spark, sf_dir)
-    drained = drain_join(
-        spark, a, b, _build_union_rollup, n_batches=3, restart_after=1
-    ).drop("_bid")
+    drained = drain(
+        spark,
+        (a, b),
+        _build_union_rollup,
+        output_mode="append",
+        tiles=3,
+        restart_after=1,
+    )
 
     u = a.drop("_tile").unionByName(b.drop("_tile"))
     wm = min(
@@ -959,9 +960,9 @@ def test_trending_slices_restart_both_providers(spark, tmp_path, store, sf_dir):
     end <= W are decidable. A slice-state reset under-counts every hop a
     straddling slice tiles (60 each); a frontier reset re-emits hops."""
     from topk_spark.workload.events_queries import order_stream
-    from topk_spark.workload.streaming_drain_queries import _trending_60_drain
+    from topk_spark.workload.streaming_drain_queries import trending_60_drain
 
-    drained = _trending_60_drain(spark, sf_dir, restart_after=1)
+    drained = trending_60_drain(spark, sf_dir, restart_after=1)
 
     ev = order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents")
     want_df = spark.sql(

@@ -1,18 +1,19 @@
-"""Multi-batch behavior of the streaming drain queries (round 4).
+"""Multi-batch behavior of the streaming drains and the drain harness.
 
-The registered drains use a one-file source (single micro-batch) so their
-DuckDB oracles are exact. These tests force GENUINELY multi-batch drains
-(maxFilesPerTrigger=1 over several files) and pin what must still hold:
-cross-batch state continuity, the `last_per` final-emission guard, and the
+These tests force GENUINELY multi-batch drains (hash-tiled sources, so
+arrivals are in no id or time order) and pin what must still hold:
+cross-batch state continuity, the `last_per` final-emission guard, the
 at-least-once match contract of the near-dup suppressor under arbitrary
-arrival order."""
+arrival order, and the harness's own tile and restart rules."""
 
 from __future__ import annotations
 
 import duckdb
 import pyspark.sql.functions as F
+import pytest
 
-from topk_spark.workload.streaming_drain_queries import _drain, _order_events
+from topk_spark.workload.drain import drain, under_rocksdb
+from topk_spark.workload.streaming_drain_queries import order_events
 
 
 def test_multibatch_topk_drain_accumulates_and_keeps_last_emission(spark, sf_dir):
@@ -23,13 +24,16 @@ def test_multibatch_topk_drain_accumulates_and_keeps_last_emission(spark, sf_dir
     `last_per` max-batch-id guard is doing real filtering here."""
     from topk_spark.streaming.continuous_topk import continuous_topk
 
-    src = _order_events(spark, sf_dir)
-    drained = _drain(
+    src = order_events(spark, sf_dir)
+    tiled = src.withColumn(
+        "_tile", F.expr("pmod(hash(restaurant_id, menu_item_id, revenue_cents), 4)")
+    )
+    drained = drain(
         spark,
-        src,
+        tiled,
         lambda s: continuous_topk(s, k=10_000),
         last_per=["restaurant_id"],
-        max_files_per_trigger=4,
+        tiles=4,
     )
     got = sorted(
         (r.restaurant_id, r.menu_item_id, r.order_count,
@@ -49,11 +53,11 @@ def test_multibatch_topk_drain_accumulates_and_keeps_last_emission(spark, sf_dir
     )
     assert got == expect
     # the guard really filtered: raw emissions outnumber final keys
-    raw = _drain(
+    raw = drain(
         spark,
-        src,
+        tiled,
         lambda s: continuous_topk(s, k=10_000),
-        max_files_per_trigger=4,
+        tiles=4,
     )
     assert raw.count() > drained.count()
 
@@ -71,12 +75,12 @@ def test_multibatch_neardup_matches_are_true_pairs_any_arrival_order(
     from topk_spark.streaming.neardup import neardup_match_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    drained = _drain(
+    drained = drain(
         spark,
-        docs,
+        docs.withColumn("_tile", F.expr("pmod(hash(doc_id), 4)")),
         lambda s: neardup_match_stream(s, id_col="doc_id", text_col="text"),
         output_mode="append",
-        max_files_per_trigger=4,
+        tiles=4,
     )
     got_edges = {
         frozenset((r.id, r.dup_of))
@@ -142,10 +146,7 @@ def test_under_rocksdb_restores_provider_conf(spark):
     """The RocksDB drain variants flip the state-store conf for the drain
     and must leave a driver-owned session exactly as found — both when a
     previous value existed and when the conf was unset."""
-    import pytest
-
     from topk_spark.session import _STATE_STORE_CONF, set_state_store
-    from topk_spark.workload.streaming_drain_queries import _under_rocksdb
 
     sentinel = spark.createDataFrame([(1,)], "x int")
 
@@ -158,7 +159,7 @@ def test_under_rocksdb_restores_provider_conf(spark):
     except Exception:
         prev = None
     # Mirror the test_restart_continuity store fixture: on a build without
-    # the provider, _under_rocksdb's documented behavior is fallback — the
+    # the provider, under_rocksdb's documented behavior is fallback — the
     # "conf is rocksdb during the body" half of this test does not apply.
     if not set_state_store(spark, "rocksdb"):
         pytest.skip("rocksdb state-store provider unavailable")
@@ -167,7 +168,7 @@ def test_under_rocksdb_restores_provider_conf(spark):
     else:
         spark.conf.set(_STATE_STORE_CONF, prev)
 
-    during = _under_rocksdb(spark, lambda: (probe(), sentinel)[0])
+    during = under_rocksdb(spark, lambda: (probe(), sentinel)[0])
     assert "RocksDB" in during
     try:
         after = spark.conf.get(_STATE_STORE_CONF)
@@ -178,23 +179,54 @@ def test_under_rocksdb_restores_provider_conf(spark):
     # with an explicit prior value, that exact value comes back
     spark.conf.set(_STATE_STORE_CONF, "com.example.FakeProvider")
     try:
-        _under_rocksdb(spark, lambda: None)
+        under_rocksdb(spark, lambda: None)
         assert spark.conf.get(_STATE_STORE_CONF) == "com.example.FakeProvider"
     finally:
         spark.conf.unset(_STATE_STORE_CONF)
 
 
 def test_drain_restart_requires_ordered_split(spark):
-    """restart_after without the ordered tile layout has no defined batch
-    schedule — _drain must refuse rather than produce an un-oracle-able
-    drain."""
-    import pytest
+    """restart_after without a tile count has no defined batch schedule —
+    drain must refuse rather than produce an un-oracle-able drain."""
+    df = spark.createDataFrame([(1, "a", 0)], "ts long, k string, _tile int")
+    with pytest.raises(ValueError, match="requires a tile count"):
+        drain(spark, df, lambda s: s, restart_after=1)
 
-    from topk_spark.workload.streaming_drain_queries import _drain
 
-    df = spark.createDataFrame([(1, "a")], "ts long, k string")
-    with pytest.raises(ValueError, match="ordered_split"):
-        _drain(spark, df, lambda s: s, restart_after=1)
+def test_drain_tiles_require_tile_column(spark):
+    """Under a tile count every source must carry its own `_tile`: one
+    without it is rejected before anything is written."""
+    tiled = spark.createDataFrame([(1, 0)], "x int, _tile int")
+    bare = spark.createDataFrame([(1,)], "x int")
+    with pytest.raises(ValueError, match="_tile"):
+        drain(spark, bare, lambda s: s, tiles=1)
+    with pytest.raises(ValueError, match="_tile"):
+        drain(spark, (tiled, bare), lambda a, b: a.unionByName(b), tiles=1)
+
+
+def test_two_source_drain_shares_one_arrival_timeline(spark):
+    """Multi-source drains replay tile i of EVERY source in micro-batch i
+    (the shared timeline the join drains' emit-batch oracles rely on)."""
+    n = 3
+    left = spark.createDataFrame(
+        [(i, "L", i % n) for i in range(12)], "x int, side string, _tile int"
+    )
+    right = spark.createDataFrame(
+        [(i, "R", (i // 2) % n) for i in range(10)], "x int, side string, _tile int"
+    )
+    drained = drain(
+        spark,
+        (left.withColumn("t", F.col("_tile")), right.withColumn("t", F.col("_tile"))),
+        lambda a, b: a.unionByName(b),
+        output_mode="append",
+        tiles=n,
+        keep_bid=True,
+    )
+    rows = drained.collect()
+    assert len(rows) == 22
+    assert {(r.side, r.t, r._bid) for r in rows} == {
+        (side, t, t) for side in "LR" for t in range(n)
+    }
 
 
 def test_compacted_tier_drain_reads_both_tiers_and_matches_fine_only(

@@ -56,12 +56,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql() access."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # Kafka + JSON event stream (S1/S2/P1/F5)
 # ---------------------------------------------------------------------------

@@ -38,33 +38,3 @@ def dedup_first_seen(
     )
 
 
-def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Distinct-by-key where any representative row is acceptable
-    (Spark `dropDuplicates` — one shuffle, map-side partial dedup)."""
-    return df.dropDuplicates(list(keys))
-
-
-def dedup_stream(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming first-seen dedup with bounded state (D1/D2).
-
-    The watermark horizon plays the role of the reference's 1h state TTL
-    (StateTtlConfig OnCreateAndWrite/NeverReturnExpired,
-    TopKStreamingJob.kt:96-103): duplicates arriving inside the horizon are
-    dropped; later ones are re-admitted — same re-admission behavior as the
-    reference after TTL expiry, on the event-time clock (documented
-    divergence: reference TTL is processing-time; SURVEY §7 risk 2).
-    """
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark([key])
-
-
-def dedup_idempotent_sink_batch(batch_df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Per-micro-batch dedup used inside foreachBatch sinks — the Spark analog
-    of Pinot's storage-level `dedupConfig` on the primary key (D4,
-    orders_raw_upsert_table.json:4-7): a second line of defense making an
-    at-least-once producer effectively exactly-once downstream."""
-    return batch_df.dropDuplicates(list(keys))

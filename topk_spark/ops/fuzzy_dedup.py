@@ -328,18 +328,6 @@ def simhash_neardup_pairs(
     )
 
 
-def _hash_ordered_shingles(sh: Column) -> Column:
-    """Shingles sorted by (xxhash64, value) — a fixed global total order.
-    Hash order (vs lexicographic) decorrelates prefix membership from shingle
-    frequency, balancing posting lists for the prefix-filter join."""
-    return F.transform(
-        F.array_sort(
-            F.transform(sh, lambda s: F.struct(F.xxhash64(s).alias("h"), s.alias("s")))
-        ),
-        lambda st: st["s"],
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",

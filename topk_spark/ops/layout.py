@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned_daily(
@@ -126,14 +126,6 @@ def quantize_col(col, lo, hi, bits: int = _Z_BITS):
     return F.floor(
         (col - lo).cast("double") * float(cells) / (hi - lo + F.lit(1))
     ).cast("long")
-
-
-def quantize_sql(expr: str, lo: str, hi: str, bits: int = _Z_BITS) -> str:
-    """DuckDB twin of `quantize_col` (same association order)."""
-    cells = 1 << bits
-    return (
-        f"CAST(FLOOR(({expr} - {lo}) * {cells}.0 / ({hi} - {lo} + 1)) AS BIGINT)"
-    )
 
 
 def compact_zorder(

@@ -42,6 +42,13 @@ SPLIT_BITS = 20
 _SPLIT = 1 << SPLIT_BITS
 
 
+def cents(col: str) -> Column:
+    """Exact decimal dollars -> integer cents: quantize to decimal(18,2),
+    scale by 100, cast to long — no floating-point step. The DuckDB oracles
+    spell the same rule as `events_queries.CENTS_SQL`."""
+    return (F.col(col).cast("decimal(18,2)") * 100).cast("long")
+
+
 def sum_units_exact(units: Column, unit_scale: int) -> Column:
     """Exact SUM of an integer-unit long column as overflow-safe split long
     sums, returned as the decimal dollars value sum(units) / 10^unit_scale.

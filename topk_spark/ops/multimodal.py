@@ -786,48 +786,6 @@ def make_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def audio_meta(with_payload: DataFrame) -> DataFrame:
-    """Parse each WAV payload's header AND its int16 samples: emits typed
-    metadata plus the exact BIGINT sum-of-squares and floor-RMS — an honest
-    encode->parse->analyze round trip over real bytes. Arrow-batched,
-    map-side; only scalars leave the scan."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("sample_rate", IntegerType(), True),
-            StructField("n_samples", LongType(), True),
-            StructField("duration_ms", LongType(), True),
-            StructField("sum_squares", LongType(), True),
-            StructField("rms_floor", LongType(), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in
-                   ("doc_id", "sample_rate", "n_samples", "duration_ms",
-                    "sum_squares", "rms_floor")}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                parsed = parse_wav(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                if parsed is None:
-                    for k in ("sample_rate", "n_samples", "duration_ms",
-                              "sum_squares", "rms_floor"):
-                        out[k].append(None)
-                    continue
-                sr, n_ch, bits, n = parsed
-                samples = np.frombuffer(bytes(payload)[44:44 + 2 * n], "<i2")
-                ss = int((samples.astype(np.int64) ** 2).sum())
-                out["sample_rate"].append(sr)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(n * 1000 // sr)
-                out["sum_squares"].append(ss)
-                out["rms_floor"].append(int(np.floor(np.sqrt(ss / n))))
-            yield pd.DataFrame(out)
-
-    return with_payload.mapInPandas(run, schema)
-
-
 # ---------------------------------------------------------------------------
 # Baseline JPEG (ITU-T T.81), grayscale: REAL encode + pixel decode with
 # stdlib + numpy only — closing the PNG/GIF/JPEG pixel-parity triangle.

@@ -128,21 +128,6 @@ def sliding_rollup_from_slices(
     )
 
 
-def reaggregate(
-    rollup: DataFrame,
-    keys: Sequence[str],
-    sum_cols: Sequence[str],
-    count_col: str | None = None,
-) -> DataFrame:
-    """Second-level aggregation over a rollup tier (A5): SUM of sums /
-    counts — exactly re-aggregable, no approximation (pinot/README.md:5
-    "Top 10 (Rollup)" pattern)."""
-    aggs = [F.sum(c).cast("long").alias(c) for c in sum_cols]
-    if count_col:
-        aggs.append(F.sum(count_col).cast("long").alias(count_col))
-    return rollup.groupBy(*keys).agg(*aggs)
-
-
 def merge_rollup(
     rollup_1m: DataFrame,
     keys: Sequence[str],

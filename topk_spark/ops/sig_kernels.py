@@ -82,10 +82,6 @@ def _h64(s: str, salt: bytes = b"sig0") -> int:
     return int.from_bytes(blake2b(s.encode(), digest_size=8, salt=salt.ljust(8, b"\0")).digest(), "big")
 
 
-def _hash_array(strings: list[str]) -> np.ndarray:
-    return np.fromiter((_h64(s) for s in strings), dtype=np.uint64, count=len(strings))
-
-
 def _token_hashes(tokens: list[str], memo: dict[str, int]) -> np.ndarray:
     """Per-token 64-bit hashes with a batch-lifetime memo: corpus
     vocabularies are small relative to token streams, so memoization turns

@@ -18,10 +18,8 @@ sketch merges, never from rescanning raw data.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 def exact_distinct(col: str) -> Column:
@@ -40,16 +38,3 @@ def hll_estimate(sketch_col: str | Column) -> Column:
     return F.hll_sketch_estimate(c).cast("long")
 
 
-def hll_merge(sketch_col: str) -> Column:
-    """Union partial sketches across windows/tiers (HLL_MERGE analog)."""
-    return F.hll_union_agg(F.col(sketch_col))
-
-
-def distinct_by_group(
-    df: DataFrame, keys: Sequence[str], col: str, approx: bool = False
-) -> DataFrame:
-    """Distinct `col` per group — exact or HLL-estimated with one line swap."""
-    agg = (
-        hll_estimate(hll_sketch(col)) if approx else exact_distinct(col)
-    ).alias(f"distinct_{col}")
-    return df.groupBy(*keys).agg(agg)

@@ -47,10 +47,3 @@ def revenue_cents(quantity: Column | str, price_in_cents: Column | str) -> Colum
     return (q.cast("long") * p.cast("long")).alias("revenue_cents")
 
 
-def dec_sum(col: Column | str, scale: str = "decimal(18,2)") -> Column:
-    """Sum a double column exactly: cast to decimal first (deterministic,
-    order-independent), surface as double. Spark's float sums are
-    partial-aggregation-order dependent; at 1000 executors that means
-    run-to-run drift — decimal accumulation removes it."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(scale)).cast("double")

@@ -13,7 +13,6 @@ ISO day-of-week (1=Mon..7=Sun, TopKStreamingJob.kt:179).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -37,41 +36,5 @@ ORDER_EVENT = StructType(
     ]
 )
 
-# 1-minute pre-aggregate (TopKStreamingJob.kt:59-72; composite PK
-# [restaurant_id, menu_item_id, window_start_1m], orders_1m_rollup_schema.json:3).
-ROLLUP_1M = StructType(
-    [
-        StructField("restaurant_id", StringType(), False),
-        StructField("menu_item_id", StringType(), False),
-        StructField("menu_item_name", StringType(), True),
-        StructField("category_id", StringType(), True),
-        StructField("window_start_1m", LongType(), False),
-        StructField("window_start_ts", LongType(), False),
-        StructField("hour_of_day", IntegerType(), False),
-        StructField("day_of_week", IntegerType(), False),  # ISO 1=Mon..7=Sun
-        StructField("sum_quantity", LongType(), False),
-        StructField("sum_revenue_cents", LongType(), False),
-        StructField("order_count", LongType(), False),
-        # real HLL sketch (Spark hll_sketch_agg) — upgrade over the reference's
-        # faked "hll:<n>:<hash>" string (TopKStreamingJob.kt:168-169).
-        StructField("unique_customers_hll", BinaryType(), True),
-    ]
-)
-
-# Serving record (Models.kt:39-49); restaurant_id='ALL' marks global rows
-# (KafkaConsumerTopKJob.kt:281).
-TOPK_RESULT = StructType(
-    [
-        StructField("restaurant_id", StringType(), False),
-        StructField("menu_item_id", StringType(), False),
-        StructField("menu_item_name", StringType(), True),
-        StructField("rank", IntegerType(), False),
-        StructField("order_count", LongType(), False),
-        StructField("total_quantity", LongType(), False),
-        StructField("total_revenue_in_cents", LongType(), False),
-        StructField("window_start", LongType(), False),
-        StructField("window_end", LongType(), False),
-    ]
-)
 
 GLOBAL_SENTINEL = "ALL"

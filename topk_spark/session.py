@@ -9,8 +9,9 @@ The reference pins semantics that Spark does not default to:
   cannot read natively → `spark.sql.legacy.parquet.nanosAsLong` + an explicit
   ns→timestamp conversion in io.sources.load_table.
 
-``ensure_session_conf(spark)`` is called by every public query function so the
-engine behaves identically under a driver-provided SparkSession.
+``ensure_session_conf(spark)`` runs inside ``io.sources.load_table`` (the read the
+registered queries start from) and ``get_spark``, so the engine behaves
+identically under a driver-provided SparkSession.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ _BUILD_CONF = {
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing (possibly driver-owned)
-    session. Idempotent and cheap; called at the top of every query fn."""
+    session. Idempotent and cheap; `load_table` calls it on every table read."""
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)

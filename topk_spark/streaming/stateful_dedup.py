@@ -46,7 +46,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-DEFAULT_TTL_MS = 60 * 60 * 1000  # 1h, TopKStreamingJob.kt:87
 
 _STATE_SCHEMA = "seen_at long"
 

@@ -25,13 +25,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
-
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+from topk_spark.workload.events_queries import CENTS_SQL
 
 
 _TRANSITION_ORACLE = """
@@ -134,7 +130,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RETRACT_ORACLE = f"""
 WITH base AS (
-  SELECT event_id, ts, {_CENTS} AS cents FROM events
+  SELECT event_id, ts, {CENTS_SQL} AS cents FROM events
 ),
 retractions AS (
   SELECT r.event_id, tgt.ts AS target_ts, tgt.cents AS target_cents
@@ -169,7 +165,7 @@ def retraction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ordinary signed aggregates — the arithmetic core of incremental
     view maintenance under deletes."""
     e = load_table(spark, sf_dir, "events")
-    base = e.select("event_id", "ts", _cents_col().alias("cents"))
+    base = e.select("event_id", "ts", cents("value").alias("cents"))
     retr = (
         base.filter(F.col("event_id") % 10 == 7)
         .select((F.col("event_id") - 1).alias("tgt_id"))
@@ -310,7 +306,7 @@ _KT_K = 20
 # top-k×top-k (≤ k² rows), never over users.
 _KENDALL_ORACLE = f"""
 WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, user_id, SUM({_CENTS}) AS cents
+  SELECT CAST(ts AS DATE) AS d, user_id, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY 1, 2
 ),
 ranked AS (
@@ -353,7 +349,7 @@ def kendall_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows/day) — the fact table never pair-joins."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("d"), "user_id").agg(
-        F.sum(_cents_col()).alias("cents")
+        F.sum(cents("value")).alias("cents")
     )
     w = Window.partitionBy("d").orderBy(F.desc("cents"), F.asc("user_id"))
     ranked = (

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 
@@ -397,7 +398,7 @@ def rolling_7d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy("event_type", F.to_date("ts").alias("event_date"))
         .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("day_cents")
         )
@@ -442,7 +443,7 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile for approx-quantile cut points; the equal-depth contract then
     becomes approximate, which is the standard trade."""
     e = load_table(spark, sf_dir, "events")
-    vc = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    vc = cents("value")
     w = Window.partitionBy("event_type").orderBy(F.col("vc"), F.col("event_id"))
     return (
         e.select("event_type", vc.alias("vc"), "event_id")

@@ -36,6 +36,7 @@ from topk_spark.workload.sampling_queries import (
     PRIORITY_Q_CTE,
     dlt_priority_projection,
 )
+from topk_spark.workload.drain import drain, range_tile
 
 _K = 64
 
@@ -157,6 +158,25 @@ FROM r WHERE rn <= {_M_PER_SOURCE}
 """
 
 
+def _priority_sample_drain(
+    spark: SparkSession, sf_dir: str, restart_after: int | None = None
+) -> DataFrame:
+    from topk_spark.streaming.priority_sample import streaming_priority_sample
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    return drain(
+        spark,
+        range_tile(docs, "doc_id", 3),
+        lambda s: streaming_priority_sample(_with_priority(s), m=_M_PER_SOURCE),
+        output_mode="update",
+        last_per=["source"],
+        tiles=3,
+        restart_after=restart_after,
+    )
+
+
 @register(
     "stream_priority_sample_drain",
     tags=("sampling", "T8", "streaming"),
@@ -171,21 +191,7 @@ def stream_priority_sample_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrambles doc_id order, so winners come from all three tiles; a
     per-batch state reset would emit the last tile's local top-5 instead
     (measured divergence pinned in tests/test_bottomk.py)."""
-    from topk_spark.streaming.priority_sample import streaming_priority_sample
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    return _drain(
-        spark,
-        docs,
-        lambda s: streaming_priority_sample(_with_priority(s), m=_M_PER_SOURCE),
-        output_mode="update",
-        last_per=["source"],
-        max_files_per_trigger=3,
-        ordered_split=("doc_id", 3),
-    )
+    return _priority_sample_drain(spark, sf_dir)
 
 
 @register(
@@ -202,22 +208,7 @@ def stream_priority_sample_restart_drain(
     per-source sample state from the checkpoint alone before processing
     the rest. Shares the batch oracle verbatim — tile-0 winners are in
     the final sample only if they survived the restart inside state."""
-    from topk_spark.streaming.priority_sample import streaming_priority_sample
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    return _drain(
-        spark,
-        docs,
-        lambda s: streaming_priority_sample(_with_priority(s), m=_M_PER_SOURCE),
-        output_mode="update",
-        last_per=["source"],
-        max_files_per_trigger=3,
-        ordered_split=("doc_id", 3),
-        restart_after=1,
-    )
+    return _priority_sample_drain(spark, sf_dir, restart_after=1)
 
 
 # ---------------------------------------------------------------------------
@@ -228,16 +219,14 @@ def stream_priority_sample_restart_drain(
 def _kmv_drain(spark: SparkSession, sf_dir: str, restart_after=None) -> DataFrame:
     from topk_spark.ops.kmv import kmv_estimate
     from topk_spark.streaming.kmv_stream import streaming_kmv_sketch
-    from topk_spark.workload.streaming_drain_queries import _drain
 
-    drained = _drain(
+    drained = drain(
         spark,
-        _ud_hashed(spark, sf_dir),
+        range_tile(_ud_hashed(spark, sf_dir), "ts", 3),
         lambda s: streaming_kmv_sketch(s, k=_K),
         output_mode="update",
         last_per=["event_type"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     return kmv_estimate(drained, ["event_type"], "u", k=_K)

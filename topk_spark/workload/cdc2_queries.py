@@ -14,9 +14,9 @@ operator's state (per-key (ts_us, event_id) high-water) ignores them;
 a stateless per-batch fold would materialize the stale row as the user's
 final emission and fail the oracle, which is the plain relational
 latest-per-user over the original events (replays are copies, so the
-multiset max is unchanged). This needed `_drain(pre_tiled=True)`: the
-stale tile is a NON-monotone arrival schedule `_range_tile` cannot
-express.
+multiset max is unchanged). The stale tile is a NON-monotone arrival
+schedule `range_tile` cannot express, so the fixture builds its own
+`_tile` column.
 
 100 TB posture: state is one small row per key; arrivals shuffle once on
 the key; an exact replay compares not-greater and is absorbed, so
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
+from topk_spark.workload.drain import drain, range_tile
 
 _LASTVALUE_ORACLE = """
 WITH r AS (
@@ -49,9 +50,7 @@ FROM r WHERE rn = 1
 def _tiled_with_stale_replays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events in 3 event-time tiles plus tile 3 = stale replays (every 7th
     tile-0 row, re-arriving last)."""
-    from topk_spark.workload.streaming_drain_queries import _range_tile
-
-    ev = _range_tile(
+    ev = range_tile(
         load_table(spark, sf_dir, "events").select(
             "ts", "user_id", "event_id", "event_type", "value"
         ),
@@ -71,6 +70,43 @@ def _tiled_with_stale_replays(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: retention drain knobs: the events fixture spans ~30 days in ~10-day
+#: tiles with per-user event gaps of hours, so a 1 h horizon evicts ~90% of
+#: (user, tile) pairs at every tile boundary — measured 415/450 at the
+#: sf0.01 gate scale (pinned non-vacuous in tests/test_cdc_lastvalue.py) —
+#: while the 1-minute watermark delay keeps ordered-tile rows safely above
+#: the late-events watermark (tile i's rows sit at/after tile i-1's max by
+#: construction).
+_RETENTION_MS = 3_600_000
+_RETENTION_DELAY = "1 minute"
+
+
+def _cdc_lastvalue_drain(
+    spark: SparkSession,
+    sf_dir: str,
+    retention: bool = False,
+    restart_after: int | None = None,
+) -> DataFrame:
+    """The four CDC drains' shared body: 4 arrival tiles (the last all
+    stale replays), optionally with the retention horizon on and/or a
+    restart before the stale tile."""
+    from topk_spark.streaming.cdc_lastvalue import streaming_cdc_lastvalue
+
+    return drain(
+        spark,
+        _tiled_with_stale_replays(spark, sf_dir),
+        lambda s: streaming_cdc_lastvalue(
+            s,
+            retention_ms=_RETENTION_MS if retention else None,
+            watermark_delay=_RETENTION_DELAY if retention else None,
+        ),
+        output_mode="update",
+        last_per=["user_id"],
+        tiles=4,
+        restart_after=restart_after,
+    )
+
+
 @register(
     "stream_cdc_lastvalue_drain",
     tags=("D4", "T8", "T9", "cdc", "streaming"),
@@ -82,20 +118,7 @@ def stream_cdc_lastvalue_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash matches the relational latest-per-user iff the state's high-water
     comparison suppressed every late replay — the upsert-table guarantee,
     live."""
-    from topk_spark.streaming.cdc_lastvalue import streaming_cdc_lastvalue
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    src = _tiled_with_stale_replays(spark, sf_dir)
-    return _drain(
-        spark,
-        src,
-        lambda s: streaming_cdc_lastvalue(s),
-        output_mode="update",
-        last_per=["user_id"],
-        max_files_per_trigger=4,
-        ordered_split=("ts_us", 4),
-        pre_tiled=True,
-    )
+    return _cdc_lastvalue_drain(spark, sf_dir)
 
 
 @register(
@@ -120,32 +143,7 @@ def stream_cdc_lastvalue_restart_drain(
     tests/test_stateful_dedup.py::test_cdc_lastvalue_stale_tile_counterfactual;
     the ×2 state-store-provider twin runs in
     tests/test_restart_continuity.py::test_cdc_lastvalue_state_survives_restart)."""
-    from topk_spark.streaming.cdc_lastvalue import streaming_cdc_lastvalue
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    src = _tiled_with_stale_replays(spark, sf_dir)
-    return _drain(
-        spark,
-        src,
-        lambda s: streaming_cdc_lastvalue(s),
-        output_mode="update",
-        last_per=["user_id"],
-        max_files_per_trigger=4,
-        ordered_split=("ts_us", 4),
-        pre_tiled=True,
-        restart_after=3,
-    )
-
-
-#: retention drain knobs: the events fixture spans ~30 days in ~10-day
-#: tiles with per-user event gaps of hours, so a 1 h horizon evicts ~90% of
-#: (user, tile) pairs at every tile boundary — measured 415/450 at the
-#: sf0.01 gate scale (pinned non-vacuous in tests/test_cdc_lastvalue.py) —
-#: while the 1-minute watermark delay keeps ordered-tile rows safely above
-#: the late-events watermark (tile i's rows sit at/after tile i-1's max by
-#: construction).
-_RETENTION_MS = 3_600_000
-_RETENTION_DELAY = "1 minute"
+    return _cdc_lastvalue_drain(spark, sf_dir, restart_after=3)
 
 
 @register(
@@ -167,22 +165,7 @@ def stream_cdc_lastvalue_retention_drain(
     reference's bounded-retention upsert surface
     (orders_raw_upsert_table.json:10-12) run live, with the zero-semantic-
     cost property under the exact-value gate rather than argued."""
-    from topk_spark.streaming.cdc_lastvalue import streaming_cdc_lastvalue
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    src = _tiled_with_stale_replays(spark, sf_dir)
-    return _drain(
-        spark,
-        src,
-        lambda s: streaming_cdc_lastvalue(
-            s, retention_ms=_RETENTION_MS, watermark_delay=_RETENTION_DELAY
-        ),
-        output_mode="update",
-        last_per=["user_id"],
-        max_files_per_trigger=4,
-        ordered_split=("ts_us", 4),
-        pre_tiled=True,
-    )
+    return _cdc_lastvalue_drain(spark, sf_dir, retention=True)
 
 
 @register(
@@ -211,20 +194,4 @@ def stream_cdc_lastvalue_retention_restart_drain(
     The as-of outer restart twin proved this several-state-machines-from-
     one-checkpoint pattern for joins (workload/streaming_join_queries.py);
     this is its timer-bearing applyInPandasWithState form."""
-    from topk_spark.streaming.cdc_lastvalue import streaming_cdc_lastvalue
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    src = _tiled_with_stale_replays(spark, sf_dir)
-    return _drain(
-        spark,
-        src,
-        lambda s: streaming_cdc_lastvalue(
-            s, retention_ms=_RETENTION_MS, watermark_delay=_RETENTION_DELAY
-        ),
-        output_mode="update",
-        last_per=["user_id"],
-        max_files_per_trigger=4,
-        ordered_split=("ts_us", 4),
-        pre_tiled=True,
-        restart_after=3,
-    )
+    return _cdc_lastvalue_drain(spark, sf_dir, retention=True, restart_after=3)

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 
@@ -69,8 +70,7 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_type") == "error", F.lit("D"))
         .otherwise(F.lit("U"))
         .alias("op"),
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
+        cents("value")
         .alias("value_cents"),
     )
     ordkey = F.struct("ts", "event_id")
@@ -90,8 +90,6 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Snapshot reconciliation: digest-based table diff
 # ---------------------------------------------------------------------------
-
-_DIGEST_COLS = "event_id, user_id, event_type, value_cents"
 
 
 @register(
@@ -138,8 +136,7 @@ def snapshot_hash_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
+        cents("value")
         .alias("value_cents"),
     )
     b = a.filter(F.col("event_id") % 501 != 0).withColumn(

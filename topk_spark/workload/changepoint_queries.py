@@ -28,20 +28,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
-
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+from topk_spark.workload.events_queries import CENTS_SQL
 
 
 # Alarm when S_true > 1.5 * mean_daily. In scaled units S_scaled = n*S_true
 # and mean_daily = total/n, so: S_scaled/n > 1.5*total/n  ⇔  2*S_scaled > 3*total.
 _CUSUM_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, SUM({_CENTS}) AS cents
+  SELECT event_type, CAST(ts AS DATE) AS d, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 stats AS (
@@ -88,7 +84,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially memory-safe even when the raw event volume is not."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date("ts").alias("d"), _cents_col().alias("cents"))
+        ev.select("event_type", F.to_date("ts").alias("d"), cents("value").alias("cents"))
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
     )
@@ -124,7 +120,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # another sequential-looking scan with the same exact window rewrite.
 _DRAWDOWN_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, SUM({_CENTS}) AS cents
+  SELECT event_type, CAST(ts AS DATE) AS d, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 cum AS (
@@ -160,7 +156,7 @@ def _max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one aggregate. Integer end-to-end."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date("ts").alias("d"), _cents_col().alias("cents"))
+        ev.select("event_type", F.to_date("ts").alias("d"), cents("value").alias("cents"))
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
     )
@@ -194,7 +190,7 @@ _VAR_PCT = 5  # 5% one-day VaR
 
 _VAR_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, SUM({_CENTS}) AS cents
+  SELECT event_type, CAST(ts AS DATE) AS d, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 deltas AS (
@@ -226,7 +222,7 @@ def _historical_var_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup; the selection window runs over ~30 deltas per series."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date("ts").alias("d"), _cents_col().alias("cents"))
+        ev.select("event_type", F.to_date("ts").alias("d"), cents("value").alias("cents"))
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
     )

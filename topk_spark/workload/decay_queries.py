@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.workload import register
 from topk_spark.streaming.decayed_topk import ZERO_SHIFT
+from topk_spark.workload.drain import drain, range_tile
 from topk_spark.workload.events_queries import _ES, order_stream
 
 _HL_MS = 3 * 86_400_000  # half-life: 3 days
@@ -115,16 +116,14 @@ def _decay_drain(
     spark: SparkSession, sf_dir: str, restart_after: int | None = None
 ) -> DataFrame:
     from topk_spark.streaming.decayed_topk import streaming_decayed_buckets
-    from topk_spark.workload.streaming_drain_queries import _drain
 
-    drained = _drain(
+    drained = drain(
         spark,
-        _bucketed(spark, sf_dir, with_ts=True),
+        range_tile(_bucketed(spark, sf_dir, with_ts=True), "ts", 3),
         lambda s: streaming_decayed_buckets(s),
         output_mode="update",
         last_per=["event_type", "user_id"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     return _finalize_decay(drained)

@@ -20,13 +20,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
+from topk_spark.workload.events_queries import CENTS_SQL
 
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 _KS_ORACLE = f"""
 WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, {_CENTS} AS cents, count(*) AS c
+  SELECT CAST(ts AS DATE) AS d, {CENTS_SQL} AS cents, count(*) AS c
   FROM events GROUP BY 1, 2
 ),
 days AS (SELECT DISTINCT d FROM daily),
@@ -74,7 +75,7 @@ def ks_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         F.col("ts").cast("date").alias("d"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     ).agg(F.count("*").alias("c"))
     # day d contributes as side-1 of pair d and side-2 of pair d-1
     side1 = daily.select(F.col("d").alias("d1"), "cents", F.col("c").alias("c1"),
@@ -205,7 +206,7 @@ _TV_BAND = 10_000  # cents per histogram bin
 # ride the CUMULATIVE counts; TV's are per-bin).
 _TV_ORACLE = f"""
 WITH binned AS (
-  SELECT CAST(ts AS DATE) AS d, {_CENTS} // {_TV_BAND} AS bin,
+  SELECT CAST(ts AS DATE) AS d, {CENTS_SQL} // {_TV_BAND} AS bin,
          count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2
 ),
@@ -249,9 +250,9 @@ def tv_distance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, a full-outer bin alignment between adjacent days, one grouped
     L1 sum."""
     e = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents("value")
     binned = (
-        e.select(F.to_date("ts").alias("d"), F.floor(cents / _TV_BAND).alias("bin"))
+        e.select(F.to_date("ts").alias("d"), F.floor(value_cents / _TV_BAND).alias("bin"))
         .groupBy("d", "bin")
         .agg(F.count("*").alias("c"))
     )
@@ -389,7 +390,7 @@ def source_histogram_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # supports), so the statistic is scale-free and BIGINT-rendered.
 _CVM_ORACLE = f"""
 WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, {_CENTS} AS cents, count(*)::BIGINT AS c
+  SELECT CAST(ts AS DATE) AS d, {CENTS_SQL} AS cents, count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2
 ),
 a AS (SELECT d AS day_a, cents, c AS c1 FROM daily),
@@ -442,9 +443,9 @@ def cvm_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan family of ks_drift_daily: per-(day, value) counts partial-agg
     map-side; CDF windows partition by day-pair over the value domain."""
     e = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents("value")
     daily = (
-        e.select(F.to_date("ts").alias("d"), cents.alias("cents"))
+        e.select(F.to_date("ts").alias("d"), value_cents.alias("cents"))
         .groupBy("d", "cents")
         .agg(F.count("*").alias("c"))
     )

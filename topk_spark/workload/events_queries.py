@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.ops.dedup import dedup_first_seen
+from topk_spark.ops.money import cents
 from topk_spark.ops.rollup import merge_rollup, windowed_rollup
 from topk_spark.ops.sketches import exact_distinct
 from topk_spark.ops.timeparts import floor_to_window_ms
@@ -38,21 +39,24 @@ def order_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         F.get_json_object("props", "$.k").cast("int").alias("quantity"),
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("price_cents"),
+        cents("value").alias("price_cents"),
     ).withColumn(
         "revenue_cents",
         (F.col("quantity").cast("long") * F.col("price_cents")).cast("long"),
     )
 
 
+# The oracle side of `ops.money.cents` over the events `value` column.
+CENTS_SQL = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+
 # Same projection as a DuckDB CTE, spliced into every oracle.
-_ES = """
+_ES = f"""
 es AS (
   SELECT event_id, ts, user_id, event_type,
          CAST(json_extract(props, '$.k') AS INT) AS quantity,
-         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_cents,
+         {CENTS_SQL} AS price_cents,
          CAST(CAST(json_extract(props, '$.k') AS INT) AS BIGINT)
-           * CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS revenue_cents
+           * {CENTS_SQL} AS revenue_cents
   FROM events
 )
 """
@@ -317,8 +321,6 @@ def dedup_first_seen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("survivors"),
         F.sum("revenue_cents").cast("long").alias("revenue_cents"),
     )
-
-
 
 
 @register(

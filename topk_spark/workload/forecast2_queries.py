@@ -26,20 +26,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
+from topk_spark.workload.events_queries import CENTS_SQL
 
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _A = 0.25  # α, exactly representable; 1−α = 0.75
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
 
 
 _BROWN_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         SUM({_CENTS}) AS cents, count(*) AS n
+         SUM({CENTS_SQL}) AS cents, count(*) AS n
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 series AS (
@@ -83,7 +80,7 @@ def brown_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
-        F.sum(_cents_col()).alias("cents"), F.count("*").alias("n")
+        F.sum(cents("value")).alias("cents"), F.count("*").alias("n")
     )
     series = daily.groupBy("event_type").agg(
         F.array_sort(
@@ -128,7 +125,7 @@ def brown_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _THEILSEN_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, SUM({_CENTS}) AS cents
+  SELECT event_type, CAST(ts AS DATE) AS d, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 idx AS (
@@ -170,7 +167,7 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table is never pair-joined."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
-        F.sum(_cents_col()).alias("cents")
+        F.sum(cents("value")).alias("cents")
     )
     idx = daily.select(
         "event_type",
@@ -210,7 +207,7 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SNAIVE_ORACLE = f"""
 WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, SUM({_CENTS}) AS cents
+  SELECT event_type, CAST(ts AS DATE) AS d, SUM({CENTS_SQL}) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 j AS (
@@ -247,7 +244,7 @@ def seasonal_naive_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag joins are equi-joins on (series, day) over the daily rollup."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
-        F.sum(_cents_col()).alias("cents")
+        F.sum(cents("value")).alias("cents")
     )
     cur = daily.alias("cur")
     w7 = daily.select(

@@ -21,15 +21,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
+from topk_spark.workload.events_queries import CENTS_SQL
 
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 _ALPHA = 0.25  # exactly representable; s' = 0.25*x + 0.75*s
 
 _EWMA_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         SUM({_CENTS}) AS cents, count(*) AS n
+         SUM({CENTS_SQL}) AS cents, count(*) AS n
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 series AS (
@@ -61,7 +62,7 @@ def ewma_level_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
         F.count("*").alias("n"),
     )
     series = daily.groupBy("event_type").agg(

@@ -16,7 +16,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from topk_spark.io.sources import load_table
 from topk_spark.ops.fuzzy_dedup import (
     minhash_neardup_pairs,
     ngram_jaccard_pairs,

@@ -49,12 +49,14 @@ from pyspark.sql import DataFrame, SparkSession
 from topk_spark.io.sources import load_table
 from topk_spark.ops.mg_sketch import mg_summarize
 from topk_spark.workload import register
-from topk_spark.workload.events_queries import _ES as _EV_ES
-from topk_spark.workload.streaming_drain_queries import (
-    _bounds_sql,
-    _range_tile,
-    _tile_expr_sql,
+from topk_spark.workload.drain import (
+    bounds_sql,
+    drain,
+    drain_tmpdir,
+    range_tile,
+    tile_expr_sql,
 )
+from topk_spark.workload.events_queries import _ES as _EV_ES
 
 #: Misra-Gries summary capacity. CAP + 1 = 64 divides the threshold: the
 #: operator guarantees exactness for any T > W/64. Kept under the 97-cohort
@@ -129,11 +131,11 @@ def spacesaving_heavy_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # restart because the update-mode operator has no watermark flush batch)
 # must be restart-invariant.
 _MG_DRAIN_ORACLE = f"""
-WITH b AS {_bounds_sql("events")},
+WITH b AS {bounds_sql("events")},
 e AS (
   SELECT user_id % 97 AS cohort,
          CASE WHEN (user_id % 97) % 19 = 0 AND tile = 0 THEN 20 ELSE 1 END AS w
-  FROM (SELECT user_id, {_tile_expr_sql()} AS tile
+  FROM (SELECT user_id, {tile_expr_sql()} AS tile
         FROM events CROSS JOIN b)
 ),
 tot AS (SELECT CAST(SUM(w) AS BIGINT) AS wtot FROM e)
@@ -194,10 +196,9 @@ def _mg_drain(
     spark: SparkSession, sf_dir: str, restart_after: int | None = None
 ) -> DataFrame:
     from topk_spark.streaming.heavyhitters import streaming_mg_summary
-    from topk_spark.workload.streaming_drain_queries import _drain
 
     ev = (
-        _range_tile(
+        range_tile(
             load_table(spark, sf_dir, "events").select(
                 "ts", (F.col("user_id") % 97).alias("cohort")
             ),
@@ -213,13 +214,12 @@ def _mg_drain(
         )
         .select("ts", "cohort", "w")
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         lambda s: streaming_mg_summary(s, cap=63),
         output_mode="update",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         keep_bid=True,
         restart_after=restart_after,
     )
@@ -300,18 +300,16 @@ def _hll_drain(
             ":", F.col("user_id"), F.floor(F.unix_millis("ts") / 86400000)
         ).alias("ud"),
     )
-    from topk_spark.workload.streaming_drain_queries import _drain
 
-    drained = _drain(
+    drained = drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         lambda s: s.groupBy("event_type").agg(
             F.hll_sketch_agg("ud", F.lit(12)).alias("sk")
         ),
         output_mode="update",
         last_per=["event_type"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     est = drained.select(
@@ -389,24 +387,22 @@ def stream_percentile_restart_drain(
 def _percentile_drain(
     spark: SparkSession, sf_dir: str, restart_after: int | None = None
 ) -> DataFrame:
-    from topk_spark.workload.streaming_drain_queries import _drain
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts",
         "event_type",
         F.unix_millis("ts").cast("double").alias("v"),
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         lambda s: s.groupBy("event_type").agg(
             F.percentile_approx("v", F.lit(0.5), F.lit(10000)).alias("med"),
             F.percentile_approx("v", F.lit(0.95), F.lit(10000)).alias("p95"),
         ),
         output_mode="update",
         last_per=["event_type"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     exact = ev.groupBy("event_type").agg(
@@ -462,19 +458,17 @@ def _exact_quantile_drain(
 ) -> DataFrame:
     from topk_spark.streaming.exact_quantile import streaming_exact_quantile
     from topk_spark.workload.events_queries import order_stream
-    from topk_spark.workload.streaming_drain_queries import _drain
 
     ev = order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents")
-    return _drain(
+    return drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         lambda s: streaming_exact_quantile(
             s, key="event_type", value_col="revenue_cents", pcts=(50, 90, 99)
         ),
         output_mode="update",
         last_per=["event_type"],
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
 
@@ -564,7 +558,6 @@ def _live_percentile_tier_drain(
     from topk_spark.ops.rollup import windowed_rollup
     from topk_spark.serve.api import percentiles
     from topk_spark.workload.events_queries import order_stream
-    from topk_spark.workload.streaming_drain_queries import _drain
 
     ev = order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents")
 
@@ -577,13 +570,12 @@ def _live_percentile_tier_drain(
             "1 minute",
         ).select("event_type", "revenue_cents", "window_start", "window_end", "n")
 
-    tier = _drain(
+    tier = drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     # the serving read over everything the stream has closed: every drained
@@ -789,7 +781,6 @@ def _compacted_percentile_tier_drain(
     _debug_dirs: list | None = None,
 ) -> DataFrame:
     import os
-    import tempfile
 
     from topk_spark.io.tier import (
         append_upto,
@@ -802,10 +793,8 @@ def _compacted_percentile_tier_drain(
     from topk_spark.serve.api import percentiles
     from topk_spark.serve.router import TierRouter, TierSpec
     from topk_spark.workload.events_queries import order_stream
-    from topk_spark.workload.streaming_drain_queries import _TMP_ROOTS, _drain
 
-    tier_root = tempfile.mkdtemp(prefix="topk_spark_pctile_compact_")
-    _TMP_ROOTS.append(tier_root)
+    tier_root = drain_tmpdir("topk_spark_pctile_compact_")
     fine_dir = os.path.join(tier_root, "fine")
     coarse_dir = os.path.join(tier_root, "coarse")
     if _debug_dirs is not None:
@@ -899,13 +888,12 @@ def _compacted_percentile_tier_drain(
             purge_upto(coarse_dir, (w_cur - retention_ms) // _HOUR_MS * _HOUR_MS)
         return sess.createDataFrame([], batch.schema)
 
-    _drain(
+    drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
         batch_transform=persist_and_compact,
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.ops.layout import materialize_once
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 from topk_spark.workload.layout_queries import _layout_root
 
@@ -118,7 +119,7 @@ def format_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     csv_half = c.groupBy(F.col("event_type").alias("grp")).agg(
         F.count("*").alias("n"),
         F.countDistinct("user_id").alias("aux_count"),
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+        F.sum(cents("value"))
         .cast("long")
         .alias("sum_cents"),
         F.unix_micros(F.min("ts")).alias("first_us"),
@@ -132,11 +133,11 @@ def format_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("|", "l_returnflag", "l_linestatus").alias("grp")
     ).agg(
         F.count("*").alias("n"),
-        F.sum((F.col("l_quantity").cast("decimal(18,2)") * 100).cast("long"))
+        F.sum(cents("l_quantity"))
         .cast("long")
         .alias("sum_cents"),
         F.sum(
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
+            cents("l_extendedprice")
         )
         .cast("long")
         .alias("sum_cents2"),
@@ -220,7 +221,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.countDistinct("user_id").alias("n_users"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("sum_value_cents"),
         )
@@ -254,7 +255,7 @@ def props_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k_bucket")
         .agg(
             F.count("*").alias("n"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("sum_value_cents"),
         )

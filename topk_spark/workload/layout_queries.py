@@ -21,6 +21,7 @@ from topk_spark.ops.layout import (
     materialize_once,
     write_partitioned_daily,
 )
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 # One pruned week, inside every SF's 2024-01-01..2024-01-30 span.
@@ -79,7 +80,7 @@ def partition_pruned_week(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_date")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("sum_value_cents"),
         )
@@ -110,7 +111,7 @@ def sorted_scan_user_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("sum_value_cents"),
         )
@@ -126,10 +127,6 @@ _ZUID_LO, _ZUID_HI = 40, 79          # inside 0..149 at every SF
 _ZVC_LO, _ZVC_HI = 10_000, 19_999    # value_cents domain is 1..49002
 
 
-def _value_cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-
-
 def zordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events, compacted into 16 files z-order-clustered on
     (user_id, value_cents) — each file covers a compact rectangle in the
@@ -138,7 +135,7 @@ def zordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         _layout_root(sf_dir, "events_zorder"),
         lambda p: compact_zorder(
             load_table(spark, sf_dir, "events").withColumn(
-                "value_cents", _value_cents_col()
+                "value_cents", cents("value")
             ),
             "user_id",
             "value_cents",
@@ -184,29 +181,6 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental materialized-view refresh: merge a delta, never rescan history
 # ---------------------------------------------------------------------------
-
-_MV_CUTOVER = "2024-01-25"
-
-
-def _mv_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 'yesterday' state of an hourly revenue MV, materialized once:
-    aggregated from events BEFORE the cutover and frozen to parquet — the
-    stand-in for a production MV table that already exists on disk."""
-    path = materialize_once(
-        _layout_root(sf_dir, "mv_hourly_base"),
-        lambda p: load_table(spark, sf_dir, "events")
-        .filter(F.col("ts") < F.lit(_MV_CUTOVER).cast("timestamp"))
-        .groupBy(F.date_trunc("hour", "ts").alias("hour"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .cast("long")
-            .alias("sum_value_cents"),
-        )
-        .write.mode("overwrite")
-        .parquet(p),
-    )
-    return spark.read.parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +253,7 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_date")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("sum_value_cents"),
         )

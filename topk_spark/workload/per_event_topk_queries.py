@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
+from topk_spark.workload.drain import drain, range_tile
 
 _PER_EVENT_TOPK_ORACLE = """
 WITH ev AS (
@@ -74,6 +75,40 @@ FROM ranked WHERE rnk <= 3
 """
 
 
+def _per_event_topk_drain(
+    spark: SparkSession,
+    sf_dir: str,
+    trunc: bool = False,
+    restart_after: int | None = None,
+) -> DataFrame:
+    """Shared body of the four per-event top-K drains over three
+    event-time-ordered tiles: the exact regime (k=10 over an 8-item domain)
+    or, with `trunc`, the lossy one (every _TRUNC_MOD-th event, k below the
+    item domain)."""
+    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
+
+    ev = load_table(spark, sf_dir, "events")
+    dom, k, emit_k = 8, 10, 3
+    if trunc:
+        ev = ev.where(F.col("event_id") % _TRUNC_MOD == 0)
+        dom, k, emit_k = _TRUNC_DOM, _TRUNC_K, _TRUNC_EMIT_K
+    ev = ev.select(
+        F.col("event_type").alias("restaurant_id"),
+        (F.col("user_id") % dom).cast("string").alias("menu_item_id"),
+        F.col("event_id").cast("long").alias("event_id"),
+        F.unix_micros("ts").alias("ts_us"),
+        "ts",
+    )
+    return drain(
+        spark,
+        range_tile(ev, "ts", 3),
+        lambda s: continuous_topk_per_event(s.drop("ts"), k=k, emit_k=emit_k),
+        output_mode="append",
+        tiles=3,
+        restart_after=restart_after,
+    )
+
+
 @register(
     "stream_per_event_topk_drain",
     tags=("K1", "T8", "streaming"),
@@ -87,24 +122,7 @@ def stream_per_event_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     a lost sequence counter, or batch-granular emission all break the
     hash (10k snapshots at sf0.01 — a per-BATCH emitter produces ~6 rows
     per key-batch and fails on row count alone)."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("restaurant_id"),
-        (F.col("user_id") % 8).cast("string").alias("menu_item_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
-        "ts",
-    )
-    return _drain(
-        spark,
-        ev,
-        lambda s: continuous_topk_per_event(s.drop("ts"), k=10, emit_k=3),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-    )
+    return _per_event_topk_drain(spark, sf_dir)
 
 
 @register(
@@ -125,25 +143,7 @@ def stream_per_event_topk_restart_drain(
     pre-restart counts (a state loss restarts both at 1/zero and shifts
     every subsequent snapshot's seq AND counts — there is no partial
     credit)."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").alias("restaurant_id"),
-        (F.col("user_id") % 8).cast("string").alias("menu_item_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.unix_micros("ts").alias("ts_us"),
-        "ts",
-    )
-    return _drain(
-        spark,
-        ev,
-        lambda s: continuous_topk_per_event(s.drop("ts"), k=10, emit_k=3),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        restart_after=2,
-    )
+    return _per_event_topk_drain(spark, sf_dir, restart_after=2)
 
 
 # Truncation-regime fixture knobs, shared by the drain, its oracle, and the
@@ -218,30 +218,7 @@ def stream_per_event_topk_trunc_drain(
     no-truncation drains would claim monotone counts and fail here. Three
     event-time-ordered micro-batches keep cross-batch state continuity
     under the same hash."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_id") % _TRUNC_MOD == 0)
-        .select(
-            F.col("event_type").alias("restaurant_id"),
-            (F.col("user_id") % _TRUNC_DOM).cast("string").alias("menu_item_id"),
-            F.col("event_id").cast("long").alias("event_id"),
-            F.unix_micros("ts").alias("ts_us"),
-            "ts",
-        )
-    )
-    return _drain(
-        spark,
-        ev,
-        lambda s: continuous_topk_per_event(
-            s.drop("ts"), k=_TRUNC_K, emit_k=_TRUNC_EMIT_K
-        ),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-    )
+    return _per_event_topk_drain(spark, sf_dir, trunc=True)
 
 
 @register(
@@ -262,28 +239,4 @@ def stream_per_event_topk_trunc_restart_drain(
     (plus the seq counter restarting at 1 shifts every remaining snapshot).
     A green hash therefore proves the truncated state round-tripped the
     checkpoint exactly."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_id") % _TRUNC_MOD == 0)
-        .select(
-            F.col("event_type").alias("restaurant_id"),
-            (F.col("user_id") % _TRUNC_DOM).cast("string").alias("menu_item_id"),
-            F.col("event_id").cast("long").alias("event_id"),
-            F.unix_micros("ts").alias("ts_us"),
-            "ts",
-        )
-    )
-    return _drain(
-        spark,
-        ev,
-        lambda s: continuous_topk_per_event(
-            s.drop("ts"), k=_TRUNC_K, emit_k=_TRUNC_EMIT_K
-        ),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        restart_after=2,
-    )
+    return _per_event_topk_drain(spark, sf_dir, trunc=True, restart_after=2)

@@ -21,13 +21,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
-
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+from topk_spark.workload.events_queries import CENTS_SQL
 
 
 # candidate FDs: (table, determinant, dependent)
@@ -91,7 +87,7 @@ def fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ATTR_ORACLE = f"""
 WITH purchases AS (
-  SELECT event_id AS pid, user_id, ts AS pts, {_CENTS} AS cents
+  SELECT event_id AS pid, user_id, ts AS pts, {CENTS_SQL} AS cents
   FROM events WHERE event_type = 'purchase'
 ),
 touches AS (
@@ -143,7 +139,7 @@ def attribution_models_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("pid"),
         F.col("user_id"),
         F.col("ts").alias("pts"),
-        _cents_col().alias("cents"),
+        cents("value").alias("cents"),
     )
     others = e.filter(F.col("event_type") != "purchase").select(
         F.col("user_id").alias("t_user"), "event_type", "ts", "event_id"
@@ -234,7 +230,7 @@ def _freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SENTINEL_ORACLE = f"""
 WITH v AS (
-  SELECT {_CENTS} AS cents FROM events
+  SELECT {CENTS_SQL} AS cents FROM events
 ),
 m AS (
   SELECT count(*)::BIGINT AS n,
@@ -263,7 +259,7 @@ def _sentinel_value_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a bounded-heap top-1 over per-value counts with a deterministic
     tiebreak."""
     e = load_table(spark, sf_dir, "events")
-    v = e.select(_cents_col().alias("cents"))
+    v = e.select(cents("value").alias("cents"))
     m = v.agg(
         F.count("*").alias("n"),
         F.sum((F.col("cents") == 0).cast("long")).alias("n_zero"),

@@ -145,19 +145,6 @@ def int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JOINEST_ORACLE = """
-WITH ok AS (SELECT o_orderkey AS k, count(*) AS c FROM orders GROUP BY 1),
-lk AS (SELECT l_orderkey AS k, count(*) AS c FROM lineitem GROUP BY 1),
-predicted AS (SELECT CAST(SUM(ok.c * lk.c) AS BIGINT) AS predicted_rows
-              FROM ok JOIN lk ON ok.k = lk.k),
-actual AS (SELECT count(*) AS actual_rows
-           FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey)
-SELECT predicted.predicted_rows, actual.actual_rows,
-       (predicted.predicted_rows = actual.actual_rows) AS exact_match
-FROM predicted, actual
-"""
-
-
 _PQ_METRICS = ["n_queries_eq_5", "recall_avg_ge_0.85", "recall_min_ge_0.7"]
 
 
@@ -191,27 +178,4 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact per-dimension quartiles of the embedding space
 # ---------------------------------------------------------------------------
 
-_QDIMS = 8  # profile the first 8 dimensions
 
-_DIMQ_ORACLE = f"""
-WITH ex AS (
-  SELECT unnest(range(1, {_QDIMS} + 1)) AS dim, embedding
-  FROM embeddings
-),
-vals AS (
-  SELECT CAST(dim AS INT) AS dim, embedding[dim]::DOUBLE AS v FROM ex
-),
-ranked AS (
-  SELECT dim, v,
-         row_number() OVER (PARTITION BY dim ORDER BY v) AS r,
-         count(*) OVER (PARTITION BY dim) AS n
-  FROM vals
-)
-SELECT dim,
-       min(CASE WHEN r = (n + 3) // 4 THEN v END) AS q1,
-       min(CASE WHEN r = (n + 1) // 2 THEN v END) AS median,
-       min(CASE WHEN r = (3 * n + 1) // 4 THEN v END) AS q3
-FROM ranked
-GROUP BY dim
-ORDER BY dim
-"""

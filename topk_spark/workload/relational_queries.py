@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 
@@ -211,7 +212,7 @@ def global_rank_without_global_sort(spark: SparkSession, sf_dir: str) -> DataFra
     rank is computed."""
     e = load_table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long")).alias("cents")
+        F.sum(cents("value")).alias("cents")
     )
     per_val = per_user.groupBy("cents").agg(F.count("*").alias("cnt"))
     w_val = Window.orderBy(F.desc("cents")).rowsBetween(

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 _TOKEN_RE = "[^a-z]+"
@@ -88,21 +89,6 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEARCH_ORACLE = """
-WITH tok AS (
-  SELECT DISTINCT doc_id,
-         unnest(string_split_regex(lower(text), '[^a-z]+')) AS token
-  FROM documents
-)
-SELECT d.doc_id, d.lang, d.n_chars
-FROM documents d
-WHERE d.doc_id IN (SELECT doc_id FROM tok WHERE token = 'vector')
-  AND d.doc_id IN (SELECT doc_id FROM tok WHERE token = 'stream')
-  AND d.doc_id NOT IN (SELECT doc_id FROM tok WHERE token = 'slow')
-ORDER BY d.doc_id
-"""
-
-
 _DECAY_ORACLE = """
 WITH mx AS (SELECT max(CAST(ts AS DATE)) AS md FROM events),
 ev AS (
@@ -139,8 +125,7 @@ def trending_decayed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.crossJoin(F.broadcast(mx))
         .select(
             "event_type",
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long")
+            cents("value")
             .alias("cents"),
             F.least(
                 F.datediff(F.col("md"), F.to_date("ts")), F.lit(62)
@@ -207,7 +192,7 @@ def topk_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.to_date("ts").alias("d"),
             "md",
-            (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
         .filter(F.col("d") >= F.date_sub(F.col("md"), 1))
         .groupBy("user_id", "d", "md")

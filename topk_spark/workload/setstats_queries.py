@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 _INTERSECT_ORACLE = """
@@ -191,7 +192,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("event_type") == "purchase",
-                    (F.col("value").cast("decimal(18,2)") * 100).cast("long"),
+                    cents("value"),
                 ).otherwise(F.lit(0).cast("long"))
             ).alias("monetary_cents"),
         )
@@ -340,9 +341,9 @@ def new_vs_returning_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregate. Distinct-user counts ride the same pass."""
     ev = load_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_d"))
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents("value")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.to_date("ts").alias("d"), cents.alias("cents")
+        "user_id", F.to_date("ts").alias("d"), value_cents.alias("cents")
     )
     joined = purchases.join(first_seen, "user_id")
     is_new = F.col("d") == F.col("first_d")

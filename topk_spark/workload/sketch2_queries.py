@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
 
 
@@ -130,7 +131,7 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("ts").cast("int").alias("hour_of_day"),
         (
             F.get_json_object("props", "$.k").cast("int").cast("long")
-            * (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+            * cents("value")
         ).alias("rev"),
     )
     return (
@@ -277,7 +278,7 @@ def value_band_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("band").agg(
         F.count("*").alias("n_events"),
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+        F.sum(cents("value"))
         .cast("long")
         .alias("sum_value_cents"),
     )

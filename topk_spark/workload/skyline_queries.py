@@ -14,15 +14,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.ops.skyline import pareto_front_2d
 from topk_spark.workload import register
+from topk_spark.workload.events_queries import CENTS_SQL
 
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 _PARETO_ORACLE = f"""
 WITH per_user AS (
   SELECT user_id,
-         CAST(SUM(CASE WHEN event_type = 'purchase' THEN {_CENTS} ELSE 0 END)
+         CAST(SUM(CASE WHEN event_type = 'purchase' THEN {CENTS_SQL} ELSE 0 END)
               AS BIGINT) AS revenue_cents,
          count(*) AS activity
   FROM events GROUP BY user_id
@@ -65,7 +66,7 @@ def pareto_front_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long"),
+                cents("value"),
             ).otherwise(F.lit(0).cast("long"))
         ).alias("revenue_cents"),
         F.count("*").alias("activity"),

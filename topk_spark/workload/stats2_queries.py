@@ -26,14 +26,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.ops.timeparts import iso_dayofweek
 from topk_spark.workload import register
-
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+from topk_spark.workload.events_queries import CENTS_SQL
 
 
 # χ²(df=1) critical value at α=0.05 is 3.841: per-cell significance ⇔
@@ -110,8 +106,8 @@ _BENFORD_VALUES = ", ".join(f"({d}, {p})" for d, p in _BENFORD_PPM.items())
 
 _BENFORD_ORACLE = f"""
 WITH v AS (
-  SELECT substr(CAST({_CENTS} AS VARCHAR), 1, 1)::INT AS d
-  FROM events WHERE {_CENTS} > 0
+  SELECT substr(CAST({CENTS_SQL} AS VARCHAR), 1, 1)::INT AS d
+  FROM events WHERE {CENTS_SQL} > 0
 ),
 obs AS (
   SELECT d, count(*)::BIGINT AS cnt FROM v GROUP BY d
@@ -140,9 +136,9 @@ def benford_leading_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: map-side digit extraction → 9-group partial+final
     count; the Benford reference is a 9-row literal joined at the end."""
     e = load_table(spark, sf_dir, "events")
-    cents = _cents_col()
+    value_cents = cents("value")
     obs = (
-        e.select(cents.alias("cents"))
+        e.select(value_cents.alias("cents"))
         .filter(F.col("cents") > 0)
         .select(F.substring(F.col("cents").cast("string"), 1, 1).cast("int").alias("d"))
         .groupBy("d")
@@ -188,7 +184,7 @@ _MWU_A, _MWU_B = "purchase", "click"
 # cross-multiplied in HUGEINT/DECIMAL(38,0) — (U2−nAnB)² passes BIGINT at scale.
 _MWU_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, {_CENTS} AS cents FROM events
+  SELECT event_type, {CENTS_SQL} AS cents FROM events
   WHERE event_type IN ('{_MWU_A}', '{_MWU_B}')
 ),
 per_val AS (
@@ -241,7 +237,7 @@ def mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin(_MWU_A, _MWU_B)
     )
     per_val = (
-        e.select("event_type", _cents_col().alias("cents"))
+        e.select("event_type", cents("value").alias("cents"))
         .groupBy("cents")
         .agg(
             F.count("*").alias("c"),
@@ -286,8 +282,6 @@ def mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Rolling bivariate correlation gate, division- and sqrt-free
 # ---------------------------------------------------------------------------
-
-_RW = 7  # rolling window (days)
 
 # Pearson r over a window needs a sqrt; the GATE |r| >= 1/2 does not:
 #   r² ≥ 1/4  ⇔  4·(n·Σxy − ΣxΣy)² ≥ (n·Σx² − (Σx)²)·(n·Σy² − (Σy)²)
@@ -428,7 +422,7 @@ _LORENZ_BANDS = 10
 
 _LORENZ_ORACLE = f"""
 WITH per_user AS (
-  SELECT user_id, SUM({_CENTS}) AS cents FROM events GROUP BY user_id
+  SELECT user_id, SUM({CENTS_SQL}) AS cents FROM events GROUP BY user_id
 ),
 ranked AS (
   SELECT cents,
@@ -468,7 +462,7 @@ def lorenz_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-CDF distinct-value table instead (the quantile_normalize
     pattern) — documented trade, not a different answer."""
     e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(F.sum(_cents_col()).alias("cents"))
+    per_user = e.groupBy("user_id").agg(F.sum(cents("value")).alias("cents"))
     from pyspark.sql import Window
 
     wr = Window.orderBy("cents", "user_id")
@@ -577,7 +571,7 @@ _TRIM_PCT = 5  # trim 5% from each tail
 # mannwhitney_u / global_rank_without_global_sort.
 _TRIM_ORACLE = f"""
 WITH per_val AS (
-  SELECT event_type, {_CENTS} AS v, count(*)::BIGINT AS c
+  SELECT event_type, {CENTS_SQL} AS v, count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2
 ),
 cdf AS (
@@ -614,7 +608,7 @@ def trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate trims get wrong). Output in milli-cents (BIGINT floor)."""
     e = load_table(spark, sf_dir, "events")
     per_val = (
-        e.select("event_type", _cents_col().alias("v"))
+        e.select("event_type", cents("value").alias("v"))
         .groupBy("event_type", "v")
         .agg(F.count("*").alias("c"))
     )
@@ -663,7 +657,7 @@ def trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # c² rides DECIMAL128 (daily type cents ~1e8 → c² ~1e16·…).
 _HHI_ORACLE = f"""
 WITH cells AS (
-  SELECT CAST(ts AS DATE) AS d, event_type, SUM({_CENTS}) AS c
+  SELECT CAST(ts AS DATE) AS d, event_type, SUM({CENTS_SQL}) AS c
   FROM events GROUP BY 1, 2
 ),
 m AS (
@@ -689,7 +683,7 @@ def hhi_concentration_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     cells = e.groupBy(F.to_date("ts").alias("d"), "event_type").agg(
-        F.sum(_cents_col()).alias("c")
+        F.sum(cents("value")).alias("c")
     )
     m = cells.groupBy("d").agg(
         F.sum(dec("c") * F.col("c")).alias("ssq"),
@@ -721,7 +715,7 @@ def hhi_concentration_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WINSOR_ORACLE = f"""
 WITH c AS (
-  SELECT event_type, {_CENTS} AS cents FROM events
+  SELECT event_type, {CENTS_SQL} AS cents FROM events
 ),
 vals AS (
   SELECT event_type, cents, count(*) AS cnt
@@ -777,9 +771,9 @@ def winsorized_revenue_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     table only. Identical rank arithmetic on both engines (integer ceil
     via (n·q+99) div 100), so the value hash pins the convention."""
     e = load_table(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents("value")
     vals = (
-        e.select("event_type", cents.alias("cents"))
+        e.select("event_type", value_cents.alias("cents"))
         .groupBy("event_type", "cents")
         .agg(F.count("*").alias("cnt"))
     )
@@ -838,7 +832,7 @@ def winsorized_revenue_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACF_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM({_CENTS}) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 pairs AS (
@@ -884,7 +878,7 @@ def weekly_autocorr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL128/HUGEINT so the squares never wrap."""
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.sum(_cents_col()).cast("long").alias("cents")
+        F.sum(cents("value")).cast("long").alias("cents")
     )
     a = daily.select("event_type", F.col("d").alias("da"), F.col("cents").alias("x"))
     b = daily.select(

@@ -49,12 +49,8 @@ Oracle design notes (why these are HASH-comparable, not just rows-only):
   band matches fired; fixture components are cliques, so the SQL
   `min(smaller partner)` is exactly the component minimum.
 
-Each drain is a REAL streaming query: state store, checkpoint, Arrow state
-serde — the same execution path the continuous-trigger deployment uses; only
-the trigger differs (availableNow). The one-file source makes the drain a
-single micro-batch, so update-mode emissions are final-state rows; the
-`_bid` guard (max batch id per key) keeps the drains correct under
-multi-batch replans too.
+How a drain replays its fixture (arrival tiles, restarts, temp roots) is
+`workload/drain.py`, shared by every drain module.
 
 Cost note: the SPARK side of every drain is bucketed/windowed and scales
 (measured 2–20 s at sf0.1); the near-dup ORACLES are deliberately the
@@ -65,301 +61,24 @@ Run oracle comparisons at the gate scale.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
-from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.ops.timeparts import floor_to_window_ms
 from topk_spark.workload import REGISTRY, register
+from topk_spark.workload.drain import (
+    bounds_sql,
+    drain,
+    drain_tmpdir,
+    range_tile,
+    tile_expr_sql,
+    under_rocksdb,
+)
 from topk_spark.workload.events_queries import _ES, order_stream
-
-_TMP_ROOTS: list[str] = []
-
-
-def _cleanup() -> None:
-    for d in _TMP_ROOTS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup)
-
-
-def _range_tile(df: DataFrame, col: str, n: int) -> DataFrame:
-    """Attach `_tile` in [0, n): equal-WIDTH event-time ranges between the
-    column's min and max, computed from ONE min/max aggregate broadcast back
-    onto the rows — no global-order window. (The r5 fixtures used
-    `ntile(n) OVER (ORDER BY col)`, a single-partition sort of the whole
-    source inside a registered query's plan; a 100×-scale fixture prep
-    cannot afford that — same discipline as global_rank_without_global_sort.)
-    Exact integer microsecond arithmetic, reproduced verbatim in the DuckDB
-    oracles via `_tile_expr_sql`:
-
-        tile = least(n-1, (us - tmin) * n div (tmax - tmin + 1))
-
-    Monotone in `col`, so tile order == event-time order (what the ordered
-    replay needs); the +1 keeps the max row in tile n-1 without a branch.
-
-    `col` may also be an integer column (e.g. doc_id for a corpus stream):
-    the ranges are then over the raw values — same arithmetic, no epoch
-    conversion."""
-    us = (
-        f"unix_micros({col})"
-        if dict(df.dtypes)[col].startswith("timestamp")
-        else f"CAST({col} AS BIGINT)"
-    )
-    b = df.agg(
-        F.expr(f"min({us})").alias("_tmin"), F.expr(f"max({us})").alias("_tmax")
-    )
-    return (
-        df.crossJoin(F.broadcast(b))
-        .withColumn(
-            "_tile",
-            F.least(
-                F.lit(n - 1),
-                F.expr(f"({us} - _tmin) * {n} div (_tmax - _tmin + 1)"),
-            ).cast("int"),
-        )
-        .drop("_tmin", "_tmax")
-    )
-
-
-def _tile_expr_sql(ts: str = "ts", n: int = 3) -> str:
-    """Oracle-side twin of `_range_tile`'s arithmetic, expecting a joined
-    relation `b(tmin, tmax)` in scope (see `_bounds_sql`). DuckDB `//` is
-    BIGINT floor division; both operands are non-negative, so it agrees
-    exactly with Spark's `div`."""
-    return (
-        f"CAST(least({n - 1}, (epoch_us({ts}) - b.tmin) * {n}"
-        f" // (b.tmax - b.tmin + 1)) AS INT)"
-    )
-
-
-def _bounds_sql(rel: str, ts: str = "ts") -> str:
-    """`b AS (...)` body: the min/max microsecond bounds of `rel`.`ts` —
-    MUST range over exactly the rows the Spark side passed to _range_tile."""
-    return (
-        f"(SELECT epoch_us(min({ts})) AS tmin, epoch_us(max({ts})) AS tmax"
-        f" FROM {rel})"
-    )
-
-
-def _write_ordered_tiles(
-    part_df: DataFrame,
-    root: str,
-    name: str,
-    n: int,
-    base_mtime: float | None,
-) -> tuple[str, float]:
-    """Write `part_df` (carrying a `_tile` column in [0, n)) as n single-file
-    parquet 'arrivals' under root/name, mtimes staggered 10 s apart so a
-    FileStreamSource with latestFirst=false replays them in tile order.
-    Shared by the single-source `_drain` and the two-source `drain_join`
-    (streaming_join_queries); pass the first call's returned base_mtime into
-    the second so both sources share one arrival timeline.
-
-    An empty tile is a fixture bug, not an engine condition: Spark may emit
-    zero part files for an empty write, which would silently collapse the
-    batch schedule the oracles derive — fail loudly instead."""
-    src = os.path.join(root, name)
-    os.makedirs(src, exist_ok=True)
-    for i in range(n):
-        tdir = os.path.join(root, f"{name}_tile{i}")
-        part_df.filter(F.col("_tile") == i).drop("_tile").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tdir)
-        parts = [f for f in os.listdir(tdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"tile {i}/{n} of drain source '{name}' produced {len(parts)} "
-                f"part files — every event-time tercile must be non-empty for "
-                f"the ordered replay (batch i == tile i) the oracle assumes; "
-                f"regenerate the fixture or lower n_batches"
-            )
-        dst = os.path.join(src, f"{i:04d}.parquet")
-        shutil.copyfile(os.path.join(tdir, parts[0]), dst)
-        if base_mtime is None:
-            base_mtime = os.stat(dst).st_mtime
-        os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
-    return src, base_mtime
-
-
-def _restart_generations(
-    run_generation: Callable[[], None],
-    src_dirs: list[str],
-    restart_after: int | None,
-    root: str,
-) -> None:
-    """Shared two-generation orchestration for `_drain` and `drain_join`:
-    hold tile files >= `restart_after` out of every source dir, run
-    generation 1 (which therefore ends believing the stream is drained),
-    restore the held files with their original mtimes (preserving the
-    oldest-first arrival order), and run a freshly-built generation 2 on
-    the same checkpoint. With `restart_after=None`, runs a single
-    generation — the non-restart drains go through the same code path."""
-    held: list[tuple[str, str, float]] = []
-    if restart_after is not None:
-        holdout = os.path.join(root, "holdout")
-        os.makedirs(holdout)
-        for src in src_dirs:
-            for fn in sorted(os.listdir(src)):
-                if fn.endswith(".parquet") and int(fn.split(".")[0]) >= restart_after:
-                    p = os.path.join(src, fn)
-                    h = os.path.join(holdout, os.path.basename(src) + "_" + fn)
-                    mt = os.stat(p).st_mtime
-                    shutil.move(p, h)
-                    held.append((h, p, mt))
-
-    run_generation()
-
-    if restart_after is not None:
-        for h, p, mt in held:
-            shutil.move(h, p)
-            os.utime(p, (mt, mt))
-        run_generation()
-
-
-def _drain(
-    spark: SparkSession,
-    src_df: DataFrame,
-    build: Callable[[DataFrame], DataFrame],
-    output_mode: str = "update",
-    last_per: list[str] | None = None,
-    max_files_per_trigger: int | None = None,
-    ordered_split: tuple[str, int] | None = None,
-    keep_bid: bool = False,
-    restart_after: int | None = None,
-    pre_tiled: bool = False,
-    batch_transform: Callable[[DataFrame], DataFrame] | None = None,
-) -> DataFrame:
-    """Run `build(stream)` over a one-file parquet stream of `src_df`,
-    drained with availableNow into a parquet sink; return the drained rows.
-
-    `last_per`: for update-mode stateful operators that re-emit a key's
-    state every micro-batch, keep only each key-group's final (max batch id)
-    emission. The one-file source yields a single batch in practice, but the
-    guard keeps the result well-defined if the engine ever splits the drain.
-
-    `max_files_per_trigger`: write the source as that many files and cap
-    files per micro-batch at 1, forcing a genuinely multi-batch drain so
-    the `last_per` guard (and cross-batch state continuity) is exercised
-    for real, not argued.
-
-    `ordered_split=(col, n)`: with the multi-batch cap, partition the source
-    into n files by EQUAL-WIDTH RANGES of `col` between its min and max
-    (`_range_tile` — one aggregate + a broadcast, no global-order window)
-    instead of round-robin, and stagger the files' mtimes so the
-    FileStreamSource's oldest-first listing (latestFirst=false) replays
-    them in `col` order — micro-batch i sees exactly time-range i. That
-    makes "arrival order" == "event-time order", which is what lets a
-    relational oracle predict cross-batch first-seen semantics exactly
-    (the oracles reproduce the same integer boundary arithmetic via
-    `_tile_expr_sql`/`_bounds_sql`). This is the topology a production
-    backfill uses too: range-split by time partitions.
-
-    `keep_bid`: surface the sink's micro-batch id as `_bid` so the caller
-    can PROVE multi-batch execution inside the hashed output.
-
-    `batch_transform`: applied to each micro-batch INSIDE foreachBatch
-    before the sink write — the rank-on-close hook. In append mode a
-    window's rows are all flushed in the one micro-batch whose watermark
-    closes it, so a per-window transform (e.g. rank within window) sees
-    every row of each window it touches and composes correctly across
-    batches and restarts.
-
-    `restart_after=k` (requires `ordered_split`): split the drain into TWO
-    query generations on the SAME checkpoint — generation 1 sees only tiles
-    < k (later tile files are held out), terminates, and a freshly-built
-    query processes the restored remaining tiles. A mid-stream
-    stop/reschedule: state, per-operator watermarks, and the source's
-    processed-files log all come from the checkpoint alone.
-    """
-    root = tempfile.mkdtemp(prefix="topk_spark_drain_")
-    _TMP_ROOTS.append(root)
-    src = os.path.join(root, "src")
-    out = os.path.join(root, "out")
-    if restart_after is not None and not (ordered_split and max_files_per_trigger):
-        raise ValueError(
-            "restart_after requires the ordered_split + max_files_per_trigger "
-            "tile layout — it is the only source layout with a defined "
-            "per-batch schedule to hold out and restore"
-        )
-    if pre_tiled and not (ordered_split and max_files_per_trigger):
-        raise ValueError(
-            "pre_tiled requires the ordered_split + max_files_per_trigger "
-            "tile layout — otherwise the caller-supplied _tile schedule "
-            "would be silently discarded (and _tile would leak into the "
-            "stream schema)"
-        )
-    if max_files_per_trigger and ordered_split:
-        col, n = ordered_split
-        assert n == max_files_per_trigger
-        # pre_tiled: the caller supplies `_tile` itself — the escape hatch
-        # for NON-monotone arrival schedules (e.g. stale replays of early
-        # rows arriving in a late tile, which _range_tile's event-time
-        # ranges cannot express).
-        tiled = src_df if pre_tiled else _range_tile(src_df, col, n)
-        if pre_tiled:
-            src_df = src_df.drop("_tile")
-        _write_ordered_tiles(tiled, root, "src", n, None)
-    elif max_files_per_trigger:
-        src_df.repartition(max_files_per_trigger).write.mode(
-            "overwrite"
-        ).parquet(src)
-    else:
-        src_df.coalesce(1).write.mode("overwrite").parquet(src)
-
-    result_schema = None
-
-    def write_batch(df: DataFrame, bid: int) -> None:
-        if batch_transform is not None:
-            df = batch_transform(df)
-        df.withColumn("_bid", F.lit(int(bid))).write.mode("append").parquet(out)
-
-    def run_generation() -> None:
-        nonlocal result_schema
-        reader = spark.readStream.schema(src_df.schema)
-        if max_files_per_trigger and ordered_split:
-            reader = reader.option("maxFilesPerTrigger", 1).option(
-                "latestFirst", "false"
-            )
-        elif max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", 1)
-        result = build(reader.parquet(src))
-        # the zero-emission fallback must carry the SINK schema: apply the
-        # batch transform to an empty batch twin to derive it
-        result_schema = (
-            result.schema
-            if batch_transform is None
-            else batch_transform(
-                spark.createDataFrame([], result.schema)
-            ).schema
-        )
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    _restart_generations(run_generation, [src], restart_after, root)
-
-    if not os.path.isdir(out):  # zero emissions end-to-end
-        return spark.createDataFrame([], result_schema)
-    drained = spark.read.parquet(out)
-    if last_per:
-        w = Window.partitionBy(*last_per)
-        drained = drained.withColumn("_mb", F.max("_bid").over(w)).where(
-            F.col("_bid") == F.col("_mb")
-        ).drop("_mb")
-    return drained if keep_bid else drained.drop("_bid")
 
 
 # ---------------------------------------------------------------------------
@@ -399,7 +118,7 @@ def stream_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = order_stream(spark, sf_dir).withColumn(
         "bucket", floor_to_window_ms("ts", 60_000)
     )
-    drained = _drain(
+    drained = drain(
         spark,
         es,
         lambda s: dedup_stateful(
@@ -420,9 +139,9 @@ def stream_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emitting), so the same derivation gates both.
 _DEDUP_MULTIBATCH_ORACLE = f"""
 WITH {_ES},
-b AS {_bounds_sql("es")},
+b AS {bounds_sql("es")},
 t AS (
-  SELECT es.*, {_tile_expr_sql()} AS tile,
+  SELECT es.*, {tile_expr_sql()} AS tile,
          row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts)
            AS rn
   FROM es CROSS JOIN b
@@ -435,6 +154,35 @@ SELECT event_type, count(*) AS survivors,
 FROM first_seen CROSS JOIN nb
 GROUP BY event_type, nb.n_batches
 """
+
+
+def _dedup_multibatch_drain(
+    spark: SparkSession, sf_dir: str, restart_after: int | None = None
+) -> DataFrame:
+    from topk_spark.streaming.stateful_dedup import dedup_stateful
+
+    es = order_stream(spark, sf_dir)
+    drained = drain(
+        spark,
+        range_tile(es, "ts", 3),
+        lambda s: dedup_stateful(
+            s, key=["user_id", "event_type"], ttl_ms=None, order_col="ts"
+        ),
+        tiles=3,
+        keep_bid=True,
+        restart_after=restart_after,
+    )
+    nb = drained.agg(
+        F.countDistinct("_bid").cast("long").alias("n_batches")
+    )
+    return (
+        drained.groupBy("event_type")
+        .agg(
+            F.count("*").alias("survivors"),
+            F.sum("revenue_cents").cast("long").alias("revenue_cents"),
+        )
+        .crossJoin(F.broadcast(nb))
+    )
 
 
 @register(
@@ -453,37 +201,14 @@ def stream_dedup_multibatch_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     reference's semantics — TopKStreamingJob.kt:87-119 keeps dedup state
     across events indefinitely, not per ingest chunk.
 
-    The event-time-ordered split (`_drain` ordered_split) makes arrival
+    The event-time-ordered tiles (`drain.range_tile`) make arrival
     order == ts order, so the relational oracle's row_number-over-ts
     first-seen IS the operator's cross-batch first-seen (fixture ts values
     are globally unique — measured, both gate scales). `n_batches` carries
     the micro-batch evidence INSIDE the hash: it counts distinct sink batch
     ids that emitted a survivor, and the oracle independently derives it as
     the number of distinct ts-terciles containing a key's first event."""
-    from topk_spark.streaming.stateful_dedup import dedup_stateful
-
-    es = order_stream(spark, sf_dir)
-    drained = _drain(
-        spark,
-        es,
-        lambda s: dedup_stateful(
-            s, key=["user_id", "event_type"], ttl_ms=None, order_col="ts"
-        ),
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        keep_bid=True,
-    )
-    nb = drained.agg(
-        F.countDistinct("_bid").cast("long").alias("n_batches")
-    )
-    return (
-        drained.groupBy("event_type")
-        .agg(
-            F.count("*").alias("survivors"),
-            F.sum("revenue_cents").cast("long").alias("revenue_cents"),
-        )
-        .crossJoin(F.broadcast(nb))
-    )
+    return _dedup_multibatch_drain(spark, sf_dir)
 
 
 @register(
@@ -505,55 +230,7 @@ def stream_dedup_restart_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitting batch (`n_batches`), and failing the hash. The oracle is the
     multibatch drain's SQL verbatim — a mid-stream reschedule must be
     invisible in the results."""
-    from topk_spark.streaming.stateful_dedup import dedup_stateful
-
-    es = order_stream(spark, sf_dir)
-    drained = _drain(
-        spark,
-        es,
-        lambda s: dedup_stateful(
-            s, key=["user_id", "event_type"], ttl_ms=None, order_col="ts"
-        ),
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        keep_bid=True,
-        restart_after=2,
-    )
-    nb = drained.agg(
-        F.countDistinct("_bid").cast("long").alias("n_batches")
-    )
-    return (
-        drained.groupBy("event_type")
-        .agg(
-            F.count("*").alias("survivors"),
-            F.sum("revenue_cents").cast("long").alias("revenue_cents"),
-        )
-        .crossJoin(F.broadcast(nb))
-    )
-
-
-def _under_rocksdb(spark: SparkSession, run: Callable[[], DataFrame]) -> DataFrame:
-    """Execute a drain under the RocksDB state-store provider, restoring the
-    previous conf afterwards (it is read at streaming-query start, so a
-    driver-owned session is left untouched; the drain's streaming queries
-    have fully terminated before the restore — the returned DataFrame is a
-    batch read of the sink). Falls back to the default store on a build
-    without the provider; results are identical either way."""
-    from topk_spark.session import _STATE_STORE_CONF, set_state_store
-
-    try:
-        prev = spark.conf.get(_STATE_STORE_CONF)
-    except Exception:
-        prev = None
-    applied = set_state_store(spark, "rocksdb")
-    try:
-        return run()
-    finally:
-        if applied:
-            if prev is None:
-                spark.conf.unset(_STATE_STORE_CONF)
-            else:
-                spark.conf.set(_STATE_STORE_CONF, prev)
+    return _dedup_multibatch_drain(spark, sf_dir, restart_after=2)
 
 
 @register(
@@ -571,9 +248,9 @@ def stream_dedup_restart_rocksdb_drain(spark: SparkSession, sf_dir: str) -> Data
     provider's own persist-and-reload cycle under the oracle hash, not
     just pytest (tests/test_restart_continuity.py covers all five stateful
     classes ×2 providers behaviorally; this adds the driver-gated exact-
-    result check). Provider flip + restore via `_under_rocksdb`; the
+    result check). Provider flip + restore via `under_rocksdb`; the
     join-buffer twin is `stream_interval_join_restart_rocksdb_drain`."""
-    return _under_rocksdb(
+    return under_rocksdb(
         spark, lambda: stream_dedup_restart_drain(spark, sf_dir)
     )
 
@@ -605,7 +282,7 @@ FROM r WHERE rank <= 5
 """
 
 
-def _order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → the reference's order-event shape (restaurant=event_type,
     menu item=user): the projection continuous_topk consumes."""
     return order_stream(spark, sf_dir).select(
@@ -627,9 +304,9 @@ def stream_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     item id asc as STRINGS) matches the operator's sort key."""
     from topk_spark.streaming.continuous_topk import continuous_topk
 
-    drained = _drain(
+    drained = drain(
         spark,
-        _order_events(spark, sf_dir),
+        order_events(spark, sf_dir),
         lambda s: continuous_topk(s, k=5),
         last_per=["restaurant_id"],
     )
@@ -666,9 +343,9 @@ def stream_global_topk_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-reduce the reference lacks)."""
     from topk_spark.streaming.continuous_topk import continuous_global_topk
 
-    drained = _drain(
+    drained = drain(
         spark,
-        _order_events(spark, sf_dir),
+        order_events(spark, sf_dir),
         lambda s: continuous_global_topk(s, k=10),
         last_per=["restaurant_id"],
     )
@@ -736,24 +413,17 @@ def _neardup_drain(
     from topk_spark.streaming.neardup import neardup_match_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    kwargs = (
-        dict(
-            max_files_per_trigger=3,
-            ordered_split=("doc_id", 3),
-            restart_after=restart_after,
-        )
-        if restart_after is not None
-        else {}
-    )
-    drained = _drain(
+    tiles = None if restart_after is None else 3
+    drained = drain(
         spark,
-        docs,
+        docs if tiles is None else range_tile(docs, "doc_id", tiles),
         lambda s: neardup_match_stream(
             s, id_col="doc_id", text_col="text",
             shingle_n=3, num_perm=64, bands=16, est_threshold=0.6,
         ),
         output_mode="append",
-        **kwargs,
+        tiles=tiles,
+        restart_after=restart_after,
     )
     return drained.groupBy("id").agg(F.min("dup_of").alias("dup_of"))
 
@@ -811,8 +481,8 @@ def stream_embed_neardup_restart_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The hyperplane-LSH embedding suppressor across a CHECKPOINT
-    RESTART, with the cleanest possible split: an EXPLICIT tile schedule
-    (pre_tiled) puts every ORIGINAL vector in tile 0 — generation 1 — and
+    RESTART, with the cleanest possible split: an EXPLICIT `_tile`
+    schedule puts every ORIGINAL vector in tile 0 — generation 1 — and
     every perturbed twin after the restart (split by vec_id parity into
     tiles 1 and 2, so all three arrival files are non-empty), so EVERY
     match the drain must emit pairs a post-restart arrival against
@@ -854,15 +524,7 @@ def _embed_neardup_drain(
             .otherwise(F.lit(2))
             .cast("int"),
         )
-        kwargs = dict(
-            max_files_per_trigger=3,
-            ordered_split=("vec_id", 3),
-            restart_after=restart_after,
-            pre_tiled=True,
-        )
-    else:
-        kwargs = {}
-    drained = _drain(
+    drained = drain(
         spark,
         corpus,
         lambda s: embed_neardup_match_stream(
@@ -870,7 +532,8 @@ def _embed_neardup_drain(
             num_planes=12, num_tables=8, threshold=0.95, max_bucket=16,
         ),
         output_mode="append",
-        **kwargs,
+        tiles=None if restart_after is None else 3,
+        restart_after=restart_after,
     )
     return drained.groupBy("id").agg(F.min("dup_of").alias("dup_of"))
 
@@ -927,7 +590,7 @@ def stream_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("event_ts"),
         "revenue_cents",
     )
-    drained = _drain(
+    drained = drain(
         spark,
         src,
         lambda s: build_rollup_stream(s),
@@ -1001,7 +664,7 @@ def stream_sessions_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    return _drain(spark, e, _build_sessions, output_mode="append")
+    return drain(spark, e, _build_sessions, output_mode="append")
 
 
 def _build_sessions(s: DataFrame) -> DataFrame:
@@ -1048,13 +711,12 @@ def stream_sessions_restart_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value"
     )
-    return _drain(
+    return drain(
         spark,
-        e,
+        range_tile(e, "ts", 3),
         _build_sessions,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=1,
     )
 
@@ -1143,20 +805,12 @@ def _cusum_drain(
     es = load_table(spark, sf_dir, "events").select(
         "event_type",
         "ts",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
-    kwargs = (
-        dict(
-            max_files_per_trigger=3,
-            ordered_split=("ts", 3),
-            restart_after=restart_after,
-        )
-        if restart_after is not None
-        else {}
-    )
-    drained = _drain(
+    tiles = None if restart_after is None else 3
+    drained = drain(
         spark,
-        es,
+        es if tiles is None else range_tile(es, "ts", tiles),
         lambda s: cusum_stateful(
             s,
             target_cents=_CUSUM_TARGET_CENTS,
@@ -1166,7 +820,8 @@ def _cusum_drain(
             order_col="ts",
         ),
         last_per=["key"],
-        **kwargs,
+        tiles=tiles,
+        restart_after=restart_after,
     )
     return drained.select("key", "n_total", "cusum", "alarm")
 
@@ -1229,13 +884,12 @@ def _sliding_rollup_drain(
             "revenue_cents", "order_count",
         )
 
-    return _drain(
+    return drain(
         spark,
-        es,
+        range_tile(es, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
 
@@ -1305,13 +959,12 @@ def _sliding_from_slices_drain(
             "1 minute",
         ).select("event_type", "window_start", "revenue_cents", "order_count")
 
-    slices = _drain(
+    slices = drain(
         spark,
-        es,
+        range_tile(es, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
     )
     # level 2: re-aggregate the 5 slice partials tiling each hop window.
@@ -1459,13 +1112,12 @@ def _sliding_topk_drain(
             slide="1 minute",
         ).select("window_start", "window_end", "event_type", "revenue_cents")
 
-    return _drain(
+    return drain(
         spark,
-        es,
+        range_tile(es, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
         batch_transform=_rank_closed_windows,
     )
@@ -1690,7 +1342,7 @@ def make_rank_new_hops(tier: str, ranked_schema):
     return rank_new_hops
 
 
-def _trending_60_drain(
+def trending_60_drain(
     spark: SparkSession,
     sf_dir: str,
     restart_after: int | None = None,
@@ -1715,8 +1367,7 @@ def _trending_60_drain(
             StructField("rank", IntegerType(), False),
         ]
     )
-    tier_root = tempfile.mkdtemp(prefix="topk_spark_trending_tier_")
-    _TMP_ROOTS.append(tier_root)
+    tier_root = drain_tmpdir("topk_spark_trending_tier_")
     tier = os.path.join(tier_root, "slices")
     if _tier_dirs is not None:
         _tier_dirs.append(tier)
@@ -1737,13 +1388,12 @@ def _trending_60_drain(
             "1 minute",
         ).select("event_type", "window_start", "window_end", "revenue_cents")
 
-    return _drain(
+    return drain(
         spark,
-        es,
+        range_tile(es, "ts", 3),
         build,
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         restart_after=restart_after,
         batch_transform=make_rank_new_hops(tier, ranked_schema),
     )
@@ -1772,7 +1422,7 @@ def stream_trending_1h_1m_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     fire); at 100 TB the hop re-aggregation touches only per-slice partials
     (|keys| × minutes rows, independent of event volume) and the tier read
     prunes to the one-window slice range each batch's new hops span."""
-    return _trending_60_drain(spark, sf_dir)
+    return trending_60_drain(spark, sf_dir)
 
 
 @register(
@@ -1793,7 +1443,7 @@ def stream_trending_1h_1m_restart_drain(
     they tile — 60 hops each); the emitted-hop frontier W_prev is re-derived
     from the persisted slice tier, so a restart can neither re-emit nor
     skip a hop window under the exactly-once-per-window hash."""
-    return _trending_60_drain(spark, sf_dir, restart_after=1)
+    return trending_60_drain(spark, sf_dir, restart_after=1)
 
 
 # Frontier-fed routed serving (round 12, VERDICT #3): the round-11 pieces —
@@ -1880,7 +1530,7 @@ def stream_trending_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from topk_spark.serve.router import TierSpec, TrendingRouter
 
     dirs: list[str] = []
-    ranked = _trending_60_drain(spark, sf_dir, _tier_dirs=dirs)
+    ranked = trending_60_drain(spark, sf_dir, _tier_dirs=dirs)
     slice_dir = dirs[0]
     w = tier_frontier(slice_dir)  # committed frontier: directory names only
     slices = read_tier(

@@ -13,7 +13,7 @@ sides are live streams, the strictly harder shape): views and purchases are
 two watermarked file streams; a purchase joins every view by the same user
 in the preceding 7 days (`p.ts >= v.ts AND p.ts < v.ts + 7d`).
 
-Drain design (same discipline as streaming_drain_queries):
+Drain design (the tiled layout of workload/drain.py):
 
 * The two sources are split into 3 files each by GLOBAL event-time ranges
   (equal-width thirds of the union's [min ts, max ts] — one aggregate plus
@@ -43,10 +43,6 @@ is co-partitioned and the probe is local to each state-store partition.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -54,95 +50,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
-
-_TMP_ROOTS: list[str] = []
-
-
-def _cleanup() -> None:
-    for d in _TMP_ROOTS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup)
-
-
-def drain_join(
-    spark: SparkSession,
-    left_df: DataFrame,
-    right_df: DataFrame,
-    build: Callable[[DataFrame, DataFrame], DataFrame],
-    n_batches: int,
-    restart_after: int | None = None,
-) -> DataFrame:
-    """Run `build(left_stream, right_stream)` with both sides replayed as
-    `n_batches` tile-ordered arrival files (inputs carry `_tile`), drained
-    with availableNow into a parquet sink; returns the drained rows with
-    the sink micro-batch id as `_bid`. Append mode (the only output mode
-    stream-stream joins support).
-
-    `restart_after=k` splits the drain into TWO query generations on the
-    SAME checkpoint: generation 1 sees only tiles < k (later tiles are held
-    out of the source dirs), terminates, and a freshly-built query then
-    processes the restored remaining tiles — a mid-stream stop/reschedule.
-    Everything a restart must preserve (buffered join state, per-side
-    watermarks, the FileStreamSource's processed-files log) comes from the
-    checkpoint alone; generation 2 shares no driver-side lineage with
-    generation 1."""
-    from topk_spark.workload.streaming_drain_queries import _write_ordered_tiles
-
-    root = tempfile.mkdtemp(prefix="topk_spark_sjoin_")
-    _TMP_ROOTS.append(root)
-    out = os.path.join(root, "out")
-    lsrc, base = _write_ordered_tiles(left_df, root, "left", n_batches, None)
-    rsrc, _ = _write_ordered_tiles(right_df, root, "right", n_batches, base)
-
-    def read(src: str, schema) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src)
-        )
-
-    def write_batch(df: DataFrame, bid: int) -> None:
-        df.withColumn("_bid", F.lit(int(bid))).write.mode("append").parquet(out)
-
-    result_schema = None
-
-    def run_generation() -> None:
-        """Build a FRESH query (new readStream lineage) and drain what the
-        sources currently expose; state/progress come from the checkpoint."""
-        nonlocal result_schema
-        result = build(
-            read(lsrc, left_df.drop("_tile").schema),
-            read(rsrc, right_df.drop("_tile").schema),
-        )
-        result_schema = result.schema
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    from topk_spark.workload.streaming_drain_queries import _restart_generations
-
-    _restart_generations(run_generation, [lsrc, rsrc], restart_after, root)
-
-    if not os.path.isdir(out):
-        return spark.createDataFrame([], result_schema)
-    return spark.read.parquet(out)
+from topk_spark.workload.drain import drain, range_tile, under_rocksdb
 
 
 def _view_purchase_tiles(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The shared drain fixture: view and purchase event streams carrying
     their GLOBAL event-time tercile (`_tile`) — the micro-batch each row
     will arrive in under the ordered replay."""
-    from topk_spark.workload.streaming_drain_queries import _range_tile
 
-    e = _range_tile(
+    e = range_tile(
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("view", "purchase"))
         .select("event_id", "ts", "user_id", "event_type"),
@@ -170,7 +86,7 @@ def _build_join(
     salt_buckets: int | None = None,
     salt_side: str = "left",
 ) -> Callable[[DataFrame, DataFrame], DataFrame]:
-    """build() for drain_join: the reusable interval_join operator
+    """Two-source build() for `drain`: the reusable interval_join operator
     (streaming/interval_join.py) on user_id with the 7-day view→purchase
     window, projected to the drains' hashed output columns. For the
     right/full outer drains `user_id` is coalesced across sides (it is the
@@ -245,8 +161,13 @@ def stream_interval_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     survived into later ones (T8 for JOIN state; the aggregation-state twin
     is stream_dedup_multibatch_drain)."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join("inner", "90 days"), n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join("inner", "90 days"),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -269,12 +190,13 @@ def stream_interval_join_salted_drain(spark: SparkSession, sf_dir: str) -> DataF
     streaming_join_skew section measured the per-pair cost story; THIS pins
     that the optimization cannot change results."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("inner", "90 days", salt_buckets=8),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -309,12 +231,13 @@ def stream_interval_join_restart_drain(spark: SparkSession, sf_dir: str) -> Data
     from pyspark.sql import Window
 
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("inner", "90 days"),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
         restart_after=2,
     )
     # Unpartitioned window over the DISTINCT batch ids only — a frame of
@@ -352,10 +275,9 @@ def stream_interval_join_restart_rocksdb_drain(
     stop-after-two-terciles topology, same verbatim inner-join oracle as
     `stream_interval_join_restart_drain`: cross-restart pairs exist only if
     generation 2 recovered the RocksDB-persisted view buffers. Provider
-    flip + restore via `_under_rocksdb` (driver session untouched)."""
-    from topk_spark.workload.streaming_drain_queries import _under_rocksdb
+    flip + restore via `under_rocksdb` (driver session untouched)."""
 
-    return _under_rocksdb(
+    return under_rocksdb(
         spark, lambda: stream_interval_join_restart_drain(spark, sf_dir)
     )
 
@@ -386,7 +308,6 @@ def stream_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     row's event-time tercile, inside the hash), with no state carried and
     no dedup/eviction applied. At 100 TB the dimension broadcast happens
     once per executor, not per batch-row; the stream side never shuffles."""
-    from topk_spark.workload.streaming_drain_queries import _drain
 
     ev = (
         load_table(spark, sf_dir, "events")
@@ -397,15 +318,14 @@ def stream_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.col("c_nationkey").cast("int").alias("nationkey"),
     )
-    drained = _drain(
+    drained = drain(
         spark,
-        ev,
+        range_tile(ev, "ts", 3),
         lambda s: s.join(
             F.broadcast(dim), s.user_id == dim.c_custkey, "inner"
         ).select("event_id", "user_id", "c_mktsegment", "nationkey"),
         output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
+        tiles=3,
         keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
@@ -527,8 +447,13 @@ def stream_leftouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     join exactly (ordered replay means no match can be lost to eviction —
     a purchase's tercile always precedes its view's eviction batch)."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join("left_outer", "1 day"), n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join("left_outer", "1 day"),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -556,12 +481,13 @@ def stream_leftouter_join_salted_drain(spark: SparkSession, sf_dir: str) -> Data
     A hash match against the unsalted derivation is therefore REQUIRED;
     divergence would mean the skew lever changes outer-join results."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("left_outer", "1 day", salt_buckets=8),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -590,12 +516,13 @@ def stream_leftouter_join_restart_drain(spark: SparkSession, sf_dir: str) -> Dat
     generations and emit nothing. No bid normalization: the oracle predicts
     the engine's actual batch-id allocation, trailing-flush slots and all."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("left_outer", "1 day"),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
         restart_after=2,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
@@ -699,8 +626,13 @@ def stream_rightouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedule relationally from the same shared CTEs as the other outer
     drains."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join("right_outer", "1 day"), n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join("right_outer", "1 day"),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -728,12 +660,13 @@ def stream_rightouter_join_salted_drain(
     results. The refusal table (interval_join._SAFE_SALT_SIDES) blocks the
     unsafe orientation where the replicated side is the outer one."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("right_outer", "1 day", salt_buckets=8, salt_side="right"),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -754,8 +687,13 @@ def stream_fullouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     in. Rows still inside their horizon at end-of-stream stay buffered on
     BOTH sides and must be absent."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join("full_outer", "1 day"), n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join("full_outer", "1 day"),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -807,8 +745,13 @@ def stream_semijoin_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by the left input, and a matched left row's state can be
     dropped at emission rather than held for the window."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join("left_semi", "90 days"), n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join("left_semi", "90 days"),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -828,12 +771,13 @@ def stream_semijoin_salted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     original row's batch), and one view still emits at most one row —
     replication happens on the NON-anchoring side. Hash match required."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join("left_semi", "90 days", salt_buckets=8),
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
@@ -940,8 +884,13 @@ def stream_join_rollup_chain_drain(spark: SparkSession, sf_dir: str) -> DataFram
     no-lag model over-emits 27 windows vs the correct 20). Windows past the
     propagated watermark at end-of-stream stay open and must be absent."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_join_rollup_chain, n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_join_rollup_chain,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.drop("_bid")
 
@@ -967,12 +916,13 @@ def stream_join_rollup_chain_restart_drain(
     reset (windows close on the wrong schedule → wrong emitted-window
     set)."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_join_rollup_chain,
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
         restart_after=2,
     )
     return drained.drop("_bid")
@@ -1046,7 +996,14 @@ def stream_antijoin_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark_delay="1 day",
         ).select("user_id", "view_id")
 
-    drained = drain_join(spark, views, purchases, build, n_batches=3)
+    drained = drain(
+        spark,
+        (views, purchases),
+        build,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+    )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
@@ -1079,7 +1036,14 @@ def stream_antijoin_salted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt_buckets=8,
         ).select("user_id", "view_id")
 
-    drained = drain_join(spark, views, purchases, build, n_batches=3)
+    drained = drain(
+        spark,
+        (views, purchases),
+        build,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+    )
     return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
@@ -1112,12 +1076,13 @@ def stream_dedup_join_rollup_chain_drain(
     views, purchases = _view_purchase_tiles(spark, sf_dir)
     vdup = views.filter(F.col("view_id") % 5 == 0)
     pdup = purchases.filter(F.col("purchase_id") % 5 == 0)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views.unionByName(vdup),
-        purchases.unionByName(pdup),
+        (views.unionByName(vdup), purchases.unionByName(pdup)),
         _build_dedup_join_rollup_chain,
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.drop("_bid")
 
@@ -1219,12 +1184,16 @@ def stream_dedup_join_rollup_chain_restart_drain(
         .drop("_thr")
         .withColumn("_tile", F.lit(2))
     )
-    drained = drain_join(
+    drained = drain(
         spark,
-        views.unionByName(vdup).unionByName(vlate),
-        purchases.unionByName(pdup).unionByName(plate),
+        (
+            views.unionByName(vdup).unionByName(vlate),
+            purchases.unionByName(pdup).unionByName(plate),
+        ),
         _build_dedup_join_rollup_chain,
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
         restart_after=2,
     )
     return drained.drop("_bid")
@@ -1336,7 +1305,14 @@ def stream_asof_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, and applies the propagated-watermark close schedule the chain
     drains measured (join output watermark lags by the join window)."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(spark, views, purchases, _build_asof_join, n_batches=3)
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_asof_join,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+    )
     return drained.drop("_bid")
 
 
@@ -1356,8 +1332,14 @@ def stream_asof_join_restart_drain(spark: SparkSession, sf_dir: str) -> DataFram
     asof_view_id / asof_gap_ms / n_candidate_views under the shared
     oracle's value hash."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_asof_join, n_batches=3, restart_after=2
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_asof_join,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+        restart_after=2,
     )
     return drained.drop("_bid")
 
@@ -1428,8 +1410,13 @@ def stream_asof_leftouter_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic rows whose deadline never arrived, which fail the same window
     predicate on the oracle side."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
-        spark, views, purchases, _build_asof_leftouter, n_batches=3
+    drained = drain(
+        spark,
+        (views, purchases),
+        _build_asof_leftouter,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
     )
     return drained.drop("_bid")
 
@@ -1491,12 +1478,13 @@ def stream_asof_leftouter_restart_drain(
     organic — so any of those divergences is a hash mismatch, not just a
     row-count drift."""
     views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain_join(
+    drained = drain(
         spark,
-        views,
-        purchases,
+        (views, purchases),
         _build_asof_leftouter,
-        n_batches=3,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
         restart_after=2,
     )
     return drained.drop("_bid")
@@ -1555,7 +1543,6 @@ def _union_minwm_sources(
     aggregate, mirrored verbatim in the oracle). B's lag is what makes the
     min policy observable: A alone would close ~1/3 more windows."""
     from topk_spark.workload.events_queries import order_stream
-    from topk_spark.workload.streaming_drain_queries import _range_tile
 
     es = order_stream(spark, sf_dir).select(
         "ts", "user_id", "event_type", "revenue_cents"
@@ -1575,8 +1562,8 @@ def _union_minwm_sources(
     )
     cols = ["ts", "user_id", "event_type", "revenue_cents"]
     return (
-        _range_tile(a.select(*cols), "ts", 3),
-        _range_tile(b.select(*cols), "ts", 3),
+        range_tile(a.select(*cols), "ts", 3),
+        range_tile(b.select(*cols), "ts", 3),
     )
 
 
@@ -1622,8 +1609,9 @@ def stream_union_minwm_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFra
     the combined watermark (derivation at the behavioral twin,
     tests/test_streaming.py::test_multiple_watermark_policy_min_vs_max)."""
     a, b = _union_minwm_sources(spark, sf_dir)
-    drained = drain_join(spark, a, b, _build_union_rollup, n_batches=3)
-    return drained.drop("_bid")
+    return drain(
+        spark, (a, b), _build_union_rollup, output_mode="append", tiles=3
+    )
 
 
 @register(
@@ -1642,7 +1630,11 @@ def stream_union_minwm_rollup_restart_drain(
     hash); losing the agg state under-counts windows straddling the
     stop."""
     a, b = _union_minwm_sources(spark, sf_dir)
-    drained = drain_join(
-        spark, a, b, _build_union_rollup, n_batches=3, restart_after=1
+    return drain(
+        spark,
+        (a, b),
+        _build_union_rollup,
+        output_mode="append",
+        tiles=3,
+        restart_after=1,
     )
-    return drained.drop("_bid")

@@ -292,20 +292,3 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_video_frames(make_video_payload(d), every=2)
 
 
-_AUDIO_ORACLE = """
-WITH p AS (
-  SELECT doc_id,
-         8000 + (doc_id % 4) * 4000 AS sample_rate,
-         256 + (doc_id % 7) * 64 AS n,
-         1000 + (doc_id % 10) * 500 AS a
-  FROM documents WHERE doc_id % 11 = 5
-)
-SELECT doc_id,
-       CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n AS BIGINT) AS n_samples,
-       CAST(n * 1000 // sample_rate AS BIGINT) AS duration_ms,
-       CAST((n // 8) * 12 * a * a AS BIGINT) AS sum_squares,
-       CAST(floor(sqrt(CAST((n // 8) * 12 * a * a AS DOUBLE) / n)) AS BIGINT)
-         AS rms_floor
-FROM p
-"""

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
+from topk_spark.workload.drain import drain, range_tile
 
 _GAP_MS = 6 * 3600 * 1000  # 6 hours of inactivity
 _DELAY_MS = 60_000  # 1 minute watermark delay
@@ -113,6 +114,30 @@ _TIMER_RESTART_ORACLE = _timer_oracle(
 )
 
 
+def _timer_expiry_drain(
+    spark: SparkSession, sf_dir: str, restart_after: int | None = None
+) -> DataFrame:
+    from topk_spark.streaming.timers import inactivity_expiry
+
+    ev = load_table(spark, sf_dir, "events").select(
+        F.col("user_id").cast("string").alias("key"),
+        "ts",
+        F.unix_millis("ts").alias("ms"),
+    )
+    drained = drain(
+        spark,
+        range_tile(ev, "ts", 3),
+        lambda s: inactivity_expiry(
+            s, gap_ms=_GAP_MS, watermark_delay="1 minute"
+        ),
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+        restart_after=restart_after,
+    )
+    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+
+
 @register(
     "stream_timer_expiry_drain",
     tags=("T7", "D2", "streaming", "timers"),
@@ -126,26 +151,7 @@ def stream_timer_expiry_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark table; a timer whose base state was lost, an expiry that
     fired at wm == T (boundary), an expiry in the wrong batch, or a run
     that failed to re-admit after expiring all hash-mismatch."""
-    from topk_spark.streaming.timers import inactivity_expiry
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("key"),
-        "ts",
-        F.unix_millis("ts").alias("ms"),
-    )
-    drained = _drain(
-        spark,
-        ev,
-        lambda s: inactivity_expiry(
-            s, gap_ms=_GAP_MS, watermark_delay="1 minute"
-        ),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        keep_bid=True,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    return _timer_expiry_drain(spark, sf_dir)
 
 
 @register(
@@ -173,24 +179,4 @@ def stream_timer_expiry_restart_drain(
     remaining schedule), run state survives for keys untouched by the
     forced flush, and the restart's observable effect is precisely the
     predicted set of converted expiries — nothing more."""
-    from topk_spark.streaming.timers import inactivity_expiry
-    from topk_spark.workload.streaming_drain_queries import _drain
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("key"),
-        "ts",
-        F.unix_millis("ts").alias("ms"),
-    )
-    drained = _drain(
-        spark,
-        ev,
-        lambda s: inactivity_expiry(
-            s, gap_ms=_GAP_MS, watermark_delay="1 minute"
-        ),
-        output_mode="append",
-        max_files_per_trigger=3,
-        ordered_split=("ts", 3),
-        keep_bid=True,
-        restart_after=2,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    return _timer_expiry_drain(spark, sf_dir, restart_after=2)

@@ -15,19 +15,15 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.money import cents
 from topk_spark.workload import register
-
-_CENTS = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-
-
-def _cents_col():
-    return (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+from topk_spark.workload.events_queries import CENTS_SQL
 
 
 _FFILL_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM({_CENTS}) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events),
@@ -55,7 +51,7 @@ def forward_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps before a series' first observation stay NULL by design."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date("ts").alias("d"), _cents_col().alias("cents"))
+        ev.select("event_type", F.to_date("ts").alias("d"), cents("value").alias("cents"))
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
     )
@@ -120,7 +116,7 @@ _WOW_ORACLE = f"""
 WITH weekly AS (
   SELECT event_type,
          CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS wk,
-         CAST(SUM({_CENTS}) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL}) AS BIGINT) AS cents
   FROM events GROUP BY 1, 2
 )
 SELECT event_type, wk, cents,
@@ -148,7 +144,7 @@ def wow_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             "event_type",
             F.trunc(F.to_date("ts"), "week").alias("wk"),
-            _cents_col().alias("cents"),
+            cents("value").alias("cents"),
         )
         .groupBy("event_type", "wk")
         .agg(F.sum("cents").alias("cents"))
@@ -264,7 +260,7 @@ def ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANOMALY_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM({_CENTS}) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 stats AS (
@@ -299,7 +295,7 @@ def anomaly_zscore_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rollup; degenerate series (n<2 or zero variance) yield NULL."""
     ev = load_table(spark, sf_dir, "events")
     daily = (
-        ev.select("event_type", F.to_date("ts").alias("d"), _cents_col().alias("cents"))
+        ev.select("event_type", F.to_date("ts").alias("d"), cents("value").alias("cents"))
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
     )
@@ -337,7 +333,7 @@ def anomaly_zscore_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STL_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(SUM({_CENTS}) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL}) AS BIGINT) AS cents
   FROM events GROUP BY event_type, CAST(ts AS DATE)
 ),
 tr AS (
@@ -393,7 +389,7 @@ def stl_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(
             "event_type", F.to_date("ts").alias("d")
         ).agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
+            F.sum(cents("value"))
             .cast("long")
             .alias("cents")
         )

@@ -23,7 +23,7 @@ would not change the grouped result.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
