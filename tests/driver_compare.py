@@ -150,11 +150,13 @@ def main():
         # pin, no engine confs. SPARK_GRAFT_VANILLA=1 reproduces that
         # (combine with TZ=<zone> to smoke out session-timezone-dependent
         # queries); every query fn must self-apply what it needs
-        # (session.ensure_session_conf) to pass here.
+        # (session.ensure_session_conf) to pass here. The task-slot count
+        # follows SPARK_GRAFT_CPUS with session.get_spark's default.
         from pyspark.sql import SparkSession
 
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(f"local[{cpus}]")
             .appName("driver_compare_vanilla")
             .config("spark.ui.enabled", "false")
             .getOrCreate()

@@ -35,6 +35,7 @@ import os
 import subprocess
 import sys
 import tempfile
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -62,6 +63,7 @@ def main() -> None:
     print(f"sweep outputs and logs in {work}", flush=True)
     outs = {}
     procs = {}
+    t0 = time.time()
     for variant, extra_env in (
         ("default", {}),
         ("vanilla_tz", {"SPARK_GRAFT_VANILLA": "1", "TZ": "America/New_York"}),
@@ -77,6 +79,9 @@ def main() -> None:
                 stderr=subprocess.STDOUT,
             )
     codes = {v: p.wait() for v, p in procs.items()}
+    print(f"sweep wall {time.time() - t0:.0f} s; each pass's JSON written at "
+          + ", ".join(f"{v} {os.path.getmtime(p) - t0:.0f} s"
+                      for v, p in outs.items() if os.path.exists(p)), flush=True)
     # driver_compare writes its JSON only after its last query, so a missing
     # file is a pass that died mid-sweep.
     unfinished = [v for v, p in outs.items() if not os.path.exists(p)]

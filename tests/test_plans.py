@@ -235,6 +235,32 @@ def test_ensure_session_conf_pins_ansi_overflow(spark):
         spark.conf.set("spark.sql.ansi.enabled", before)
 
 
+def test_split_money_sums_raise_instead_of_wrapping(spark):
+    """ops/money.py under the pinned ANSI mode: a split sub-sum that passes
+    2^63 raises rather than wrapping into a wrong exact total, and `cents`
+    on a dollar value whose cents exceed the long range raises rather than
+    wrapping to a wrong count."""
+    from topk_spark.ops.money import SPLIT_BITS, cents, sum_units_exact
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        ensure_session_conf(spark)
+        n = 1_100_000
+        # each high part is ~2^43, so n of them pass 2^63
+        assert n * ((2**63 - 1 - n) >> SPLIT_BITS) >= 2**63
+        units = spark.range(n).select(
+            (F.lit(2**63 - 1) - F.col("id")).alias("units")
+        )
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            units.agg(sum_units_exact(F.col("units"), 0)).collect()
+        dollars = spark.createDataFrame([(1e17,)], "v double")  # 10^19 cents
+        with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+            dollars.select(cents("v")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+
+
 def test_novelty_curve_no_cartesian_single_gram_shuffle(spark, sf_dir):
     """ngram_novelty_decay (round 3): the first-appearance reduction and
     the per-doc novel count must both key on the gram — no cartesian or

@@ -37,11 +37,18 @@ Exceptions → 500 {"error": msg} (:57-61).
 Flask is imported lazily and guarded: the engine itself never requires an
 HTTP stack; `create_app` raises a clear error if Flask is absent.
 
-Serving-path posture: the rollup DataFrame handed to `create_app` should be
-the pre-ranked/materialized tier (serve/router.py) — each request then runs
-a partition-pruned bounded scan, which is what makes the serve_topk
-benchmark's latency (perfbench/README.md) comparable to the reference's
-Pinot-indexed reads.
+Serving-path posture: the three top-K routes answer from a hot segment
+(serve/segment.py), the reference's in-memory realtime segment: on the
+first top-K request the app copies the newest 24 h of the rollup DataFrame
+into one driver-side Arrow table and then answers with `pyarrow.compute`,
+no Spark job per request. It is bounded three ways: it is built only over a
+snapshot DataFrame (non-streaming, every plan leaf a fixed file listing or
+local data), it holds at most 24 h and 1,000,000 rows, and it answers only
+requests whose start is inside those 24 h and that it can answer exactly
+(no nulls, no sum that could pass 2^63, k in 0..2^31-1). Everything else
+runs today's Spark plan (serve/api.py). Each top-K response names the path
+in an `X-TopK-Route: segment|spark` header; the body is the same bytes on
+both paths.
 """
 
 from __future__ import annotations
@@ -49,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.serve import api as serve_api
+from topk_spark.serve.segment import HotSegment
 
 
 def _int_or(value: str | None, default: int | None) -> int | None:
@@ -75,7 +83,15 @@ def create_app(
     trending_window_ms: int = 3_600_000,
 ):
     """Build the Flask app serving the three reference routes + health over
-    the given rollup DataFrame (columns per serve/api.py contract).
+    the given rollup DataFrame (columns per serve/api.py contract). Building
+    the app runs no Spark job: the top-K routes build their hot segment
+    (serve/segment.py) on the first top-K request — two jobs, a scalar
+    max(window_start) and a `toArrow()` of the newest 24 h, at most
+    1,000,000 rows, only when `rollup` is a snapshot — and answer from it
+    when the request starts inside those 24 h and it can answer exactly;
+    otherwise the request runs the serve/api.py plan. The `X-TopK-Route`
+    header (`segment` or `spark`) says which path answered. A live-tier
+    caller must hand in a new DataFrame (a new app) to see newer files.
     `trending_tier`: optional SLIDING rollup tier (window_start/window_end/
     event_type/revenue_cents) — supplying it registers /api/v1/trending.
     `preranked_trending`: optional materialized ranked rows (what the
@@ -113,9 +129,8 @@ def create_app(
         start, end = _range(args)
         return start, end, _int_or(args.get("k"), 10)
 
-    def _respond(restaurant_id: str, start: int, end: int, k: int,
-                 df: DataFrame):
-        items = [r.asDict() for r in df.collect()]
+    def _envelope(restaurant_id: str, start: int, end: int, k: int,
+                  items: list[dict]):
         return jsonify(
             {
                 "restaurantId": restaurant_id,
@@ -125,6 +140,26 @@ def create_app(
                 "items": items,
             }
         )
+
+    def _respond(restaurant_id: str, start: int, end: int, k: int,
+                 df: DataFrame):
+        return _envelope(
+            restaurant_id, start, end, k, [r.asDict() for r in df.collect()]
+        )
+
+    hot = HotSegment(rollup)
+
+    def _topk(echo_id: str, key: str | None, by_revenue: bool, spark_read):
+        """Answer from the hot segment when it can, else run `spark_read`
+        (start, end, k) → DataFrame; the path taken goes in X-TopK-Route."""
+        start, end, k = _window(request.args)
+        items = hot.read(key, start, end, k, by_revenue)
+        if items is None:
+            resp = _respond(echo_id, start, end, k, spark_read(start, end, k))
+        else:
+            resp = _envelope(echo_id, start, end, k, items)
+        resp.headers["X-TopK-Route"] = "spark" if items is None else "segment"
+        return resp
 
     @app.errorhandler(Exception)
     def _err(e):  # TopKController.kt:57-61 envelope
@@ -145,22 +180,23 @@ def create_app(
     # registered before the parameterized one.
     @app.get("/api/v1/restaurants/all/topk")
     def topk_all():
-        start, end, k = _window(request.args)
-        df = serve_api.topk_global(rollup, start, end, k)
-        return _respond("ALL", start, end, k, df)
+        return _topk("ALL", None, False, lambda s, e, k: serve_api.topk_global(
+            rollup, s, e, k))
 
     @app.get("/api/v1/restaurants/<restaurant_id>/topk")
     def topk_one(restaurant_id: str):
-        start, end, k = _window(request.args)
-        df = serve_api.topk_for_restaurant(rollup, restaurant_id, start, end, k)
-        return _respond(restaurant_id, start, end, k, df)
+        return _topk(restaurant_id, restaurant_id, False,
+                     lambda s, e, k: serve_api.topk_for_restaurant(
+                         rollup, restaurant_id, s, e, k))
 
     @app.get("/api/v1/restaurants/<restaurant_id>/topk/revenue")
     def topk_revenue(restaurant_id: str):
-        start, end, k = _window(request.args)
-        df = serve_api.topk_by_revenue(rollup, restaurant_id, start, end, k)
-        # TopKController.kt:117: echo the raw path segment ('all' included)
-        return _respond(restaurant_id, start, end, k, df)
+        # TopKController.kt:117: echo the raw path segment ('all' included);
+        # any case of 'all' reads the global ranking
+        key = None if restaurant_id.lower() == "all" else restaurant_id
+        return _topk(restaurant_id, key, True,
+                     lambda s, e, k: serve_api.topk_by_revenue(
+                         rollup, restaurant_id, s, e, k))
 
     if trending_tier is not None:
         _static_router = None

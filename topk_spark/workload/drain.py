@@ -145,24 +145,30 @@ def _write_ordered_tiles(
     batch schedule the oracles derive — fail loudly instead."""
     src = os.path.join(root, name)
     os.makedirs(src, exist_ok=True)
-    for i in range(n):
-        tdir = os.path.join(root, f"{name}_tile{i}")
-        part_df.filter(F.col("_tile") == i).drop("_tile").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tdir)
-        parts = [f for f in os.listdir(tdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"tile {i}/{n} of drain source '{name}' produced {len(parts)} "
-                f"part files — every tile must be non-empty for the ordered "
-                f"replay (batch i == tile i) the oracle assumes; regenerate "
-                f"the fixture or lower the tile count"
-            )
-        dst = os.path.join(src, f"{i:04d}.parquet")
-        shutil.copyfile(os.path.join(tdir, parts[0]), dst)
-        if base_mtime is None:
-            base_mtime = os.stat(dst).st_mtime
-        os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
+    # The first tile write evaluates the source plan (range_tile's min/max
+    # aggregate included) once into the cache; every tile reads it back.
+    part_df = part_df.persist()
+    try:
+        for i in range(n):
+            tdir = os.path.join(root, f"{name}_tile{i}")
+            part_df.filter(F.col("_tile") == i).drop("_tile").coalesce(
+                1
+            ).write.mode("overwrite").parquet(tdir)
+            parts = [f for f in os.listdir(tdir) if f.endswith(".parquet")]
+            if len(parts) != 1:
+                raise RuntimeError(
+                    f"tile {i}/{n} of drain source '{name}' produced "
+                    f"{len(parts)} part files — every tile must be non-empty "
+                    f"for the ordered replay (batch i == tile i) the oracle "
+                    f"assumes; regenerate the fixture or lower the tile count"
+                )
+            dst = os.path.join(src, f"{i:04d}.parquet")
+            shutil.copyfile(os.path.join(tdir, parts[0]), dst)
+            if base_mtime is None:
+                base_mtime = os.stat(dst).st_mtime
+            os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
+    finally:
+        part_df.unpersist()
     return src, base_mtime
 
 
