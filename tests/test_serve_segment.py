@@ -245,3 +245,42 @@ def test_snapshot_leaves(spark, tier):
     assert segment.is_snapshot(spark.range(3))
     assert segment.is_snapshot(spark.createDataFrame([(1,)], "a long"))
     assert not segment.is_snapshot(spark.readStream.format("rate").load())
+
+
+def test_closer_output_answers_from_segment(spark, tmp_path):
+    """The rollup the streaming window closer writes (rollup/window_date=<D>/
+    files, no sink log) is a snapshot the segment serves."""
+    import json
+    import os
+
+    import pyspark.sql.functions as F
+
+    from topk_spark.fixtures import FixtureSpec, generate_order_events
+    from topk_spark.schemas import ORDER_EVENT
+    from topk_spark.streaming.job import (
+        build_dedup_stream,
+        start_raw_sink,
+        start_rollup_from_raw,
+    )
+
+    src, raw, out = (str(tmp_path / d) for d in ("src", "raw", "rollup"))
+    os.makedirs(src)
+    rows = generate_order_events(FixtureSpec(n_events=600))
+    with open(os.path.join(src, "b0.json"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+    start_raw_sink(build_dedup_stream(spark.readStream.schema(ORDER_EVENT).json(src)),
+                   raw, str(tmp_path / "ck_raw"), available_now=True).awaitTermination(120)
+    start_rollup_from_raw(spark, raw, out, str(tmp_path / "ck_rollup"),
+                          available_now=True).awaitTermination(120)
+    rollup = (
+        spark.read.parquet(out)
+        .withColumnRenamed("window_start_1m", "window_start")
+        .withColumn("window_end", F.col("window_start") + F.lit(MIN))
+    )
+    assert segment.is_snapshot(rollup)
+    lo = rollup.agg(F.min("window_start")).first()[0]
+    hi = rollup.agg(F.max("window_end")).first()[0]
+    rid = rollup.groupBy("restaurant_id").count().orderBy(F.desc("count")).first()[0]
+    app, client = _client(spark, rollup)
+    for revenue, r in ((False, rid), (True, rid), (False, "all")):
+        assert _assert_same(app, client, rollup, r, revenue, lo, hi, 5, "segment")

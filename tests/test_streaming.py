@@ -4,15 +4,18 @@ the parquet sink tables are compared against independent batch computations.
 
 Topology under test (two chained queries — see streaming/job.py docstring):
 stage 1 dedups the event stream into the raw table (1h horizon); stage 2
-streams the raw table into 1-minute rollups (10s lateness watermark).
+streams the raw table through the window closer into 1-minute rollups (10s
+lateness), checked against the declarative `build_rollup_stream`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from topk_spark.fixtures import FixtureSpec, generate_order_events
 from topk_spark.schemas import ORDER_EVENT
@@ -673,3 +676,280 @@ def test_multiple_watermark_policy_min_vs_max(spark, tmp_path):
     assert got_min == expect(19), (len(got_min), sorted(got_min)[-1:])
     assert got_max == expect(119), (len(got_max), sorted(got_max)[-1:])
     assert got_min < got_max  # strict subset: the policies genuinely differ
+
+
+# ---------------------------------------------------------------------------
+# The rollup window closer (streaming/job.py `WindowCloser`)
+# ---------------------------------------------------------------------------
+
+_T0 = 1_704_067_200_000
+
+
+def _order(eid: str, sec: int, rest: str = "R1", item: str = "A", cust: int = 0) -> dict:
+    return {
+        "event_id": eid, "order_id": f"O{eid}", "customer_id": f"C{cust}",
+        "restaurant_id": rest, "menu_item_id": item, "category_id": "CAT",
+        "menu_item_name": f"Dish {item}", "quantity": 1 + sec % 3,
+        "price_in_cents": 250, "timestamp": _T0 + sec * 1000,
+    }
+
+
+def _closer_batches() -> list[list[dict]]:
+    """Five topic batches. Windows [120,180) and [240,300) s straddle batch
+    boundaries; batches 1, 2 and 4 re-send events of the batch before
+    (duplicates across batches); batches 1-3 carry rows whose window closed
+    in an earlier batch (late), one of them ending exactly on the frontier
+    (240 s), and K1 lands just past it; every late row has its own
+    (restaurant, item) group, so Spark's late count (taken after partial
+    aggregation) counts rows."""
+    def run(lo, hi, tag):
+        return [_order(f"{tag}{s}", s, f"R{s % 2}", "AB"[s % 4 // 2], s % 7)
+                for s in range(lo, hi, 5)]
+
+    b0 = run(0, 155, "a")
+    b1 = run(155, 255, "b") + b0[-3:] + [_order("L1", 100, "R1", "L1")]
+    b2 = (run(255, 335, "c") + b1[:2]
+          + [_order("L2", 170, "R0", "L2"), _order("L3", 235, "R1", "L3"),
+             _order("K1", 242, "R0", "K1")])
+    b3 = run(335, 420, "d") + [_order("L4", 250, "R1", "L4")]
+    b4 = run(420, 480, "e") + b3[:4]
+    return [b0, b1, b2, b3, b4]
+
+
+@pytest.fixture(scope="module")
+def closer_feed(spark, tmp_path_factory):
+    """The deduped raw table of `_closer_batches`, one parquet file per
+    dedup micro-batch, as arrivals 10 s apart."""
+    tmp = str(tmp_path_factory.mktemp("closer_feed"))
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    for i, rows in enumerate(_closer_batches()):
+        p = os.path.join(src, f"b{i}.json")
+        _write_jsonl(p, rows)
+        os.utime(p, (1000 + i, 1000 + i))
+    events = spark.readStream.schema(ORDER_EVENT).option("maxFilesPerTrigger", 1).json(src)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # one raw file per batch
+    try:
+        start_raw_sink(build_dedup_stream(events), os.path.join(tmp, "raw"),
+                       os.path.join(tmp, "ck_raw"), available_now=True).awaitTermination(120)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    files = sorted(
+        (os.path.join(r, f) for r, _, fs in os.walk(os.path.join(tmp, "raw"))
+         for f in fs if f.endswith(".parquet")),
+        key=lambda f: os.stat(f).st_mtime_ns,
+    )
+    assert len(files) == 5
+    feed = os.path.join(tmp, "feed")
+    os.makedirs(feed)
+    for i, f in enumerate(files):
+        dst = os.path.join(feed, f"{i:03d}.parquet")
+        shutil.copyfile(f, dst)
+        os.utime(dst, (2000 + 10 * i, 2000 + 10 * i))
+    return feed
+
+
+def _rollup_rows(spark, path: str) -> list[tuple]:
+    """Every rollup row with its sketch replaced by the sketch's estimate."""
+    df = spark.read.parquet(path)
+    cols = [c for c in df.columns if c != "unique_customers_hll"]
+    return sorted(
+        tuple(r) for r in df.select(
+            *cols, F.hll_sketch_estimate("unique_customers_hll").alias("est")
+        ).collect()
+    )
+
+
+def _declarative_rollup(spark, feed: str, out: str, ck: str) -> int:
+    """`build_rollup_stream` through a parquet sink, one availableNow run per
+    feed file, so every data batch is followed by its no-data batch; returns
+    Spark's late-row count."""
+    from topk_spark.streaming.job import RAW_SCHEMA, build_rollup_stream
+
+    src = os.path.join(os.path.dirname(out), "declarative_src")
+    os.makedirs(src)
+    dropped = 0
+    for f in sorted(os.listdir(feed)):
+        shutil.copy2(os.path.join(feed, f), os.path.join(src, f))
+        q = (
+            build_rollup_stream(spark.readStream.schema(RAW_SCHEMA).parquet(src))
+            .withColumn("window_date", F.to_date(F.timestamp_millis("window_start_1m")))
+            .writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", ck).partitionBy("window_date")
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        assert q.recentProgress[-1].numInputRows == 0  # the no-data batch ran
+        dropped += sum(
+            s["numRowsDroppedByWatermark"]
+            for p in q.recentProgress for s in json.loads(p.json)["stateOperators"]
+        )
+    return dropped
+
+
+def test_closer_matches_declarative_rollup(spark, tmp_path, closer_feed):
+    from topk_spark.streaming.metrics import closer_counters
+
+    tmp = str(tmp_path)
+    ck = os.path.join(tmp, "ck")
+    q = start_rollup_from_raw(spark, closer_feed, os.path.join(tmp, "closer"), ck,
+                              available_now=True, max_files_per_trigger=1)
+    q.awaitTermination(120)
+    assert len(q.recentProgress) == 5
+    assert all(not json.loads(p.json)["stateOperators"] for p in q.recentProgress)
+    spark_dropped = _declarative_rollup(
+        spark, closer_feed, os.path.join(tmp, "declarative"), os.path.join(tmp, "ck_d"))
+
+    got = _rollup_rows(spark, os.path.join(tmp, "closer"))
+    want = _rollup_rows(spark, os.path.join(tmp, "declarative"))
+    assert got == want
+    assert (spark.read.parquet(os.path.join(tmp, "closer")).schema.simpleString()
+            == spark.read.parquet(os.path.join(tmp, "declarative")).schema.simpleString())
+    items = {r[1] for r in got}
+    assert "K1" in items and not items & {"L1", "L2", "L3", "L4"}
+    counters = closer_counters(ck)
+    assert counters["totals"]["late_dropped"] == spark_dropped == 4
+    assert counters["totals"]["closed_rows"] == len(got)
+    assert counters["totals"]["closed_windows"] == len({r[4] for r in got})
+    # each window is emitted in the batch whose max event time closes it:
+    # batch 0 (max 150 s) closes [0, 60) and [60, 120)
+    first = spark.read.parquet(os.path.join(tmp, "closer")).where(
+        F.input_file_name().contains("/b0-"))
+    assert sorted({r[0] for r in first.select("window_start_1m").collect()}) == [
+        _T0, _T0 + 60_000]
+
+
+def test_back_to_back_spark_batches_close_one_batch_later(spark, tmp_path):
+    """What the closer does not copy: in back-to-back micro-batches Spark
+    drops a row as late by the watermark of the batch BEFORE the one that
+    closed its window, so a row arriving one batch after its window's
+    closing batch still counts there. The closer drops it (it would have
+    counted with a no-data batch in between, as under live triggers)."""
+    from topk_spark.streaming.job import RAW_SCHEMA, build_rollup_stream
+
+    tmp = str(tmp_path)
+    src = os.path.join(tmp, "src")
+    for i, secs in enumerate([range(0, 155, 5), [100]]):  # M0 = 150 s
+        rows = [(f"e{i}{s}", "R", "A", s) for s in secs]
+        spark.createDataFrame(rows, "event_id string, restaurant_id string, "
+                              "menu_item_id string, s long").select(
+            "event_id", "restaurant_id", "menu_item_id",
+            F.lit("Dish").alias("menu_item_name"), F.lit("C").alias("category_id"),
+            F.lit("cust").alias("customer_id"), F.lit(1).alias("quantity"),
+            (F.col("s") * 1000 + _T0).alias("timestamp"),
+        ).withColumn("event_ts", F.timestamp_millis("timestamp")).withColumn(
+            "revenue_cents", F.lit(5).cast("long")
+        ).coalesce(1).write.mode("append").parquet(src)
+    for i, f in enumerate(sorted(
+            (f for f in os.listdir(src) if f.endswith(".parquet")),
+            key=lambda f: os.stat(os.path.join(src, f)).st_mtime_ns)):
+        os.utime(os.path.join(src, f), (1000 + i, 1000 + i))
+
+    q = start_rollup_from_raw(spark, src, os.path.join(tmp, "closer"),
+                              os.path.join(tmp, "ck"), available_now=True,
+                              max_files_per_trigger=1)
+    q.awaitTermination(120)
+    ref = (
+        build_rollup_stream(spark.readStream.schema(RAW_SCHEMA)
+                            .option("maxFilesPerTrigger", 1).parquet(src))
+        .writeStream.format("parquet").option("path", os.path.join(tmp, "ref"))
+        .option("checkpointLocation", os.path.join(tmp, "ck_ref"))
+        .trigger(availableNow=True).start()
+    )
+    ref.awaitTermination(120)
+
+    def count_60s(path):
+        return spark.read.parquet(path).where(
+            F.col("window_start_1m") == _T0 + 60_000).first()["order_count"]
+
+    assert count_60s(os.path.join(tmp, "closer")) == 12
+    assert count_60s(os.path.join(tmp, "ref")) == 13
+
+
+def test_closer_batch_retry_adds_no_rows(spark, tmp_path, closer_feed):
+    from topk_spark.streaming.job import RAW_SCHEMA, WindowCloser
+    from topk_spark.streaming.metrics import closer_counters
+
+    tmp = str(tmp_path)
+    rollup, ck = os.path.join(tmp, "rollup"), os.path.join(tmp, "ck")
+    closer = WindowCloser(rollup, ck)
+    files = sorted(os.listdir(closer_feed))
+
+    def batch(i):
+        return spark.read.schema(RAW_SCHEMA).parquet(os.path.join(closer_feed, files[i]))
+
+    for i in range(3):
+        closer(batch(i), i)
+    once = _rollup_rows(spark, rollup)
+    n_files = sum(len(fs) for _, _, fs in os.walk(rollup))
+    state = closer_counters(ck)
+    closer(batch(2), 2)  # the retry of batch 2
+    assert _rollup_rows(spark, rollup) == once
+    assert sum(len(fs) for _, _, fs in os.walk(rollup)) == n_files
+    assert closer_counters(ck) == state
+    # only states N-1 and N are kept
+    assert sorted(os.listdir(os.path.join(ck, "closer"))) == ["1", "2"]
+
+
+def test_closer_restart_after_batch_k_gives_same_output(spark, tmp_path, closer_feed):
+    tmp = str(tmp_path)
+
+    def run(src, out, ck):
+        start_rollup_from_raw(spark, src, out, ck, available_now=True,
+                              max_files_per_trigger=1).awaitTermination(120)
+
+    run(closer_feed, os.path.join(tmp, "straight"), os.path.join(tmp, "ck1"))
+    src, held = os.path.join(tmp, "src"), sorted(os.listdir(closer_feed))
+    os.makedirs(src)
+    for f in held[:2]:
+        shutil.copy2(os.path.join(closer_feed, f), os.path.join(src, f))
+    run(src, os.path.join(tmp, "restarted"), os.path.join(tmp, "ck2"))
+    for f in held[2:]:
+        shutil.copy2(os.path.join(closer_feed, f), os.path.join(src, f))
+    run(src, os.path.join(tmp, "restarted"), os.path.join(tmp, "ck2"))
+    assert _rollup_rows(spark, os.path.join(tmp, "restarted")) == _rollup_rows(
+        spark, os.path.join(tmp, "straight"))
+
+
+def test_catchup_is_one_micro_batch_per_query(spark, tmp_path):
+    tmp = str(tmp_path)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    for i in range(3):
+        _write_jsonl(os.path.join(src, f"b{i}.json"),
+                     generate_order_events(FixtureSpec(n_events=300, seed=i)))
+    raw, rollup = os.path.join(tmp, "raw"), os.path.join(tmp, "rollup")
+    q1 = start_raw_sink(build_dedup_stream(spark.readStream.schema(ORDER_EVENT).json(src)),
+                        raw, os.path.join(tmp, "ck_raw"), available_now=True)
+    q1.awaitTermination(120)
+    q2 = start_rollup_from_raw(spark, raw, rollup, os.path.join(tmp, "ck_rollup"),
+                               available_now=True)
+    q2.awaitTermination(120)
+    assert len(q1.recentProgress) == 1 and len(q2.recentProgress) == 1
+    assert json.loads(q2.lastProgress.json)["stateOperators"] == []
+    assert spark.read.parquet(rollup).count() > 0
+
+
+def test_other_queries_keep_their_trailing_no_data_batch(spark, tmp_path):
+    """start_raw_sink turns no-data batches off for its own query only."""
+    from topk_spark.streaming.job import RAW_SCHEMA, build_rollup_stream
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+    tmp = str(tmp_path)
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    _write_jsonl(os.path.join(src, "b0.json"), generate_order_events(FixtureSpec(n_events=300)))
+    raw = os.path.join(tmp, "raw")
+    start_raw_sink(build_dedup_stream(spark.readStream.schema(ORDER_EVENT).json(src)),
+                   raw, os.path.join(tmp, "ck_raw"), available_now=True).awaitTermination(120)
+    assert spark.conf.get(key) == before
+    q = (
+        build_rollup_stream(spark.readStream.schema(RAW_SCHEMA).parquet(raw))
+        .writeStream.format("parquet").option("path", os.path.join(tmp, "out"))
+        .option("checkpointLocation", os.path.join(tmp, "ck"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    assert [p.numInputRows > 0 for p in q.recentProgress] == [True, False]

@@ -6,6 +6,10 @@ durations, watermark, and state-store sizes, so the listener only collects
 and exposes them; no custom instrumentation thread, no driver polling of
 executors.
 
+The rollup window closer (streaming/job.py `WindowCloser`) has no state
+operator, so its progress carries no state or late-row numbers; its own
+per-batch counters are read with `closer_counters`.
+
 Scale: listener callbacks run on the driver's listener bus with one event
 per micro-batch per query — O(1) per batch regardless of data volume. The
 snapshots deque is bounded, so a long-running deployment cannot leak.
@@ -116,3 +120,14 @@ class TopKMetricsListener(StreamingQueryListener):
                     "state_memory_bytes": last.state_memory_bytes if last else 0,
                 }
             return out
+
+
+def closer_counters(checkpoint: str) -> dict | None:
+    """The last committed batch of the window closer checkpointed at
+    `checkpoint`: {batch_id, watermark_ms, late_dropped, closed_rows,
+    closed_windows, pending_rows, totals: {late_dropped, closed_rows,
+    closed_windows}} (totals over every batch of the checkpoint), or None
+    before its first batch."""
+    from topk_spark.streaming.job import closer_state
+
+    return closer_state(checkpoint)

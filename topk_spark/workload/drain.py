@@ -128,6 +128,9 @@ def bounds_sql(rel: str, ts: str = "ts") -> str:
     )
 
 
+_WRITERS = "spark.sql.maxConcurrentOutputFileWriters"
+
+
 def _write_ordered_tiles(
     part_df: DataFrame,
     root: str,
@@ -145,30 +148,32 @@ def _write_ordered_tiles(
     batch schedule the oracles derive — fail loudly instead."""
     src = os.path.join(root, name)
     os.makedirs(src, exist_ok=True)
-    # The first tile write evaluates the source plan (range_tile's min/max
-    # aggregate included) once into the cache; every tile reads it back.
-    part_df = part_df.persist()
+    tiled = os.path.join(root, f"{name}_tiles")
+    # One job writes every tile: its single task appends each row to its
+    # tile's file in source order. With a writer per tile held open, Spark
+    # plans no sort by `_tile`, which would not keep that order.
+    conf = part_df.sparkSession.conf
+    writers = conf.get(_WRITERS)
+    conf.set(_WRITERS, str(n))
     try:
-        for i in range(n):
-            tdir = os.path.join(root, f"{name}_tile{i}")
-            part_df.filter(F.col("_tile") == i).drop("_tile").coalesce(
-                1
-            ).write.mode("overwrite").parquet(tdir)
-            parts = [f for f in os.listdir(tdir) if f.endswith(".parquet")]
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"tile {i}/{n} of drain source '{name}' produced "
-                    f"{len(parts)} part files — every tile must be non-empty "
-                    f"for the ordered replay (batch i == tile i) the oracle "
-                    f"assumes; regenerate the fixture or lower the tile count"
-                )
-            dst = os.path.join(src, f"{i:04d}.parquet")
-            shutil.copyfile(os.path.join(tdir, parts[0]), dst)
-            if base_mtime is None:
-                base_mtime = os.stat(dst).st_mtime
-            os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
+        part_df.coalesce(1).write.mode("overwrite").partitionBy("_tile").parquet(tiled)
     finally:
-        part_df.unpersist()
+        conf.set(_WRITERS, writers)
+    for i in range(n):
+        tdir = os.path.join(tiled, f"_tile={i}")
+        parts = [f for f in os.listdir(tdir) if f.endswith(".parquet")] if os.path.isdir(tdir) else []
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"tile {i}/{n} of drain source '{name}' produced "
+                f"{len(parts)} part files — every tile must be non-empty "
+                f"for the ordered replay (batch i == tile i) the oracle "
+                f"assumes; regenerate the fixture or lower the tile count"
+            )
+        dst = os.path.join(src, f"{i:04d}.parquet")
+        os.replace(os.path.join(tdir, parts[0]), dst)
+        if base_mtime is None:
+            base_mtime = os.stat(dst).st_mtime
+        os.utime(dst, (base_mtime + 10 * i, base_mtime + 10 * i))
     return src, base_mtime
 
 
