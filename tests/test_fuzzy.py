@@ -115,14 +115,11 @@ def test_embedding_neardup_bucketed_equals_allpairs(spark, sf_dir):
     """The registered LSH-bucketed embedding near-dup query must reproduce
     the all-pairs per-label pair counts (miss probability ≈ 4e-6 per pair at
     cos ≥ 0.9 with H=4/L=16)."""
-    from topk_spark.workload.similarity_queries import (
-        _dbl,
-        dot,
-        embedding_neardup_pairs,
-    )
+    from topk_spark.ops.similarity import as_double_array, dot
+    from topk_spark.workload.similarity_queries import embedding_neardup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", "label", _dbl("embedding").alias("e")).withColumn(
+    v = emb.select("vec_id", "label", as_double_array("embedding").alias("e")).withColumn(
         "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
     )
     a = v.select(

@@ -189,13 +189,14 @@ def test_banding_batch_kernel_minima_and_equality_classes():
 def _cosine_expression_form(spark, sf_dir):
     """The pre-round-13 Catalyst fold formulation of cosine_topk."""
     from topk_spark.ops.topk import rank_topk
-    from topk_spark.workload.similarity_queries import _QUERY_IDS, _dbl, cosine
+    from topk_spark.ops.similarity import as_double_array, cosine
+    from topk_spark.workload.similarity_queries import _QUERY_IDS
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), _dbl("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_array("embedding").alias("qv")
     )
-    v = emb.select("vec_id", "label", _dbl("embedding").alias("vv"))
+    v = emb.select("vec_id", "label", as_double_array("embedding").alias("vv"))
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -32,32 +32,24 @@ def _write_jsonl(path: str, rows: list[dict]) -> None:
             f.write(json.dumps(r) + "\n")
 
 
-def _run_pipeline(spark, tmp, files: list[list[dict]], max_files_per_trigger=None):
-    """Drain stage 1 then stage 2 with availableNow; return (raw, rollup)."""
+def _run_pipeline(spark, tmp, files: list[list[dict]]):
+    """Per arrival: write the file, then drain stage 1 and stage 2 with
+    availableNow on their checkpoints; return (raw, rollup)."""
     src = os.path.join(tmp, "src")
     os.makedirs(src)
-    # File mtime order drives processing order under maxFilesPerTrigger=1.
-    for i, rows in enumerate(files):
-        p = os.path.join(src, f"batch_{i:03d}.json")
-        _write_jsonl(p, rows)
-        os.utime(p, (1000 + i, 1000 + i))
-    stream = spark.readStream.schema(ORDER_EVENT)
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = stream.json(src)
-
     raw_path = os.path.join(tmp, "raw")
     rollup_path = os.path.join(tmp, "rollup")
-    q1 = start_raw_sink(
-        build_dedup_stream(events), raw_path, os.path.join(tmp, "ckpt/raw"),
-        available_now=True,
-    )
-    q1.awaitTermination(120)
-    q2 = start_rollup_from_raw(
-        spark, raw_path, rollup_path, os.path.join(tmp, "ckpt/rollup"),
-        available_now=True, max_files_per_trigger=max_files_per_trigger,
-    )
-    q2.awaitTermination(120)
+    for i, rows in enumerate(files):
+        _write_jsonl(os.path.join(src, f"batch_{i:03d}.json"), rows)
+        events = spark.readStream.schema(ORDER_EVENT).json(src)
+        start_raw_sink(
+            build_dedup_stream(events), raw_path, os.path.join(tmp, "ckpt/raw"),
+            available_now=True,
+        ).awaitTermination(120)
+        start_rollup_from_raw(
+            spark, raw_path, rollup_path, os.path.join(tmp, "ckpt/rollup"),
+            available_now=True,
+        ).awaitTermination(120)
     return spark.read.parquet(raw_path), spark.read.parquet(rollup_path)
 
 
@@ -139,9 +131,7 @@ def test_late_event_dropped_from_rollup_kept_in_raw(spark, tmp_path):
     late = dict(batch1[0])
     late["event_id"] = "EVTLATE0001"
     late["timestamp"] = base + 60_000  # 9 min before batch1's window
-    raw, rollup = _run_pipeline(
-        spark, str(tmp_path), [batch1, [late]], max_files_per_trigger=1
-    )
+    raw, rollup = _run_pipeline(spark, str(tmp_path), [batch1, [late]])
 
     # T5 (Flink-path semantics): late event dropped from the windowed rollup…
     assert rollup.filter(F.col("window_start_1m") == base + 60_000).count() == 0
@@ -788,16 +778,26 @@ def _declarative_rollup(spark, feed: str, out: str, ck: str) -> int:
     return dropped
 
 
+def _closer_per_file(spark, feed: str, out: str, ck: str, files=None) -> None:
+    """`start_rollup_from_raw`, one availableNow run per feed file (all of
+    `feed`'s files, or `files`), each one micro-batch with no state
+    operator."""
+    src = os.path.join(os.path.dirname(out), "closer_src")
+    os.makedirs(src, exist_ok=True)
+    for f in files if files is not None else sorted(os.listdir(feed)):
+        shutil.copy2(os.path.join(feed, f), os.path.join(src, f))
+        q = start_rollup_from_raw(spark, src, out, ck, available_now=True)
+        q.awaitTermination(120)
+        assert len(q.recentProgress) == 1
+        assert json.loads(q.lastProgress.json)["stateOperators"] == []
+
+
 def test_closer_matches_declarative_rollup(spark, tmp_path, closer_feed):
     from topk_spark.streaming.metrics import closer_counters
 
     tmp = str(tmp_path)
     ck = os.path.join(tmp, "ck")
-    q = start_rollup_from_raw(spark, closer_feed, os.path.join(tmp, "closer"), ck,
-                              available_now=True, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    assert len(q.recentProgress) == 5
-    assert all(not json.loads(p.json)["stateOperators"] for p in q.recentProgress)
+    _closer_per_file(spark, closer_feed, os.path.join(tmp, "closer"), ck)
     spark_dropped = _declarative_rollup(
         spark, closer_feed, os.path.join(tmp, "declarative"), os.path.join(tmp, "ck_d"))
 
@@ -841,15 +841,13 @@ def test_back_to_back_spark_batches_close_one_batch_later(spark, tmp_path):
         ).withColumn("event_ts", F.timestamp_millis("timestamp")).withColumn(
             "revenue_cents", F.lit(5).cast("long")
         ).coalesce(1).write.mode("append").parquet(src)
-    for i, f in enumerate(sorted(
-            (f for f in os.listdir(src) if f.endswith(".parquet")),
-            key=lambda f: os.stat(os.path.join(src, f)).st_mtime_ns)):
+    arrivals = sorted((f for f in os.listdir(src) if f.endswith(".parquet")),
+                      key=lambda f: os.stat(os.path.join(src, f)).st_mtime_ns)
+    for i, f in enumerate(arrivals):
         os.utime(os.path.join(src, f), (1000 + i, 1000 + i))
 
-    q = start_rollup_from_raw(spark, src, os.path.join(tmp, "closer"),
-                              os.path.join(tmp, "ck"), available_now=True,
-                              max_files_per_trigger=1)
-    q.awaitTermination(120)
+    _closer_per_file(spark, src, os.path.join(tmp, "closer"), os.path.join(tmp, "ck"),
+                     files=arrivals)
     ref = (
         build_rollup_stream(spark.readStream.schema(RAW_SCHEMA)
                             .option("maxFilesPerTrigger", 1).parquet(src))
@@ -893,23 +891,26 @@ def test_closer_batch_retry_adds_no_rows(spark, tmp_path, closer_feed):
 
 
 def test_closer_restart_after_batch_k_gives_same_output(spark, tmp_path, closer_feed):
+    """One running query fed the feed file by file gives the rows of a
+    query restarted from its checkpoint after every batch."""
     tmp = str(tmp_path)
-
-    def run(src, out, ck):
-        start_rollup_from_raw(spark, src, out, ck, available_now=True,
-                              max_files_per_trigger=1).awaitTermination(120)
-
-    run(closer_feed, os.path.join(tmp, "straight"), os.path.join(tmp, "ck1"))
-    src, held = os.path.join(tmp, "src"), sorted(os.listdir(closer_feed))
+    straight = os.path.join(tmp, "straight")
+    src = os.path.join(straight, "src")
     os.makedirs(src)
-    for f in held[:2]:
-        shutil.copy2(os.path.join(closer_feed, f), os.path.join(src, f))
-    run(src, os.path.join(tmp, "restarted"), os.path.join(tmp, "ck2"))
-    for f in held[2:]:
-        shutil.copy2(os.path.join(closer_feed, f), os.path.join(src, f))
-    run(src, os.path.join(tmp, "restarted"), os.path.join(tmp, "ck2"))
-    assert _rollup_rows(spark, os.path.join(tmp, "restarted")) == _rollup_rows(
-        spark, os.path.join(tmp, "straight"))
+    q = start_rollup_from_raw(spark, src, os.path.join(straight, "rollup"),
+                              os.path.join(straight, "ck"), trigger_seconds=1)
+    try:
+        for f in sorted(os.listdir(closer_feed)):
+            shutil.copy2(os.path.join(closer_feed, f), os.path.join(src, f))
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sum(p.numInputRows > 0 for p in q.recentProgress) == 5
+    restarted = os.path.join(tmp, "restarted")
+    _closer_per_file(spark, closer_feed, os.path.join(restarted, "rollup"),
+                     os.path.join(restarted, "ck"))
+    assert _rollup_rows(spark, os.path.join(restarted, "rollup")) == _rollup_rows(
+        spark, os.path.join(straight, "rollup"))
 
 
 def test_catchup_is_one_micro_batch_per_query(spark, tmp_path):

@@ -40,15 +40,17 @@ def register(
 
 def load_all() -> dict[str, Query]:
     """Import all workload modules (side-effect: registration) and return the
-    registry in import order."""
+    registry in import order. The list is in registration order: a module
+    imported by another registers when first imported."""
     from topk_spark.workload import (  # noqa: F401
+        events_queries,
         streaming_drain_queries,
         cdc_queries,
         graph_queries,
         sketch3_queries,
         er_queries,
-        io_queries,
         layout_queries,
+        io_queries,
         sketch2_queries,
         corpus_ops_queries,
         recall_queries,
@@ -57,6 +59,7 @@ def load_all() -> dict[str, Query]:
         changepoint_queries,
         sampling_queries,
         multimodal2_queries,
+        graph2_queries,
         graph3_queries,
         containment_queries,
         stats2_queries,
@@ -68,6 +71,7 @@ def load_all() -> dict[str, Query]:
         cluster_queries,
         cover_queries,
         forecast_queries,
+        similarity_queries,
         mining_queries,
         curation_queries,
         spectrum_queries,
@@ -82,10 +86,8 @@ def load_all() -> dict[str, Query]:
         relational_queries,
         profiling_queries,
         pipeline2_queries,
-        events_queries,
         tpch_queries,
         text_queries,
-        similarity_queries,
         serving_queries,
         fuzzy_queries,
         text2_queries,
@@ -93,7 +95,6 @@ def load_all() -> dict[str, Query]:
         search_queries,
         timeseries_queries,
         text3_queries,
-        graph2_queries,
         governance_queries,
         quant_queries,
         skyline_queries,

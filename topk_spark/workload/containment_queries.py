@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.workload import register
-from topk_spark.workload.corpora import PERT_OFFSET as _PERT_OFFSET
+from topk_spark.workload.corpora import PERTURBED_CORPUS_SQL
 
 _T_NUM, _T_DEN = 4, 5  # threshold 4/5 = 0.8
 
@@ -33,13 +33,7 @@ _CONTAIN_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
 ),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
+{PERTURBED_CORPUS_SQL},
 sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, len(l)-1),

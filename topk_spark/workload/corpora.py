@@ -21,6 +21,16 @@ from topk_spark.io.sources import load_table
 
 PERT_OFFSET = 100_000
 
+# The DuckDB twin of `perturbed_corpus`, as a `corpus` CTE over a `base` CTE
+# of (doc_id, text) rows in scope.
+PERTURBED_CORPUS_SQL = f"""corpus AS (
+  SELECT doc_id, text FROM base
+  UNION ALL
+  SELECT doc_id + {PERT_OFFSET} AS doc_id,
+         array_to_string(l[1:len(l)-1], ' ') AS text
+  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
+)"""
+
 
 def perturbed_corpus(
     spark: SparkSession, sf_dir: str, modulo: int | None = None

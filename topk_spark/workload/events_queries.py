@@ -62,6 +62,30 @@ es AS (
 """
 
 
+def exact_percentiles_sql(src: str) -> str:
+    """Oracle tail over a CTE `src` of (event_type, revenue_cents) rows: per
+    type the row count and the exact ceil(p·n/100)-th order statistic for
+    p = 50, 90, 99, in INTEGER rank arithmetic ((n*p + 99) // 100 — DuckDB
+    // is floor division, both operands non-negative) so the two engines
+    cannot disagree on a float boundary."""
+    return f"""o AS (
+  SELECT event_type, revenue_cents,
+         row_number() OVER (PARTITION BY event_type
+                            ORDER BY revenue_cents) AS rn,
+         count(*) OVER (PARTITION BY event_type) AS n
+  FROM {src}
+)
+SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
+       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
+            AS BIGINT) AS p50_cents,
+       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
+            AS BIGINT) AS p90_cents,
+       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
+            AS BIGINT) AS p99_cents
+FROM o GROUP BY event_type
+"""
+
+
 # ---------------------------------------------------------------------------
 # Flagship: "Top 10 by revenue, last 24h, over raw events"
 # (pinot/README.md:5 sample; A4 + F1/P9 + K4/K6)

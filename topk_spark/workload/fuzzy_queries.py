@@ -16,12 +16,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from topk_spark.ops.fuzzy_dedup import (
-    minhash_neardup_pairs,
-    ngram_jaccard_pairs,
-)
+from topk_spark.ops.fuzzy_dedup import ngram_jaccard_pairs
 from topk_spark.workload import register
 from topk_spark.workload.corpora import PERT_OFFSET as _PERT_OFFSET
+from topk_spark.workload.corpora import PERTURBED_CORPUS_SQL
 from topk_spark.workload.corpora import perturbed_corpus  # noqa: F401 (re-export)
 from topk_spark.workload.corpora import perturbed_hsh
 
@@ -42,20 +40,14 @@ _SH_CTE = """sh AS (
 )"""
 
 
-@register(
-    "ngram_jaccard_neardup",
-    tags=("DD-ngram",),
-    oracle=f"""
+def _pairs_oracle(where: str, threshold: str) -> str:
+    """Exact 3-gram Jaccard pairs (rounded to 4 dp) at or above `threshold`
+    over the perturbed corpus of `documents` filtered by `where`."""
+    return f"""
 WITH base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
+  SELECT doc_id, text FROM documents{where}
 ),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
+{PERTURBED_CORPUS_SQL},
 {_SH_CTE}
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        round(len(list_intersect(a.s, b.s))::DOUBLE
@@ -63,8 +55,41 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
 FROM sh a, sh b
 WHERE a.doc_id < b.doc_id
   AND len(list_intersect(a.s, b.s))::DOUBLE
-      / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.5
-""",
+      / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= {threshold}
+"""
+
+
+# Every document's reach over the near-dup pair graph (Jaccard >= 0.5 on the
+# doc_id % 5 = 0 perturbed corpus): the closure the cluster oracles group.
+_REACH_SQL = f"""
+WITH RECURSIVE base AS (
+  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
+),
+{PERTURBED_CORPUS_SQL},
+{_SH_CTE},
+pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM sh a, sh b
+  WHERE a.doc_id < b.doc_id
+    AND len(list_intersect(a.s, b.s))::DOUBLE
+        / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.5
+),
+edges AS (
+  SELECT id_a AS a, id_b AS b FROM pairs
+  UNION
+  SELECT id_b AS a, id_a AS b FROM pairs
+),
+reach(id, r) AS (
+  SELECT DISTINCT a AS id, a AS r FROM edges
+  UNION
+  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id
+)"""
+
+
+@register(
+    "ngram_jaccard_neardup",
+    tags=("DD-ngram",),
+    oracle=_pairs_oracle(" WHERE doc_id % 5 = 0", "0.5"),
 )
 def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs 3-gram Jaccard near-dup detection on the perturbed
@@ -97,27 +122,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     collision is a 2^-64/pair event), both engines divide the same
     #     exact integers in IEEE double and round to 4, so values are
     #     bit-identical.
-    oracle=f"""
-WITH base AS (
-  SELECT doc_id, text FROM documents
-),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
-{_SH_CTE}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(len(list_intersect(a.s, b.s))::DOUBLE
-             / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE, 4) AS jaccard
-FROM sh a, sh b
-WHERE a.doc_id < b.doc_id
-  AND len(list_intersect(a.s, b.s))::DOUBLE
-      / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.6
-ORDER BY id_a, id_b
-""",
+    oracle=_pairs_oracle("", "0.6") + "ORDER BY id_a, id_b\n",
 )
 def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64 perms) + LSH(16 bands × 4 rows) near-dup pipeline over the
@@ -143,35 +148,7 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "neardup_cluster_dedup",
     tags=("DD-cluster",),
-    oracle=f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
-{_SH_CTE},
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a, sh b
-  WHERE a.doc_id < b.doc_id
-    AND len(list_intersect(a.s, b.s))::DOUBLE
-        / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.5
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-reach(id, r) AS (
-  SELECT DISTINCT a AS id, a AS r FROM edges
-  UNION
-  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id
-)
+    oracle=f"""{_REACH_SQL}
 SELECT id, CAST(min(r) AS BIGINT) AS component,
        (id = min(r)) AS keep
 FROM reach
@@ -194,35 +171,7 @@ def neardup_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.withColumn("keep", F.col("id") == F.col("component"))
 
 
-_GOLDEN_ORACLE = f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
-{_SH_CTE},
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a, sh b
-  WHERE a.doc_id < b.doc_id
-    AND len(list_intersect(a.s, b.s))::DOUBLE
-        / len(list_distinct(list_concat(a.s, b.s)))::DOUBLE >= 0.5
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-reach(id, r) AS (
-  SELECT DISTINCT a AS id, a AS r FROM edges
-  UNION
-  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id
-),
+_GOLDEN_ORACLE = f"""{_REACH_SQL},
 comp AS (
   SELECT id, min(r) AS component FROM reach GROUP BY id
 ),
@@ -286,13 +235,7 @@ _WJACC_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
 ),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + {_PERT_OFFSET} AS doc_id,
-         array_to_string(l[1:len(l)-1], ' ') AS text
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM base)
-),
+{PERTURBED_CORPUS_SQL},
 tok AS (
   SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
   FROM corpus

@@ -56,7 +56,7 @@ from topk_spark.workload.drain import (
     range_tile,
     tile_expr_sql,
 )
-from topk_spark.workload.events_queries import _ES as _EV_ES
+from topk_spark.workload.events_queries import _ES as _EV_ES, exact_percentiles_sql
 
 #: Misra-Gries summary capacity. CAP + 1 = 64 divides the threshold: the
 #: operator guarantees exactness for any T > W/64. Kept under the 97-cohort
@@ -430,27 +430,10 @@ def _percentile_drain(
 # value hash the way KMV did for distinct-count)
 # ---------------------------------------------------------------------------
 
-# Exact ceil(p·n/100)-th order statistic per type, INTEGER rank arithmetic
-# ((n*p + 99) // 100 — DuckDB // is floor division, both operands
-# non-negative) so the two engines cannot disagree on a float boundary.
+# Exact ceil(p·n/100)-th order statistic per type (`exact_percentiles_sql`).
 _EXACT_QUANTILE_ORACLE = f"""
 WITH {_EV_ES},
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM es
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-"""
+{exact_percentiles_sql('es')}"""
 
 
 def _exact_quantile_drain(
@@ -534,46 +517,35 @@ f AS (
   SELECT event_type, revenue_cents FROM es, wm
   WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= wm.w
 ),
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM f
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-"""
+{exact_percentiles_sql('f')}"""
+
+
+def _minute_value_counts(s: DataFrame) -> DataFrame:
+    """The percentile tier's rows: per closed minute (10 s watermark), the
+    count of each (event type, revenue value)."""
+    from topk_spark.ops.rollup import windowed_rollup
+
+    return windowed_rollup(
+        s.withWatermark("ts", "10 seconds"),
+        "ts",
+        ["event_type", "revenue_cents"],
+        [F.count("*").alias("n")],
+        "1 minute",
+    ).select("event_type", "revenue_cents", "window_start", "window_end", "n")
 
 
 def _live_percentile_tier_drain(
     spark: SparkSession, sf_dir: str, restart_after: int | None = None
 ) -> DataFrame:
-    from topk_spark.ops.rollup import windowed_rollup
     from topk_spark.serve.api import percentiles
     from topk_spark.workload.events_queries import order_stream
 
     ev = order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents")
 
-    def build(s: DataFrame) -> DataFrame:
-        return windowed_rollup(
-            s.withWatermark("ts", "10 seconds"),
-            "ts",
-            ["event_type", "revenue_cents"],
-            [F.count("*").alias("n")],
-            "1 minute",
-        ).select("event_type", "revenue_cents", "window_start", "window_end", "n")
-
     tier = drain(
         spark,
         range_tile(ev, "ts", 3),
-        build,
+        _minute_value_counts,
         output_mode="append",
         tiles=3,
         restart_after=restart_after,
@@ -677,15 +649,11 @@ _FINE_RETAIN_MS = 3 * _HOUR_MS
 # the two compose exactly like Pinot's segment drop + query time filter.
 _LADDER_RETENTION_MS = 7 * 24 * _HOUR_MS
 
-# Oracle: the same closed-window order statistics as _LIVE_PCTILE_ORACLE,
-# over a range DERIVED the way the engine derives it — C = hour-floor of
-# (fine frontier W − 24 h) where W = max closed minute end, range
-# [C − 2.5 h, C + 1.5 h) — so the hash proves the whole composition (live
-# append + continuous compaction + frontier recovery + routed read) against
-# raw events. Lossy compaction, a double-counted retry, a mis-clamped
-# router, or a frontier off by one hour all shift counts at cents
-# granularity.
-_COMPACTED_PCTILE_ORACLE = f"""
+def _ranged_pctile_oracle(rng: str) -> str:
+    """Exact order statistics over the events in closed minutes (window
+    end <= max ts − 10 s) inside [r0, r1); `rng` selects r0 and r1 from
+    `we`, the newest closed minute's end."""
+    return f"""
 WITH {_EV_ES},
 wm AS (
   SELECT CAST(floor(epoch_ms(max(ts))) AS BIGINT) - 10000 AS w FROM es
@@ -696,8 +664,7 @@ cw AS (
   WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= wm.w
 ),
 rng AS (
-  SELECT (we - {_COMPACT_BUFFER_MS}) // {_HOUR_MS} * {_HOUR_MS} - 9000000 AS r0,
-         (we - {_COMPACT_BUFFER_MS}) // {_HOUR_MS} * {_HOUR_MS} + 5400000 AS r1
+  SELECT {rng}
   FROM cw
 ),
 f AS (
@@ -706,22 +673,21 @@ f AS (
     AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= rng.r1
     AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= wm.w
 ),
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM f
+{exact_percentiles_sql('f')}"""
+
+
+# Oracle: the same closed-window order statistics as _LIVE_PCTILE_ORACLE,
+# over a range DERIVED the way the engine derives it — C = hour-floor of
+# (fine frontier W − 24 h) where W = max closed minute end, range
+# [C − 2.5 h, C + 1.5 h) — so the hash proves the whole composition (live
+# append + continuous compaction + frontier recovery + routed read) against
+# raw events. Lossy compaction, a double-counted retry, a mis-clamped
+# router, or a frontier off by one hour all shift counts at cents
+# granularity.
+_COMPACTED_PCTILE_ORACLE = _ranged_pctile_oracle(
+    f"""(we - {_COMPACT_BUFFER_MS}) // {_HOUR_MS} * {_HOUR_MS} - 9000000 AS r0,
+         (we - {_COMPACT_BUFFER_MS}) // {_HOUR_MS} * {_HOUR_MS} + 5400000 AS r1"""
 )
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-"""
 
 
 # Oracle for the RETENTION twin: same closed-window order statistics, over
@@ -733,44 +699,11 @@ FROM o GROUP BY event_type
 # is what proves both: an expired hour served (clamp missing, stale segment
 # leaking) or a retained hour lost (purge cut too deep) shifts n_rows and
 # every percentile at cents granularity).
-_RETENTION_PCTILE_ORACLE = f"""
-WITH {_EV_ES},
-wm AS (
-  SELECT CAST(floor(epoch_ms(max(ts))) AS BIGINT) - 10000 AS w FROM es
-),
-cw AS (
-  SELECT max(CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000) AS we
-  FROM es, wm
-  WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= wm.w
-),
-rng AS (
-  SELECT (we - {_LADDER_RETENTION_MS}) // {_HOUR_MS} * {_HOUR_MS} AS r0,
+_RETENTION_PCTILE_ORACLE = _ranged_pctile_oracle(
+    f"""(we - {_LADDER_RETENTION_MS}) // {_HOUR_MS} * {_HOUR_MS} AS r0,
          (we - {_LADDER_RETENTION_MS}) // {_HOUR_MS} * {_HOUR_MS}
-           + {4 * _HOUR_MS} AS r1
-  FROM cw
-),
-f AS (
-  SELECT event_type, revenue_cents FROM es, wm, rng
-  WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) >= rng.r0
-    AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= rng.r1
-    AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= wm.w
-),
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM f
+           + {4 * _HOUR_MS} AS r1"""
 )
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-"""
 
 
 def _compacted_percentile_tier_drain(
@@ -789,7 +722,7 @@ def _compacted_percentile_tier_drain(
         read_tier_span,
         tier_frontier,
     )
-    from topk_spark.ops.rollup import merge_rollup, windowed_rollup
+    from topk_spark.ops.rollup import merge_rollup
     from topk_spark.serve.api import percentiles
     from topk_spark.serve.router import TierRouter, TierSpec
     from topk_spark.workload.events_queries import order_stream
@@ -801,15 +734,6 @@ def _compacted_percentile_tier_drain(
         _debug_dirs.extend([fine_dir, coarse_dir])
 
     ev = order_stream(spark, sf_dir).select("ts", "event_type", "revenue_cents")
-
-    def build(s: DataFrame) -> DataFrame:
-        return windowed_rollup(
-            s.withWatermark("ts", "10 seconds"),
-            "ts",
-            ["event_type", "revenue_cents"],
-            [F.count("*").alias("n")],
-            "1 minute",
-        ).select("event_type", "revenue_cents", "window_start", "window_end", "n")
 
     def persist_and_compact(batch: DataFrame) -> DataFrame:
         """The continuous MergeRollupTask analog, one hop per micro-batch:
@@ -891,7 +815,7 @@ def _compacted_percentile_tier_drain(
     drain(
         spark,
         range_tile(ev, "ts", 3),
-        build,
+        _minute_value_counts,
         output_mode="append",
         tiles=3,
         restart_after=restart_after,

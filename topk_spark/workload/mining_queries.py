@@ -24,8 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.similarity import as_double_array, cosine
 from topk_spark.workload import register
-from topk_spark.workload.similarity_queries import _dbl, cosine
 
 _N_ANCHORS = 8
 
@@ -72,9 +72,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < _N_ANCHORS).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("qlabel"),
-        _dbl("embedding").alias("qv"),
+        as_double_array("embedding").alias("qv"),
     )
-    v = emb.select("vec_id", "label", _dbl("embedding").alias("vv"))
+    v = emb.select("vec_id", "label", as_double_array("embedding").alias("vv"))
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -307,9 +307,9 @@ def knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("own_label"),
-        _dbl("embedding").alias("qv"),
+        as_double_array("embedding").alias("qv"),
     )
-    v = emb.select("vec_id", "label", _dbl("embedding").alias("vv"))
+    v = emb.select("vec_id", "label", as_double_array("embedding").alias("vv"))
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -31,9 +31,9 @@ from pyspark.sql.types import (
 )
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.similarity import as_double_array, cosine
 from topk_spark.ops.topk import rank_topk
 from topk_spark.workload import register
-from topk_spark.workload.similarity_queries import _dbl, cosine
 
 _SHORTLIST = 20
 _PICKS = 5
@@ -120,9 +120,9 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidates ⋈ pairwise sims by query_id, O(k²) state)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), _dbl("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), as_double_array("embedding").alias("qv")
     )
-    v = emb.select("vec_id", _dbl("embedding").alias("vv"))
+    v = emb.select("vec_id", as_double_array("embedding").alias("vv"))
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))

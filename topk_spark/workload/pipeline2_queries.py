@@ -23,6 +23,7 @@ from topk_spark.ops.packing import pack_chunked, pack_greedy, shuffle_shards
 from topk_spark.ops.rollup import windowed_rollup
 from topk_spark.workload import register
 from topk_spark.workload.events_queries import order_stream
+from topk_spark.workload.sketch2_queries import _bounds_oracle, _metric_rows
 
 _ES = """
 es AS (
@@ -193,13 +194,12 @@ _PACK_VALIDITY_METRICS = [
     "pack_ids_contiguous",
     "first_fit_bin_bound",
 ]
-_PACK_VALIDITY_ORACLE = "SELECT * FROM (VALUES " + ", ".join(
-    f"('{m}', true)" for m in _PACK_VALIDITY_METRICS
-) + ") AS t(metric, ok)"
 
 
 @register(
-    "pack_greedy_validity", tags=("PIPE-pack",), oracle=_PACK_VALIDITY_ORACLE
+    "pack_greedy_validity",
+    tags=("PIPE-pack",),
+    oracle=_bounds_oracle(_PACK_VALIDITY_METRICS),
 )
 def pack_greedy_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-signal contract for the greedy sequence packer (ops/packing.py,
@@ -268,12 +268,7 @@ def pack_greedy_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pack_ids_contiguous", F.col("gap") == 0),
         ("first_fit_bin_bound", F.col("too_many_bins") == 0),
     ]
-    structs = [
-        F.struct(F.lit(m).alias("metric"), ok.alias("ok")) for m, ok in rows
-    ]
-    return checks.select(F.explode(F.array(*structs)).alias("m")).select(
-        "m.metric", "m.ok"
-    )
+    return _metric_rows(checks, rows)
 
 
 _RATE_SQL = """CASE
@@ -571,21 +566,14 @@ def stratified_exact_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "topk_per_sliding_window",
-    tags=("K1", "K4", "T3", "A1"),
-    oracle="""
-WITH es AS (
-  SELECT event_type,
-         CAST(CAST(json_extract(props, '$.k') AS INT) AS BIGINT)
-           * CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS revenue_cents,
-         ts
-  FROM events
-),
-slid AS (
+def _sliding_top3_sql(n_slices: int) -> str:
+    """Oracle tail over an `es` CTE: every event amplified into the
+    `n_slices` one-minute-sliding windows that contain it, revenue summed per
+    (window, type), and the top 3 types per window (revenue desc, type asc)."""
+    return f"""slid AS (
   SELECT e.event_type, e.revenue_cents,
          epoch_ms(date_trunc('minute', e.ts)) - k.k * 60000 AS ws
-  FROM es e CROSS JOIN (SELECT unnest(range(5)) AS k) k
+  FROM es e CROSS JOIN (SELECT unnest(range({n_slices})) AS k) k
 ),
 agg AS (
   SELECT ws, event_type,
@@ -600,7 +588,34 @@ r AS (
 )
 SELECT CAST(ws AS BIGINT) AS window_start, event_type, revenue_cents, rank
 FROM r WHERE rank <= 3
-""",
+"""
+
+
+def _top3_per_window(agg: DataFrame) -> DataFrame:
+    """The Spark side of `_sliding_top3_sql`'s ranking: top 3 event types
+    by revenue per window_start, same tie-break."""
+    w = Window.partitionBy("window_start").orderBy(
+        F.col("revenue_cents").desc(), F.col("event_type").asc()
+    )
+    return (
+        agg.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= 3)
+        .select("window_start", "event_type", "revenue_cents", "rank")
+    )
+
+
+@register(
+    "topk_per_sliding_window",
+    tags=("K1", "K4", "T3", "A1"),
+    oracle=f"""
+WITH es AS (
+  SELECT event_type,
+         CAST(CAST(json_extract(props, '$.k') AS INT) AS BIGINT)
+           * CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS revenue_cents,
+         ts
+  FROM events
+),
+{_sliding_top3_sql(5)}""",
 )
 def topk_per_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trending leaderboard per HOP: top-3 event types by revenue inside
@@ -623,14 +638,7 @@ def topk_per_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "5 minutes",
         slide="1 minute",
     ).select("window_start", "event_type", "revenue_cents")
-    w = Window.partitionBy("window_start").orderBy(
-        F.col("revenue_cents").desc(), F.col("event_type").asc()
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 3)
-        .select("window_start", "event_type", "revenue_cents", "rank")
-    )
+    return _top3_per_window(agg)
 
 
 @register(
@@ -638,25 +646,7 @@ def topk_per_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("T3", "K2", "A5", "PIPE-epoch"),
     oracle=f"""
 WITH {_ES},
-slid AS (
-  SELECT e.event_type, e.revenue_cents,
-         epoch_ms(date_trunc('minute', e.ts)) - k.k * 60000 AS ws
-  FROM es e CROSS JOIN (SELECT unnest(range(60)) AS k) k
-),
-agg AS (
-  SELECT ws, event_type,
-         CAST(SUM(revenue_cents) AS BIGINT) AS revenue_cents
-  FROM slid GROUP BY ws, event_type
-),
-r AS (
-  SELECT ws, event_type, revenue_cents,
-         CAST(row_number() OVER (PARTITION BY ws
-              ORDER BY revenue_cents DESC, event_type ASC) AS INT) AS rank
-  FROM agg
-)
-SELECT CAST(ws AS BIGINT) AS window_start, event_type, revenue_cents, rank
-FROM r WHERE rank <= 3
-""",
+{_sliding_top3_sql(60)}""",
 )
 def trending_1h_1m_from_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dashboard-standard trending read — top-3 event types per 1-HOUR
@@ -680,11 +670,4 @@ def trending_1h_1m_from_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_ms=3_600_000,
         slide_ms=60_000,
     ).select("window_start", "event_type", "revenue_cents")
-    w = Window.partitionBy("window_start").orderBy(
-        F.col("revenue_cents").desc(), F.col("event_type").asc()
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 3)
-        .select("window_start", "event_type", "revenue_cents", "rank")
-    )
+    return _top3_per_window(agg)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
+from topk_spark.workload.sketch2_queries import _bounds_oracle
 
 _N_QUERIES = 5
 _TOPK = 5
@@ -148,12 +149,7 @@ def int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_METRICS = ["n_queries_eq_5", "recall_avg_ge_0.85", "recall_min_ge_0.7"]
 
 
-def _pq_bounds_oracle() -> str:
-    rows = ", ".join(f"('{n}', true)" for n in _PQ_METRICS)
-    return f"SELECT * FROM (VALUES {rows}) AS t(metric, ok)"
-
-
-@register("pq_ann_recall", tags=("ANN-pq",), oracle=_pq_bounds_oracle())
+@register("pq_ann_recall", tags=("ANN-pq",), oracle=_bounds_oracle(_PQ_METRICS))
 def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of product-quantization ANN (m=16 subspaces x 6-bit codes
     = 12 bytes/vector, a 21x compression of the float64 array) with an 8x

@@ -21,7 +21,7 @@ checked end-to-end.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.ops.fuzzy_dedup import (
@@ -42,24 +42,9 @@ from topk_spark.ops.sketches import exact_distinct, hll_estimate, hll_sketch
 from topk_spark.workload import register
 from topk_spark.workload.corpora import PERT_OFFSET as _PERT_OFFSET
 from topk_spark.workload.corpora import perturbed_corpus
+from topk_spark.workload.sketch2_queries import _bounds_oracle, _metric_rows
 
 _N_ANN_QUERIES = 5
-
-
-def _metric_rows(agg_one_row: DataFrame, checks: list[tuple[str, Column]]) -> DataFrame:
-    """One-row aggregate DF + named boolean checks → (metric, ok) rows."""
-    structs = [
-        F.struct(F.lit(name).alias("metric"), cond.alias("ok"))
-        for name, cond in checks
-    ]
-    return agg_one_row.select(F.explode(F.array(*structs)).alias("m")).select(
-        "m.metric", "m.ok"
-    )
-
-
-def _bounds_oracle(names: list[str]) -> str:
-    rows = ", ".join(f"('{n}', true)" for n in names)
-    return f"SELECT * FROM (VALUES {rows}) AS t(metric, ok)"
 
 
 def _ann_queries(emb: DataFrame) -> DataFrame:

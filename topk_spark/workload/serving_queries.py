@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from topk_spark.ops.rollup import windowed_rollup
 from topk_spark.serve.api import topk_by_revenue, topk_for_restaurant, topk_global
 from topk_spark.workload import register
-from topk_spark.workload.events_queries import _ES, order_stream
+from topk_spark.workload.events_queries import _ES, exact_percentiles_sql, order_stream
 
 _START = 1_704_412_800_000  # 2024-01-05T00:00:00Z
 _END = 1_706_140_800_000    # 2024-01-25T00:00:00Z
@@ -263,22 +263,7 @@ f AS (
   WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) >= {_START}
     AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= {_END}
 ),
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM f
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-""",
+{exact_percentiles_sql('f')}""",
 )
 def serve_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /percentiles?pcts=50,90,99 semantics: EXACT revenue P50/P90/P99
@@ -335,22 +320,7 @@ f AS (
   WHERE CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) >= {_R_START}
     AND CAST(epoch_ms(date_trunc('minute', ts)) AS BIGINT) + 60000 <= {_R_END}
 ),
-o AS (
-  SELECT event_type, revenue_cents,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY revenue_cents) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM f
-)
-SELECT event_type, CAST(max(n) AS BIGINT) AS n_rows,
-       CAST(MIN(CASE WHEN rn = (n * 50 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p50_cents,
-       CAST(MIN(CASE WHEN rn = (n * 90 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p90_cents,
-       CAST(MIN(CASE WHEN rn = (n * 99 + 99) // 100 THEN revenue_cents END)
-            AS BIGINT) AS p99_cents
-FROM o GROUP BY event_type
-""",
+{exact_percentiles_sql('f')}""",
 )
 def percentiles_tier_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The percentile read answered through the ROLLUP-TIER ROUTER

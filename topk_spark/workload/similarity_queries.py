@@ -18,25 +18,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
+from topk_spark.ops.similarity import as_double_array, dot
 from topk_spark.ops.topk import rank_topk
 from topk_spark.workload import register
 
 _QUERY_IDS = (0, 1, 2)
-
-
-def _dbl(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def dot(a, b) -> F.Column:
-    """Deterministic sequential-fold dot product in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def cosine(a, b) -> F.Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 @register(
@@ -245,9 +231,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "vec_id", "embedding", num_planes=4, num_tables=16
     )
     id_pairs = bucket_pairs(sigs, ["table_id", "sig"])
-    v = emb.select("vec_id", "label", _dbl("embedding").alias("e")).withColumn(
-        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
-    )
+    v = emb.select(
+        "vec_id", "label", as_double_array("embedding").alias("e")
+    ).withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
     cand = id_pairs.join(
         v.select(
             F.col("vec_id").alias("id_a"), F.col("label").alias("label_a"),
@@ -300,7 +286,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are deterministic at any partitioning. Map-only per row + one
     partial+final agg; the vectors never shuffle."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = _dbl(F.col("embedding"))
+    v = as_double_array(F.col("embedding"))
     norm = F.round(F.sqrt(dot(v, v)), 6)
     return (
         e.select("label", norm.alias("norm"))

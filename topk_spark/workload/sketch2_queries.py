@@ -36,6 +36,7 @@ from topk_spark.workload import register
 
 
 def _metric_rows(agg_one_row: DataFrame, checks: list[tuple[str, Column]]) -> DataFrame:
+    """One-row aggregate DF + named boolean checks → (metric, ok) rows."""
     structs = [
         F.struct(F.lit(name).alias("metric"), cond.alias("ok"))
         for name, cond in checks
@@ -46,6 +47,7 @@ def _metric_rows(agg_one_row: DataFrame, checks: list[tuple[str, Column]]) -> Da
 
 
 def _bounds_oracle(names: list[str]) -> str:
+    """The oracle of `_metric_rows`: every named check true."""
     rows = ", ".join(f"('{n}', true)" for n in names)
     return f"SELECT * FROM (VALUES {rows}) AS t(metric, ok)"
 

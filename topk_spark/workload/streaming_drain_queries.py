@@ -593,7 +593,7 @@ def stream_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = drain(
         spark,
         src,
-        lambda s: build_rollup_stream(s),
+        build_rollup_stream,
         output_mode="append",
     )
     return drained.select(

@@ -46,7 +46,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from topk_spark.io.sources import load_table
 from topk_spark.workload import register
@@ -80,35 +80,40 @@ def _view_purchase_tiles(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, D
     return views, purchases
 
 
+def _view_purchase_join(
+    v: DataFrame, p: DataFrame, delay: str | None, how: str = "inner", **salt
+) -> DataFrame:
+    """The 7-day view→purchase interval join on user_id (the reusable
+    operator of streaming/interval_join.py) that every join drain here runs;
+    `how="left_anti"` is `interval_anti_join`, `salt` the salting options."""
+    from topk_spark.streaming.interval_join import interval_anti_join, interval_join
+
+    kw = dict(
+        left_key="user_id",
+        right_key="p_user_id",
+        left_time="view_ts",
+        right_time="purchase_ts",
+        window="7 DAYS",
+        watermark_delay=delay,
+        **salt,
+    )
+    if how == "left_anti":
+        return interval_anti_join(v, p, **kw)
+    return interval_join(v, p, how=how, **kw)
+
+
 def _build_join(
-    how: str,
-    delay: str,
-    salt_buckets: int | None = None,
-    salt_side: str = "left",
+    how: str, delay: str, **salt
 ) -> Callable[[DataFrame, DataFrame], DataFrame]:
-    """Two-source build() for `drain`: the reusable interval_join operator
-    (streaming/interval_join.py) on user_id with the 7-day view→purchase
-    window, projected to the drains' hashed output columns. For the
-    right/full outer drains `user_id` is coalesced across sides (it is the
-    equality key, so both sides agree whenever both are present); a left
-    semi join projects left columns only."""
-    from topk_spark.streaming.interval_join import interval_join
+    """Two-source build() for `drain`: `_view_purchase_join` projected to
+    the drains' hashed output columns. For the right/full outer drains
+    `user_id` is coalesced across sides (it is the equality key, so both
+    sides agree whenever both are present); a left semi or anti join
+    projects left columns only."""
 
     def build(v: DataFrame, p: DataFrame) -> DataFrame:
-        joined = interval_join(
-            v,
-            p,
-            left_key="user_id",
-            right_key="p_user_id",
-            left_time="view_ts",
-            right_time="purchase_ts",
-            window="7 DAYS",
-            watermark_delay=delay,
-            how=how,
-            salt_buckets=salt_buckets,
-            salt_side=salt_side,
-        )
-        if how == "left_semi":
+        joined = _view_purchase_join(v, p, delay, how, **salt)
+        if how in ("left_semi", "left_anti"):
             return joined.select("user_id", "view_id")
         return joined.select(
             F.coalesce("user_id", "p_user_id").alias("user_id"),
@@ -122,11 +127,33 @@ def _build_join(
     return build
 
 
-# Shared by the plain and the pre-salted inner-join drains: salting is a
-# physical re-partitioning lever (streaming/interval_join.py docstring), so
-# BOTH must hash-match the same relational derivation — same pairs, same
-# emit batches.
-_INNER_JOIN_ORACLE = """
+def _drain_pairs(
+    spark: SparkSession,
+    sources: tuple[DataFrame, DataFrame],
+    build: Callable[[DataFrame, DataFrame], DataFrame],
+    restart_after: int | None = None,
+) -> DataFrame:
+    """`build` over the view and purchase streams, drained in append mode
+    through their three ordered tiles; the sink batch id stays as `_bid`."""
+    return drain(
+        spark,
+        sources,
+        build,
+        output_mode="append",
+        tiles=3,
+        keep_bid=True,
+        restart_after=restart_after,
+    )
+
+
+def _with_emit_batch(drained: DataFrame) -> DataFrame:
+    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+
+
+# The tiled view/purchase CTEs every emission-schedule oracle below starts
+# from: `tile` is the event-time tercile (`range_tile`), i.e. the
+# micro-batch a row arrives in.
+_TILED_VIEWS_PURCHASES = """
 WITH e AS (
   SELECT event_id, ts, user_id, event_type FROM events
   WHERE event_type IN ('view', 'purchase')
@@ -136,7 +163,37 @@ t AS (SELECT e.*, CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin 
 v AS (SELECT event_id AS view_id, ts AS view_ts, user_id, tile FROM t
       WHERE event_type = 'view'),
 p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
-      WHERE event_type = 'purchase')
+      WHERE event_type = 'purchase')"""
+
+# The in-effect watermark of each batch `b` and the inner pairs with their
+# emit batch, shared by the outer and anti oracles (the derivation is in
+# _LEFTOUTER_JOIN_ORACLE's comment).
+_WM_CTE = """wm AS (SELECT tile + 1 AS b,
+              CASE WHEN vmax IS NULL OR pmax IS NULL THEN NULL
+                   ELSE CAST(least(vmax, pmax) - 86400000 AS BIGINT) END AS w_ms
+       FROM (SELECT tile,
+                    max(max(CASE WHEN event_type = 'view'
+                                 THEN epoch_ms(ts) END))
+                      OVER (ORDER BY tile) AS vmax,
+                    max(max(CASE WHEN event_type = 'purchase'
+                                 THEN epoch_ms(ts) END))
+                      OVER (ORDER BY tile) AS pmax
+             FROM t GROUP BY tile) cum)"""
+
+_MATCHED_CTE = """matched AS (
+  SELECT v.user_id, v.view_id, p.purchase_id,
+         CAST(epoch_ms(p.purchase_ts) - epoch_ms(v.view_ts) AS BIGINT) AS gap_ms,
+         CAST(greatest(v.tile, p.tile) AS INT) AS emit_batch
+  FROM v JOIN p
+    ON v.user_id = p.user_id
+   AND p.purchase_ts >= v.view_ts
+   AND p.purchase_ts < v.view_ts + INTERVAL 7 DAY)"""
+
+# Shared by the plain and the pre-salted inner-join drains: salting is a
+# physical re-partitioning lever (streaming/interval_join.py docstring), so
+# BOTH must hash-match the same relational derivation — same pairs, same
+# emit batches.
+_INNER_JOIN_ORACLE = f"""{_TILED_VIEWS_PURCHASES}
 SELECT v.user_id, v.view_id, p.purchase_id,
        CAST(epoch_ms(p.purchase_ts) - epoch_ms(v.view_ts) AS BIGINT) AS gap_ms,
        CAST(greatest(v.tile, p.tile) AS INT) AS emit_batch
@@ -160,16 +217,8 @@ def stream_interval_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-tercile pairs exist only if view-state from earlier batches
     survived into later ones (T8 for JOIN state; the aggregation-state twin
     is stream_dedup_multibatch_drain)."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("inner", "90 days"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(_drain_pairs(spark, vp, _build_join("inner", "90 days")))
 
 
 @register(
@@ -189,16 +238,10 @@ def stream_interval_join_salted_drain(spark: SparkSession, sf_dir: str) -> DataF
     emission rule is untouched). The retired bench harness's
     streaming_join_skew section measured the per-pair cost story; THIS pins
     that the optimization cannot change results."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("inner", "90 days", salt_buckets=8),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("inner", "90 days", salt_buckets=8))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -230,16 +273,8 @@ def stream_interval_join_restart_drain(spark: SparkSession, sf_dir: str) -> Data
     greatest-tercile schedule the oracle derives)."""
     from pyspark.sql import Window
 
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("inner", "90 days"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
-    )
+    vp = _view_purchase_tiles(spark, sf_dir)
+    drained = _drain_pairs(spark, vp, _build_join("inner", "90 days"), restart_after=2)
     # Unpartitioned window over the DISTINCT batch ids only — a frame of
     # ≤ n_batches+1 rows regardless of data scale (the drained rows
     # themselves never pass through it; they pick the rank up via the
@@ -336,17 +371,7 @@ def stream_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emits in, under the min-of-both-sides watermark policy) is the subtle half
 # of the salting invariance argument, so the salted variant must hash-match
 # this same derivation, not merely the same pair set.
-_LEFTOUTER_JOIN_ORACLE = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-b AS (SELECT epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax FROM e),
-t AS (SELECT e.*, CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin + 1)) AS INT) AS tile FROM e CROSS JOIN b),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id, tile FROM t
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
-      WHERE event_type = 'purchase'),
+_LEFTOUTER_JOIN_ORACLE = f"""{_TILED_VIEWS_PURCHASES},
 -- watermark in effect during batch b (and the final flush batch b = 3).
 -- Spark's default multipleWatermarkPolicy = 'min': each side's watermark
 -- operator tracks ITS OWN max event time (ms floor), and the global
@@ -362,25 +387,8 @@ p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
 -- purchase arrives at event time >= wm and the STRICT window bound
 -- p < v + window then cannot hold (measured at sub-ms precision:
 -- tests/test_streaming_joins.py::test_outer_eviction_boundary).
-wm AS (SELECT tile + 1 AS b,
-              CASE WHEN vmax IS NULL OR pmax IS NULL THEN NULL
-                   ELSE CAST(least(vmax, pmax) - 86400000 AS BIGINT) END AS w_ms
-       FROM (SELECT tile,
-                    max(max(CASE WHEN event_type = 'view'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS vmax,
-                    max(max(CASE WHEN event_type = 'purchase'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS pmax
-             FROM t GROUP BY tile) cum),
-matched AS (
-  SELECT v.user_id, v.view_id, p.purchase_id,
-         CAST(epoch_ms(p.purchase_ts) - epoch_ms(v.view_ts) AS BIGINT) AS gap_ms,
-         CAST(greatest(v.tile, p.tile) AS INT) AS emit_batch
-  FROM v JOIN p
-    ON v.user_id = p.user_id
-   AND p.purchase_ts >= v.view_ts
-   AND p.purchase_ts < v.view_ts + INTERVAL 7 DAY),
+{_WM_CTE},
+{_MATCHED_CTE},
 unmatched AS (
   SELECT * FROM v
   WHERE NOT EXISTS (SELECT 1 FROM matched m WHERE m.view_id = v.view_id)),
@@ -446,16 +454,8 @@ def stream_leftouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction predicate relationally; matched pairs must equal the inner
     join exactly (ordered replay means no match can be lost to eviction —
     a purchase's tercile always precedes its view's eviction batch)."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("left_outer", "1 day"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(_drain_pairs(spark, vp, _build_join("left_outer", "1 day")))
 
 
 @register(
@@ -480,16 +480,10 @@ def stream_leftouter_join_salted_drain(spark: SparkSession, sf_dir: str) -> Data
     replica set contains exactly the rows the unsalted join would probe).
     A hash match against the unsalted derivation is therefore REQUIRED;
     divergence would mean the skew lever changes outer-join results."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("left_outer", "1 day", salt_buckets=8),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("left_outer", "1 day", salt_buckets=8))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -515,17 +509,10 @@ def stream_leftouter_join_restart_drain(spark: SparkSession, sf_dir: str) -> Dat
     inside their window at end-of-stream stay buffered across BOTH
     generations and emit nothing. No bid normalization: the oracle predicts
     the engine's actual batch-id allocation, trailing-flush slots and all."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("left_outer", "1 day"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("left_outer", "1 day"), restart_after=2)
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 # ---------------------------------------------------------------------------
@@ -549,36 +536,9 @@ def stream_leftouter_join_restart_drain(spark: SparkSession, sf_dir: str) -> Dat
 # bound `p >= v` keeps a purchase at wm alive, and the engine's eviction
 # threshold advances in watermark ticks, i.e. whole ms). All prior CTEs are
 # shared verbatim so the three outer oracles cannot drift apart.
-_OUTER_FAMILY_PREFIX = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-b AS (SELECT epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax FROM e),
-t AS (SELECT e.*, CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin + 1)) AS INT) AS tile FROM e CROSS JOIN b),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id, tile FROM t
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
-      WHERE event_type = 'purchase'),
-wm AS (SELECT tile + 1 AS b,
-              CASE WHEN vmax IS NULL OR pmax IS NULL THEN NULL
-                   ELSE CAST(least(vmax, pmax) - 86400000 AS BIGINT) END AS w_ms
-       FROM (SELECT tile,
-                    max(max(CASE WHEN event_type = 'view'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS vmax,
-                    max(max(CASE WHEN event_type = 'purchase'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS pmax
-             FROM t GROUP BY tile) cum),
-matched AS (
-  SELECT v.user_id, v.view_id, p.purchase_id,
-         CAST(epoch_ms(p.purchase_ts) - epoch_ms(v.view_ts) AS BIGINT) AS gap_ms,
-         CAST(greatest(v.tile, p.tile) AS INT) AS emit_batch
-  FROM v JOIN p
-    ON v.user_id = p.user_id
-   AND p.purchase_ts >= v.view_ts
-   AND p.purchase_ts < v.view_ts + INTERVAL 7 DAY),
+_OUTER_FAMILY_PREFIX = f"""{_TILED_VIEWS_PURCHASES},
+{_WM_CTE},
+{_MATCHED_CTE},
 r_nulls AS (
   SELECT u.user_id, CAST(NULL AS BIGINT) AS view_id, u.purchase_id,
          CAST(NULL AS BIGINT) AS gap_ms, CAST(min(wm.b) AS INT) AS emit_batch
@@ -625,16 +585,10 @@ def stream_rightouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle derives both the pair set and the right-null watermark
     schedule relationally from the same shared CTEs as the other outer
     drains."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("right_outer", "1 day"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("right_outer", "1 day"))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -659,16 +613,14 @@ def stream_rightouter_join_salted_drain(
     REQUIRED; divergence would mean the hot-key lever corrupts right-outer
     results. The refusal table (interval_join._SAFE_SALT_SIDES) blocks the
     unsafe orientation where the replicated side is the outer one."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("right_outer", "1 day", salt_buckets=8, salt_side="right"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(
+            spark,
+            vp,
+            _build_join("right_outer", "1 day", salt_buckets=8, salt_side="right"),
+        )
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -686,16 +638,8 @@ def stream_fullouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the shared outer-family prefix with both null CTEs unioned
     in. Rows still inside their horizon at end-of-stream stay buffered on
     BOTH sides and must be absent."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("full_outer", "1 day"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(_drain_pairs(spark, vp, _build_join("full_outer", "1 day")))
 
 
 # Left semi: first-match emission. greatest(v.tile, p.tile) is the batch
@@ -704,17 +648,7 @@ def stream_fullouter_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # marked matched and emits nothing more. The condition forces
 # purchase_ts >= view_ts, and the ordered replay makes tiles monotone in
 # ts, so min(greatest(...)) == min matching purchase tile.
-_SEMIJOIN_ORACLE = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-b AS (SELECT epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax FROM e),
-t AS (SELECT e.*, CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin + 1)) AS INT) AS tile FROM e CROSS JOIN b),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id, tile FROM t
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
-      WHERE event_type = 'purchase')
+_SEMIJOIN_ORACLE = f"""{_TILED_VIEWS_PURCHASES}
 SELECT v.user_id, v.view_id,
        CAST(min(greatest(v.tile, p.tile)) AS INT) AS emit_batch
 FROM v JOIN p
@@ -744,16 +678,10 @@ def stream_semijoin_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact. At 100 TB a semi join is the cheap side of this family: output
     is bounded by the left input, and a matched left row's state can be
     dropped at emission rather than held for the window."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("left_semi", "90 days"),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("left_semi", "90 days"))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -770,16 +698,10 @@ def stream_semijoin_salted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     match arrives in the same micro-batch as unsalted (replicas ride their
     original row's batch), and one view still emits at most one row —
     replication happens on the NON-anchoring side. Hash match required."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join("left_semi", "90 days", salt_buckets=8),
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("left_semi", "90 days", salt_buckets=8))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 # ---------------------------------------------------------------------------
@@ -803,7 +725,9 @@ def stream_semijoin_salted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (measured: at sf0.001 exactly the 20 of 29 candidate daily windows below
 # this cutoff emit; a cutoff without the join-window term would claim 27).
 # Same `<=` close convention the driver-green stream_rollup_drain pinned.
-_JOIN_ROLLUP_ORACLE = """
+# The untiled view/purchase CTEs of the chained-topology oracles, with `fw`:
+# the join's propagated output watermark at end-of-stream (derivation above).
+_VIEWS_PURCHASES_FINAL_WM = """
 WITH e AS (
   SELECT event_id, ts, user_id, event_type FROM events
   WHERE event_type IN ('view', 'purchase')
@@ -814,7 +738,9 @@ p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id FROM e
       WHERE event_type = 'purchase'),
 fw AS (SELECT least((SELECT CAST(floor(epoch_ms(max(view_ts))) AS BIGINT) FROM v),
                     (SELECT CAST(floor(epoch_ms(max(purchase_ts))) AS BIGINT) FROM p))
-              - 86400000 - 604800000 AS w),
+              - 86400000 - 604800000 AS w)"""
+
+_JOIN_ROLLUP_ORACLE = _VIEWS_PURCHASES_FINAL_WM + """,
 pairs AS (
   SELECT CAST(epoch_ms(p.purchase_ts) // 86400000 * 86400000 AS BIGINT)
            AS window_start_ms,
@@ -831,23 +757,13 @@ GROUP BY window_start_ms
 """
 
 
-def _build_join_rollup_chain(v: DataFrame, p: DataFrame) -> DataFrame:
-    """The chained topology both chain drains run: interval join (inner,
-    7-day window, 1-day watermark) feeding a 1-day tumbling windowed
+def _build_join_rollup_chain(
+    v: DataFrame, p: DataFrame, delay: str | None = "1 day"
+) -> DataFrame:
+    """The chained topology the chain drains run: interval join (inner,
+    7-day window, `delay` watermark) feeding a 1-day tumbling windowed
     aggregation of the attributed pairs — two state machines, one query."""
-    from topk_spark.streaming.interval_join import interval_join
-
-    j = interval_join(
-        v,
-        p,
-        left_key="user_id",
-        right_key="p_user_id",
-        left_time="view_ts",
-        right_time="purchase_ts",
-        window="7 DAYS",
-        watermark_delay="1 day",
-        how="inner",
-    )
+    j = _view_purchase_join(v, p, delay)
     return (
         j.groupBy(F.window("purchase_ts", "1 day").alias("w"))
         .agg(
@@ -883,16 +799,8 @@ def stream_join_rollup_chain_drain(spark: SparkSession, sf_dir: str) -> DataFram
     the join window (oracle comment derives the cutoff; at sf0.001 the
     no-lag model over-emits 27 windows vs the correct 20). Windows past the
     propagated watermark at end-of-stream stay open and must be absent."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join_rollup_chain,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _drain_pairs(spark, vp, _build_join_rollup_chain).drop("_bid")
 
 
 @register(
@@ -915,44 +823,16 @@ def stream_join_rollup_chain_restart_drain(
     (day windows spanning the stop under-count), and a propagated-watermark
     reset (windows close on the wrong schedule → wrong emitted-window
     set)."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_join_rollup_chain,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
-    )
+    vp = _view_purchase_tiles(spark, sf_dir)
+    drained = _drain_pairs(spark, vp, _build_join_rollup_chain, restart_after=2)
     return drained.drop("_bid")
 
 
 # Anti join: the l_nulls derivation alone — absence within the horizon,
 # decidable only at the left-outer null deadline. Shared verbatim between
 # the plain and salted (salt_side='left') variants.
-_ANTIJOIN_ORACLE = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-b AS (SELECT epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax FROM e),
-t AS (SELECT e.*, CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin + 1)) AS INT) AS tile FROM e CROSS JOIN b),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id, tile FROM t
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id, tile FROM t
-      WHERE event_type = 'purchase'),
-wm AS (SELECT tile + 1 AS b,
-              CASE WHEN vmax IS NULL OR pmax IS NULL THEN NULL
-                   ELSE CAST(least(vmax, pmax) - 86400000 AS BIGINT) END AS w_ms
-       FROM (SELECT tile,
-                    max(max(CASE WHEN event_type = 'view'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS vmax,
-                    max(max(CASE WHEN event_type = 'purchase'
-                                 THEN epoch_ms(ts) END))
-                      OVER (ORDER BY tile) AS pmax
-             FROM t GROUP BY tile) cum)
+_ANTIJOIN_ORACLE = f"""{_TILED_VIEWS_PURCHASES},
+{_WM_CTE}
 SELECT u.user_id, u.view_id, CAST(min(wm.b) AS INT) AS emit_batch
 FROM (SELECT * FROM v WHERE NOT EXISTS
         (SELECT 1 FROM p
@@ -980,31 +860,8 @@ def stream_antijoin_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection), and this drain pins that the derivation inherits the
     outer join's watermark schedule exactly — emit_batch per row, matched
     and still-live views absent."""
-    from topk_spark.streaming.interval_join import interval_anti_join
-
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-
-    def build(v: DataFrame, p: DataFrame) -> DataFrame:
-        return interval_anti_join(
-            v,
-            p,
-            left_key="user_id",
-            right_key="p_user_id",
-            left_time="view_ts",
-            right_time="purchase_ts",
-            window="7 DAYS",
-            watermark_delay="1 day",
-        ).select("user_id", "view_id")
-
-    drained = drain(
-        spark,
-        (views, purchases),
-        build,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(_drain_pairs(spark, vp, _build_join("left_anti", "1 day")))
 
 
 @register(
@@ -1019,32 +876,10 @@ def stream_antijoin_salted_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, salt) iff unmatched under key, and the null deadline schedule is
     watermark-driven and salt-invariant — so the hot-key lever must not
     change which views are absent-matched nor when they emit."""
-    from topk_spark.streaming.interval_join import interval_anti_join
-
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-
-    def build(v: DataFrame, p: DataFrame) -> DataFrame:
-        return interval_anti_join(
-            v,
-            p,
-            left_key="user_id",
-            right_key="p_user_id",
-            left_time="view_ts",
-            right_time="purchase_ts",
-            window="7 DAYS",
-            watermark_delay="1 day",
-            salt_buckets=8,
-        ).select("user_id", "view_id")
-
-    drained = drain(
-        spark,
-        (views, purchases),
-        build,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _with_emit_batch(
+        _drain_pairs(spark, vp, _build_join("left_anti", "1 day", salt_buckets=8))
     )
-    return drained.withColumn("emit_batch", F.col("_bid").cast("int")).drop("_bid")
 
 
 @register(
@@ -1076,53 +911,21 @@ def stream_dedup_join_rollup_chain_drain(
     views, purchases = _view_purchase_tiles(spark, sf_dir)
     vdup = views.filter(F.col("view_id") % 5 == 0)
     pdup = purchases.filter(F.col("purchase_id") % 5 == 0)
-    drained = drain(
-        spark,
-        (views.unionByName(vdup), purchases.unionByName(pdup)),
-        _build_dedup_join_rollup_chain,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.drop("_bid")
+    vp = (views.unionByName(vdup), purchases.unionByName(pdup))
+    return _drain_pairs(spark, vp, _build_dedup_join_rollup_chain).drop("_bid")
 
 
 def _build_dedup_join_rollup_chain(v: DataFrame, p: DataFrame) -> DataFrame:
     """dedup → 7-day interval join → 1-day rollup, one query (shared by the
-    3-op chain drain and its restart twin)."""
-    from topk_spark.streaming.interval_join import interval_join
-
+    3-op chain drain and its restart twin): the 2-op chain over deduplicated
+    sides, watermarked once at the top."""
     v = v.withWatermark("view_ts", "1 day").dropDuplicatesWithinWatermark(
         ["view_id"]
     )
     p = p.withWatermark(
         "purchase_ts", "1 day"
     ).dropDuplicatesWithinWatermark(["purchase_id"])
-    j = interval_join(
-        v,
-        p,
-        left_key="user_id",
-        right_key="p_user_id",
-        left_time="view_ts",
-        right_time="purchase_ts",
-        window="7 DAYS",
-        watermark_delay=None,
-        how="inner",
-    )
-    return (
-        j.groupBy(F.window("purchase_ts", "1 day").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("pair_count"),
-            F.sum(
-                F.unix_millis("purchase_ts") - F.unix_millis("view_ts")
-            ).alias("gap_ms_sum"),
-        )
-        .select(
-            F.unix_millis(F.col("w.start")).alias("window_start_ms"),
-            "pair_count",
-            "gap_ms_sum",
-        )
-    )
+    return _build_join_rollup_chain(v, p, delay=None)
 
 
 @register(
@@ -1184,18 +987,11 @@ def stream_dedup_join_rollup_chain_restart_drain(
         .drop("_thr")
         .withColumn("_tile", F.lit(2))
     )
-    drained = drain(
-        spark,
-        (
-            views.unionByName(vdup).unionByName(vlate),
-            purchases.unionByName(pdup).unionByName(plate),
-        ),
-        _build_dedup_join_rollup_chain,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
+    vp = (
+        views.unionByName(vdup).unionByName(vlate),
+        purchases.unionByName(pdup).unionByName(plate),
     )
+    drained = _drain_pairs(spark, vp, _build_dedup_join_rollup_chain, restart_after=2)
     return drained.drop("_bid")
 
 
@@ -1206,18 +1002,9 @@ def stream_dedup_join_rollup_chain_restart_drain(
 # unbounded under a watermark)
 # ---------------------------------------------------------------------------
 
-_ASOF_JOIN_ORACLE = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id FROM e
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id FROM e
-      WHERE event_type = 'purchase'),
-fw AS (SELECT least((SELECT CAST(floor(epoch_ms(max(view_ts))) AS BIGINT) FROM v),
-                    (SELECT CAST(floor(epoch_ms(max(purchase_ts))) AS BIGINT) FROM p))
-              - 86400000 - 604800000 AS w),
+# Every candidate (view, purchase) pair, and per purchase the latest
+# candidate view by the same struct order as `max(struct(view_ts, view_id))`.
+_ASOF_CANDIDATES = _VIEWS_PURCHASES_FINAL_WM + """,
 pairs AS (
   SELECT p.purchase_id, p.user_id, p.purchase_ts, v.view_ts, v.view_id
   FROM v JOIN p
@@ -1230,7 +1017,9 @@ af AS (
          min(purchase_ts) AS pts,
          max(struct_pack(ts := view_ts, id := view_id)) AS m,
          count(*) AS n_candidate_views
-  FROM pairs GROUP BY purchase_id)
+  FROM pairs GROUP BY purchase_id)"""
+
+_ASOF_JOIN_ORACLE = _ASOF_CANDIDATES + """
 SELECT purchase_id, user_id,
        (m).id AS asof_view_id,
        CAST(epoch_ms(pts) - epoch_ms((m).ts) AS BIGINT) AS asof_gap_ms,
@@ -1238,6 +1027,29 @@ SELECT purchase_id, user_id,
 FROM af, fw
 WHERE CAST(epoch_ms(pts) // 86400000 * 86400000 AS BIGINT) + 86400000 <= fw.w
 """
+
+
+def _asof_rows(j: DataFrame, user_id: Column, n_views: Column) -> DataFrame:
+    """Per (1-day window of purchase_ts, purchase): the latest candidate
+    view by `max(struct(view_ts, view_id))`, its gap, and `n_views`."""
+    return (
+        j.groupBy(F.window("purchase_ts", "1 day").alias("w"), "purchase_id")
+        .agg(
+            F.min(user_id).alias("user_id"),
+            F.min("purchase_ts").alias("pts"),
+            F.max(F.struct("view_ts", "view_id")).alias("m"),
+            n_views.alias("n_candidate_views"),
+        )
+        .select(
+            "purchase_id",
+            "user_id",
+            F.col("m.view_id").alias("asof_view_id"),
+            (F.unix_millis("pts") - F.unix_millis(F.col("m.view_ts")))
+            .cast("long")
+            .alias("asof_gap_ms"),
+            "n_candidate_views",
+        )
+    )
 
 
 def _build_asof_join(v: DataFrame, p: DataFrame) -> DataFrame:
@@ -1251,37 +1063,8 @@ def _build_asof_join(v: DataFrame, p: DataFrame) -> DataFrame:
     horizon is closed, so append mode emits it when the join's PROPAGATED
     output watermark passes the purchase's day window — the same close
     schedule the join→rollup chain pinned."""
-    from topk_spark.streaming.interval_join import interval_join
-
-    j = interval_join(
-        v,
-        p,
-        left_key="user_id",
-        right_key="p_user_id",
-        left_time="view_ts",
-        right_time="purchase_ts",
-        window="7 DAYS",
-        watermark_delay="1 day",
-        how="inner",
-    )
-    return (
-        j.groupBy(F.window("purchase_ts", "1 day").alias("w"), "purchase_id")
-        .agg(
-            F.min("user_id").alias("user_id"),
-            F.min("purchase_ts").alias("pts"),
-            F.max(F.struct("view_ts", "view_id")).alias("m"),
-            F.count(F.lit(1)).alias("n_candidate_views"),
-        )
-        .select(
-            "purchase_id",
-            "user_id",
-            F.col("m.view_id").alias("asof_view_id"),
-            (F.unix_millis("pts") - F.unix_millis(F.col("m.view_ts")))
-            .cast("long")
-            .alias("asof_gap_ms"),
-            "n_candidate_views",
-        )
-    )
+    j = _view_purchase_join(v, p, "1 day")
+    return _asof_rows(j, F.col("user_id"), F.count(F.lit(1)))
 
 
 @register(
@@ -1304,16 +1087,8 @@ def stream_asof_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives candidates relationally, reduces with the identical struct
     order, and applies the propagated-watermark close schedule the chain
     drains measured (join output watermark lags by the join window)."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_asof_join,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _drain_pairs(spark, vp, _build_asof_join).drop("_bid")
 
 
 @register(
@@ -1331,44 +1106,11 @@ def stream_asof_join_restart_drain(spark: SparkSession, sf_dir: str) -> DataFram
     view that arrives after the restart (or drops it), shifting
     asof_view_id / asof_gap_ms / n_candidate_views under the shared
     oracle's value hash."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_asof_join,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
-    )
-    return drained.drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _drain_pairs(spark, vp, _build_asof_join, restart_after=2).drop("_bid")
 
 
-_ASOF_LEFTOUTER_ORACLE = """
-WITH e AS (
-  SELECT event_id, ts, user_id, event_type FROM events
-  WHERE event_type IN ('view', 'purchase')
-),
-v AS (SELECT event_id AS view_id, ts AS view_ts, user_id FROM e
-      WHERE event_type = 'view'),
-p AS (SELECT event_id AS purchase_id, ts AS purchase_ts, user_id FROM e
-      WHERE event_type = 'purchase'),
-fw AS (SELECT least((SELECT CAST(floor(epoch_ms(max(view_ts))) AS BIGINT) FROM v),
-                    (SELECT CAST(floor(epoch_ms(max(purchase_ts))) AS BIGINT) FROM p))
-              - 86400000 - 604800000 AS w),
-pairs AS (
-  SELECT p.purchase_id, p.user_id, p.purchase_ts, v.view_ts, v.view_id
-  FROM v JOIN p
-    ON v.user_id = p.user_id
-   AND p.purchase_ts >= v.view_ts
-   AND p.purchase_ts < v.view_ts + INTERVAL 7 DAY),
-af AS (
-  SELECT purchase_id,
-         min(user_id) AS user_id,
-         min(purchase_ts) AS pts,
-         max(struct_pack(ts := view_ts, id := view_id)) AS m,
-         count(*) AS n_candidate_views
-  FROM pairs GROUP BY purchase_id),
+_ASOF_LEFTOUTER_ORACLE = _ASOF_CANDIDATES + """,
 attributed AS (
   SELECT purchase_id, user_id, pts,
          (m).id AS asof_view_id,
@@ -1409,50 +1151,13 @@ def stream_asof_leftouter_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     still open at end-of-stream are withheld on both sides — including
     organic rows whose deadline never arrived, which fail the same window
     predicate on the oracle side."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_asof_leftouter,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-    )
-    return drained.drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _drain_pairs(spark, vp, _build_asof_leftouter).drop("_bid")
 
 
 def _build_asof_leftouter(v: DataFrame, p: DataFrame) -> DataFrame:
-    from topk_spark.streaming.interval_join import interval_join
-
-    j = interval_join(
-        v,
-        p,
-        left_key="user_id",
-        right_key="p_user_id",
-        left_time="view_ts",
-        right_time="purchase_ts",
-        window="7 DAYS",
-        watermark_delay="1 day",
-        how="right_outer",
-    )
-    return (
-        j.groupBy(F.window("purchase_ts", "1 day").alias("w"), "purchase_id")
-        .agg(
-            F.min(F.coalesce("user_id", "p_user_id")).alias("user_id"),
-            F.min("purchase_ts").alias("pts"),
-            F.max(F.struct("view_ts", "view_id")).alias("m"),
-            F.count("view_id").alias("n_candidate_views"),
-        )
-        .select(
-            "purchase_id",
-            "user_id",
-            F.col("m.view_id").alias("asof_view_id"),
-            (F.unix_millis("pts") - F.unix_millis(F.col("m.view_ts")))
-            .cast("long")
-            .alias("asof_gap_ms"),
-            "n_candidate_views",
-        )
-    )
+    j = _view_purchase_join(v, p, "1 day", "right_outer")
+    return _asof_rows(j, F.coalesce("user_id", "p_user_id"), F.count("view_id"))
 
 
 @register(
@@ -1477,17 +1182,8 @@ def stream_asof_leftouter_restart_drain(
     the propagated final watermark, one row per purchase, matched or
     organic — so any of those divergences is a hash mismatch, not just a
     row-count drift."""
-    views, purchases = _view_purchase_tiles(spark, sf_dir)
-    drained = drain(
-        spark,
-        (views, purchases),
-        _build_asof_leftouter,
-        output_mode="append",
-        tiles=3,
-        keep_bid=True,
-        restart_after=2,
-    )
-    return drained.drop("_bid")
+    vp = _view_purchase_tiles(spark, sf_dir)
+    return _drain_pairs(spark, vp, _build_asof_leftouter, restart_after=2).drop("_bid")
 
 
 # ---------------------------------------------------------------------------
