@@ -183,12 +183,13 @@ def test_trending_route_registered_only_with_tier(spark):
         ]
 
 
-def test_trending_route_via_router_when_preranked_supplied(spark):
+def test_trending_route_via_router_when_preranked_supplied(spark, tmp_path):
     """With BOTH a sliding tier and a pre-ranked tier, the trending route
     goes through TrendingRouter: a fresh-and-shallow request must return
     the materialized ranked rows (identical payload to rank-on-read), and a
     request past the pre-ranked high-water mark must still answer — the
     rank-on-read fallback, not an empty tile."""
+    from topk_spark.io.tier import append_upto
     from topk_spark.serve.http import create_app
 
     tier = spark.createDataFrame(
@@ -212,8 +213,11 @@ def test_trending_route_via_router_when_preranked_supplied(spark):
         "window_start long, window_end long, event_type string, "
         "revenue_cents long, rank int",
     )
+    ranked_dir = str(tmp_path / "ranked")
+    append_upto(preranked, ranked_dir, BASE + 5 * MIN)
     app = create_app(
-        spark, tier, trending_tier=tier, preranked_trending=preranked
+        spark, tier, trending_tier=tier, preranked_trending=ranked_dir,
+        trending_window_ms=5 * MIN,
     )
     app.config["TESTING"] = True
     with app.test_client() as c:

@@ -1,4 +1,4 @@
-"""Per-event continuous top-K (streaming/continuous_topk_tws.py) — the
+"""Per-event continuous top-K (streaming/continuous_topk.py) — the
 reference ProcessFunctions.kt granularity. Pins, at exact-value level:
 
 - one ranked snapshot per input EVENT, in (ts, event_id) replay order,
@@ -33,7 +33,7 @@ def _write_file(src: str, name: str, rows: list[dict], mtime: int) -> None:
 
 
 def _drain_per_event(spark, tmp_path, batches, k, emit_k=None, name="pe_topk"):
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
+    from topk_spark.streaming.continuous_topk import continuous_topk_per_event
 
     src = str(tmp_path / f"src_{name}")
     for i, rows in enumerate(batches):
@@ -152,7 +152,7 @@ def test_per_event_emit_k_caps_output(spark, tmp_path):
 
 
 def test_per_event_emit_k_validation(spark):
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
+    from topk_spark.streaming.continuous_topk import continuous_topk_per_event
 
     df = spark.createDataFrame(
         [], "restaurant_id string, menu_item_id string, event_id long, ts_us long"

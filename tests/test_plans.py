@@ -105,15 +105,13 @@ def test_bucketed_join_needs_no_shuffle(spark, sf_dir, tmp_path):
     bucket i ⋈ bucket i directly. With broadcast disabled (to force the
     shuffle-join path a 100 TB fact⋈fact join would take), the plan must
     contain a SortMergeJoin but zero Exchange operators."""
-    from topk_spark.io.sinks import write_bucketed_table
     from topk_spark.io.sources import load_table
+    from topk_spark.ops.layout import write_bucketed
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    write_bucketed_table(li, "li_b", str(tmp_path / "li_b"), ["l_orderkey"], 8,
-                         sort_cols=["l_orderkey"])
-    write_bucketed_table(o, "o_b", str(tmp_path / "o_b"), ["o_orderkey"], 8,
-                         sort_cols=["o_orderkey"])
+    write_bucketed(li, "li_b", ["l_orderkey"], 8, str(tmp_path / "li_b"))
+    write_bucketed(o, "o_b", ["o_orderkey"], 8, str(tmp_path / "o_b"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -9,12 +9,25 @@ may never hit.
 from __future__ import annotations
 
 import datetime as dt
+import struct
 
+import numpy as np
 import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from topk_spark.ops.dedup import dedup_first_seen
+from topk_spark.ops.multimodal import (
+    _JPEG_APP0,
+    _dct_basis,
+    _dqt_body,
+    _encode_block,
+    _jpeg_dht,
+    _jpeg_quant,
+    _jpeg_seg,
+    _MsbBitWriter,
+    _pad_edge,
+)
 from topk_spark.ops.timeparts import floor_to_window_ms, iso_dayofweek
 from topk_spark.ops.topk import rank_topk
 
@@ -276,6 +289,86 @@ def test_jpeg_content_bound_law(seed):
     assert np.abs(arr.astype(int) - img.astype(int)).max() <= 40
 
 
+# ---------------------------------------------------------------------------
+# Color JPEG fixture encoder: the 3-component YCbCr 4:2:0 baseline stream the
+# engine's decoder (`decode_jpeg_pixels` → `_decode_scan_420`) reads back,
+# built from the codec's own block/segment writers.
+# ---------------------------------------------------------------------------
+
+# ITU-R BT.601 full-range YCbCr, the JFIF convention (JFIF 1.02 §7).
+_YCC = np.array(
+    [
+        [0.299, 0.587, 0.114],
+        [-0.168735892, -0.331264108, 0.5],
+        [0.5, -0.418687589, -0.081312411],
+    ]
+)
+
+
+def _rgb_to_ycbcr(img: "np.ndarray") -> "np.ndarray":
+    out = img.astype(np.float64) @ _YCC.T
+    out[..., 1:] += 128.0
+    return out
+
+
+def encode_jpeg_color_pixels(img: "np.ndarray") -> bytes:
+    """Encode an (h, w, 3) uint8 RGB array as baseline JFIF with the
+    standard corpus layout: YCbCr color, chroma subsampled 4:2:0, MCUs
+    interleaved 4×Y + Cb + Cr (16×16 pixels per MCU), separate luma/chroma
+    quant tables, per-component DC predictors. Same self-built fixed-width
+    Huffman tables as the grayscale path (shipped in the DHT), so the
+    alphabet-coverage guarantee (DC category ≤ 11, AC size ≤ 10 at these
+    quantizers) carries over — any 8-bit content encodes."""
+    h, w, _ = img.shape
+    T = _dct_basis()
+    quant = _jpeg_quant()
+    ycc = _rgb_to_ycbcr(img)
+    yp = _pad_edge(ycc[..., 0], 16) - 128.0
+    ph, pw = yp.shape
+    # 4:2:0 chroma: 2×2 mean of the 16-padded plane → 8-multiple planes
+    def sub(c: "np.ndarray") -> "np.ndarray":
+        p = _pad_edge(c, 16)
+        return p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3)) - 128.0
+
+    cb, cr = sub(ycc[..., 1]), sub(ycc[..., 2])
+    bw = _MsbBitWriter()
+    dc = {"y": 0, "cb": 0, "cr": 0}
+    for my in range(0, ph, 16):
+        for mx in range(0, pw, 16):
+            for dy in (0, 8):
+                for dx in (0, 8):
+                    dc["y"] = _encode_block(
+                        bw,
+                        yp[my + dy : my + dy + 8, mx + dx : mx + dx + 8],
+                        quant, dc["y"], T,
+                    )
+            cy, cx = my // 2, mx // 2
+            dc["cb"] = _encode_block(
+                bw, cb[cy : cy + 8, cx : cx + 8], quant, dc["cb"], T
+            )
+            dc["cr"] = _encode_block(
+                bw, cr[cy : cy + 8, cx : cx + 8], quant, dc["cr"], T
+            )
+    dqt = _jpeg_seg(0xDB, _dqt_body(quant, 0)) + _jpeg_seg(
+        0xDB, _dqt_body(quant, 1)
+    )
+    sof = _jpeg_seg(
+        0xC0,
+        struct.pack(">BHHB", 8, h, w, 3)
+        + b"\x01\x22\x00"  # Y: 2×2 sampling, quant table 0
+        + b"\x02\x11\x01"  # Cb: 1×1, quant table 1
+        + b"\x03\x11\x01",  # Cr: 1×1, quant table 1
+    )
+    app0 = _jpeg_seg(0xE0, _JPEG_APP0)
+    sos = _jpeg_seg(
+        0xDA, b"\x03" + b"\x01\x00" + b"\x02\x00" + b"\x03\x00" + b"\x00\x3f\x00"
+    )
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + _jpeg_dht() + sos
+        + bw.finish() + b"\xff\xd9"
+    )
+
+
 @given(st.integers(0, 2**32 - 1))
 @settings(max_examples=15, deadline=None)
 def test_jpeg_color_420_cycle_law(seed):
@@ -288,10 +381,7 @@ def test_jpeg_color_420_cycle_law(seed):
     is near-lossless."""
     import numpy as np
 
-    from topk_spark.ops.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_color_pixels,
-    )
+    from topk_spark.ops.multimodal import decode_jpeg_pixels
 
     rng = np.random.default_rng(seed)
     h, w = int(rng.integers(1, 40)), int(rng.integers(1, 40))
@@ -315,10 +405,7 @@ def test_jpeg_color_smooth_cycle_law(r, g, b, w, h):
     averages equal values, so the only loss is the quantizer's."""
     import numpy as np
 
-    from topk_spark.ops.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_color_pixels,
-    )
+    from topk_spark.ops.multimodal import decode_jpeg_pixels
 
     img = np.zeros((h, w, 3), np.uint8)
     img[...] = (r, g, b)

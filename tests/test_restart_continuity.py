@@ -427,7 +427,7 @@ def test_per_event_topk_state_survives_restart(spark, tmp_path, store):
     restart, both providers. Generation 2 sees ONE event; its snapshot must
     say seq=3 with the pre-restart counts folded in (A:2, B:1). A state
     loss has no partial credit: seq restarts at 1 and the counts at 1."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
+    from topk_spark.streaming.continuous_topk import continuous_topk_per_event
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")

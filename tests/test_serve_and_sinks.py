@@ -1,18 +1,13 @@
-"""Unit tests: tier router tiling, OLAP write layout, retention, idempotent
-upsert sink."""
+"""Unit tests: tier router tiling, the trending router, partition pruning
+on the daily layout, health."""
 
 from __future__ import annotations
 
 import os
-from datetime import date
 
 import pyspark.sql.functions as F
+import pytest
 
-from topk_spark.io.sinks import (
-    drop_expired_partitions,
-    merge_upsert_batch,
-    write_olap_table,
-)
 from topk_spark.serve.router import TierRouter
 
 HOUR = 3_600_000
@@ -188,7 +183,7 @@ def test_trending_router_freshness_and_row_identity(spark):
     high-water mark (or deeper than its rank depth) fall back to
     rank-on-read — correctness never waits on the materializer."""
     from topk_spark.serve.api import trending
-    from topk_spark.serve.router import TrendingRouter
+    from topk_spark.serve.router import TierSpec, TrendingRouter
 
     day0 = 1_704_067_200_000
     # sliding 5m/1m rollup tier over 3 h, 3 keys with distinct metrics so
@@ -221,11 +216,9 @@ def test_trending_router_freshness_and_row_identity(spark):
         rollup, "event_type", "revenue_cents", day0, through, k=3
     )
     router = TrendingRouter(
-        preranked, rollup, slide_ms=MIN, preranked_k=3
+        TierSpec(df=preranked, window_ms=5 * MIN, through_ms=through),
+        rollup, slide_ms=MIN, preranked_k=3,
     )
-    # high-water probe found the tier edge (stored on the spec, the one
-    # frontier source route() consults)
-    assert router._spec.effective_through() == through
 
     fresh = (day0 + 10 * MIN, day0 + 70 * MIN)
     stale = (day0 + 90 * MIN, day0 + 170 * MIN)  # newest hop end past through
@@ -249,14 +242,12 @@ def test_trending_router_freshness_and_row_identity(spark):
     # hour-bucket layout: with the partition column in the TierSpec, the
     # pruned fast path must return exactly the same rows (the hb predicates
     # are a superset of containment, never a filter change)
-    from topk_spark.serve.router import TierSpec
-
     pr_hb = preranked.withColumn(
         "hb", (F.col("window_start") / F.lit(HOUR)).cast("long")
     )
     router_hb = TrendingRouter(
         TierSpec(df=pr_hb, window_ms=5 * MIN, partition_col="hb",
-                 partition_ms=HOUR),
+                 partition_ms=HOUR, through_ms=through),
         rollup, slide_ms=MIN, preranked_k=3,
     )
     assert router_hb.route(*fresh, k=3) == "preranked"
@@ -265,96 +256,27 @@ def test_trending_router_freshness_and_row_identity(spark):
     assert direct.exceptAll(via_hb).count() == 0
 
 
-def test_write_olap_table_layout_and_retention(spark, tmp_path):
-    df = spark.range(100).select(
-        F.col("id"),
-        F.concat(F.lit("K"), (F.col("id") % 7)).alias("key"),
-        F.when(F.col("id") < 50, "2024-01-01").otherwise("2024-01-20").alias("event_date"),
-    )
-    path = str(tmp_path / "olap")
-    write_olap_table(
-        df, path, partition_cols=("event_date",), sort_cols=("key",),
-        bucket_col="key", bloom_cols=("key",),
-    )
-    assert os.path.isdir(os.path.join(path, "event_date=2024-01-01"))
-    back = spark.read.parquet(path)
-    assert back.count() == 100
-    # partition pruning visible in the plan
-    plan = back.filter(F.col("event_date") == "2024-01-20")._jdf.queryExecution().executedPlan().toString()
-    assert back.filter(F.col("event_date") == "2024-01-20").count() == 50
-
-    dropped = drop_expired_partitions(path, retention_days=7, today=date(2024, 1, 21))
-    assert dropped == ["event_date=2024-01-01"]
-    assert spark.read.parquet(path).count() == 50
-
-
-def test_merge_upsert_batch_idempotent(spark, tmp_path):
-    path = str(tmp_path / "upsert")
-    b1 = spark.createDataFrame(
-        [("k1", 1, "a"), ("k2", 1, "b")], "key string, ver int, val string"
-    )
-    merge_upsert_batch(spark, b1, path, ["key"])
-    assert spark.read.parquet(path).count() == 2
-
-    # redelivery of k2 with new value + new k3 → k2 updated, no duplicates
-    b2 = spark.createDataFrame(
-        [("k2", 2, "B"), ("k3", 1, "c")], "key string, ver int, val string"
-    )
-    merge_upsert_batch(spark, b2, path, ["key"])
-    got = {r["key"]: (r["ver"], r["val"]) for r in spark.read.parquet(path).collect()}
-    assert got == {"k1": (1, "a"), "k2": (2, "B"), "k3": (1, "c")}
-
-    # exact redelivery is a no-op
-    merge_upsert_batch(spark, b2, path, ["key"])
-    assert spark.read.parquet(path).count() == 3
-
-
-def test_kafka_sink_frame(spark):
-    from topk_spark.io.sinks import kafka_sink_frame
-
-    df = spark.createDataFrame(
-        [("EVT1", "R1", 3)], "event_id string, restaurant_id string, quantity int"
-    )
-    out = kafka_sink_frame(df, "event_id", topic="restaurant-orders-raw")
-    assert out.columns == ["key", "value", "topic"]
-    row = out.collect()[0]
-    assert bytes(row["key"]) == b"EVT1"
-    import json
-
-    assert json.loads(row["value"]) == {
-        "event_id": "EVT1",
-        "restaurant_id": "R1",
-        "quantity": 3,
-    }
-    assert row["topic"] == "restaurant-orders-raw"
-
-
 def test_partition_pruning_on_date(spark, tmp_path):
     """§4.1: a date-partitioned write + date filter must prune at the
     FileSourceScan (PartitionFilters), i.e. the range-index effect — a
     time-range query's cost is proportional to the range, not the table."""
-    from topk_spark.io.sinks import write_olap_table
-
-    df = spark.createDataFrame(
-        [(f"E{i}", f"2024-01-{1 + i % 9:02d}", i) for i in range(200)],
-        "event_id string, event_date string, v int",
-    )
-    path = str(tmp_path / "olap")
-    write_olap_table(
-        df, path, partition_cols=("event_date",), sort_cols=("event_id",),
-        bloom_cols=("event_id",),
-    )
-    rd = spark.read.parquet(path).filter(F.col("event_date") == "2024-01-03")
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # physical proof: only the one matching partition's files are scanned
-    scan = rd._jdf.queryExecution().executedPlan()
     import re
 
+    from topk_spark.ops.layout import write_partitioned_daily
+
+    df = spark.createDataFrame(
+        [(f"E{i}", f"2024-01-{1 + i % 9:02d} 12:00:00", i) for i in range(200)],
+        "event_id string, ts string, v int",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    path = str(tmp_path / "daily")
+    write_partitioned_daily(df, path)
+    rd = spark.read.parquet(path).filter(F.col("event_date") == "2024-01-03")
+    plan = rd._jdf.queryExecution().executedPlan().toString()
+    # physical proof: only the one matching partition's files are scanned
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "event_date" in m.group(1)
     assert rd.count() == len([i for i in range(200) if i % 9 == 2])
-    # and the value filter on the sorted column is pushed to parquet
+    # and a value filter on a data column is pushed to parquet
     rd2 = spark.read.parquet(path).filter(F.col("event_id") == "E7")
     plan2 = rd2._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(event_id), EqualTo(event_id,E7)]" in plan2
@@ -366,171 +288,6 @@ def test_health(spark):
     out = health(spark)
     assert out["status"] == "healthy"
     assert out["spark_version"]
-
-
-def test_kafka_wire_contract_byte_identical(spark):
-    """Round-3 contract pin (VERDICT item 6): the exact key/value BYTES the
-    Kafka sink frame produces for a full OrderEvent, against the
-    reference's serializers (TopKStreamingJob.kt:349-374: key =
-    eventId.toByteArray(), value = Jackson writeValueAsBytes — declaration-
-    order fields, null fields WRITTEN, no whitespace), plus the source's
-    full option contract (TopKStreamingJob.kt:221-237) without a broker.
-    A broker round-trip would layer on top; the frame and option dicts are
-    what the connector transports verbatim."""
-    import json
-
-    from topk_spark.io.sinks import kafka_sink_frame
-    from topk_spark.io.sources import (
-        kafka_source_options,
-        parse_json_events,
-    )
-    from topk_spark.schemas import ORDER_EVENT
-
-    row = (
-        "EVT-1", "ORD-1", None, "REST-7", "ITEM-3", None,
-        "Pad Thai", 2, 1299, 1704067200123,
-    )
-    df = spark.createDataFrame([row], ORDER_EVENT)
-    frame = kafka_sink_frame(df, "event_id", topic="restaurant-orders-raw")
-    out = frame.collect()[0]
-
-    # Key bytes: eventId.toByteArray() — UTF-8 of the id, nothing else.
-    assert bytes(out["key"]) == b"EVT-1"
-    # Value bytes: Jackson declaration order (Models.kt/TopKStreamingJob.kt
-    # field order == ORDER_EVENT schema order), nulls explicit, compact.
-    expected = (
-        '{"event_id":"EVT-1","order_id":"ORD-1","customer_id":null,'
-        '"restaurant_id":"REST-7","menu_item_id":"ITEM-3",'
-        '"category_id":null,"menu_item_name":"Pad Thai","quantity":2,'
-        '"price_in_cents":1299,"timestamp":1704067200123}'
-    )
-    assert out["value"] == expected
-    assert out["topic"] == "restaurant-orders-raw"
-
-    # Round-trip: the value frame re-parses to the typed record (P1/F5
-    # consume path) with every field intact, nulls included.
-    parsed = parse_json_events(
-        frame.select(F.col("value")), ORDER_EVENT
-    ).collect()[0]
-    assert tuple(parsed) == row
-
-    # Source option contract, broker-free.
-    opts = kafka_source_options(
-        "restaurant-orders", "localhost:9092", max_offsets_per_trigger=10_000
-    )
-    assert opts == {
-        "kafka.bootstrap.servers": "localhost:9092",
-        "subscribe": "restaurant-orders",
-        "startingOffsets": "earliest",
-        "failOnDataLoss": "false",
-        "maxOffsetsPerTrigger": "10000",
-    }
-    # json round-trip sanity: value is strict JSON
-    assert json.loads(out["value"])["customer_id"] is None
-
-
-def test_topk_decayed_reranks_and_zeroes_ancient(spark):
-    """The decayed read must flip the ranking against raw totals (recent
-    small beats ancient large), compute the exact integer shifts, and zero
-    contributions at >= 63 half-lives."""
-    from topk_spark.serve.api import topk_decayed
-
-    HL = 1_000
-    rows = [
-        # (restaurant, item, name, window_start, rev): A recent, B mid, C ancient-huge
-        ("r1", "A", "a", 69_000, 2_000),
-        ("r1", "B", "b", 60_000, 1_000_000),
-        ("r1", "C", "c", 0, (1 << 62)),
-    ]
-    rollup = spark.createDataFrame(
-        [
-            {
-                "restaurant_id": r,
-                "menu_item_id": i,
-                "menu_item_name": n,
-                "window_start": ws,
-                "window_end": ws + HL,
-                "order_count": 1,
-                "sum_quantity": 1,
-                "sum_revenue_cents": rev,
-            }
-            for r, i, n, ws, rev in rows
-        ]
-    )
-    got = {
-        r["menu_item_id"]: (r["rank"], r["decayed_revenue_cents"])
-        for r in topk_decayed(
-            rollup, "r1", as_of_ms=70_000, half_life_ms=HL, k=10
-        ).collect()
-    }
-    assert got == {
-        "A": (1, 2_000 >> 1),   # shift 1
-        "B": (2, 1_000_000 >> 10),  # shift 10
-        "C": (3, 0),            # shift 70 -> defined zero
-    }
-    # raw totals would rank C > B > A: the decay is doing the work
-    # global path carries the sentinel
-    from topk_spark.schemas import GLOBAL_SENTINEL
-
-    g = topk_decayed(rollup, "all", as_of_ms=70_000, half_life_ms=HL, k=1)
-    [top] = g.collect()
-    assert top["restaurant_id"] == GLOBAL_SENTINEL and top["menu_item_id"] == "A"
-
-
-def test_topk_decayed_is_tier_invariant(spark):
-    """When the half-life is a multiple of the tier window, per-bucket
-    revenue sums are identical whether computed from the 1-minute tier or
-    the merge-rollup-compacted 1-hour tier — so the decayed leaderboard
-    can be served from the COMPACTED tier at scale with zero drift."""
-    from topk_spark.serve.api import topk_decayed
-
-    day0 = 1_704_067_200_000
-    import random
-
-    rnd = random.Random(7)
-    fine_rows = []
-    for h in range(6):
-        for m in range(60):
-            ws = day0 + h * HOUR + m * MIN
-            fine_rows.append(
-                {
-                    "restaurant_id": "r1",
-                    "menu_item_id": f"I{m % 4}",
-                    "menu_item_name": f"i{m % 4}",
-                    "window_start": ws,
-                    "window_end": ws + MIN,
-                    "order_count": 1,
-                    "sum_quantity": 1,
-                    "sum_revenue_cents": rnd.randrange(1, 1_000_000),
-                }
-            )
-    fine = spark.createDataFrame(fine_rows)
-    # merge-rollup compaction: 1m -> 1h (A9's shape: sums of sums)
-    coarse = (
-        fine.groupBy(
-            "restaurant_id",
-            "menu_item_id",
-            (F.col("window_start") - (F.col("window_start") % HOUR)).alias(
-                "window_start"
-            ),
-        )
-        .agg(
-            F.sum("sum_revenue_cents").alias("sum_revenue_cents"),
-            F.sum("order_count").alias("order_count"),
-            F.sum("sum_quantity").alias("sum_quantity"),
-            F.min("menu_item_name").alias("menu_item_name"),
-        )
-        .withColumn("window_end", F.col("window_start") + HOUR)
-    )
-    as_of = day0 + 7 * HOUR
-    kw = dict(as_of_ms=as_of, half_life_ms=2 * HOUR, k=10)
-    got_fine = sorted(
-        tuple(r) for r in topk_decayed(fine, "r1", **kw).collect()
-    )
-    got_coarse = sorted(
-        tuple(r) for r in topk_decayed(coarse, "r1", **kw).collect()
-    )
-    assert got_fine == got_coarse and len(got_fine) == 4
 
 
 def test_trending_containment_rank_and_tiebreak(spark):
@@ -598,9 +355,11 @@ def test_trending_router_fast_path_partition_prunes(spark, tmp_path):
 
     router = TrendingRouter(
         TierSpec(df=tier, window_ms=5 * MIN, partition_col="hb",
-                 partition_ms=HOUR),
+                 partition_ms=HOUR, through_ms=day0 + n_hours * HOUR),
         tier, slide_ms=MIN, preranked_k=3,
     )
+    with pytest.raises(ValueError):
+        TrendingRouter(TierSpec(df=tier, window_ms=5 * MIN), tier)
     rg = (day0 + 10 * HOUR, day0 + 11 * HOUR)
     assert router.route(*rg, k=3) == "preranked"
     df = router.read(*rg, k=3)

@@ -932,6 +932,43 @@ def test_catchup_is_one_micro_batch_per_query(spark, tmp_path):
     assert spark.read.parquet(rollup).count() > 0
 
 
+
+def test_malformed_lines_are_dropped_on_ingest(spark, tmp_path):
+    """F5: a line that does not parse never reaches the raw table — the
+    reader's PERMISSIVE default would land it as an all-null row under
+    `event_date=__HIVE_DEFAULT_PARTITION__` — and the rollups equal those of
+    the same feed without the bad lines."""
+    from topk_spark.io.sources import read_json_file_stream
+
+    rows = generate_order_events(FixtureSpec(n_events=300))
+    good = [json.dumps(r) for r in rows]
+    out = {}
+    for name, lines in (
+        ("clean", good),
+        ("dirty", good[:100] + ["not json", '{"event_id": "EVT9'] + good[100:]),
+    ):
+        tmp = os.path.join(str(tmp_path), name)
+        src = os.path.join(tmp, "src")
+        os.makedirs(src)
+        with open(os.path.join(src, "b0.json"), "w") as f:
+            f.write("\n".join(lines) + "\n")
+        raw, rollup = os.path.join(tmp, "raw"), os.path.join(tmp, "rollup")
+        start_raw_sink(
+            build_dedup_stream(read_json_file_stream(spark, src, ORDER_EVENT)),
+            raw, os.path.join(tmp, "ck_raw"), available_now=True,
+        ).awaitTermination(120)
+        start_rollup_from_raw(
+            spark, raw, rollup, os.path.join(tmp, "ck_rollup"), available_now=True
+        ).awaitTermination(120)
+        out[name] = (raw, rollup)
+
+    raw_dirty = spark.read.parquet(out["dirty"][0])
+    assert raw_dirty.filter(F.col("event_id").isNull()).count() == 0
+    assert not [d for d in os.listdir(out["dirty"][0]) if "__HIVE_DEFAULT_PARTITION__" in d]
+    ids = lambda df: sorted(r[0] for r in df.select("event_id").collect())  # noqa: E731
+    assert ids(raw_dirty) == ids(spark.read.parquet(out["clean"][0]))
+    assert _rollup_rows(spark, out["dirty"][1]) == _rollup_rows(spark, out["clean"][1])
+
 def test_other_queries_keep_their_trailing_no_data_batch(spark, tmp_path):
     """start_raw_sink turns no-data batches off for its own query only."""
     from topk_spark.streaming.job import RAW_SCHEMA, build_rollup_stream

@@ -7,11 +7,13 @@ must still derive the PREVIOUS frontier, or it silently skips its hops."""
 from __future__ import annotations
 
 import os
+from datetime import date
 
 import pyspark.sql.functions as F
 
 from topk_spark.io.tier import (
     append_upto,
+    drop_expired_partitions,
     purge_upto,
     read_tier,
     tier_frontier,
@@ -101,6 +103,24 @@ def test_purge_upto_keeps_survivors_and_frontier(tmp_path):
     assert tier_frontier(d) == 300
     assert sorted(os.listdir(d)) == ["upto_300"]
     assert purge_upto(str(tmp_path / "absent"), 10) == []
+
+
+def test_drop_expired_partitions(spark, tmp_path):
+    """S10 retention on an `event_date=` layout: partitions older than the
+    horizon go, newer ones and non-date directories stay."""
+    df = spark.range(100).select(
+        F.col("id"),
+        F.when(F.col("id") < 50, "2024-01-01").otherwise("2024-01-20").alias("event_date"),
+    )
+    path = str(tmp_path / "raw")
+    df.write.partitionBy("event_date").parquet(path)
+    os.makedirs(os.path.join(path, "event_date=__HIVE_DEFAULT_PARTITION__"))
+
+    dropped = drop_expired_partitions(path, retention_days=7, today=date(2024, 1, 21))
+    assert dropped == ["event_date=2024-01-01"]
+    assert spark.read.parquet(path).count() == 50
+    assert drop_expired_partitions(path, retention_days=7, today=date(2024, 1, 21)) == []
+    assert drop_expired_partitions(str(tmp_path / "absent"), retention_days=7) == []
 
 
 def test_append_upto_retry_is_idempotent(spark, tmp_path):

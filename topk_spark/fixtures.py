@@ -37,15 +37,17 @@ MENU = [
 RESTAURANTS = [f"REST{i:03d}" for i in range(1, 6)]
 
 
+START_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
+GAP_MS = 900  # mean inter-event gap → span ≳ 30 one-minute windows
+DUP_RATE = 0.05
+JITTER_RATE = 0.10  # fraction with out-of-order jitter ≤ 10s
+LATE_RATE = 0.01  # fraction far beyond the 10s watermark
+
+
 @dataclass
 class FixtureSpec:
     n_events: int = 2000
     seed: int = 42
-    start_ms: int = 1_704_067_200_000  # 2024-01-01T00:00:00Z
-    gap_ms: int = 900  # mean inter-event gap → span ≳ 30 one-minute windows
-    dup_rate: float = 0.05
-    jitter_rate: float = 0.10  # fraction with out-of-order jitter ≤ 10s
-    late_rate: float = 0.01  # fraction far beyond the 10s watermark
 
 
 def generate_order_events(spec: FixtureSpec = FixtureSpec()) -> list[dict]:
@@ -53,13 +55,13 @@ def generate_order_events(spec: FixtureSpec = FixtureSpec()) -> list[dict]:
     with identical payload but later arrival position."""
     rng = random.Random(spec.seed)
     rows: list[dict] = []
-    ts = spec.start_ms
+    ts = START_MS
     for i in range(spec.n_events):
-        ts += rng.randint(1, 2 * spec.gap_ms)
+        ts += rng.randint(1, 2 * GAP_MS)
         event_ts = ts
-        if rng.random() < spec.jitter_rate:
+        if rng.random() < JITTER_RATE:
             event_ts -= rng.randint(0, 10_000)  # within watermark bound
-        elif rng.random() < spec.late_rate:
+        elif rng.random() < LATE_RATE:
             event_ts -= rng.randint(60_000, 300_000)  # hopelessly late
         item_id, name, cat, price = MENU[rng.randrange(len(MENU))]
         row = {
@@ -75,6 +77,6 @@ def generate_order_events(spec: FixtureSpec = FixtureSpec()) -> list[dict]:
             "timestamp": event_ts,
         }
         rows.append(row)
-        if rng.random() < spec.dup_rate:
+        if rng.random() < DUP_RATE:
             rows.append(dict(row))  # exact duplicate, re-delivered later
     return rows

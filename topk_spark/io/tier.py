@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame
 
@@ -138,14 +139,38 @@ def purge_upto(tier_dir: str, through_ms: int) -> list[int]:
     return purged
 
 
-def append_upto(df: DataFrame, tier_dir: str, w_cur: int, n_files: int = 1) -> None:
+def drop_expired_partitions(
+    table_path: str, retention_days: int, today: date | None = None
+) -> list[str]:
+    """Retention (S10) for a date-partitioned table such as the raw sink's
+    ``event_date=`` layout: drop the partitions older than the horizon —
+    the Spark analog of Pinot's 7d/30d segment retention. A directory
+    delete, no data rewrite; returns the dropped partition names."""
+    cutoff = (today or date.today()) - timedelta(days=retention_days)
+    dropped: list[str] = []
+    if not os.path.isdir(table_path):
+        return dropped
+    for name in sorted(os.listdir(table_path)):
+        if not name.startswith("event_date="):
+            continue
+        try:
+            part_date = date.fromisoformat(name.split("=", 1)[1])
+        except ValueError:
+            continue
+        if part_date < cutoff:
+            shutil.rmtree(os.path.join(table_path, name))
+            dropped.append(name)
+    return dropped
+
+
+def append_upto(df: DataFrame, tier_dir: str, w_cur: int) -> None:
     """Idempotently append one batch's rows as ``tier_dir/upto_<w_cur>/``
     (overwrite mode — a retry replaces its own subdir; Spark's committer
     writes the ``_SUCCESS`` marker last, which is what makes
-    `tier_frontier`'s committed-only listing torn-write-safe). ``n_files=1``
-    is the single-writer local form; a production writer passes its shuffle
-    parallelism and lets each task write its own part file."""
-    df.coalesce(n_files).write.mode("overwrite").parquet(
+    `tier_frontier`'s committed-only listing torn-write-safe). One file:
+    the single-writer local form; a production writer would let each task
+    write its own part file."""
+    df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(tier_dir, f"{_PREFIX}{w_cur}")
     )
 

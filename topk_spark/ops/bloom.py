@@ -26,28 +26,22 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# A multiple of 64: a partial top word would put positions past the
+# densified array's end, where element_at yields NULL and the AND-ed probe
+# predicate silently drops rows that may match — a false NEGATIVE.
 _M_BITS = 1 << 16  # 8 KiB bitset
 _K = 5  # hash functions; FPR ~= (1 - e^{-kn/m})^k
 
 
-def bloom_build(
-    keys: DataFrame, key_col: str, m_bits: int = _M_BITS, k: int = _K
-) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Aggregate the build side's keys into a one-row bitset:
     map<word_idx, word> with word = bit_or of 1 << (pos % 64) over every
     hash position landing in that 64-bit word. The shuffles here carry
-    (word_idx, word) pairs — at most m/64 groups — never payload rows.
-
-    m_bits is rounded UP to a multiple of 64: a partial top word would put
-    positions past the densified array's end, where element_at yields NULL
-    and the AND-ed probe predicate silently drops rows that may match —
-    a false NEGATIVE, violating the bloom contract. Callers must pass the
-    same m_bits to bloom_prefilter (the default always agrees)."""
-    m_bits = ((m_bits + 63) // 64) * 64
+    (word_idx, word) pairs — at most m/64 groups — never payload rows."""
     pos_arr = F.array(
         *[
-            F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(m_bits))
-            for i in range(k)
+            F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(_M_BITS))
+            for i in range(_K)
         ]
     )
     sparse = (
@@ -69,7 +63,7 @@ def bloom_build(
     # comparisons per lookup — measured 1.6 s of pure probe time at sf0.1),
     # while element_at on an ARRAY is O(1). The conversion runs once on a
     # single row; every probe-row lookup thereafter is constant-time.
-    n_words = m_bits // 64
+    n_words = _M_BITS // 64
     return sparse.select(
         F.transform(
             F.sequence(F.lit(0), F.lit(n_words - 1)),
@@ -80,23 +74,12 @@ def bloom_build(
     )
 
 
-def bloom_prefilter(
-    df: DataFrame,
-    key_col: str,
-    bloom: DataFrame,
-    m_bits: int = _M_BITS,
-    k: int = _K,
-) -> DataFrame:
+def bloom_prefilter(df: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:
     """Keep only rows whose `key_col` MIGHT be in the bloom set (no false
     negatives — same xxhash64 family as `bloom_build`). The bitset arrives
     via a 1-row broadcast crossJoin (the scalar-broadcast pattern used
     across this engine); the k membership tests are one AND-ed codegen
-    expression, evaluated map-side before any downstream shuffle.
-
-    m_bits is rounded up to a multiple of 64 with the SAME rule as
-    bloom_build, so hash positions (pmod by m_bits) agree between the
-    build and probe sides for any caller-supplied m_bits."""
-    m_bits = ((m_bits + 63) // 64) * 64
+    expression, evaluated map-side before any downstream shuffle."""
     # Flat k-way AND of codegen bit tests. Each conjunct names its
     # xxhash64 twice (word index + bit offset) but that still beats a
     # forall(transform(...)) single-eval form, which allocates a position
@@ -104,8 +87,8 @@ def bloom_prefilter(
     # on the ARRAY bitset is O(1); the earlier MAP bitset was an O(m/64)
     # per-lookup linear scan and dominated the probe (1.6 s alone).
     tests = []
-    for i in range(k):
-        p = f"pmod(xxhash64(`{key_col}`, {i}), {m_bits}L)"
+    for i in range(_K):
+        p = f"pmod(xxhash64(`{key_col}`, {i}), {_M_BITS}L)"
         word = f"element_at(__bloom, CAST(shiftright({p}, 6) AS INT) + 1)"
         tests.append(
             f"((shiftright({word}, CAST({p} % 64 AS INT)) & 1L) = 1L)"

@@ -1,13 +1,13 @@
 """Near-duplicate detection for large text corpora (north-star LLM-pipeline
 operators, BASELINE.json:6): MinHash+LSH, SimHash, n-gram Jaccard.
 
-Everything is built from native Catalyst expressions — higher-order array
-functions + xxhash64 — so the hot path stays inside whole-stage codegen with
-zero Python. The 100 TB shape:
+Signatures come from the Arrow-batched kernels in `sig_kernels.py`; pair
+generation and every verify step are Catalyst expressions. The 100 TB
+shape:
 
-    shingle (map) → minhash P perms (map) → explode B bands (×B rows of
-    16 bytes) → shuffle on (band, band_hash) → per-bucket self-join on tiny
-    groups → exact-Jaccard verify on candidates only.
+    shingle + minhash P perms + band digests (one map pass) → B band rows
+    per doc → shuffle on (band, band_hash) → pairs expanded inside each
+    bucket (`bucket_pairs`) → exact-Jaccard verify on candidates only.
 
 The only shuffle carries (band_hash, doc_id) pairs — never documents — and
 the candidate join is bounded by bucket size, not corpus size. That is the
@@ -21,10 +21,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def tokenize(text: Column, lowercase: bool = True) -> Column:
-    """Whitespace tokens (optionally lowercased) — the unit for shingling."""
-    t = F.lower(text) if lowercase else text
-    return F.split(F.trim(t), r"\s+")
+def tokenize(text: Column) -> Column:
+    """Lowercased whitespace tokens — the unit for shingling."""
+    return F.split(F.trim(F.lower(text)), r"\s+")
 
 
 def word_shingles(tokens: Column, n: int = 3) -> Column:
@@ -34,71 +33,6 @@ def word_shingles(tokens: Column, n: int = 3) -> Column:
     idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)))
-    )
-
-
-def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
-    """P-permutation MinHash signature: array<long> of
-    min(xxhash64(shingle, p)) for p in 0..P-1. One pass over shingles per
-    perm, all inside codegen — the Spark-native replacement for a Python
-    minhash UDF (~100× cheaper at scale)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda p: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, p))),
-    )
-
-
-def lsh_bands(signature: Column, bands: int, rows: int) -> Column:
-    """Band the signature: array of (band_id, band_hash) structs, band_hash =
-    xxhash64 over the band's R minhash values (joined as text — cheap,
-    deterministic).
-
-    PERF: only safe to call on a MATERIALIZED signature column (cached /
-    shuffled). If `signature` is the raw minhash expression, it sits inside
-    this transform's lambda body and Catalyst re-evaluates the full P-perm
-    minhash once PER BAND (a 16× blowup measured at sf0.1). The operator
-    pipeline uses `lsh_banded` below, which never forms the full-signature
-    expression at all.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band_id"),
-            F.xxhash64(
-                F.concat_ws(",", F.slice(signature, b * rows + 1, rows)), F.lit(-1)
-            ).alias("band_hash"),
-        ),
-    )
-
-
-def lsh_banded(shingles: Column, num_perm: int, bands: int) -> Column:
-    """array<struct<band_id,band_hash>> computed DIRECTLY from the shingle
-    array — bit-identical to ``lsh_bands(minhash_signature(sh, P), B, R)``
-    (same xxhash64(shingle, p) hash family, same ","-joined band text, same
-    seed) but each permutation's array_min appears exactly once in the
-    expression tree, so the shingle scan runs P times per row total instead
-    of P×B. The B×`bands` Python loop unrolls at plan-build time; band_id /
-    slice arithmetic are compile-time literals."""
-    rows = num_perm // bands
-
-    def perm_min(p: int) -> Column:
-        return F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(p)))
-        ).cast("string")
-
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",", *[perm_min(p) for p in range(b * rows, (b + 1) * rows)]
-                    ),
-                    F.lit(-1),
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
     )
 
 
@@ -177,8 +111,6 @@ def minhash_lsh_candidates(
 
 def minhash_neardup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.6,
     shingle_n: int = 3,
     num_perm: int = 64,
@@ -188,7 +120,7 @@ def minhash_neardup_pairs(
     Output: (id_a, id_b, jaccard) for pairs ≥ threshold. The verify is
     JVM-side set arithmetic over hashed-shingle arrays (see
     minhash_lsh_candidates)."""
-    cand = minhash_lsh_candidates(docs, id_col, text_col, shingle_n, num_perm, bands)
+    cand = minhash_lsh_candidates(docs, "doc_id", "text", shingle_n, num_perm, bands)
     return (
         cand.withColumn("jaccard", jaccard(F.col("shingles_a"), F.col("shingles_b")))
         .filter(F.col("jaccard") >= threshold)
@@ -244,50 +176,12 @@ def minhash_neardup_pairs_from_hsh(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash as a long: per-token xxhash64, bit-vote per position,
-    sign of the vote sets the bit. Pure codegen expressions (aggregate over a
-    64-counter array); shift amounts are Python literals (Spark's shift
-    functions don't take column shift counts)."""
-    votes = F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(F.xxhash64(t), i).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1),
-                    ).otherwise(F.lit(-1))
-                    for i in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        bit = -(1 << 63) if i == 63 else (1 << i)  # signed-long bit patterns
-        out = out.bitwiseOR(
-            F.when(F.element_at(votes, i + 1) > 0, F.lit(bit).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit longs (popcount of xor)."""
     return F.bit_count(a.bitwiseXOR(b)).cast("long")
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: bucket on 16-bit chunks (a pair within hamming
     ≤ 3 of 64 bits must agree on ≥1 of 4 chunks — pigeonhole), then exact
     hamming verify per bucket. Output (id_a, id_b, hamming).
@@ -299,7 +193,7 @@ def simhash_neardup_pairs(
     exactly once."""
     from topk_spark.ops.sig_kernels import bucket_pairs, simhash_table
 
-    h = simhash_table(docs, id_col, text_col)
+    h = simhash_table(docs, "doc_id", "text")
     chunked = h.select(
         "id",
         "sim",
@@ -330,8 +224,6 @@ def simhash_neardup_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 1,
     threshold: float = 0.5,
     method: str = "prefix",
@@ -371,8 +263,8 @@ def ngram_jaccard_pairs(
     """
     if method == "allpairs":
         sh = docs.select(
-            F.col(id_col).alias("id"),
-            word_shingles(tokenize(F.col(text_col)), n).alias("sh"),
+            F.col("doc_id").alias("id"),
+            word_shingles(tokenize(F.col("text")), n).alias("sh"),
         )
         a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
         b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -390,7 +282,7 @@ def ngram_jaccard_pairs(
     if hsh is None:
         # callers with several shingle consumers pass a materialized table
         # (workload/corpora.py:perturbed_hsh) so the kernel scan runs once
-        hsh = hashed_shingles(docs, id_col, text_col, n)
+        hsh = hashed_shingles(docs, "doc_id", "text", n)
     # prefix length |S| - ceil(t*|S|) + 1 (≥1 shared prefix shingle is
     # necessary for J >= t — see docstring). The 1e-9 guards float noise
     # pushing an exact-integer t*|S| up a step, which would silently shorten
@@ -422,11 +314,11 @@ def ngram_jaccard_pairs(
     )
 
 
+_CC_MAX_ITERATIONS = 20
+
+
 def connected_components(
     edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 20,
     check_every: int = 2,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
@@ -466,8 +358,8 @@ def connected_components(
     # generation — measured as the dominant cost of cluster dedup, not the
     # propagation itself).
     sym = _ckpt(
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).union(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).union(
+            edges.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))
         )
     )
 
@@ -476,7 +368,7 @@ def connected_components(
         .distinct()
         .withColumn("comp", F.col("id"))
     )
-    for it in range(1, max_iterations + 1):
+    for it in range(1, _CC_MAX_ITERATIONS + 1):
         nbr_min = (
             sym.join(labels, sym.b == labels.id)
             .groupBy("a")
@@ -504,7 +396,7 @@ def connected_components(
                 ).alias("comp"),
             )
         )
-        if it % check_every == 0 or it == max_iterations:
+        if it % check_every == 0 or it == _CC_MAX_ITERATIONS:
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "id")

@@ -32,19 +32,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def write_partitioned_daily(
-    df: DataFrame, path: str, ts_col: str = "ts", partition_col: str = "event_date"
-) -> None:
-    """Hive-partition `df` by the calendar day of `ts_col`.
+def write_partitioned_daily(df: DataFrame, path: str) -> None:
+    """Hive-partition `df` by the calendar day of `ts` into `event_date=`
+    directories.
 
-    `repartition(partition_col)` first: one shuffle so each day is written
+    `repartition("event_date")` first: one shuffle so each day is written
     by one task → one file per day instead of (tasks × days) small files
     (the small-files problem is the classic partitionBy failure mode)."""
     (
-        df.withColumn(partition_col, F.to_date(F.col(ts_col)))
-        .repartition(F.col(partition_col))
+        df.withColumn("event_date", F.to_date(F.col("ts")))
+        .repartition(F.col("event_date"))
         .write.mode("overwrite")
-        .partitionBy(partition_col)
+        .partitionBy("event_date")
         .parquet(path)
     )
 
@@ -61,77 +60,57 @@ def compact_range_sorted(
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    path: str | None = None,
+    df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int, path: str
 ) -> None:
-    """Persist as a bucketed (+ bucket-sorted) table: joins/aggregations on
-    `bucket_cols` between same-bucketed tables need NO Exchange — Spark
-    proves co-partitioning from the catalog metadata."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).sortBy(
+    """Persist at `path` as catalog table `table`, bucketed and
+    bucket-sorted: joins/aggregations on `bucket_cols` between
+    same-bucketed tables need NO Exchange — Spark proves co-partitioning
+    from the catalog metadata (tests/test_plans.py::
+    test_bucketed_join_needs_no_shuffle)."""
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).sortBy(
         *bucket_cols
-    )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
+    ).option("path", path).saveAsTable(table)
 
 
 _Z_BITS = 8  # grid cells per dimension = 2^8; z fits in 16 bits
 
 
-def zorder_value(col_a, col_b, bits: int = _Z_BITS):
+def zorder_value(col_a, col_b):
     """Z-order (Morton) interleave of two non-negative integer columns:
     bit i of `col_a` lands at position 2i, bit i of `col_b` at 2i+1. Pure
     integer shift/mask arithmetic over built-in expressions → whole-stage
     codegen, no UDF; the identical formula is SQL-expressible for the
-    DuckDB oracle (`zorder_sql`). Inputs must already be quantized to
-    `bits` bits (see `quantize_col`) — interleaving RAW columns of very
+    DuckDB oracle. Inputs must already be quantized to `_Z_BITS` bits (see
+    `quantize_col`) — interleaving RAW columns of very
     different magnitudes degenerates to a single-column sort, because the
     wider column owns all the high bits."""
     a = F.col(col_a) if isinstance(col_a, str) else col_a
     b = F.col(col_b) if isinstance(col_b, str) else col_b
-    a = a.cast("long").bitwiseAND(F.lit((1 << bits) - 1))
-    b = b.cast("long").bitwiseAND(F.lit((1 << bits) - 1))
+    a = a.cast("long").bitwiseAND(F.lit((1 << _Z_BITS) - 1))
+    b = b.cast("long").bitwiseAND(F.lit((1 << _Z_BITS) - 1))
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_Z_BITS):
         z = z + F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
         z = z + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
     return z
 
 
-def zorder_sql(expr_a: str, expr_b: str, bits: int = _Z_BITS) -> str:
-    """The DuckDB-SQL twin of `zorder_value` — same interleave, term for
-    term, so oracle queries can recompute z-values exactly."""
-    mask = (1 << bits) - 1
-    a = f"(CAST({expr_a} AS BIGINT) & {mask})"
-    b = f"(CAST({expr_b} AS BIGINT) & {mask})"
-    terms = []
-    for i in range(bits):
-        terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
-    return "(" + " + ".join(terms) + ")"
-
-
-def quantize_col(col, lo, hi, bits: int = _Z_BITS):
-    """Linear quantization of `col` onto a 2^bits grid over [lo, hi]:
-    floor((col - lo) * 2^bits / (hi - lo + 1)) — both dimensions end up
+def quantize_col(col, lo, hi):
+    """Linear quantization of `col` onto a 2^_Z_BITS grid over [lo, hi]:
+    floor((col - lo) * 2^_Z_BITS / (hi - lo + 1)) — both dimensions end up
     with the SAME bit width regardless of raw magnitude, which is what
     makes the interleave alternate meaningfully (Delta/Iceberg compute
     per-column range-ids for the same reason). All-integer inputs through
     an exactly-rounded double divide (values ≪ 2^53), so the identical
     formula in DuckDB SQL produces identical cells."""
-    cells = 1 << bits
+    cells = 1 << _Z_BITS
     return F.floor(
         (col - lo).cast("double") * float(cells) / (hi - lo + F.lit(1))
     ).cast("long")
 
 
-def compact_zorder(
-    df: DataFrame, col_a: str, col_b: str, n_files: int, bits: int = _Z_BITS
-) -> DataFrame:
-    """Z-order clustering: quantize both columns onto a common 2^bits grid
+def compact_zorder(df: DataFrame, col_a: str, col_b: str, n_files: int) -> DataFrame:
+    """Z-order clustering: quantize both columns onto a common 2^_Z_BITS grid
     (one extra min/max pass, broadcast as a 1-row bound), interleave into a
     z-value, then range-partition + sort on it — each output file covers a
     compact RECTANGLE in (col_a, col_b) space, so parquet min/max stats on
@@ -149,11 +128,11 @@ def compact_zorder(
         F.min(b).alias("__blo"),
         F.max(b).alias("__bhi"),
     )
-    qa = quantize_col(a, F.col("__alo"), F.col("__ahi"), bits)
-    qb = quantize_col(b, F.col("__blo"), F.col("__bhi"), bits)
+    qa = quantize_col(a, F.col("__alo"), F.col("__ahi"))
+    qb = quantize_col(b, F.col("__blo"), F.col("__bhi"))
     return (
         df.crossJoin(F.broadcast(bounds))
-        .withColumn("__z", zorder_value(qa, qb, bits))
+        .withColumn("__z", zorder_value(qa, qb))
         .repartitionByRange(n_files, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z", "__alo", "__ahi", "__blo", "__bhi")

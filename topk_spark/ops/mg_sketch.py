@@ -38,20 +38,18 @@ def mg_prune(counters: dict[int, int], cap: int) -> dict[int, int]:
     return {k: v - cut for k, v in counters.items() if v > cut}
 
 
-def mg_summarize(
-    batches: Iterator[pd.DataFrame], cap: int, key: str = "cohort", weight: str = "w"
-) -> Iterator[pd.DataFrame]:
-    """Weighted Misra-Gries fold over one partition's Arrow batches
-    (mapInPandas kernel). Accumulates exact (key -> weight) per batch via a
-    vectorized groupby, pruning at each batch boundary. Memory is
-    O(cap + batch_distinct) regardless of partition size; the emitted
-    summary is <= cap rows (key, est)."""
+def mg_summarize(batches: Iterator[pd.DataFrame], cap: int) -> Iterator[pd.DataFrame]:
+    """Weighted Misra-Gries fold over one partition's Arrow batches of
+    (cohort, w) (mapInPandas kernel). Accumulates exact (cohort -> w) per
+    batch via a vectorized groupby, pruning at each batch boundary. Memory
+    is O(cap + batch_distinct) regardless of partition size; the emitted
+    summary is <= cap rows (cohort, est)."""
     counters: dict[int, int] = {}
     for pdf in batches:
-        part = pdf[weight].groupby(pdf[key]).sum()
+        part = pdf["w"].groupby(pdf["cohort"]).sum()
         mg_add(counters, part.index, part.values)
         counters = mg_prune(counters, cap)
     yield pd.DataFrame(
-        {key: pd.Series(list(counters), dtype="int64"),
+        {"cohort": pd.Series(list(counters), dtype="int64"),
          "est": pd.Series(list(counters.values()), dtype="int64")}
     )

@@ -36,8 +36,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
-    FloatType,
-    ArrayType,
     IntegerType,
     LongType,
     StringType,
@@ -62,20 +60,6 @@ DECODED_META_SCHEMA = StructType(
         StructField("height", IntegerType(), False),
     ]
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("feature", ArrayType(FloatType()), False),
-    ]
-)
-
-
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stand-in ingest: utf-8 bytes as the opaque payload column (in a real
-    pipeline this is the image/audio blob read from object storage)."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
-
 
 def _fake_decode(payload: bytes) -> tuple[str, int, int]:
     """Deterministic fake for payloads that are not a recognized image
@@ -158,25 +142,6 @@ def encode_png_rows(rows: list[bytes], width: int) -> bytes:
         + chunk(b"IDAT", zlib.compress(raw, 6))
         + chunk(b"IEND", b"")
     )
-
-
-def encode_jpeg_header(width: int, height: int) -> bytes:
-    """JPEG byte stream with real SOI/APP0(JFIF)/SOF0/EOI markers carrying
-    the dimensions (header-level only: no entropy-coded scan — sufficient
-    for any header parser, not for pixel decode; documented honestly)."""
-    app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
-    sof0 = struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00"
-    return (
-        b"\xff\xd8"  # SOI
-        + b"\xff\xe0" + struct.pack(">H", len(app0) + 2) + app0
-        + b"\xff\xc0" + struct.pack(">H", len(sof0) + 2) + sof0
-        + b"\xff\xd9"  # EOI
-    )
-
-
-def encode_gif_header(width: int, height: int) -> bytes:
-    """GIF89a header + logical screen descriptor + trailer (header-level)."""
-    return b"GIF89a" + struct.pack("<HHBBB", width, height, 0, 0, 0) + b"\x3b"
 
 
 # --- GIF LZW (GIF89a spec §22 + Appendix F) -------------------------------
@@ -392,7 +357,7 @@ def payload_dims(doc_id: int) -> tuple[str, int, int]:
     return fmt, 16 + doc_id % 32, 16 + (doc_id // 3) % 32
 
 
-def make_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def make_image_payload(df: DataFrame) -> DataFrame:
     """Attach a REAL image byte stream per row: format and dimensions follow
     `payload_dims(id)`; PNG pixel content is derived from the id so payloads
     are content-distinct. mapInPandas (Arrow-batched, map-side)."""
@@ -420,7 +385,7 @@ def make_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 {"doc_id": batch["doc_id"].values, "payload": payloads}
             )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(run, schema)
+    return df.select("doc_id").mapInPandas(run, schema)
 
 
 def _decode_kernel(batch: pd.DataFrame) -> pd.DataFrame:
@@ -480,28 +445,6 @@ def decode_metadata(with_payload: DataFrame) -> DataFrame:
     return with_payload.select("doc_id", "payload").mapInPandas(
         run, DECODED_META_SCHEMA
     )
-
-
-def extract_features(with_payload: DataFrame, dim: int = 8) -> DataFrame:
-    """payload → fixed-dim float feature vector (the embedding-extraction
-    slot). Deterministic hash-derived fake; the Arrow/batch/schema plumbing
-    is what a real model-inference UDF would reuse unchanged."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            feats = []
-            for b in batch["payload"]:
-                digest = hashlib.sha256(b).digest()
-                feats.append(
-                    [round(digest[i] / 255.0 - 0.5, 6) for i in range(dim)]
-                )
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "feature": feats}
-            )
-
-    return with_payload.select("doc_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -641,7 +584,7 @@ def encode_video(doc_id: int) -> bytes:
     return b"".join(parts)
 
 
-def make_video_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def make_video_payload(df: DataFrame) -> DataFrame:
     schema = StructType(
         [
             StructField("doc_id", LongType(), False),
@@ -661,7 +604,7 @@ def make_video_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     }
                 )
 
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(run, schema)
+    return df.select("doc_id").mapInPandas(run, schema)
 
 
 def sample_video_frames(with_payload: DataFrame, every: int = 2) -> DataFrame:
@@ -764,7 +707,7 @@ def parse_wav(b: bytes) -> tuple[int, int, int, int] | None:
     return sr, n_ch, bits, data_len // (n_ch * bits // 8)
 
 
-def make_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def make_audio_payload(df: DataFrame) -> DataFrame:
     """Attach a real PCM WAV byte stream per row (mapInPandas, map-side —
     blobs never shuffle), mirroring `make_image_payload`."""
     schema = StructType(
@@ -776,12 +719,12 @@ def make_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            ids = batch[id_col].astype("int64")
+            ids = batch["doc_id"].astype("int64")
             yield pd.DataFrame(
                 {"doc_id": ids, "payload": [encode_wav(int(i)) for i in ids]}
             )
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
+    return df.select(F.col("doc_id").cast("long").alias("doc_id")).mapInPandas(
         run, schema
     )
 
@@ -999,86 +942,12 @@ def encode_jpeg_pixels(img: "np.ndarray") -> bytes:
     )
 
 
-# ITU-R BT.601 full-range YCbCr, the JFIF convention (JFIF 1.02 §7).
-_YCC = np.array(
-    [
-        [0.299, 0.587, 0.114],
-        [-0.168735892, -0.331264108, 0.5],
-        [0.5, -0.418687589, -0.081312411],
-    ]
-)
-
-
-def _rgb_to_ycbcr(img: "np.ndarray") -> "np.ndarray":
-    out = img.astype(np.float64) @ _YCC.T
-    out[..., 1:] += 128.0
-    return out
-
-
 def _ycbcr_to_rgb(y, cb, cr) -> "np.ndarray":
     r = y + 1.402 * (cr - 128.0)
     g = y - 0.344136286 * (cb - 128.0) - 0.714136286 * (cr - 128.0)
     b = y + 1.772 * (cb - 128.0)
     return np.clip(np.round(np.stack([r, g, b], axis=-1)), 0, 255).astype(
         np.uint8
-    )
-
-
-def encode_jpeg_color_pixels(img: "np.ndarray") -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as baseline JFIF with the
-    standard corpus layout: YCbCr color, chroma subsampled 4:2:0, MCUs
-    interleaved 4×Y + Cb + Cr (16×16 pixels per MCU), separate luma/chroma
-    quant tables, per-component DC predictors. Same self-built fixed-width
-    Huffman tables as the grayscale path (shipped in the DHT), so the
-    alphabet-coverage guarantee (DC category ≤ 11, AC size ≤ 10 at these
-    quantizers) carries over — any 8-bit content encodes."""
-    h, w, _ = img.shape
-    T = _dct_basis()
-    quant = _jpeg_quant()
-    ycc = _rgb_to_ycbcr(img)
-    yp = _pad_edge(ycc[..., 0], 16) - 128.0
-    ph, pw = yp.shape
-    # 4:2:0 chroma: 2×2 mean of the 16-padded plane → 8-multiple planes
-    def sub(c: "np.ndarray") -> "np.ndarray":
-        p = _pad_edge(c, 16)
-        return p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3)) - 128.0
-
-    cb, cr = sub(ycc[..., 1]), sub(ycc[..., 2])
-    bw = _MsbBitWriter()
-    dc = {"y": 0, "cb": 0, "cr": 0}
-    for my in range(0, ph, 16):
-        for mx in range(0, pw, 16):
-            for dy in (0, 8):
-                for dx in (0, 8):
-                    dc["y"] = _encode_block(
-                        bw,
-                        yp[my + dy : my + dy + 8, mx + dx : mx + dx + 8],
-                        quant, dc["y"], T,
-                    )
-            cy, cx = my // 2, mx // 2
-            dc["cb"] = _encode_block(
-                bw, cb[cy : cy + 8, cx : cx + 8], quant, dc["cb"], T
-            )
-            dc["cr"] = _encode_block(
-                bw, cr[cy : cy + 8, cx : cx + 8], quant, dc["cr"], T
-            )
-    dqt = _jpeg_seg(0xDB, _dqt_body(quant, 0)) + _jpeg_seg(
-        0xDB, _dqt_body(quant, 1)
-    )
-    sof = _jpeg_seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + b"\x01\x22\x00"  # Y: 2×2 sampling, quant table 0
-        + b"\x02\x11\x01"  # Cb: 1×1, quant table 1
-        + b"\x03\x11\x01",  # Cr: 1×1, quant table 1
-    )
-    app0 = _jpeg_seg(0xE0, _JPEG_APP0)
-    sos = _jpeg_seg(
-        0xDA, b"\x03" + b"\x01\x00" + b"\x02\x00" + b"\x03\x00" + b"\x00\x3f\x00"
-    )
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + _jpeg_dht() + sos
-        + bw.finish() + b"\xff\xd9"
     )
 
 

@@ -52,9 +52,7 @@ def shuffle_rank(key: Column) -> Column:
     return (F.pmod(key.cast("long"), F.lit(_M)) * _A + _C) % _M
 
 
-def shuffle_shards(
-    df: DataFrame, key: str, n_shards: int, order_cols: tuple[str, ...] = ()
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, key: str, n_shards: int) -> DataFrame:
     """Assign every row a shard and a within-shard position forming a
     reproducible global permutation. Map-side shard assignment; one shuffle
     on the shard key; partition-local ordering (never a global sort)."""

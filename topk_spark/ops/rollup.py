@@ -30,7 +30,6 @@ def windowed_rollup(
     keys: Sequence[str],
     aggs: Sequence[Column],
     window_duration: str = "1 minute",
-    carry_dims: Sequence[str] = (),
     slide: str | None = None,
 ) -> DataFrame:
     """Tumbling-window rollup (A1+A2): one row per (keys..., window); pass
@@ -41,11 +40,8 @@ def windowed_rollup(
 
     Output carries the reference RollupEvent time derivations
     (TopKStreamingJob.kt:150-188): `window_start` / `window_end` epoch-ms
-    longs, `hour_of_day`, ISO `day_of_week`. `carry_dims` are
-    functionally-dependent dims kept via `first` (e.g. menu_item_name for a
-    menu_item_id key) — last-seen in the reference, deterministic `min` here.
+    longs, `hour_of_day`, ISO `day_of_week`.
     """
-    carried = [F.min(d).alias(d) for d in carry_dims]
     win = (
         F.window(ts_col, window_duration, slide)
         if slide
@@ -53,7 +49,7 @@ def windowed_rollup(
     )
     out = (
         df.groupBy(win.alias("w"), *keys)
-        .agg(*carried, *aggs)
+        .agg(*aggs)
         .withColumn("window_start", F.unix_millis(F.col("w.start")))
         .withColumn("window_end", F.unix_millis(F.col("w.end")))
         .withColumn("hour_of_day", hour_of_day(F.col("w.start")))
@@ -133,11 +129,10 @@ def merge_rollup(
     keys: Sequence[str],
     sum_cols: Sequence[str],
     target_window_ms: int = 3_600_000,
-    hll_col: str | None = None,
 ) -> DataFrame:
     """Merge-rollup compaction (A9, Pinot MergeRollupTask
     orders_1m_rollup_table.json:72-84): re-bucket fine windows into coarse
-    ones, summing metrics and merging HLL sketches. Runs as a periodic batch
+    ones, summing metrics. Runs as a periodic batch
     job over partitions older than the compaction delay; the coarse window
     start is the epoch-floored fine window start, so 1m buckets nest exactly
     into 1h buckets.
@@ -145,9 +140,7 @@ def merge_rollup(
     coarse = (
         F.col("window_start") - F.col("window_start") % F.lit(target_window_ms)
     ).cast("long")
-    aggs: list[Column] = [F.sum(c).cast("long").alias(c) for c in sum_cols]
-    if hll_col is not None:
-        aggs.append(F.hll_union_agg(hll_col).alias(hll_col))
+    aggs = [F.sum(c).cast("long").alias(c) for c in sum_cols]
     return (
         rollup_1m.withColumn("window_start", coarse)
         .withColumn("window_end", (F.col("window_start") + F.lit(target_window_ms)).cast("long"))

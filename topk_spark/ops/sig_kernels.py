@@ -12,11 +12,9 @@ at sf0.1 where these kernels spend <2 s). A vectorized numpy kernel behind
 only (no shuffle), Arrow-batched, embarrassingly parallel across file
 splits, and the per-row work is a handful of BLAS/ufunc calls.
 
-The pure-expression implementations in `fuzzy_dedup.py` / `similarity.py`
-(`minhash_signature`, `lsh_banded`, `simhash64`, `lsh_signature`) remain the
-reference twins — tests pin the kernels' recall against the same constructed
-truth, and every downstream VERIFY step (exact Jaccard, exact hamming, exact
-cosine) still runs JVM-side on the candidates.
+Tests pin the kernels' recall against constructed truth, and every
+downstream VERIFY step (exact Jaccard, exact hamming, exact cosine) still
+runs JVM-side on the candidates.
 
 Determinism: all hashing is `blake2b` (a standardized, platform-stable
 digest) with fixed salts; permutations are fixed odd-multiplier affine maps
@@ -216,17 +214,6 @@ def sig_band_hashes_batch(
     for r in range(rows_per_band):
         bh = bh * _ROLL_K + view[:, :, r]
     return sig_t, bh
-
-
-def sig_band_hashes(
-    H: "np.ndarray", A: "np.ndarray", C: "np.ndarray", bands: int, rows_per_band: int
-) -> tuple[bytes, list[int]]:
-    """Per-doc wrapper over `sig_band_hashes_batch` (the streaming
-    per-event path). Returns (signature bytes big-endian u64s — unchanged
-    encoding, the minima are identical —, one unsigned 64-bit digest per
-    band)."""
-    sig_t, bh = sig_band_hashes_batch([H], A, C, bands, rows_per_band)
-    return sig_t[0].astype(">u8").tobytes(), [int(v) for v in bh[0]]
 
 
 def minhash_band_rows(
@@ -512,12 +499,14 @@ def hyperplane_signatures(
     return vecs.select(id_col, vec_col).mapInPandas(run, schema)
 
 
+_MAX_BUCKET = 4096
+
+
 def bucket_pairs(
     keyed: DataFrame,
     key_cols: list[str],
     id_col: str = "id",
     payload_col: str | None = None,
-    max_bucket: int = 4096,
 ) -> DataFrame:
     """Candidate pairs from LSH buckets WITHOUT a self-join: groupBy the
     bucket key, collect the (small) bucket, expand i<j pairs in-place, then
@@ -525,7 +514,7 @@ def bucket_pairs(
     self-join would re-evaluate the full signature scan per side (Catalyst
     cannot reuse the exchanges once per-branch pushdown specializes them).
 
-    Buckets larger than `max_bucket` are degenerate for NEAR-dup detection
+    Buckets larger than `_MAX_BUCKET` are degenerate for NEAR-dup detection
     (thousands of mutually-identical docs — exact dedup's job, upstream of
     near-dup in any real pipeline) and would expand quadratically; they are
     dropped with the bound documented here rather than silently OOMing.
@@ -540,7 +529,7 @@ def bucket_pairs(
         F.array_sort(F.collect_list(item)).alias("arr")
     )
     sz = F.size("arr")
-    pairs = bucket.filter((sz >= 2) & (sz <= max_bucket)).select(
+    pairs = bucket.filter((sz >= 2) & (sz <= _MAX_BUCKET)).select(
         F.explode(
             F.flatten(
                 F.transform(

@@ -11,8 +11,9 @@ Two tiers:
   and only those buckets are scanned + exactly re-ranked. Bucket assignment
   is a map-side expression; the only join is query-signature × bucket.
 
-Hyperplane components are derived from xxhash64(plane, dim) — deterministic
-across runs/executors with no RNG state or broadcast weight matrix.
+Hyperplane components are hash-derived (`sig_kernels.hyperplane_signatures`)
+— deterministic across runs/executors with no RNG state or broadcast weight
+matrix.
 """
 
 from __future__ import annotations
@@ -50,65 +51,26 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
-def _hyperplane_component(table: int, plane: int, dim: Column) -> Column:
-    """Deterministic pseudo-uniform in [-0.5, 0.5): hash(table, plane, dim)
-    → fraction. No RNG state, no broadcast weight matrix — every executor
-    derives identical hyperplanes."""
-    return (
-        F.pmod(
-            F.xxhash64(F.lit(table), F.lit(plane), dim, F.lit(7919)), F.lit(100_000)
-        )
-        / F.lit(100_000.0)
-        - F.lit(0.5)
+def _corpus(corpus: DataFrame) -> DataFrame:
+    """(vec_id, vv): the corpus's ids and double-typed embeddings."""
+    return corpus.select("vec_id", as_double_array("embedding").alias("vv"))
+
+
+def _rank_scored(cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of each (query, vec) candidate pair, self-matches
+    dropped, ranked per query (score DESC, vec_id ASC)."""
+    scored = cand.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        "vec_id",
+        F.round(cosine(F.col("qv"), F.col("vv")), 6).alias("score"),
     )
+    return rank_topk(scored, ["query_id"], [F.desc("score"), F.asc("vec_id")], k)
 
 
-def lsh_signature(vec: Column, num_planes: int, table: int = 0) -> Column:
-    """H-bit sign signature as a long for one hash table: bit h =
-    [dot(vec, plane_{table,h}) > 0]. Plane index/bit shifts are Python
-    literals (unrolled loop); the per-dimension fold stays codegen'd."""
-    def _proj_lambda(h: int):
-        return lambda x, d: x * _hyperplane_component(table, h, d)
-
-    sig = F.lit(0).cast("long")
-    for h in range(num_planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.size(vec) - 1), _proj_lambda(h)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig.bitwiseOR(
-            F.when(proj > 0, F.lit(1 << h).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k per query: (query_id, vec_id, score, rank)."""
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("vv")
-    )
-    q = queries.select(query_id_col, query_vec_col)
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            "vec_id",
-            F.round(cosine(F.col(query_vec_col), F.col("vv")), 6).alias("score"),
-        )
-    )
-    return rank_topk(scored, [query_id_col], [F.desc("score"), F.asc("vec_id")], k)
+    q = queries.select("query_id", "qv")
+    return _rank_scored(_corpus(corpus).crossJoin(F.broadcast(q)), k)
 
 
 def lsh_ann_topk(
@@ -117,10 +79,6 @@ def lsh_ann_topk(
     k: int = 10,
     num_planes: int = 6,
     num_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
 ) -> DataFrame:
     """Approximate cosine top-k: multi-table hyperplane LSH + exact rerank
     inside matched buckets.
@@ -139,7 +97,7 @@ def lsh_ann_topk(
     from topk_spark.ops.sig_kernels import hyperplane_signatures
 
     v = hyperplane_signatures(
-        corpus.select(F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("vv")),
+        _corpus(corpus),
         "vec_id",
         "vv",
         num_planes,
@@ -147,35 +105,38 @@ def lsh_ann_topk(
         carry_vec=True,
     ).select(F.col("id").alias("vec_id"), "table_id", "sig", F.col("vec").alias("vv"))
     q = hyperplane_signatures(
-        queries.select(query_id_col, query_vec_col),
-        query_id_col,
-        query_vec_col,
+        queries.select("query_id", "qv"),
+        "query_id",
+        "qv",
         num_planes,
         num_tables,
         carry_vec=True,
     ).select(
-        F.col("id").alias(query_id_col),
+        F.col("id").alias("query_id"),
         "table_id",
         "sig",
-        F.col("vec").alias(query_vec_col),
+        F.col("vec").alias("qv"),
     )
     scored = (
         v.join(F.broadcast(q), ["table_id", "sig"])
-        .filter(F.col("vec_id") != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
+            "query_id",
             "vec_id",
-            F.round(cosine(F.col(query_vec_col), F.col("vv")), 6).alias("score"),
+            F.round(cosine(F.col("qv"), F.col("vv")), 6).alias("score"),
         )
-        .dropDuplicates([query_id_col, "vec_id"])
+        .dropDuplicates(["query_id", "vec_id"])
     )
-    return rank_topk(scored, [query_id_col], [F.desc("score"), F.asc("vec_id")], k)
+    return rank_topk(scored, ["query_id"], [F.desc("score"), F.asc("vec_id")], k)
 
 
-def _lloyd(X: "np.ndarray", k: int, seed: int, iters: int = 20) -> "np.ndarray":
+_LLOYD_ITERS = 20
+
+
+def _lloyd(X: "np.ndarray", k: int, seed: int) -> "np.ndarray":
     """Deterministic k-means on a driver-side sample: k-means++ seeding from
-    a seeded RandomState, `iters` Lloyd rounds, empty cells keep their old
-    centroid. The sample bound (caller-side) keeps this O(sample·k·d) —
+    a seeded RandomState, `_LLOYD_ITERS` Lloyd rounds, empty cells keep
+    their old centroid. The sample bound (caller-side) keeps this O(sample·k·d) —
     the quantizer-training cost FAISS-style IVF pays once, off the query
     path."""
     rs = np.random.RandomState(seed)
@@ -188,7 +149,7 @@ def _lloyd(X: "np.ndarray", k: int, seed: int, iters: int = 20) -> "np.ndarray":
         p = d2 / d2.sum() if d2.sum() > 0 else None
         centers.append(X[rs.choice(n, p=p)])
     C = np.asarray(centers)
-    for _ in range(iters):
+    for _ in range(_LLOYD_ITERS):
         d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         counts = np.bincount(assign, minlength=k)
@@ -209,11 +170,9 @@ ANN_TRAIN_VERSION = 2
 _TRAIN_SAMPLE_N = 65536
 
 
-def _train_sample(
-    v: DataFrame, seed: int, n: int = _TRAIN_SAMPLE_N, id_col: str = "vec_id"
-) -> "np.ndarray":
+def _train_sample(v: DataFrame, seed: int) -> "np.ndarray":
     """Bounded training sample for quantizer fitting that is DETERMINISTIC
-    UNDER REPARTITIONING: the n rows with the smallest
+    UNDER REPARTITIONING: the `_TRAIN_SAMPLE_N` rows with the smallest
     xxhash64(id, seed) — a seeded uniform draw whose membership depends
     only on ids, never on partition layout. A bare limit(n) takes
     whichever partitions answer first, so the trained centroids (hence
@@ -227,12 +186,12 @@ def _train_sample(
     SET (and matches the file order of an id-sorted corpus, keeping
     centroids stable vs the earlier limit(n) draw on such corpora)."""
     rows = (
-        v.orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-        .limit(n)
-        .select(id_col, "vv")
+        v.orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)), F.col("vec_id"))
+        .limit(_TRAIN_SAMPLE_N)
+        .select("vec_id", "vv")
         .collect()
     )
-    rows.sort(key=lambda r: r[id_col])
+    rows.sort(key=lambda r: r["vec_id"])
     return np.asarray([r["vv"] for r in rows], dtype=np.float64)
 
 
@@ -279,14 +238,10 @@ def _assign_cells(v: DataFrame, C: "np.ndarray") -> DataFrame:
     return v.select("vec_id", "vv").mapInPandas(run, schema)
 
 
-def cluster_cosine_components(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    cluster_col: str = "label",
-    vec_col: str = "embedding",
-    max_block_elems: int = 1 << 22,
-) -> DataFrame:
+_MAX_BLOCK_ELEMS = 1 << 22
+
+
+def cluster_cosine_components(df: DataFrame, threshold: float) -> DataFrame:
     """SemDeDup-shaped semantic dedup, resolved per cluster in one pass:
     for each coarse cluster (a k-means cell id / `label`), connect vectors
     with cosine ≥ threshold into components and elect the min id per
@@ -302,8 +257,8 @@ def cluster_cosine_components(
     distributed `connected_components` op remains the tool for edge sets
     that genuinely span clusters.
 
-    Memory: the GEMM runs in row blocks of ⌈max_block_elems / n⌉ rows so
-    scratch stays ~`8·max_block_elems` bytes regardless of cell size; cell
+    Memory: the GEMM runs in row blocks of ⌈_MAX_BLOCK_ELEMS / n⌉ rows so
+    scratch stays ~`8·_MAX_BLOCK_ELEMS` bytes regardless of cell size; cell
     population is bounded by the coarse-quantizer design (SemDeDup's own
     contract), not by this kernel.
 
@@ -312,11 +267,11 @@ def cluster_cosine_components(
     with the same sequential left-fold the Catalyst/DuckDB oracle expression
     uses, so summation-order ulps can never flip an edge vs the oracle.
     """
-    cluster_field = df.schema[cluster_col]
+    cluster_field = df.schema["label"]
     out_schema = StructType(
         [
-            StructField(id_col, LongType(), False),
-            StructField(cluster_col, cluster_field.dataType, True),
+            StructField("vec_id", LongType(), False),
+            StructField("label", cluster_field.dataType, True),
             StructField("component", LongType(), False),
             StructField("keep", BooleanType(), False),
         ]
@@ -334,15 +289,15 @@ def cluster_cosine_components(
         return fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         n = len(ids)
         if n == 0:
             return pd.DataFrame(
                 {c.name: pd.Series(dtype=object) for c in out_schema}
             )
         E = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
         )
         nrm = np.sqrt(np.einsum("ij,ij->i", E, E))
         N = E / nrm[:, None]
@@ -369,7 +324,7 @@ def cluster_cosine_components(
             else:
                 parent[ri] = rj
 
-        block = max(1, max_block_elems // n)
+        block = max(1, _MAX_BLOCK_ELEMS // n)
         for lo in range(0, n, block):
             hi = min(lo + block, n)
             G = N[lo:hi] @ N.T  # (hi-lo) × n
@@ -386,18 +341,24 @@ def cluster_cosine_components(
         comp = ids[np.fromiter((find(i) for i in range(n)), dtype=np.int64)]
         return pd.DataFrame(
             {
-                id_col: ids,
-                cluster_col: pdf[cluster_col].values,
+                "vec_id": ids,
+                "label": pdf["label"].values,
                 "component": comp,
                 "keep": comp == ids,
             }
         )
 
     return (
-        df.select(id_col, cluster_col, vec_col)
-        .groupBy(cluster_col)
+        df.select("vec_id", "label", "embedding")
+        .groupBy("label")
         .applyInPandas(kernel, out_schema)
     )
+
+
+# Quantizer-training seeds: IVF cells (`ivf_topk`, and the layout/probe
+# pair the cell-partitioned query passes 7 to) and PQ codebooks.
+_IVF_SEED = 7
+_PQ_SEED = 11
 
 
 def ivf_topk(
@@ -406,11 +367,6 @@ def ivf_topk(
     k: int = 10,
     nlist: int = 16,
     nprobe: int = 4,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantization + exact cosine
     rerank inside the `nprobe` nearest cells per query.
@@ -427,48 +383,12 @@ def ivf_topk(
     partition-pruned scan — no shuffle of the corpus at query time; the only
     joins are broadcasts of (query × probed-cell) pairs and centroids.
     """
-    import numpy as np
-
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("vv")
-    )
-    sample = _train_sample(v, seed)
-    C = _lloyd(sample, nlist, seed)
-    assigned = _assign_cells(v, C)
-
-    spark = corpus.sparkSession
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
-        "cell int, cv array<double>",
-    )
+    v = _corpus(corpus)
+    C = _lloyd(_train_sample(v, _IVF_SEED), nlist, _IVF_SEED)
     # nprobe nearest cells per query, by euclidean distance to centroid
     # (k-means' own metric); nlist is small so this is a broadcast cross.
-    q = queries.select(query_id_col, query_vec_col)
-    d2 = F.aggregate(
-        F.zip_with(F.col(query_vec_col), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    probes = rank_topk(
-        q.crossJoin(F.broadcast(cent)).select(
-            query_id_col, query_vec_col, "cell", d2.alias("d2")
-        ),
-        [query_id_col],
-        [F.asc("d2"), F.asc("cell")],
-        nprobe,
-        rank_col="cell_rank",
-    ).select(query_id_col, query_vec_col, "cell")
-
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            "vec_id",
-            F.round(cosine(F.col(query_vec_col), F.col("vv")), 6).alias("score"),
-        )
-    )
-    return rank_topk(scored, [query_id_col], [F.desc("score"), F.asc("vec_id")], k)
+    probes = _nearest_cells(queries.select("query_id", "qv"), C, nprobe)
+    return _rank_scored(_assign_cells(v, C).join(F.broadcast(probes), "cell"), k)
 
 
 def pq_topk(
@@ -477,12 +397,7 @@ def pq_topk(
     k: int = 10,
     m: int = 8,
     nbits: int = 4,
-    seed: int = 11,
     rerank_factor: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
     max_queries: int = 4096,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al., 2011) with asymmetric
@@ -508,10 +423,8 @@ def pq_topk(
        TakeOrderedAndProject gives the exact operators), then one final
        per-query rank pass merges partials. No corpus shuffle anywhere.
     """
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("vv")
-    )
-    sample = _train_sample(v, seed)
+    v = _corpus(corpus)
+    sample = _train_sample(v, _PQ_SEED)
     sample = sample / np.linalg.norm(sample, axis=1, keepdims=True)
     d = sample.shape[1]
     assert d % m == 0, f"dim {d} not divisible by m={m}"
@@ -519,7 +432,7 @@ def pq_topk(
     ksub = 1 << nbits
     books = np.stack(
         [
-            _lloyd(sample[:, j * sub : (j + 1) * sub], ksub, seed + j)
+            _lloyd(sample[:, j * sub : (j + 1) * sub], ksub, _PQ_SEED + j)
             for j in range(m)
         ]
     )  # (m, ksub, sub)
@@ -556,7 +469,7 @@ def pq_topk(
     # the task closure, so the query set must be BOUNDED — an unbounded
     # collect here would melt the driver on a corpus-sized query side.
     qrows = (
-        queries.select(query_id_col, query_vec_col)
+        queries.select("query_id", "qv")
         .limit(max_queries + 1)
         .collect()
     )
@@ -565,8 +478,8 @@ def pq_topk(
             f"pq_topk: query set exceeds max_queries={max_queries}; "
             "batch the queries or raise the bound explicitly"
         )
-    qids = np.asarray([r[query_id_col] for r in qrows], dtype=np.int64)
-    Q = np.asarray([r[query_vec_col] for r in qrows], dtype=np.float64)
+    qids = np.asarray([r["query_id"] for r in qrows], dtype=np.int64)
+    Q = np.asarray([r["qv"] for r in qrows], dtype=np.float64)
     Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     # ADC tables: dt[q, j, c] = q_sub_j . books[j, c]
     dt = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
@@ -642,9 +555,7 @@ def pq_topk(
     cand = rank_topk(
         partials, ["query_id"], [F.desc("score"), F.asc("vec_id")], shortlist
     ).select("query_id", "vec_id")
-    qdf = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
-    )
+    qdf = queries.select("query_id", F.col("qv").alias("__qv"))
     rer = (
         cand.join(v, "vec_id")
         .join(F.broadcast(qdf), "query_id")
@@ -662,8 +573,6 @@ def ivf_cell_layout(
     path: str,
     nlist: int = 16,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """WRITE-TIME half of the IVF story the query-path docstrings promise:
     train the coarse quantizer (same bounded-sample seeded Lloyd as
@@ -672,12 +581,8 @@ def ivf_cell_layout(
     `cell IN (...)` lands in PartitionFilters and Spark lists only nprobe
     directories, so query-time IO is nprobe/nlist of the corpus with ZERO
     corpus shuffle ever (the shuffle happened once, at write time)."""
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("vv")
-    )
-    sample = _train_sample(v, seed)
-    C = _lloyd(sample, nlist, seed)
-    assigned = _assign_cells(v, C)
+    v = _corpus(corpus)
+    assigned = _assign_cells(v, _lloyd(_train_sample(v, seed), nlist, seed))
     # one file per cell directory: the probe read should open O(nprobe)
     # files, not O(nprobe * shuffle_partitions)
     assigned.repartition("cell").write.partitionBy("cell").mode(
@@ -691,34 +596,33 @@ def ivf_probe_cells(
     nlist: int = 16,
     nprobe: int = 4,
     seed: int = 7,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
 ) -> DataFrame:
     """(query_id, qv, cell) probe assignments — retrains the deterministic
     quantizer (bounded sample, seeded: bit-identical centroids to the ones
     the layout was written with) and picks each query's nprobe nearest
     cells. Centroid training is the only corpus touch and is O(sample)."""
-    v = corpus.select(
-        F.col("vec_id").alias("vec_id"), as_double_array("embedding").alias("vv")
-    )
-    sample = _train_sample(v, seed)
-    C = _lloyd(sample, nlist, seed)
-    spark = corpus.sparkSession
-    cent = spark.createDataFrame(
+    v = _corpus(corpus)
+    return _nearest_cells(queries, _lloyd(_train_sample(v, seed), nlist, seed), nprobe)
+
+
+def _nearest_cells(queries: DataFrame, C: "np.ndarray", nprobe: int) -> DataFrame:
+    """(query_id, qv, cell) for each query's `nprobe` nearest centroids of
+    `C` by euclidean distance; the centroids broadcast as a small table."""
+    cent = queries.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cell int, cv array<double>",
     )
     d2 = F.aggregate(
-        F.zip_with(F.col(query_vec_col), F.col("cv"), lambda x, y: (x - y) * (x - y)),
+        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
     return rank_topk(
         queries.crossJoin(F.broadcast(cent)).select(
-            query_id_col, query_vec_col, "cell", d2.alias("d2")
+            "query_id", "qv", "cell", d2.alias("d2")
         ),
-        [query_id_col],
+        ["query_id"],
         [F.asc("d2"), F.asc("cell")],
         nprobe,
         rank_col="cell_rank",
-    ).select(query_id_col, query_vec_col, "cell")
+    ).select("query_id", "qv", "cell")

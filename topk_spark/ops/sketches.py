@@ -27,9 +27,14 @@ def exact_distinct(col: str) -> Column:
     return F.count_distinct(F.col(col)).cast("long")
 
 
-def hll_sketch(col: str, lg_k: int = 12) -> Column:
-    """HLL sketch aggregate (A8 done right): binary, mergeable, ~2^lg_k regs."""
-    return F.hll_sketch_agg(F.col(col), F.lit(lg_k))
+# log2 of the HLL register count: 4096 registers, ~1.6% standard error.
+_HLL_LG_K = 12
+
+
+def hll_sketch(col: str) -> Column:
+    """HLL sketch aggregate (A8 done right): binary, mergeable,
+    2^_HLL_LG_K registers."""
+    return F.hll_sketch_agg(F.col(col), F.lit(_HLL_LG_K))
 
 
 def hll_estimate(sketch_col: str | Column) -> Column:

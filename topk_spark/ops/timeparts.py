@@ -7,7 +7,7 @@ Pin down the reference's time semantics once, test them once, reuse everywhere:
   `dayofweek` is 1=Sunday, the reference uses java.time ISO 1=Monday → convert;
 - 64-bit revenue arithmetic (P5): the reference multiplies Int×Int before
   widening in one site (KafkaConsumerTopKJob.kt:187, a latent overflow bug) —
-  we standardize on widen-first.
+  the engine widens first (`streaming/job.py` derives `revenue_cents`).
 """
 
 from __future__ import annotations
@@ -37,13 +37,3 @@ def floor_to_window_ms(ts: Column | str, window_ms: int) -> Column:
     (ts_ms / window) * window (P7, KafkaConsumerTopKJob.kt:145-150)."""
     ms = epoch_ms(ts)
     return (ms - ms % F.lit(window_ms)).cast("long")
-
-
-def revenue_cents(quantity: Column | str, price_in_cents: Column | str) -> Column:
-    """Overflow-safe revenue: widen to long BEFORE multiplying (P5/S8;
-    orders_raw_upsert_table.json:54-59). Fixes the reference's Int×Int site."""
-    q = F.col(quantity) if isinstance(quantity, str) else quantity
-    p = F.col(price_in_cents) if isinstance(price_in_cents, str) else price_in_cents
-    return (q.cast("long") * p.cast("long")).alias("revenue_cents")
-
-

@@ -81,7 +81,6 @@ def rank_topk_with_ties(
     partition_keys: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "rnk",
 ) -> DataFrame:
     """Per-key top-k KEEPING ties (K2 variant — `RANK() <= k`, the
     WITH TIES semantics Pinot/SQL offer alongside row_number): rows equal
@@ -89,9 +88,6 @@ def rank_topk_with_ties(
     survives and the output is deterministic WITHOUT a tiebreak column —
     the correct choice when the metric is coarse (counts, integer grades)
     and arbitrarily dropping tied rows would misreport. Same single
-    shuffle as `rank_topk`."""
+    shuffle as `rank_topk`. The rank lands in column `rnk`."""
     w = Window.partitionBy(*partition_keys).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.rank().over(w).cast("int"))
-        .filter(F.col(rank_col) <= k)
-    )
+    return df.withColumn("rnk", F.rank().over(w).cast("int")).filter(F.col("rnk") <= k)

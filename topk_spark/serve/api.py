@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, Window
 
 from topk_spark.ops.topk import global_topk, rank_topk
 from topk_spark.schemas import GLOBAL_SENTINEL
-from topk_spark.streaming.decayed_topk import ZERO_SHIFT
 
 
 def _now_ms() -> int:
@@ -156,64 +155,6 @@ def topk_by_revenue(
     ]
     ranked = rank_topk(agg, ["restaurant_id"], order, k)
     return ranked.select(*_TOPK_COLUMNS)
-
-
-def topk_decayed(
-    rollup: DataFrame,
-    restaurant_id: str = "all",
-    as_of_ms: int | None = None,
-    half_life_ms: int = 86_400_000,
-    k: int = 10,
-) -> DataFrame:
-    """Recency-weighted leaderboard over the rollup tier — an EXTENSION
-    beyond the reference's three endpoints (which rank all-time/range
-    totals), using the engine's integer-exact decay (workload/
-    decay_queries.py): rollup windows are bucketed by `half_life_ms`, each
-    bucket's revenue sum is right-shifted by its age in half-lives
-    relative to `as_of_ms`, shifts >= ZERO_SHIFT contribute zero. Deterministic
-    for a fixed as_of, so results are replayable; serving-path shape is
-    the same bounded scan + tiny aggregate as the range reads."""
-    as_of_ms = as_of_ms if as_of_ms is not None else _now_ms()
-    base = rollup.filter(F.col("window_end") <= F.lit(as_of_ms))
-    is_global = restaurant_id.lower() == "all"
-    if not is_global:
-        base = base.filter(F.col("restaurant_id") == F.lit(restaurant_id))
-        keys = ["restaurant_id", "menu_item_id"]
-    else:
-        keys = ["menu_item_id"]
-    b = base.groupBy(
-        *keys, (F.col("window_start") - (F.col("window_start") % F.lit(half_life_ms))).alias("_bkt")
-    ).agg(
-        F.sum("sum_revenue_cents").cast("long").alias("_s"),
-        F.min("menu_item_name").alias("_name"),
-    )
-    bmax = as_of_ms - (as_of_ms % half_life_ms)
-    d = (
-        b.withColumn(
-            "_shift",
-            ((F.lit(bmax).cast("long") - F.col("_bkt")) / F.lit(half_life_ms))
-            .cast("int"),
-        )
-        .withColumn(
-            "_contrib",
-            F.when(
-                F.col("_shift") >= ZERO_SHIFT, F.lit(0).cast("long")
-            ).otherwise(F.expr("shiftright(_s, _shift)")),
-        )
-        .groupBy(*keys)
-        .agg(
-            F.sum("_contrib").cast("long").alias("decayed_revenue_cents"),
-            F.min("_name").alias("menu_item_name"),
-        )
-    )
-    if is_global:
-        d = d.withColumn("restaurant_id", F.lit(GLOBAL_SENTINEL))
-    order = [F.desc("decayed_revenue_cents"), F.asc("menu_item_id")]
-    ranked = rank_topk(d, ["restaurant_id"], order, k)
-    return ranked.select(
-        "restaurant_id", "menu_item_id", "menu_item_name", "rank",
-        "decayed_revenue_cents",
-    )
 
 
 def trending(

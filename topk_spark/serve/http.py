@@ -11,11 +11,11 @@ Plus two EXTENSION routes (each registered only when its tier is supplied):
 - GET /api/v1/trending?start_time=&end_time=&k=3   → serve/api.trending —
   ranked top-k per hop window, the live-leaderboard read
   (stream_sliding_topk_drain's serving story; same envelope, restaurantId
-  'TRENDING'). When `preranked_trending` is ALSO supplied, the route goes
-  through serve/router.TrendingRouter: fresh-and-shallow requests serve
-  from the materialized ranked rows (a pure range-pruned scan), the rest
-  rank on read — the measured-cheaper deployment shape (serve/router.py
-  TrendingRouter).
+  'TRENDING'). When `preranked_trending` (a ranked tier directory) is ALSO
+  supplied, the route goes through serve/router.TrendingRouter:
+  fresh-and-shallow requests serve from the materialized ranked rows (a
+  pure range-pruned scan), the rest rank on read — the measured-cheaper
+  deployment shape (serve/router.py TrendingRouter).
 - GET /api/v1/percentiles?start_time=&end_time=&pcts=50,90,99 →
   serve/api.percentiles — exact per-key value percentiles over a windowed
   histogram tier (the serving read for streaming/exact_quantile.py; the
@@ -78,7 +78,7 @@ def create_app(
     spark: SparkSession,
     rollup: DataFrame,
     trending_tier: DataFrame | None = None,
-    preranked_trending=None,
+    preranked_trending: str | None = None,
     histogram_tier: DataFrame | None = None,
     trending_window_ms: int = 3_600_000,
 ):
@@ -94,17 +94,14 @@ def create_app(
     caller must hand in a new DataFrame (a new app) to see newer files.
     `trending_tier`: optional SLIDING rollup tier (window_start/window_end/
     event_type/revenue_cents) — supplying it registers /api/v1/trending.
-    `preranked_trending`: optional materialized ranked rows (what the
-    trending drains emit) — with `trending_tier` it routes the trending
-    endpoint through TrendingRouter's freshness rule. Three forms:
-    a `upto_<W>` tier DIRECTORY path (the live deployment form, round-12
-    VERDICT #3 — the facade reads the ranked contract columns from it and
+    `preranked_trending`: optional `upto_<W>` tier DIRECTORY of the ranked
+    rows the trending drains emit — with `trending_tier` it routes the
+    trending endpoint through TrendingRouter's freshness rule (round-12
+    VERDICT #3: the facade reads the ranked contract columns from it and
     re-reads the committed frontier per REQUEST, one os.listdir, so a
     request arriving after the drain advances serves preranked without an
-    app rebuild while a stale frontier degrades to rank_on_read); a
-    serve/router.TierSpec (carry partition layout + a static or
-    directory-fed frontier yourself); or a bare DataFrame (one collect
-    probe at app build — the non-live fallback). Routed responses carry
+    app rebuild while a stale frontier degrades to rank_on_read). Routed
+    responses carry
     the decision in an `X-Trending-Route` header (the column contract is
     identical on both paths by design, so the header is the only
     observable).
@@ -199,27 +196,16 @@ def create_app(
                          rollup, restaurant_id, s, e, k))
 
     if trending_tier is not None:
-        _static_router = None
-        _ranked_dir = None
-        if preranked_trending is not None:
-            from topk_spark.serve.router import TierSpec, TrendingRouter
-
-            if isinstance(preranked_trending, str):
-                # tier DIRECTORY — the live deployment form: the router is
-                # rebuilt per REQUEST (no collect probe: the frontier comes
-                # from the upto_<W> listing, and re-reading the directory is
-                # what makes subdirs appended AFTER app build visible — a
-                # once-built DataFrame snapshots its file listing)
-                _ranked_dir = preranked_trending
-            else:
-                _static_router = TrendingRouter(
-                    preranked_trending, trending_tier
-                )
 
         def _trending_router():
-            if _ranked_dir is None:
-                return _static_router
+            # rebuilt per REQUEST: the frontier comes from the upto_<W>
+            # listing, and re-reading the directory is what makes subdirs
+            # appended AFTER app build visible — a once-built DataFrame
+            # snapshots its file listing
+            if preranked_trending is None:
+                return None
             from topk_spark.io.tier import read_tier, tier_frontier
+            from topk_spark.serve.router import TierSpec, TrendingRouter
 
             schema = (
                 "window_start long, window_end long, "
@@ -229,15 +215,15 @@ def create_app(
             # nothing closed) must still serve: empty preranked relation,
             # frontier None → every request ranks on read
             ranked = (
-                read_tier(spark, _ranked_dir, schema)
-                if tier_frontier(_ranked_dir) is not None
+                read_tier(spark, preranked_trending, schema)
+                if tier_frontier(preranked_trending) is not None
                 else spark.createDataFrame([], schema)
             )
             return TrendingRouter(
                 TierSpec(
                     df=ranked,
                     window_ms=trending_window_ms,
-                    frontier_dir=_ranked_dir,
+                    frontier_dir=preranked_trending,
                 ),
                 trending_tier,
             )

@@ -105,17 +105,13 @@ def set_state_store(spark: SparkSession, kind: str = "rocksdb") -> bool:
     return True
 
 
-def get_spark(
-    app_name: str = "topk_spark",
-    master: str | None = None,
-    state_store: str | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "topk_spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) a session configured for this engine.
 
     local[N] for tests/bench; on a real cluster the same confs apply —
     partitioning strategy is encoded in the operators, not the master URL.
-    `state_store="rocksdb"` selects the disk-backed streaming state store
-    (falls back to the default with a warning when the class is absent).
+    `set_state_store(spark, "rocksdb")` selects the disk-backed streaming
+    state store afterwards.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -128,6 +124,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if state_store is not None:
-        set_state_store(spark, state_store)
     return ensure_session_conf(spark)

@@ -44,16 +44,12 @@ SUMMARY_OUTPUT = StructType(
 _STATE_SCHEMA = StructType([StructField("summary_json", StringType(), True)])
 
 
-def streaming_mg_summary(
-    stream: DataFrame, key: str = "cohort", weight: str = "w", cap: int = 63
-) -> DataFrame:
-    """The continuous MG operator over a streaming (key, weight) frame.
+def streaming_mg_summary(stream: DataFrame, cap: int = 63) -> DataFrame:
+    """The continuous MG operator over a streaming (cohort, w) frame.
     Emits the full current summary (<= cap rows of (cohort, est)) every
     micro-batch; downstream consumers take the last emission per run (the
     drain filters to the final micro-batch id)."""
-    pre = stream.select(
-        F.col(key).alias("cohort"), F.col(weight).alias("w")
-    ).mapInPandas(lambda it: mg_summarize(it, cap), schema="cohort long, est long")
+    pre = stream.select("cohort", "w").mapInPandas(lambda it: mg_summarize(it, cap), schema="cohort long, est long")
 
     def merge(
         _key, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -52,16 +52,17 @@ Semantics vs the reference, pinned by tests/test_streaming.py:
   processing-time — SURVEY §7 risk 2, documented divergence).
 - Late data: rows whose window closed before their batch are dropped from
   rollups but retained in raw — matching the Flink path's default drop (T5).
-- Sinks are at-least-once; effective exactly-once comes from idempotent
-  batch dedup downstream (D4), the same layered design as the reference's
-  at-least-once producer + Pinot dedupConfig. A retried closer batch
-  replaces its own rollup files.
+- Sinks are at-least-once; effective exactly-once (D4) comes from the
+  watermark dedup in front of the raw sink and the closer's idempotent
+  retry — a retried closer batch replaces its own rollup files — the same
+  layered design as the reference's at-least-once producer + Pinot
+  dedupConfig.
 
 Scale: dedup state is one entry per event_id inside the horizon, hash-spread
 across executors; the closer keeps one partial row per (restaurant, item,
 open window) as parquet, about a minute of groups. Raw is partitioned by
-event_date so retention (S10) is a partition drop and time-range scans
-prune. The closer moves files with local file-system calls, like
+event_date so retention (S10) is a partition drop
+(`io.tier.drop_expired_partitions`) and time-range scans prune. The closer moves files with local file-system calls, like
 io/tier.py.
 """
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 import threading
 from collections import deque
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -39,11 +39,14 @@ class ProgressSnapshot:
     state_memory_bytes: int
 
 
-@dataclass
 class _QueryStats:
-    batches: int = 0
-    rows: int = 0
-    last: ProgressSnapshot | None = None
+    def __init__(self) -> None:
+        self.batches = 0
+        self.rows = 0
+        self.last: ProgressSnapshot | None = None
+
+
+_MAX_SNAPSHOTS = 256
 
 
 class TopKMetricsListener(StreamingQueryListener):
@@ -55,9 +58,9 @@ class TopKMetricsListener(StreamingQueryListener):
     the same numbers the reference's reporter logs every 30 s).
     """
 
-    def __init__(self, max_snapshots: int = 256) -> None:
+    def __init__(self) -> None:
         super().__init__()
-        self.snapshots: deque[ProgressSnapshot] = deque(maxlen=max_snapshots)
+        self.snapshots: deque[ProgressSnapshot] = deque(maxlen=_MAX_SNAPSHOTS)
         self._stats: dict[str, _QueryStats] = {}
         self._lock = threading.Lock()
 

@@ -14,7 +14,7 @@ Dataflow (one streaming query, no joins):
             ──groupBy(band_id, band_hash)──▶ applyInPandasWithState
             ──▶ (id, dup_of, est_ppm, band_id) match stream
 
-Per (band_id, band_hash) bucket the state holds up to `max_bucket`
+Per (band_id, band_hash) bucket the state holds up to `_MAX_BUCKET`
 canonical (id, signature) entries. An arriving doc whose signature agrees
 with a stored one on ≥ `est_threshold` of the `num_perm` MinHash
 components is emitted as a near-duplicate of that canonical (the MinHash
@@ -30,7 +30,7 @@ therefore at-least-once per pair and consumers take
 uniond then verified once.
 
 Scale posture: the only shuffle keys are (band_id, band_hash) — hashes,
-never text. State per bucket is ≤ max_bucket × num_perm × 8 bytes
+never text. State per bucket is ≤ _MAX_BUCKET × num_perm × 8 bytes
 (default 8 × 64 × 8 = 4 KiB) regardless of corpus size; bucket count is
 bounded by the hash space actually touched, hash-spread across executors
 (RocksDB store in production). Signatures ride the band rows (B copies)
@@ -93,8 +93,11 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
+# Canonical docs stored per (band_id, band_hash) bucket.
+_MAX_BUCKET = 8
+
 # Per-(bucket, micro-batch) row bound for the deterministic concat-sort:
-# max_bucket caps STORED canonicals, not arrivals, so a flood of
+# _MAX_BUCKET caps STORED canonicals, not arrivals, so a flood of
 # near-identical docs into one bucket needs its own cap (see _bucket_update).
 _MAX_BUCKET_BATCH = 4096
 
@@ -225,7 +228,6 @@ def neardup_match_stream(
     num_perm: int = 64,
     bands: int = 16,
     est_threshold: float = 0.6,
-    max_bucket: int = 8,
 ) -> DataFrame:
     """Streaming near-dup matches: (id, dup_of, est_ppm, band_id), at
     least once per matching band. Attach any sink; batch-drain consumers
@@ -234,7 +236,7 @@ def neardup_match_stream(
         docs, id_col, text_col, shingle_n, num_perm, bands
     )
     return rows.groupBy("band_id", "band_hash").applyInPandasWithState(
-        _bucket_update(num_perm, est_threshold, max_bucket),
+        _bucket_update(num_perm, est_threshold, _MAX_BUCKET),
         MATCH_SCHEMA,
         _STATE_SCHEMA,
         "append",

@@ -53,12 +53,12 @@ def perturbed_corpus(
     )
 
 
-def perturbed_hsh(spark, sf_dir: str, modulo: int = 5, shingle_n: int = 3):
+def perturbed_hsh(spark, sf_dir: str, modulo: int = 5):
     """Write-once materialized (id, hashed-shingles) table for the
     perturbed corpus — the per-snapshot signature table the dedup queries
     share. Multiple consumers (prefix probes, posting indexes, verify
     joins, clustering) would otherwise each re-run the tokenize/hash
-    kernel scan; materializing once per (sf, modulo, n) matches the
+    kernel scan; materializing once per (sf, modulo) matches the
     production discipline of building signatures once per corpus
     snapshot."""
     from topk_spark.ops.layout import layout_cache_root, materialize_once
@@ -70,9 +70,9 @@ def perturbed_hsh(spark, sf_dir: str, modulo: int = 5, shingle_n: int = 3):
     # change never silently reuses a cache written by old code.
     path = materialize_once(
         layout_cache_root(
-            sf_dir, f"pert{modulo}_hsh{shingle_n}", version=SIG_KERNEL_VERSION
+            sf_dir, f"pert{modulo}_hsh3", version=SIG_KERNEL_VERSION
         ),
-        lambda p: hashed_shingles(corpus, "doc_id", "text", shingle_n)
+        lambda p: hashed_shingles(corpus, "doc_id", "text", 3)
         .write.mode("overwrite")
         .parquet(p),
     )

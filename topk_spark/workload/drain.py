@@ -23,7 +23,7 @@ Source layouts:
   broadcast, no global-order window), which makes arrival order ==
   event-time order: what lets a relational oracle predict cross-batch
   first-seen, join-emission and window-close semantics exactly (the oracles
-  reproduce the boundary arithmetic via `tile_expr_sql`/`bounds_sql`). This
+  reproduce the boundary arithmetic via `TILE_EXPR_SQL`/`bounds_sql`). This
   is the topology a production backfill uses too: range-split by time
   partitions. A caller-built `_tile` expresses NON-monotone schedules (e.g.
   stale replays of early rows arriving in a late tile).
@@ -77,7 +77,7 @@ def range_tile(df: DataFrame, col: str, n: int) -> DataFrame:
     onto the rows — no global-order window (an `ntile(n) OVER (ORDER BY
     col)` is a single-partition sort of the whole source; a 100×-scale
     fixture prep cannot afford that). Exact integer microsecond arithmetic,
-    reproduced verbatim in the DuckDB oracles via `tile_expr_sql`:
+    reproduced verbatim in the DuckDB oracles via `TILE_EXPR_SQL`:
 
         tile = least(n-1, (us - tmin) * n div (tmax - tmin + 1))
 
@@ -108,24 +108,17 @@ def range_tile(df: DataFrame, col: str, n: int) -> DataFrame:
     )
 
 
-def tile_expr_sql(ts: str = "ts", n: int = 3) -> str:
-    """Oracle-side twin of `range_tile`'s arithmetic, expecting a joined
-    relation `b(tmin, tmax)` in scope (see `bounds_sql`). DuckDB `//` is
-    BIGINT floor division; both operands are non-negative, so it agrees
-    exactly with Spark's `div`."""
-    return (
-        f"CAST(least({n - 1}, (epoch_us({ts}) - b.tmin) * {n}"
-        f" // (b.tmax - b.tmin + 1)) AS INT)"
-    )
+# Oracle-side twin of `range_tile(df, "ts", 3)`'s arithmetic, expecting a
+# joined relation `b(tmin, tmax)` in scope (see `bounds_sql`). DuckDB `//`
+# is BIGINT floor division; both operands are non-negative, so it agrees
+# exactly with Spark's `div`.
+TILE_EXPR_SQL = "CAST(least(2, (epoch_us(ts) - b.tmin) * 3 // (b.tmax - b.tmin + 1)) AS INT)"
 
 
-def bounds_sql(rel: str, ts: str = "ts") -> str:
+def bounds_sql(rel: str) -> str:
     """`b AS (...)` body: the min/max microsecond bounds of `rel`.`ts` —
     MUST range over exactly the rows the Spark side passed to range_tile."""
-    return (
-        f"(SELECT epoch_us(min({ts})) AS tmin, epoch_us(max({ts})) AS tmax"
-        f" FROM {rel})"
-    )
+    return f"(SELECT epoch_us(min(ts)) AS tmin, epoch_us(max(ts)) AS tmax FROM {rel})"
 
 
 _WRITERS = "spark.sql.maxConcurrentOutputFileWriters"

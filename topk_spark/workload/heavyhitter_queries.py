@@ -50,11 +50,11 @@ from topk_spark.io.sources import load_table
 from topk_spark.ops.mg_sketch import mg_summarize
 from topk_spark.workload import register
 from topk_spark.workload.drain import (
+    TILE_EXPR_SQL,
     bounds_sql,
     drain,
     drain_tmpdir,
     range_tile,
-    tile_expr_sql,
 )
 from topk_spark.workload.events_queries import _ES as _EV_ES, exact_percentiles_sql
 
@@ -64,22 +64,21 @@ from topk_spark.workload.events_queries import _ES as _EV_ES, exact_percentiles_
 _CAP = 63
 
 
-def heavy_hitters_weighted(
-    ev: DataFrame, key: str = "cohort", weight: str = "w", cap: int = _CAP
-) -> DataFrame:
-    """Two-pass exact heavy hitters: MG candidates, then exact rescore of
-    candidates with threshold T = floor(W/(cap+1)) + 1. Returns
-    (key, total_w) for every key whose exact weighted count >= T."""
-    slim = ev.select(F.col(key).alias("cohort"), F.col(weight).alias("w"))
+def heavy_hitters_weighted(ev: DataFrame) -> DataFrame:
+    """Two-pass exact heavy hitters over (cohort, w): MG candidates, then
+    exact rescore of candidates with threshold T = floor(W/(_CAP+1)) + 1.
+    Returns (cohort, total_w) for every cohort whose exact weighted count
+    >= T."""
+    slim = ev.select("cohort", "w")
     cand = (
         slim.mapInPandas(
-            lambda it: mg_summarize(it, cap), schema="cohort long, est long"
+            lambda it: mg_summarize(it, _CAP), schema="cohort long, est long"
         )
         .select("cohort")
         .distinct()
     )
     thresh = slim.agg(F.sum("w").cast("long").alias("W")).select(
-        (F.floor(F.col("W") / (cap + 1)) + 1).cast("long").alias("T")
+        (F.floor(F.col("W") / (_CAP + 1)) + 1).cast("long").alias("T")
     )
     exact = (
         slim.join(F.broadcast(cand), "cohort")
@@ -89,7 +88,7 @@ def heavy_hitters_weighted(
     return (
         exact.crossJoin(F.broadcast(thresh))
         .where(F.col("total_w") >= F.col("T"))
-        .select(F.col("cohort").alias(key), "total_w")
+        .select("cohort", "total_w")
     )
 
 
@@ -135,7 +134,7 @@ WITH b AS {bounds_sql("events")},
 e AS (
   SELECT user_id % 97 AS cohort,
          CASE WHEN (user_id % 97) % 19 = 0 AND tile = 0 THEN 20 ELSE 1 END AS w
-  FROM (SELECT user_id, {tile_expr_sql()} AS tile
+  FROM (SELECT user_id, {TILE_EXPR_SQL} AS tile
         FROM events CROSS JOIN b)
 ),
 tot AS (SELECT CAST(SUM(w) AS BIGINT) AS wtot FROM e)

@@ -4,7 +4,7 @@ The reference's signature operator (ProcessFunctions.kt:62-134) emits an
 updated ranked list after EVERY element. `stream_topk_drain` pins our
 micro-batch-granular equivalent (the scale-sane default); THIS drain pins
 the full-granularity parity operator
-(`streaming/continuous_topk_tws.py::continuous_topk_per_event`): one
+(`streaming/continuous_topk.py::continuous_topk_per_event`): one
 ranked snapshot per input event, tagged with the triggering event id and a
 per-key sequence number that must stay monotone across micro-batch
 boundaries. The drain runs the applyInPandasWithState path.
@@ -85,7 +85,7 @@ def _per_event_topk_drain(
     event-time-ordered tiles: the exact regime (k=10 over an 8-item domain)
     or, with `trunc`, the lossy one (every _TRUNC_MOD-th event, k below the
     item domain)."""
-    from topk_spark.streaming.continuous_topk_tws import continuous_topk_per_event
+    from topk_spark.streaming.continuous_topk import continuous_topk_per_event
 
     ev = load_table(spark, sf_dir, "events")
     dom, k, emit_k = 8, 10, 3

@@ -261,8 +261,8 @@ def multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash match. Blobs stay map-side (mapInPandas); only typed metadata
     leaves the scan. The fixture payloads are grayscale; the codec also
     does 3-component YCbCr 4:2:0 baseline color (the standard corpus
-    layout — ops/multimodal.py:encode_jpeg_color_pixels/_decode_scan_420),
-    cycle-pinned by tests/test_properties.py's color laws (luma bound on
+    layout — ops/multimodal.py:_decode_scan_420, encoded by
+    tests/test_properties.py, cycle-pinned by its color laws (luma bound on
     arbitrary content, full-RGB bound on chroma-smooth content)."""
     from topk_spark.ops.multimodal import decode_metadata, make_image_payload
 

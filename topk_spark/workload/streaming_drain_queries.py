@@ -71,11 +71,11 @@ from topk_spark.ops.money import cents
 from topk_spark.ops.timeparts import floor_to_window_ms
 from topk_spark.workload import REGISTRY, register
 from topk_spark.workload.drain import (
+    TILE_EXPR_SQL,
     bounds_sql,
     drain,
     drain_tmpdir,
     range_tile,
-    tile_expr_sql,
     under_rocksdb,
 )
 from topk_spark.workload.events_queries import _ES, order_stream
@@ -141,7 +141,7 @@ _DEDUP_MULTIBATCH_ORACLE = f"""
 WITH {_ES},
 b AS {bounds_sql("es")},
 t AS (
-  SELECT es.*, {tile_expr_sql()} AS tile,
+  SELECT es.*, {TILE_EXPR_SQL} AS tile,
          row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts)
            AS rn
   FROM es CROSS JOIN b
