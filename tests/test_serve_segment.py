@@ -129,6 +129,55 @@ def test_segment_matches_spark_path_byte_for_byte(spark, tier):
     assert routes["segment"] >= 150 and routes["spark"] >= 25, routes
 
 
+WIDE = BASE + 40 * HOUR  # a separate tier: 6 hot hours from here
+
+
+def _wide_rows(seed: int = 5) -> list[tuple]:
+    """Six hours of 1- and 5-minute windows (none crossing an hour edge)
+    for three restaurants, so whole hours come from the hour partials."""
+    rng = random.Random(seed)
+    rows = []
+    for m in range(6 * 60):
+        start = WIDE + m * MIN
+        for r in range(3):
+            for i in range(5):
+                if rng.random() < 0.25:
+                    length = 5 if m % 60 < 55 and rng.random() < 0.2 else 1
+                    rows.append((
+                        f"R{r}", f"I{i}", rng.choice(NAMES[i:i + 2]),
+                        start, start + length * MIN, rng.randint(1, 3),
+                        rng.randint(1, 4), rng.choice((100, 200, 300)),
+                    ))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def wide_tier(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("segment") / "wide")
+    spark.createDataFrame(_wide_rows(), SCHEMA).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_segment_matches_spark_on_ranges_across_hours(spark, wide_tier):
+    """Bounds off minute boundaries, ranges crossing hour edges: the hour
+    partials' edge logic, against the Spark facade byte for byte."""
+    assert segment.build(wide_tier)._hours is not None
+    app, client = _client(spark, wide_tier)
+    rng = random.Random(12)
+    crossed = 0
+    for _ in range(100):
+        start = WIDE + rng.randrange(-30 * MIN, 6 * HOUR)
+        end = start + rng.randrange(-5 * MIN, 4 * HOUR)
+        if rng.random() < 0.2:  # one bound on an hour edge
+            start = start - start % HOUR
+        crossed += end // HOUR - -(-start // HOUR) >= 1  # holds a whole hour
+        revenue = rng.random() < 0.4
+        rid = rng.choice(["R0", "R1", "R2", "R9", "all"])
+        k = rng.choice((0, 1, 3, 50, rng.randint(1, 6)))
+        _assert_same(app, client, wide_tier, rid, revenue, start, end, k, "segment")
+    assert crossed >= 40, crossed
+
+
 def test_segment_breaks_ties_like_spark(spark, tier):
     app, client = _client(spark, tier)
     start, end = HOT + 10 * MIN, HOT + 21 * MIN
@@ -193,6 +242,28 @@ def test_overflow_guard_goes_to_spark(spark):
     # both windows summed: the pinned-ANSI Spark sum raises, as before
     r = _get(client, "R0", False, HOT, HOT + 2 * MIN, 5)
     assert r.status_code == 500 and "ARITHMETIC_OVERFLOW" in r.get_json()["error"]
+
+
+def test_window_ending_before_it_starts_goes_to_spark(spark):
+    backwards = ("R0", "X", "x", HOT + 5 * MIN, HOT + 4 * MIN, 1, 1, 100)
+    rollup = _tier_with(spark, [backwards])
+    app, client = _client(spark, rollup)
+    for rid, revenue in (("R0", False), ("all", False), ("R0", True)):
+        _assert_same(app, client, rollup, rid, revenue, HOT, HOT + 4 * MIN, 5, "spark")
+
+
+def test_window_across_an_hour_edge_reads_minutes(spark):
+    """A window that ends past its start's hour fits no hour partial: the
+    segment keeps none and sums minute rows, still exactly."""
+    edge = WIDE + 2 * HOUR
+    across = ("R0", "I0", "z", edge - MIN, edge + MIN, 50, 1, 10**6)
+    rollup = spark.createDataFrame(_wide_rows() + [across], SCHEMA)
+    assert segment.build(rollup)._hours is None
+    app, client = _client(spark, rollup)
+    for start, end in ((edge - HOUR, edge), (edge, edge + HOUR),
+                       (edge - HOUR, edge + HOUR)):
+        for rid, revenue in (("all", False), ("all", True), ("R0", False)):
+            _assert_same(app, client, rollup, rid, revenue, start, end, 3, "segment")
 
 
 def test_row_cap_goes_to_spark(spark, tier, monkeypatch):

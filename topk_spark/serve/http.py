@@ -40,12 +40,14 @@ HTTP stack; `create_app` raises a clear error if Flask is absent.
 Serving-path posture: the three top-K routes answer from a hot segment
 (serve/segment.py), the reference's in-memory realtime segment: on the
 first top-K request the app copies the newest 24 h of the rollup DataFrame
-into one driver-side Arrow table and then answers with `pyarrow.compute`,
-no Spark job per request. It is bounded three ways: it is built only over a
-snapshot DataFrame (non-streaming, every plan leaf a fixed file listing or
-local data), it holds at most 24 h and 1,000,000 rows, and it answers only
-requests whose start is inside those 24 h and that it can answer exactly
-(no nulls, no sum that could pass 2^63, k in 0..2^31-1). Everything else
+into driver memory and indexes it (rows sorted by restaurant and window
+start, coded item keys, per-hour partials for global reads), then answers
+from the index with numpy, no Spark job per request. It is bounded three
+ways: it is built only over a snapshot DataFrame (non-streaming, every plan
+leaf a fixed file listing or local data), it holds at most 24 h and
+1,000,000 rows, and it answers only requests whose start is inside those
+24 h and that it can answer exactly (no nulls, no sum that could pass 2^63,
+no window ending before it starts, k in 0..2^31-1). Everything else
 runs today's Spark plan (serve/api.py). Each top-K response names the path
 in an `X-TopK-Route: segment|spark` header; the body is the same bytes on
 both paths.

@@ -1,14 +1,30 @@
-"""Hot top-K segment: the newest 24 h of the rollup tier held as one
-driver-side Arrow table, answering the three reference top-K routes with
-`pyarrow.compute` and no Spark job per request — the role Pinot's in-memory
-realtime segments play for the reference's REST reads (PAPER.md §1.1).
+"""Hot top-K segment: the newest 24 h of the rollup tier copied once into
+driver memory and indexed, answering the three reference top-K routes with
+numpy over the index and no Spark job per request — the role Pinot's
+in-memory realtime segments play for the reference's REST reads (PAPER.md §1.1).
 
 Built once, on the first top-K request (`HotSegment.read`, under a lock:
 Flask's server is threaded), by two Spark actions: one scalar
 `max(window_start)` and one `toArrow()` of the rows at or after
-`cutoff = max(window_start) - HOT_SPAN_MS`. A read then runs the same four
-steps as serve/api.py's plan: closed-containment mask, group-by with
-sum-of-sums / min / max, the same deterministic sort keys, first k rows.
+`cutoff = max(window_start) - HOT_SPAN_MS`. `index` then lays the rows out
+the way Pinot lays out the reference's 1-minute rollup table, sorted on
+`(restaurant_id, window_start_1m)` with star-tree SUM pairs
+(`orders_1m_rollup_table.json:16-20,29-45`), in Arrow and numpy kernels:
+
+- Minute rows sorted by (restaurant, window_start), with per-restaurant
+  offsets: a point read is a dict lookup and two binary searches.
+- Item ids and names coded against their distinct values sorted ascending,
+  so code order is Arrow's and Spark's UTF-8 byte order and
+  `min(menu_item_name)` is the name of the smallest code.
+- Hour partials: per (hour, item) sums, `min(window_start)`,
+  `max(window_end)` and `min(menu_item_name)`, which compose exactly. A
+  global read sums the whole hours inside its range from them and reads
+  minute rows, through a window_start-sorted permutation, only at the two
+  edges — the tiling serve/router.TierRouter does for histogram tiers.
+
+A read then runs serve/api.py's plan on the rows it selected: group per
+item code with int64 sum-of-sums / min / max (sort by code, `reduceat`),
+rank with the same keys and tie-breaks (`np.lexsort`), first k rows.
 
 Every rule below keeps a segment answer byte-identical to the Spark path;
 a request the segment cannot answer exactly gets `None` and goes to Spark.
@@ -25,17 +41,25 @@ a request the segment cannot answer exactly gets `None` and goes to Spark.
   segment past that). A request is answered iff `start >= cutoff`: closed
   containment then puts every window it sums inside the table.
 - Exact. No segment when a key, window bound or summed column holds a null
-  (Arrow sorts nulls last for ascending keys, Spark first), when a key
-  column is not a string or a number column not an integer, or when
-  `max|x| * rows >= 2^63` for a summed column (Arrow's hash sum wraps,
-  the pinned-ANSI Spark sum raises). k outside 0..2^31-1 and range bounds
-  outside the long range go to Spark, so its errors stay as they are.
+  (the index's int64 columns have none; Spark groups and sorts them), when
+  a key column is not a string or a number column not an integer, when
+  `max|x| * rows >= 2^63` for a summed column (an int64 sum would wrap,
+  the pinned-ANSI Spark sum raises), or when a window ends before it
+  starts (reads bound window_start by the range end). k outside
+  0..2^31-1 and range bounds outside the long range go to Spark, so its
+  errors stay as they are.
+- Hour partials only when every window ends inside the hour its start
+  falls in (a window ending at the long minimum counts as outside).
+  Otherwise a global read sums minute rows over its whole range: still
+  the segment, still exact, slower.
 """
 
 from __future__ import annotations
 
 import threading
+from itertools import count, repeat
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
@@ -46,7 +70,8 @@ from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, String
 from topk_spark.schemas import GLOBAL_SENTINEL
 from topk_spark.serve.api import _TOPK_COLUMNS
 
-HOT_SPAN_MS = 24 * 3_600_000
+HOUR_MS = 3_600_000
+HOT_SPAN_MS = 24 * HOUR_MS
 MAX_ROWS = 1_000_000
 
 _STRINGS = ("restaurant_id", "menu_item_id", "menu_item_name")
@@ -60,22 +85,10 @@ _INT_MAX = 2**31 - 1
 _SNAPSHOT_LEAVES = {"LocalRelation", "LogicalRDD", "Range"}
 _SNAPSHOT_INDEXES = {"InMemoryFileIndex", "MetadataLogFileIndex"}
 
-# group-by output → response column (serve/api._aggregate_range's names)
-_AGGS = (
-    ("order_count", "sum", "order_count"),
-    ("sum_quantity", "sum", "total_quantity"),
-    ("sum_revenue_cents", "sum", "total_revenue_in_cents"),
-    ("window_start", "min", "window_start"),
-    ("window_end", "max", "window_end"),
-    ("menu_item_name", "min", "menu_item_name"),
-)
-_OUT = {f"{c}_{fn}": out for c, fn, out in _AGGS}
-_BY_COUNT = [("order_count", "descending"), ("menu_item_id", "ascending")]
-_BY_REVENUE = [
-    ("total_revenue_in_cents", "descending"),
-    ("window_end", "descending"),
-    ("menu_item_id", "ascending"),
-]
+# The rows of an index matrix: one int64 row per field, one column per
+# rollup row (or per hour partial). Summed fields, then min, then max.
+_ITEM, _COUNT, _QTY, _REV, _START, _NAME, _END = range(7)
+_SUMS, _MINS = slice(_COUNT, _START), slice(_START, _END)
 
 
 def is_snapshot(df: DataFrame) -> bool:
@@ -106,9 +119,9 @@ def _exact_types(df: DataFrame) -> bool:
     )
 
 
-def build(rollup: DataFrame) -> tuple[pa.Table, int] | None:
-    """The hot span of `rollup` as an Arrow table and its cutoff, or None
-    when a segment could not answer exactly."""
+def build(rollup: DataFrame) -> _Index | None:
+    """The hot span of `rollup`, indexed, or None when a segment could not
+    answer exactly."""
     if not _exact_types(rollup) or not is_snapshot(rollup):
         return None
     newest = rollup.agg(F.max("window_start")).first()[0]
@@ -123,13 +136,135 @@ def build(rollup: DataFrame) -> tuple[pa.Table, int] | None:
     )
     if table.num_rows > MAX_ROWS:
         return None
-    if any(table[c].null_count for c in _NOT_NULL):
+    return index(table, cutoff)
+
+
+def _coded(col: pa.ChunkedArray) -> tuple[np.ndarray, pa.Array]:
+    """`col` as int64 codes into its distinct values sorted ascending, and
+    those values followed by one null: a null codes to that last slot."""
+    enc = col.combine_chunks().dictionary_encode()
+    order = pc.sort_indices(enc.dictionary)
+    rank = np.empty(len(order) + 1, np.int64)
+    rank[order.to_numpy()] = np.arange(len(order))
+    rank[-1] = len(order)
+    values = pa.concat_arrays(
+        [enc.dictionary.take(order), pa.nulls(1, enc.dictionary.type)]
+    )
+    return rank[enc.indices.fill_null(len(order)).to_numpy()], values
+
+
+def _group(rows: np.ndarray, key: np.ndarray) -> np.ndarray:
+    """One column per distinct `key`, in key order: its rows' fields summed,
+    min'd or max'd (the item field is the same for every row of a key)."""
+    order = np.argsort(key)
+    key, rows = key[order], rows.take(order, axis=1)
+    first = np.flatnonzero(np.diff(key, prepend=key[:1] - 1))
+    out = np.empty((rows.shape[0], first.size), np.int64)
+    out[_ITEM] = rows[_ITEM, first]
+    out[_SUMS] = np.add.reduceat(rows[_SUMS], first, axis=1)
+    out[_MINS] = np.minimum.reduceat(rows[_MINS], first, axis=1)
+    out[_END] = np.maximum.reduceat(rows[_END], first)
+    return out
+
+
+def index(table: pa.Table, cutoff: int) -> _Index | None:
+    """`table`'s rollup rows (the hot span from `cutoff` on) indexed for
+    `_Index.read`, or None when the index could not answer exactly."""
+    if not table.num_rows or any(table[c].null_count for c in _NOT_NULL):
         return None
+    ints = {c: table[c].to_numpy().astype(np.int64, copy=False)
+            for c in (*_WINDOW, *_SUMMED)}
     for c in _SUMMED:
-        lo, hi = pc.min_max(table[c]).values()
-        if max(abs(lo.as_py()), abs(hi.as_py())) * table.num_rows >= 2**63:
+        bound = max(abs(int(ints[c].min())), abs(int(ints[c].max())))
+        if bound * table.num_rows >= 2**63:
             return None
-    return table, cutoff
+    if np.any(ints["window_end"] < ints["window_start"]):
+        return None
+    rids, restaurants = _coded(table["restaurant_id"])
+    items, item_ids = _coded(table["menu_item_id"])
+    names, item_names = _coded(table["menu_item_name"])
+    rows = np.stack([items, *(ints[c] for c in _SUMMED), ints["window_start"],
+                     names, ints["window_end"]])
+    order = np.lexsort((rows[_START], rids))
+    rows, rids = rows.take(order, axis=1), rids[order]
+    offsets = np.searchsorted(rids, np.arange(len(restaurants))).tolist()
+    # the trailing null slot has no next offset, so zip leaves it out
+    blocks = dict(zip(restaurants.to_pylist(), zip(offsets, offsets[1:])))
+
+    by_start = np.argsort(rows[_START])
+    starts = rows[_START, by_start]
+    hours = None
+    hour = rows[_START] // HOUR_MS
+    if np.all((rows[_END] - 1) // HOUR_MS <= hour):  # ends by its hour's end
+        hour -= hour.min()
+        hours = _group(rows, hour * len(item_ids) + rows[_ITEM])
+    return _Index(cutoff, rows, blocks, by_start, starts, hours, item_ids, item_names)
+
+
+class _Index:
+    """The indexed hot span (see the module docstring); read-only once
+    built, so concurrent reads need no lock."""
+
+    def __init__(self, cutoff, rows, blocks, by_start, starts, hours,
+                 item_ids, item_names):
+        self.cutoff = cutoff
+        self._rows = rows  # minute rows, sorted by (restaurant, start)
+        self._blocks = blocks  # restaurant_id -> its (lo, hi) columns
+        self._by_start = by_start  # columns in window_start order
+        self._starts = starts  # window_start in that order
+        self._hours = hours  # hour partials in (hour, item) order, or None
+        self._hour_of = None if hours is None else hours[_START] // HOUR_MS
+        self._item_ids = item_ids
+        self._item_names = item_names
+
+    def read(self, restaurant_id: str | None, start: int, end: int, k: int,
+             by_revenue: bool) -> list[dict]:
+        """serve/api.py's top-k rows over [start, end] (closed containment)
+        for one restaurant, or for all under the sentinel id when None."""
+        rows = (self._global(start, end) if restaurant_id is None
+                else self._point(restaurant_id, start, end))
+        g = _group(rows, rows[_ITEM])
+        if by_revenue:
+            keys = (g[_ITEM], ~g[_END], ~g[_REV])  # ~x: descending, no overflow
+        else:
+            keys = (g[_ITEM], ~g[_COUNT])
+        top = g[:, np.lexsort(keys)[:k]]
+        rid = GLOBAL_SENTINEL if restaurant_id is None else restaurant_id
+        cols = zip(
+            repeat(rid),
+            self._item_ids.take(top[_ITEM]).to_pylist(),
+            self._item_names.take(top[_NAME]).to_pylist(),
+            count(1),
+            *top[[_COUNT, _QTY, _REV, _START, _END]].tolist(),
+        )
+        return [dict(zip(_TOPK_COLUMNS, row)) for row in cols]
+
+    def _point(self, restaurant_id: str, start: int, end: int) -> np.ndarray:
+        lo, hi = self._blocks.get(restaurant_id, (0, 0))
+        starts = self._rows[_START, lo:hi]
+        # a window ends no earlier than it starts: none starting after end
+        a = lo + np.searchsorted(starts, start)
+        b = lo + np.searchsorted(starts, end, "right")
+        rows = self._rows[:, a:b]
+        return rows.compress(rows[_END] <= end, axis=1)
+
+    def _minutes(self, lo: int, hi: int, end: int) -> np.ndarray:
+        """Minute rows starting in [lo, hi] and ending by `end`."""
+        a = np.searchsorted(self._starts, lo)
+        b = np.searchsorted(self._starts, hi, "right")
+        rows = self._rows.take(self._by_start[a:b], axis=1)
+        return rows.compress(rows[_END] <= end, axis=1)
+
+    def _global(self, start: int, end: int) -> np.ndarray:
+        h0, h1 = -(-start // HOUR_MS), end // HOUR_MS  # whole hours h0..h1-1
+        if self._hours is None or h0 >= h1:
+            return self._minutes(start, end, end)
+        a, b = np.searchsorted(self._hour_of, (h0, h1))
+        return np.concatenate((
+            self._minutes(start, h0 * HOUR_MS - 1, end),
+            self._hours[:, a:b],
+            self._minutes(h1 * HOUR_MS, end, end),
+        ), axis=1)
 
 
 class HotSegment:
@@ -140,9 +275,9 @@ class HotSegment:
         self._rollup = rollup
         self._lock = threading.Lock()
         self._built = False
-        self._segment: tuple[pa.Table, int] | None = None
+        self._segment: _Index | None = None
 
-    def _load(self) -> tuple[pa.Table, int] | None:
+    def _load(self) -> _Index | None:
         if not self._built:
             with self._lock:
                 if not self._built:
@@ -162,29 +297,10 @@ class HotSegment:
         all restaurants, sentinel 'ALL'), ranked by order_count or by
         revenue — what serve/api.py's three reads collect, or None when
         the request must go to Spark."""
-        if not (0 <= k <= _INT_MAX and _LONG_MIN <= end_ms <= _LONG_MAX
-                and start_ms <= _LONG_MAX):
+        if not (0 <= k <= _INT_MAX and _LONG_MIN <= start_ms <= _LONG_MAX
+                and _LONG_MIN <= end_ms <= _LONG_MAX):
             return None
         segment = self._load()
-        if segment is None or start_ms < segment[1]:
+        if segment is None or start_ms < segment.cutoff:
             return None
-        table = segment[0]
-        mask = pc.and_(
-            pc.greater_equal(table["window_start"], start_ms),
-            pc.less_equal(table["window_end"], end_ms),
-        )
-        if restaurant_id is not None:
-            mask = pc.and_(mask, pc.equal(table["restaurant_id"], restaurant_id))
-        agg = table.filter(mask).group_by("menu_item_id").aggregate(
-            [(c, fn) for c, fn, _ in _AGGS]
-        )
-        agg = agg.rename_columns([_OUT.get(c, c) for c in agg.column_names])
-        top = agg.sort_by(_BY_REVENUE if by_revenue else _BY_COUNT).slice(0, k)
-        cols = top.to_pydict()
-        cols["restaurant_id"] = [
-            GLOBAL_SENTINEL if restaurant_id is None else restaurant_id
-        ] * top.num_rows
-        cols["rank"] = range(1, top.num_rows + 1)
-        return [dict(zip(_TOPK_COLUMNS, row))
-                for row in zip(*(cols[c] for c in _TOPK_COLUMNS))]
-
+        return segment.read(restaurant_id, start_ms, end_ms, k, by_revenue)
