@@ -13,7 +13,7 @@ import pyarrow as pa
 from topk_spark.serve import segment
 
 MIN = 60_000
-HOUR = segment.HOUR_MS
+HOUR = 60 * MIN
 BASE = 1_704_067_200_000  # 2024-01-01T00:00:00Z, an hour edge
 IDS = ["a", "ab", "B", "é", "e", "Z", "ω", "z"]
 NAMES = ["Pad Thai", "pad thai", "Ωmega bowl", "Éclair", "Z", "a", None]
@@ -30,7 +30,7 @@ def _table(rows: list[tuple]) -> pa.Table:
 
 
 def _random_rows(seed: int) -> list[tuple]:
-    """Four restaurants over 5 hours of 1-, 2- and 10-minute windows, none
+    """Four restaurants over 5 hours of 1-, 2- and 10-minute windows, some
     crossing an hour edge; small metrics so counts and revenues tie; names
     that vary per window and are sometimes null."""
     rng = random.Random(seed)
@@ -41,7 +41,6 @@ def _random_rows(seed: int) -> list[tuple]:
             for item in IDS:
                 if rng.random() < 0.15:
                     length = rng.choice((1, 1, 2, 10))
-                    length = min(length, 60 - m % 60)
                     rows.append((
                         f"R{r}", item, rng.choice(NAMES), start,
                         start + length * MIN, rng.randint(0, 3),
@@ -89,7 +88,6 @@ def test_index_matches_reference_on_random_tables():
     for seed in range(4):
         rows = _random_rows(seed)
         ix = segment.index(_table(rows), BASE)
-        assert ix is not None and ix._hours is not None  # hour partials in use
         rng = random.Random(seed)
         bounds = [BASE + m * MIN for m in range(0, 5 * 60 + 1, 10)]
         for _ in range(150):
@@ -167,7 +165,6 @@ def test_rows_at_the_cutoff_and_an_hour_edge():
         ("R1", "d", "v", edge - 1, edge, 5, 1, 100),  # the hour's last ms
     ]
     ix = segment.index(_table(rows), BASE)
-    assert ix is not None and ix._hours is not None
     for rid in ("R0", None):
         for start, end in [
             (BASE, edge), (BASE, edge - 1), (BASE + 1, edge), (edge - MIN, edge),
@@ -176,21 +173,6 @@ def test_rows_at_the_cutoff_and_an_hour_edge():
         ]:
             for revenue in (False, True):
                 _check(ix, rows, rid, start, end, 10, revenue)
-
-
-def test_window_across_an_hour_edge_reads_minutes_exactly():
-    """A window that ends past its start's hour would be summed into a
-    whole hour it does not fit in; the index then keeps no hour partials
-    and still answers every read exactly."""
-    edge = BASE + 2 * HOUR
-    rows = _random_rows(9) + [("R0", "a", "x", edge - MIN, edge + MIN, 50, 1, 10**6)]
-    ix = segment.index(_table(rows), BASE)
-    assert ix is not None and ix._hours is None
-    for start, end in [(edge - HOUR, edge), (edge, edge + HOUR),
-                       (edge - HOUR, edge + HOUR), (BASE, BASE + 5 * HOUR)]:
-        for revenue in (False, True):
-            _check(ix, rows, None, start, end, 3, revenue)
-            _check(ix, rows, "R0", start, end, 3, revenue)
 
 
 def test_tables_the_index_refuses():

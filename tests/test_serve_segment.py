@@ -133,8 +133,8 @@ WIDE = BASE + 40 * HOUR  # a separate tier: 6 hot hours from here
 
 
 def _wide_rows(seed: int = 5) -> list[tuple]:
-    """Six hours of 1- and 5-minute windows (none crossing an hour edge)
-    for three restaurants, so whole hours come from the hour partials."""
+    """Six hours of 1- and 5-minute windows, some crossing an hour edge,
+    for three restaurants."""
     rng = random.Random(seed)
     rows = []
     for m in range(6 * 60):
@@ -142,7 +142,7 @@ def _wide_rows(seed: int = 5) -> list[tuple]:
         for r in range(3):
             for i in range(5):
                 if rng.random() < 0.25:
-                    length = 5 if m % 60 < 55 and rng.random() < 0.2 else 1
+                    length = 5 if rng.random() < 0.2 else 1
                     rows.append((
                         f"R{r}", f"I{i}", rng.choice(NAMES[i:i + 2]),
                         start, start + length * MIN, rng.randint(1, 3),
@@ -159,9 +159,8 @@ def wide_tier(spark, tmp_path_factory):
 
 
 def test_segment_matches_spark_on_ranges_across_hours(spark, wide_tier):
-    """Bounds off minute boundaries, ranges crossing hour edges: the hour
-    partials' edge logic, against the Spark facade byte for byte."""
-    assert segment.build(wide_tier)._hours is not None
+    """Bounds off minute boundaries, ranges holding and crossing hour
+    edges, against the Spark facade byte for byte."""
     app, client = _client(spark, wide_tier)
     rng = random.Random(12)
     crossed = 0
@@ -250,20 +249,6 @@ def test_window_ending_before_it_starts_goes_to_spark(spark):
     app, client = _client(spark, rollup)
     for rid, revenue in (("R0", False), ("all", False), ("R0", True)):
         _assert_same(app, client, rollup, rid, revenue, HOT, HOT + 4 * MIN, 5, "spark")
-
-
-def test_window_across_an_hour_edge_reads_minutes(spark):
-    """A window that ends past its start's hour fits no hour partial: the
-    segment keeps none and sums minute rows, still exactly."""
-    edge = WIDE + 2 * HOUR
-    across = ("R0", "I0", "z", edge - MIN, edge + MIN, 50, 1, 10**6)
-    rollup = spark.createDataFrame(_wide_rows() + [across], SCHEMA)
-    assert segment.build(rollup)._hours is None
-    app, client = _client(spark, rollup)
-    for start, end in ((edge - HOUR, edge), (edge, edge + HOUR),
-                       (edge - HOUR, edge + HOUR)):
-        for rid, revenue in (("all", False), ("all", True), ("R0", False)):
-            _assert_same(app, client, rollup, rid, revenue, start, end, 3, "segment")
 
 
 def test_row_cap_goes_to_spark(spark, tier, monkeypatch):

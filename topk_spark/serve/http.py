@@ -41,8 +41,8 @@ Serving-path posture: the three top-K routes answer from a hot segment
 (serve/segment.py), the reference's in-memory realtime segment: on the
 first top-K request the app copies the newest 24 h of the rollup DataFrame
 into driver memory and indexes it (rows sorted by restaurant and window
-start, coded item keys, per-hour partials for global reads), then answers
-from the index with numpy, no Spark job per request. It is bounded three
+start, coded item keys), then answers from the index with numpy, no Spark
+job per request. It is bounded three
 ways: it is built only over a snapshot DataFrame (non-streaming, every plan
 leaf a fixed file listing or local data), it holds at most 24 h and
 1,000,000 rows, and it answers only requests whose start is inside those

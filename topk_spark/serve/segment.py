@@ -8,23 +8,20 @@ Flask's server is threaded), by two Spark actions: one scalar
 `max(window_start)` and one `toArrow()` of the rows at or after
 `cutoff = max(window_start) - HOT_SPAN_MS`. `index` then lays the rows out
 the way Pinot lays out the reference's 1-minute rollup table, sorted on
-`(restaurant_id, window_start_1m)` with star-tree SUM pairs
-(`orders_1m_rollup_table.json:16-20,29-45`), in Arrow and numpy kernels:
+`(restaurant_id, window_start_1m)` (`orders_1m_rollup_table.json:16-20`),
+in Arrow and numpy kernels:
 
-- Minute rows sorted by (restaurant, window_start), with per-restaurant
-  offsets: a point read is a dict lookup and two binary searches.
+- Rows sorted by (restaurant, window_start), with per-restaurant offsets:
+  a point read is a dict lookup and two binary searches. A global read is
+  one masked pass over all rows.
 - Item ids and names coded against their distinct values sorted ascending,
   so code order is Arrow's and Spark's UTF-8 byte order and
   `min(menu_item_name)` is the name of the smallest code.
-- Hour partials: per (hour, item) sums, `min(window_start)`,
-  `max(window_end)` and `min(menu_item_name)`, which compose exactly. A
-  global read sums the whole hours inside its range from them and reads
-  minute rows, through a window_start-sorted permutation, only at the two
-  edges — the tiling serve/router.TierRouter does for histogram tiers.
 
 A read then runs serve/api.py's plan on the rows it selected: group per
-item code with int64 sum-of-sums / min / max (sort by code, `reduceat`),
-rank with the same keys and tie-breaks (`np.lexsort`), first k rows.
+item code with int64 sum-of-sums / min / max (`np.add.at` and its min/max
+twins into one slot per code present), rank with the same keys and
+tie-breaks (`np.lexsort`), first k rows.
 
 Every rule below keeps a segment answer byte-identical to the Spark path;
 a request the segment cannot answer exactly gets `None` and goes to Spark.
@@ -45,13 +42,9 @@ a request the segment cannot answer exactly gets `None` and goes to Spark.
   a key column is not a string or a number column not an integer, when
   `max|x| * rows >= 2^63` for a summed column (an int64 sum would wrap,
   the pinned-ANSI Spark sum raises), or when a window ends before it
-  starts (reads bound window_start by the range end). k outside
+  starts (point reads bound window_start by the range end). k outside
   0..2^31-1 and range bounds outside the long range go to Spark, so its
   errors stay as they are.
-- Hour partials only when every window ends inside the hour its start
-  falls in (a window ending at the long minimum counts as outside).
-  Otherwise a global read sums minute rows over its whole range: still
-  the segment, still exact, slower.
 """
 
 from __future__ import annotations
@@ -70,8 +63,7 @@ from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, String
 from topk_spark.schemas import GLOBAL_SENTINEL
 from topk_spark.serve.api import _TOPK_COLUMNS
 
-HOUR_MS = 3_600_000
-HOT_SPAN_MS = 24 * HOUR_MS
+HOT_SPAN_MS = 24 * 3_600_000
 MAX_ROWS = 1_000_000
 
 _STRINGS = ("restaurant_id", "menu_item_id", "menu_item_name")
@@ -86,7 +78,7 @@ _SNAPSHOT_LEAVES = {"LocalRelation", "LogicalRDD", "Range"}
 _SNAPSHOT_INDEXES = {"InMemoryFileIndex", "MetadataLogFileIndex"}
 
 # The rows of an index matrix: one int64 row per field, one column per
-# rollup row (or per hour partial). Summed fields, then min, then max.
+# rollup row (or per item, once grouped). Summed fields, then min, then max.
 _ITEM, _COUNT, _QTY, _REV, _START, _NAME, _END = range(7)
 _SUMS, _MINS = slice(_COUNT, _START), slice(_START, _END)
 
@@ -153,17 +145,22 @@ def _coded(col: pa.ChunkedArray) -> tuple[np.ndarray, pa.Array]:
     return rank[enc.indices.fill_null(len(order)).to_numpy()], values
 
 
-def _group(rows: np.ndarray, key: np.ndarray) -> np.ndarray:
-    """One column per distinct `key`, in key order: its rows' fields summed,
-    min'd or max'd (the item field is the same for every row of a key)."""
-    order = np.argsort(key)
-    key, rows = key[order], rows.take(order, axis=1)
-    first = np.flatnonzero(np.diff(key, prepend=key[:1] - 1))
-    out = np.empty((rows.shape[0], first.size), np.int64)
-    out[_ITEM] = rows[_ITEM, first]
-    out[_SUMS] = np.add.reduceat(rows[_SUMS], first, axis=1)
-    out[_MINS] = np.minimum.reduceat(rows[_MINS], first, axis=1)
-    out[_END] = np.maximum.reduceat(rows[_END], first)
+def _group(rows: np.ndarray) -> np.ndarray:
+    """One column per item code in `rows`, in code order: its rows' fields
+    summed, min'd or max'd. Costs one pass over `rows` plus one over the
+    codes up to the largest present, with no sort."""
+    present = np.bincount(rows[_ITEM])
+    items = np.flatnonzero(present)
+    slot = np.empty(present.size, np.intp)
+    slot[items] = np.arange(items.size)
+    slot = slot[rows[_ITEM]]
+    out = np.empty((rows.shape[0], items.size), np.int64)
+    out[_ITEM], out[_SUMS], out[_MINS], out[_END] = items, 0, _LONG_MAX, _LONG_MIN
+    for f in range(_COUNT, _START):
+        np.add.at(out[f], slot, rows[f])
+    for f in range(_START, _END):
+        np.minimum.at(out[f], slot, rows[f])
+    np.maximum.at(out[_END], slot, rows[_END])
     return out
 
 
@@ -190,30 +187,17 @@ def index(table: pa.Table, cutoff: int) -> _Index | None:
     offsets = np.searchsorted(rids, np.arange(len(restaurants))).tolist()
     # the trailing null slot has no next offset, so zip leaves it out
     blocks = dict(zip(restaurants.to_pylist(), zip(offsets, offsets[1:])))
-
-    by_start = np.argsort(rows[_START])
-    starts = rows[_START, by_start]
-    hours = None
-    hour = rows[_START] // HOUR_MS
-    if np.all((rows[_END] - 1) // HOUR_MS <= hour):  # ends by its hour's end
-        hour -= hour.min()
-        hours = _group(rows, hour * len(item_ids) + rows[_ITEM])
-    return _Index(cutoff, rows, blocks, by_start, starts, hours, item_ids, item_names)
+    return _Index(cutoff, rows, blocks, item_ids, item_names)
 
 
 class _Index:
     """The indexed hot span (see the module docstring); read-only once
     built, so concurrent reads need no lock."""
 
-    def __init__(self, cutoff, rows, blocks, by_start, starts, hours,
-                 item_ids, item_names):
+    def __init__(self, cutoff, rows, blocks, item_ids, item_names):
         self.cutoff = cutoff
-        self._rows = rows  # minute rows, sorted by (restaurant, start)
+        self._rows = rows  # sorted by (restaurant, start)
         self._blocks = blocks  # restaurant_id -> its (lo, hi) columns
-        self._by_start = by_start  # columns in window_start order
-        self._starts = starts  # window_start in that order
-        self._hours = hours  # hour partials in (hour, item) order, or None
-        self._hour_of = None if hours is None else hours[_START] // HOUR_MS
         self._item_ids = item_ids
         self._item_names = item_names
 
@@ -221,9 +205,12 @@ class _Index:
              by_revenue: bool) -> list[dict]:
         """serve/api.py's top-k rows over [start, end] (closed containment)
         for one restaurant, or for all under the sentinel id when None."""
-        rows = (self._global(start, end) if restaurant_id is None
-                else self._point(restaurant_id, start, end))
-        g = _group(rows, rows[_ITEM])
+        if restaurant_id is None:
+            rows = self._rows
+            rows = rows.compress((rows[_START] >= start) & (rows[_END] <= end), axis=1)
+        else:
+            rows = self._point(restaurant_id, start, end)
+        g = _group(rows)
         if by_revenue:
             keys = (g[_ITEM], ~g[_END], ~g[_REV])  # ~x: descending, no overflow
         else:
@@ -247,24 +234,6 @@ class _Index:
         b = lo + np.searchsorted(starts, end, "right")
         rows = self._rows[:, a:b]
         return rows.compress(rows[_END] <= end, axis=1)
-
-    def _minutes(self, lo: int, hi: int, end: int) -> np.ndarray:
-        """Minute rows starting in [lo, hi] and ending by `end`."""
-        a = np.searchsorted(self._starts, lo)
-        b = np.searchsorted(self._starts, hi, "right")
-        rows = self._rows.take(self._by_start[a:b], axis=1)
-        return rows.compress(rows[_END] <= end, axis=1)
-
-    def _global(self, start: int, end: int) -> np.ndarray:
-        h0, h1 = -(-start // HOUR_MS), end // HOUR_MS  # whole hours h0..h1-1
-        if self._hours is None or h0 >= h1:
-            return self._minutes(start, end, end)
-        a, b = np.searchsorted(self._hour_of, (h0, h1))
-        return np.concatenate((
-            self._minutes(start, h0 * HOUR_MS - 1, end),
-            self._hours[:, a:b],
-            self._minutes(h1 * HOUR_MS, end, end),
-        ), axis=1)
 
 
 class HotSegment:
